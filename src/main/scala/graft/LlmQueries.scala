@@ -699,22 +699,14 @@ object LlmQueries {
     val (bandRows, shingleRows) = Dedup.lshIndexTables(seen, "doc_id", "text")
     // the two index tables are independent (different dirs, different
     // locks) and both read the checkpointed shingle frame — their
-    // creates overlap (optimization guide §2.6), so one table's commit
-    // tail backfills with the other's write tasks
-    locally {
-      @volatile var err: Throwable = null
-      val t = new Thread(() => {
-        try graft.store.KeyedTable.toSql(
-          bandRows.withColumn("band", col("band").cast("long")),
-          wh, "lsh_bands", pk = Seq("id", "band"))
-        catch { case e: Throwable => err = e }
-      }, "graft-lshidx-bands")
-      t.setDaemon(true); t.start()
+    // creates overlap, so one table's commit tail backfills with the
+    // other's write tasks; inParallel joins both and keeps both errors
+    graft.store.KeyedTable.inParallel(
+      graft.store.KeyedTable.toSql(
+        bandRows.withColumn("band", col("band").cast("long")),
+        wh, "lsh_bands", pk = Seq("id", "band")),
       graft.store.KeyedTable.toSql(shingleRows, wh, "lsh_shingles",
-        pk = Seq("id", "shingle"))
-      t.join()
-      if (err != null) throw err
-    }
+        pk = Seq("id", "shingle")))
     Dedup.incrementalMinhashLshFromIndex(incoming,
       graft.store.KeyedTable.readSql(s, wh, "lsh_bands")
         .withColumn("band", col("band").cast("int")),

@@ -50,8 +50,9 @@ case class GramUpperTriangle(
 
   override def nullable: Boolean = false
 
+  // a cell whose sum overflows DECIMAL(38,12) is emitted as null (eval)
   override def dataType: DataType =
-    ArrayType(DecimalType(38, 12), containsNull = false)
+    ArrayType(DecimalType(38, 12), containsNull = true)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess

@@ -562,7 +562,11 @@ object Dedup {
     * composite unique keys, i.e. exactly the shape
     * [[graft.store.KeyedTable]] persists. Build once per corpus;
     * every future delta probes these instead of recomputing the
-    * reference corpus' signatures. */
+    * reference corpus' signatures.
+    *
+    * EAGER: the shared shingle frame is `localCheckpoint`ed, which runs
+    * a Spark job (tokenize, slide, distinct over all of `seen`) inside
+    * this call, before either returned frame is used. */
   def lshIndexTables(seen: DataFrame, idCol: String, textCol: String,
                      n: Int = 5, numHashes: Int = 16,
                      bands: Int = 4): (DataFrame, DataFrame) = {

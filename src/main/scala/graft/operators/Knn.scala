@@ -657,6 +657,11 @@ object Knn {
           .toAggregateExpression()).as("g"))
       .head() // bounded by dim² — never data-sized
     val flat = gramRow.getSeq[java.math.BigDecimal](0)
+    if (flat.contains(null))
+      throw new ArithmeticException(
+        s"topSingularVector: a Gram cell of $vecCol overflows DECIMAL(38,12) " +
+        "(the sum of products of 6-dp-pinned elements exceeds 10^26); " +
+        "rescale the vectors")
     val G = Array.fill(dim, dim)(java.math.BigDecimal.ZERO)
     var fi = 0
     var fk = 0

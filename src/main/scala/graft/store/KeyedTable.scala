@@ -149,6 +149,23 @@ object KeyedTable {
     df.withColumn(BucketCol,
       pmod(xxhash64(pk.map(col): _*), lit(buckets.toLong)).cast(IntegerType))
 
+  /** The bucket [[withBucket]] puts one PK tuple in, evaluated on the
+    * driver without a Spark job: each value becomes `lit(v).cast(pkType)`
+    * (the session time zone resolving datetime casts, as the analyzer
+    * would), hashed by the same `pmod(xxhash64(...), buckets)`
+    * expressions. Throws when a value does not cast to its PK type
+    * (an ANSI overflow); pruning callers then keep every bucket. */
+  private[store] def bucketOfKey(spark: SparkSession, meta: TableMeta,
+                                 buckets: Int, values: Seq[Any]): Int = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, Pmod, XxHash64}
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    val keys = meta.pk.zip(values).map { case (c, v) =>
+      Cast(Literal(v), meta.schema(c).dataType, tz)
+    }
+    Pmod(XxHash64(keys, 42L), Literal(buckets.toLong)).eval()
+      .asInstanceOf[Long].toInt
+  }
+
   /** Cluster rows by bucket before a partitionBy write: one writer task
     * (→ one file) per bucket instead of up-to `inputPartitions × buckets`
     * small files — the small-files problem is the first thing that kills
@@ -339,7 +356,7 @@ object KeyedTable {
     * thread per call so Spark's inheritable thread-locals (job
     * description/group) propagate. Error precedence matches the old
     * sequential order: `a`'s failure wins when both fail. */
-  private def inParallel[A, B](a: => A, b: => B): (A, B) = {
+  private[graft] def inParallel[A, B](a: => A, b: => B): (A, B) = {
     @volatile var ra: Either[Throwable, A] = null
     val t = new Thread(() => {
       ra = try Right(a) catch { case e: Throwable => Left(e) }
@@ -5552,39 +5569,56 @@ object KeyedTable {
       case Some(v) => Some(Manifest.at(spark, dir, v))
       case None => Manifest.current(spark, dir)
     }
-    // bucket-pruning math must use the SNAPSHOT's bucket count (a
-    // rebucket changes it; the manifest is the authority when present)
-    val effMeta = meta.copy(buckets = mf.map(_.buckets).getOrElse(meta.buckets))
-    // FILE skipping on the leading PK dimension: drop manifest files
+    // Bucket pruning: a hash layout can't prune an arbitrary range, but
+    // two shapes name their buckets exactly, hashed on the driver
+    // (bucketOfKey) with the SNAPSHOT's bucket count (a rebucket changes
+    // it; the manifest is the authority when present):
+    //  - point lookup (every dimension pinned): one bucket;
+    //  - a NARROW integral range on a single-column PK: the keys in
+    //    [lo, hi] are enumerable, so the bucket set is their hashes.
+    // A fractional bound on an integral PK compares in floating point,
+    // where one bound can equal several keys: no pruning then.
+    val buckets = mf.map(_.buckets).getOrElse(meta.buckets)
+    val fractionalOnIntegral = Seq(lowest, highest).exists(meta.pk.zip(_).exists {
+      case (c, _: Float | _: Double) => meta.schema(c).dataType match {
+        case ByteType | ShortType | IntegerType | LongType => true
+        case _ => false
+      }
+      case _ => false
+    })
+    val kept: Option[Seq[Int]] =
+      if (fractionalOnIntegral) None
+      else try {
+        if (lowest.nonEmpty && lowest == highest && !lowest.contains(null))
+          Some(Seq(bucketOfKey(spark, meta, buckets, lowest)))
+        else narrowRangeKeys(meta, lowest, highest)
+          .map(_.map(k => bucketOfKey(spark, meta, buckets, Seq(k))).distinct)
+      } catch { case scala.util.control.NonFatal(_) => None }
+    // The kept buckets' files are all the v1 file index sees: it stats
+    // only them (and lists nothing while they number ≤ 32). FILE
+    // skipping on the leading PK dimension as well: drop manifest files
     // whose recorded [min,max] cannot intersect the requested bounds —
     // on an append-accumulated table each delta's files cover only its
     // own key range, so a narrow range read plans only its overlapping
     // files per bucket, before any footer is opened
     val lo0 = lowest.headOption.filter(_ != null).flatMap(Manifest.normBound)
     val hi0 = highest.headOption.filter(_ != null).flatMap(Manifest.normBound)
-    val mfPruned = mf.map { m =>
+    val mfPruned = mf.map { m0 =>
+      val m = kept.fold(m0) { bs =>
+        val keep = bs.toSet
+        m0.copy(files = m0.files.filter(kv => keep(kv._1)),
+          dvs = m0.dvs.filter(kv => keep(kv._1)))
+      }
       if (lo0.isEmpty && hi0.isEmpty) m
       else m.copy(files = m.files.map { case (b, fls) =>
         b -> fls.filter(_.mayOverlap(lo0, hi0))
       }.filter(_._2.nonEmpty))
     }
     val raw = readRawWith(spark, warehouse, tableName, meta, mfPruned)
-    // Bucket pruning: hash layout can't prune an arbitrary range, but
-    // two shapes enumerate their touched buckets exactly:
-    //  - point lookup (every dimension pinned): one bucket;
-    //  - a NARROW integral range on a single-column PK: the keys in
-    //    [lo, hi] are enumerable, so the bucket set is their hashes —
-    //    a handful of dirs instead of all of them. At thousands of
-    //    buckets (100 TB tables) this is the difference between
-    //    listing 4 directories and listing 4,096.
-    // The range predicates still prune row groups within survivors.
-    val pruned =
-      if (lowest.nonEmpty && lowest == highest && !lowest.contains(null))
-        raw.filter(col(BucketCol) === bucketOf(spark, effMeta, lowest))
-      else narrowRangeBuckets(spark, effMeta, lowest, highest) match {
-        case Some(bs) => raw.filter(col(BucketCol).isin(bs: _*))
-        case None => raw
-      }
+    // the partition filter stays on the frame: it is what prunes a
+    // legacy (manifest-less) read, and the range predicates below
+    // still prune row groups within the kept buckets
+    val pruned = kept.fold(raw)(bs => raw.filter(col(BucketCol).isin(bs: _*)))
     val filtered = conds.foldLeft(pruned)(_ filter _)
     filtered.select(meta.schema.fieldNames.toIndexedSeq.map(col): _*)
   }
@@ -5599,41 +5633,36 @@ object KeyedTable {
       s"${tags.keys.toSeq.sorted.mkString(", ")})"))
   }
 
-  /** Bucket of a concrete PK tuple — the same typed xxhash64 the write
-    * path uses (withBucket), evaluated on a literal row. */
-  private def bucketOf(spark: SparkSession, meta: TableMeta, values: Seq[Any]): Int = {
-    val typed = meta.pk.zip(values).map { case (c, v) =>
-      lit(v).cast(meta.schema(c).dataType)
-    }
-    spark.range(1)
-      .select(pmod(xxhash64(typed: _*), lit(meta.buckets.toLong)).cast(IntegerType))
-      .head().getInt(0)
-  }
-
-  /** Keys a narrow range can possibly hold are enumerable for an
-    * integral single-column PK; cap enumeration at 1024 keys (one tiny
-    * local job — hashing must use the PK's exact type, xxhash64 is
-    * type-sensitive). Returns the distinct buckets those keys hash to,
-    * or None when the shape doesn't qualify. */
-  private def narrowRangeBuckets(spark: SparkSession, meta: TableMeta,
-                                 lowest: Seq[Any], highest: Seq[Any]): Option[Seq[Int]] = {
+  /** The keys a narrow range can hold, for an integral single-column
+    * PK: [lo, hi] clamped to the PK type's domain (no stored key lies
+    * outside it), when that leaves at most 1024 keys. None when the
+    * shape doesn't qualify. */
+  private def narrowRangeKeys(meta: TableMeta, lowest: Seq[Any],
+                              highest: Seq[Any]): Option[Seq[Long]] = {
     if (meta.pk.size != 1 || lowest.size != 1 || highest.size != 1) return None
-    val dt = meta.schema(meta.pk.head).dataType
-    val integral = dt == ByteType || dt == ShortType || dt == IntegerType || dt == LongType
-    val bounds = (lowest.head, highest.head) match {
-      case (lo: Number, hi: Number)
-        // BigInt: hi - lo overflows Long for extreme bounds (e.g. a
-        // caller passing MinValue..MaxValue as "everything")
-        if integral && lo.longValue() <= hi.longValue() &&
-          BigInt(hi.longValue()) - BigInt(lo.longValue()) < 1024 =>
-        Some((lo.longValue(), hi.longValue()))
+    val domain: Option[(Long, Long)] = meta.schema(meta.pk.head).dataType match {
+      case ByteType => Some((Byte.MinValue.toLong, Byte.MaxValue.toLong))
+      case ShortType => Some((Short.MinValue.toLong, Short.MaxValue.toLong))
+      case IntegerType => Some((Int.MinValue.toLong, Int.MaxValue.toLong))
+      case LongType => Some((Long.MinValue, Long.MaxValue))
       case _ => None
     }
-    bounds.map { case (lo, hi) =>
-      spark.range(lo, hi + 1)
-        .select(pmod(xxhash64(col("id").cast(dt)), lit(meta.buckets.toLong))
-          .cast(IntegerType).as("b"))
-        .distinct().collect().map(_.getInt(0)).toSeq
+    def integral(v: Any): Option[Long] = v match {
+      case b: Byte => Some(b.toLong)
+      case s: Short => Some(s.toLong)
+      case i: Int => Some(i.toLong)
+      case l: Long => Some(l)
+      case _ => None
     }
+    for {
+      (tmin, tmax) <- domain
+      lo0 <- integral(lowest.head)
+      hi0 <- integral(highest.head)
+      lo = math.max(lo0, tmin)
+      hi = math.min(hi0, tmax)
+      // BigInt: hi - lo overflows Long for extreme bounds (e.g. a
+      // caller passing MinValue..MaxValue as "everything")
+      if BigInt(hi) - BigInt(lo) < 1024
+    } yield if (lo > hi) Nil else lo to hi
   }
 }

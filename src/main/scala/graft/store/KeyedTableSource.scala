@@ -611,21 +611,12 @@ private[store] class KeyedScan(meta: TableMeta, dataDir: String,
     if (sets.nonEmpty) runtimeBuckets = Some(sets.reduce(_ intersect _))
   }
 
-  /** Driver-side eval of the write path's bucket function
-    * (`pmod(xxhash64(pk...), buckets)`) on pinned literal values —
-    * exactly the expressions `KeyedTable.withBucket` uses, so the
-    * computed bucket always agrees with the stored layout. None when a
-    * value can't be represented as a literal of the PK type (then no
-    * pruning, which is always safe). */
+  /** The bucket of pinned PK values ([[KeyedTable.bucketOfKey]]); None
+    * when a value does not cast to its PK type — then no pruning, which
+    * is always safe. */
   private def bucketOfPinned(values: Seq[Any]): Option[Int] =
-    try {
-      import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, Pmod, XxHash64}
-      val lits: Seq[Expression] = meta.pk.zip(values).map { case (c, v) =>
-        Literal.create(v, meta.schema(c).dataType)
-      }
-      Some(Pmod(XxHash64(lits, 42L), Literal(numBuckets.toLong))
-        .eval(null).asInstanceOf[Long].toInt)
-    } catch { case scala.util.control.NonFatal(_) => None }
+    try Some(KeyedTable.bucketOfKey(SparkSession.active, meta, numBuckets, values))
+    catch { case scala.util.control.NonFatal(_) => None }
 
   /** Per-column bound constraints from the pushed filters, for every
     * column the manifest carries statistics for — the leading PK plus

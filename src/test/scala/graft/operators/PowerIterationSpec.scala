@@ -44,4 +44,14 @@ class PowerIterationSpec extends SparkSpec {
     assert(math.abs(lambda - lamRef) / lamRef < 0.01,
       s"lambda $lambda vs true $lamRef")
   }
+
+  test("a Gram cell past DECIMAL(38,12) fails with a clear error") {
+    // 200 × (9.9e11)² ≈ 2e26 overflows the cell's 10^26 capacity: the
+    // aggregate emits a null cell (declared containsNull) and the
+    // driver iteration names the overflow instead of an NPE
+    val embs = Seq.fill(200)(Array(9.9e11, 1.0)).toDF("e")
+    val e = intercept[ArithmeticException](
+      Knn.topSingularVector(embs, "e", dim = 2, iters = 2))
+    assert(e.getMessage.contains("overflows DECIMAL(38,12)"))
+  }
 }

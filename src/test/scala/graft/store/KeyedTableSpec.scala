@@ -342,6 +342,71 @@ class KeyedTableSpec extends SparkSpec {
         case f: org.apache.spark.sql.execution.FileSourceScanExec => f
       }.get
     assert(mScan.metadata("PartitionFilters").contains("pb_bucket"))
+
+    // Every pruned read returns exactly what an unbounded read filtered
+    // by the same bounds returns; a point read also resolves without a
+    // Spark job, reads files of its own bucket only, and runs one job.
+    import org.apache.spark.JobCounter.jobsOf
+    def sameAsFiltered(t: String, lo: Seq[Any], hi: Seq[Any]): DataFrame = {
+      val pk = KeyedTable.readSql(spark, w, t).columns.take(lo.size)
+      val (got, resolveJobs) = jobsOf(spark.sparkContext)(
+        KeyedTable.readSql(spark, w, t, lowest = lo, highest = hi))
+      val bounds = pk.indices.flatMap(i =>
+        Option(lo(i)).map(col(pk(i)) >= lit(_)) ++ Option(hi(i)).map(col(pk(i)) <= lit(_)))
+      val want = KeyedTable.readSql(spark, w, t).filter(bounds.reduce(_ && _))
+      assert(got.collect().toSet == want.collect().toSet, s"$t [$lo, $hi]")
+      assert(resolveJobs == 0, s"$t [$lo, $hi]: readSql ran $resolveJobs jobs")
+      got
+    }
+    def pointRead(t: String, key: Seq[Any]): Unit = {
+      val got = sameAsFiltered(t, key, key)
+      val (rows, jobs) = jobsOf(spark.sparkContext)(got.collect())
+      assert(rows.length == 1, s"$t $key")
+      assert(jobs == 1, s"$t $key: collect ran $jobs jobs")
+      // the row's bucket as the partition-discovered data dir records it
+      val pk = got.columns.take(key.size)
+      val b = spark.read.parquet(KeyedTable.dataDir(w, t))
+        .filter(pk.zip(key).map { case (c, v) => col(c) === lit(v) }.reduce(_ && _))
+        .select("pb_bucket").head().getInt(0)
+      assert(got.inputFiles.nonEmpty &&
+        got.inputFiles.forall(_.contains(s"/pb_bucket=$b/")), got.inputFiles.toSeq)
+    }
+    val keys = (1 to 200).map(_.toLong)
+    val epoch = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    val typed = keys.map(k => (k.toByte, k.toShort, k.toInt, k, s"k$k",
+        new java.sql.Timestamp(epoch + k * 3600000L), java.sql.Date.valueOf(
+          java.time.LocalDate.of(2024, 1, 1).plusDays(k)), k * 2.0))
+      .toDF("b", "s", "i", "l", "str", "ts", "d", "v")
+    for (c <- Seq("b", "s", "i", "l", "str", "ts", "d"))
+      KeyedTable.toSql(typed.select(col(c), col("v")), w, s"pk_$c", pk = Seq(c))
+    val r = typed.filter(col("l") === 77L).head()
+    for ((c, i) <- Seq("b", "s", "i", "l", "str", "ts", "d").zipWithIndex)
+      pointRead(s"pk_$c", Seq(r.get(i)))
+    pointRead("m", Seq(17L, 2))
+    // cross-typed bounds boundComparable admits
+    pointRead("pk_l", Seq(77))
+    pointRead("pk_i", Seq(77L))
+    sameAsFiltered("pk_i", Seq(70L), Seq(90L))
+    sameAsFiltered("pk_l", Seq(70), Seq(90))
+    // a ≤1024-key range over many buckets, and bounds past the PK
+    // type's domain (no stored key lies beyond it)
+    assert(sameAsFiltered("t", Seq(-300L), Seq(700L)).count() == 500)
+    assert(sameAsFiltered("pk_b", Seq(100), Seq(900)).count() == 28)
+    assert(sameAsFiltered("pk_b", Seq(200), Seq(900)).count() == 0)
+    // a double bound on an integral PK compares in floating point,
+    // where one bound equals several keys in different buckets
+    val big = 1L << 60
+    KeyedTable.toSql((-8L to 8L).map(d => (big + d, d)).toDF("k", "v"), w, "big",
+      pk = Seq("k"))
+    assert(sameAsFiltered("big", Seq(big.toDouble), Seq(big.toDouble)).count() == 17)
+    // a key whose bucket holds no files: the read is empty, not an error
+    KeyedTable.toSql(keys.take(3).toDF("k"), w, "sparse", pk = Seq("k"))
+    val used = spark.read.parquet(KeyedTable.dataDir(w, "sparse"))
+      .select("pb_bucket").distinct().collect().map(_.getInt(0)).toSet
+    val bucketOf = spark.range(4, 200).select(col("id"),
+      pmod(xxhash64(col("id")), lit(32L)).cast("int").as("b")).collect()
+    val lonely = bucketOf.collectFirst { case row if !used(row.getInt(1)) => row.getLong(0) }.get
+    assert(sameAsFiltered("sparse", Seq(lonely), Seq(lonely)).isEmpty)
   }
 
   test("pkJoin: mismatched bucket counts or PK types are rejected up front") {
