@@ -700,8 +700,9 @@ object LlmQueries {
     // the two index tables are independent (different dirs, different
     // locks) and both read the checkpointed shingle frame — their
     // creates overlap, so one table's commit tail backfills with the
-    // other's write tasks; inParallel joins both and keeps both errors
-    graft.store.KeyedTable.inParallel(
+    // other's write tasks; inParallel joins both, and a failure in one
+    // cancels the other
+    graft.store.KeyedTable.inParallel(s)(
       graft.store.KeyedTable.toSql(
         bandRows.withColumn("band", col("band").cast("long")),
         wh, "lsh_bands", pk = Seq("id", "band")),

@@ -166,20 +166,54 @@ object KeyedTable {
       .asInstanceOf[Long].toInt
   }
 
-  /** Cluster rows by bucket before a partitionBy write: one writer task
-    * (→ one file) per bucket instead of up-to `inputPartitions × buckets`
-    * small files — the small-files problem is the first thing that kills
-    * a 100 TB table. The shuffle this adds is the write's only wide op.
+  /** Cluster rows by bucket before a partitionBy staging write — the one
+    * layout every staged write (data, DV sidecar, maintenance rewrite)
+    * goes through. Each bucket's rows go to exactly ONE writer task, so
+    * the write makes one file per bucket in play instead of up-to
+    * `inputPartitions × buckets` small files — the small-files problem
+    * is the first thing that kills a 100 TB table. The shuffle this adds
+    * is the write's only wide op.
     *
-    * Rows additionally sort by PK within each bucket: hashing destroys
-    * range locality (every bucket samples the full PK range, so file
-    * min/max stats are useless), but a within-bucket sort makes each
-    * ROW GROUP's stats tight — range reads then skip most row groups
-    * of every file instead of scanning the table. Map-side, spillable,
-    * no extra shuffle; also compresses PK-correlated columns better. */
-  private def clusterByBucket(df: DataFrame, buckets: Int, pk: Seq[String]): DataFrame =
-    df.repartition(buckets, col(BucketCol))
-      .sortWithinPartitions((BucketCol +: pk).map(col): _*)
+    * The write runs `n = min(buckets in play, defaultParallelism)` tasks
+    * holding an even share of the buckets each: the buckets in play are
+    * numbered 0, 1, 2, … and `repartitionById` sends slot `s` to task
+    * `pmod(s, n)`, so per-task bucket counts differ by at most one. A
+    * hash repartition is uneven (Murmur3 puts 10 of 32 buckets on one of
+    * 4 tasks), and one task per bucket pays a task's scheduling and
+    * deserialization per bucket — on a 100-row upsert that overhead was
+    * most of the job. With at least as many cores as buckets in play,
+    * every bucket still gets a task of its own. When the buckets in play
+    * are consecutive (create, rebucket, most full rewrites) the slot is
+    * `pb_bucket` itself, so the planner sees the exchange as clustered
+    * by the bucket column and a bucket-partitioned window on top (create's
+    * PK check) reuses it.
+    *
+    * Rows additionally sort by (bucket, `sortBy`) within each task:
+    * hashing destroys range locality (every bucket samples the full PK
+    * range, so file min/max stats are useless), but a within-bucket sort
+    * by PK makes each ROW GROUP's stats tight — range reads then skip
+    * most row groups of every file instead of scanning the table. The
+    * bucket leads, so a task finishes one bucket's file before it opens
+    * the next. Map-side, spillable, no extra shuffle; also compresses
+    * PK-correlated columns better. */
+  private def clusterByBucket(df: DataFrame, inPlay: Seq[Int],
+                              sortBy: Seq[String]): DataFrame = {
+    val ids = inPlay.distinct.sorted
+    val n = math.max(1,
+      math.min(ids.size, df.sparkSession.sparkContext.defaultParallelism))
+    val slot =
+      if (ids.isEmpty || ids.last - ids.head + 1 == ids.size) col(BucketCol)
+      else {
+        // dense slot per bucket in play; a bucket outside the set (no
+        // caller stages one) keeps its own id — still exactly one task
+        val slots = Array.tabulate(ids.last + 1)(identity)
+        ids.zipWithIndex.foreach { case (b, i) => slots(b) = i }
+        coalesce(try_element_at(typedlit(slots.toSeq), col(BucketCol) + 1),
+          col(BucketCol))
+      }
+    df.repartitionById(n, slot)
+      .sortWithinPartitions((BucketCol +: sortBy).map(col): _*)
+  }
 
   /** Write `df` into `<warehouse>/<tableName>` keyed by `pk`.
     *
@@ -352,24 +386,54 @@ object KeyedTable {
   /** Run two INDEPENDENT pieces of driver code — each typically one
     * Spark action — concurrently (optimization guide §2.6: a verb's
     * sequential actions leave the cluster idle through each job's tail
-    * and each scheduling wave; overlapping them hides both). A fresh
-    * thread per call so Spark's inheritable thread-locals (job
-    * description/group) propagate. Error precedence matches the old
-    * sequential order: `a`'s failure wins when both fail. */
-  private[graft] def inParallel[A, B](a: => A, b: => B): (A, B) = {
-    @volatile var ra: Either[Throwable, A] = null
-    val t = new Thread(() => {
-      ra = try Right(a) catch { case e: Throwable => Left(e) }
-    }, "graft-parallel-action")
-    t.setDaemon(true)
-    t.start()
-    val rb = try Right(b) catch { case e: Throwable => Left(e) }
-    t.join()
-    (ra, rb) match {
+    * and each scheduling wave; overlapping them hides both). Each runs
+    * on a fresh thread, so Spark's inheritable thread-locals (job
+    * description/group, active session) propagate from the caller.
+    *
+    * The first branch to fail cancels the other's jobs, so a failed
+    * PK-overlap probe aborts the concurrent staging write instead of
+    * waiting for it. Each branch tags its jobs with a tag unique to the
+    * call (`addJobTag` / `cancelJobsWithTag`): a job GROUP set inside a
+    * branch would replace the caller's, which observers use to attribute
+    * jobs to operations. The cancel is re-issued while the sibling still
+    * runs, so a job it submits after the failure is cancelled too. Both
+    * branches are always joined; the first failure is thrown, carrying
+    * the other branch's failure (typically its cancellation) as
+    * suppressed. */
+  private[graft] def inParallel[A, B](spark: SparkSession)(a: => A, b: => B): (A, B) = {
+    val sc = spark.sparkContext
+    val call = UUID.randomUUID()
+    val firstFailure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    def start[T](name: String, body: => T): (Thread, String, () => Either[Throwable, T]) = {
+      val tag = s"graft-parallel-$call-$name"
+      @volatile var r: Either[Throwable, T] = null
+      val t = new Thread(() => {
+        sc.addJobTag(tag)
+        r = try Right(body) catch {
+          case e: Throwable => firstFailure.compareAndSet(null, e); Left(e)
+        }
+      }, s"graft-parallel-$name")
+      t.setDaemon(true)
+      t.start()
+      (t, tag, () => r)
+    }
+    val (ta, tagA, ra) = start("a", a)
+    val (tb, tagB, rb) = start("b", b)
+    val threads = Seq(ta -> tagA, tb -> tagB)
+    while (threads.exists(_._1.isAlive)) {
+      if (firstFailure.get != null)
+        threads.foreach { case (t, tag) =>
+          if (t.isAlive) sc.cancelJobsWithTag(tag, "a sibling action failed")
+        }
+      threads.foreach(_._1.join(50))
+    }
+    (ra(), rb()) match {
       case (Right(x), Right(y)) => (x, y)
-      case (Left(ea), Left(eb)) => ea.addSuppressed(eb); throw ea
-      case (Left(ea), _) => throw ea
-      case (_, Left(eb)) => throw eb
+      case (x, y) =>
+        val first = firstFailure.get
+        Seq(x, y).collect { case Left(e) if !(e eq first) => e }
+          .foreach(first.addSuppressed)
+        throw first
     }
   }
 
@@ -411,17 +475,20 @@ object KeyedTable {
     // create) ride the SAME job as observe() metrics — zero extra
     // scheduling waves and zero re-reads of the staged parquet.
     // Uniqueness without count_distinct (observe() rejects DISTINCT
-    // aggregates): clusterByBucket already hash-partitions by bucket
-    // and sorts by (bucket, pk) — equal PKs are ADJACENT — so a
-    // lag()-window duplicate flag over the very same exchange+sort
-    // (no new Exchange, no new Sort) gives distinct = total − dups
-    // exactly.
+    // aggregates): clusterByBucket sends every bucket to one task and
+    // sorts by (bucket, pk) — equal PKs share a bucket, so they are
+    // ADJACENT — and its exchange is keyed by pb_bucket itself (all
+    // buckets are in play), so a lag()-window duplicate flag
+    // partitioned by that same column rides the very same
+    // exchange+sort (no new Exchange, no new Sort) and gives
+    // distinct = total − dups exactly.
     val staging = s"$dir/.staging-create-${UUID.randomUUID()}"
     try {
       val wantPk = validate && !autoIndex
       val boolSchema = StructType(ordered.schema.fields)
       val boolAggs = if (inferBool) BoolInference.aggColumns(boolSchema) else Nil
-      val clustered = clusterByBucket(withBucket(ordered, pkCols, buckets), buckets, pkCols)
+      val clustered = clusterByBucket(withBucket(ordered, pkCols, buckets),
+        0 until buckets, pkCols)
       val flagged =
         if (!wantPk) clustered
         else {
@@ -488,7 +555,7 @@ object KeyedTable {
               StructField(BucketCol, IntegerType, nullable = true)))
           .parquet(staging)
         val casted = toBool.foldLeft(staged)((d, c) => d.withColumn(c, col(c) =!= 0))
-        casted.repartition(buckets, col(BucketCol))
+        clusterByBucket(casted, 0 until buckets, pkCols)
           .write.partitionBy(BucketCol).parquet(data.toString)
       }
       // version-0 snapshot: every table is manifest-native from birth,
@@ -1200,8 +1267,7 @@ object KeyedTable {
         j.filter(presentOld)
           .select(col(s"o.$BucketCol").as(BucketCol),
             col(s"o.$FileCol").as("file"), col(s"o.$PosCol").as("pos"))
-          .repartition(touched.size, col(BucketCol))
-          .sortWithinPartitions(col(BucketCol), col("file"), col("pos"))
+          .transform(clusterByBucket(_, touched, Seq("file", "pos")))
           .write.partitionBy(BucketCol).parquet(dvStaging)
         (clSrc, dvStaging)
       }
@@ -1573,37 +1639,36 @@ object KeyedTable {
     val data = dataDir(warehouse, table)
     toLogical(mf match {
       case Some(m) =>
-        val paths = m.absolutePaths(data)
-        val dvPaths = m.dvPaths(data)
-        if (paths.isEmpty) {
+        val files = m.absoluteFiles(data)
+        val dvFiles = m.dvFiles(data)
+        if (files.isEmpty) {
           val s =
             if (!withPos) withBucketField
             else StructType(withBucketField.fields :+
               StructField(FileCol, StringType) :+ StructField(PosCol, LongType))
           spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
         } else {
-          // basePath keeps pb_bucket recoverable from the dir names of
-          // the explicitly listed files (partition-style read)
-          val base = spark.read.option("basePath", data)
-            .schema(withBucketField).parquet(paths: _*)
-          if (dvPaths.isEmpty && !withPos) base
+          // the file index comes from the manifest's (path, length)
+          // entries — no listing job, no per-file stat; basePath keeps
+          // pb_bucket recoverable from the files' dir names
+          val base = ManifestFileIndex.read(spark, data, files, withBucketField)
+          if (dvFiles.isEmpty && !withPos) base
           else {
             val withId = base
               .withColumn(FileCol, col("_metadata.file_name"))
               .withColumn(PosCol, col("_metadata.row_index"))
             val masked =
-              if (dvPaths.isEmpty) withId
+              if (dvFiles.isEmpty) withId
               else {
                 // a row's identity is (bucket, file, pos): one staging
                 // TASK can write same-named part files into several
                 // bucket dirs, so the file name alone is NOT globally
                 // unique — the bucket term (recovered from the DV
                 // sidecar's own directory via basePath) disambiguates
-                val dv0 = spark.read.option("basePath", data)
-                  .schema(StructType(Seq(StructField("file", StringType),
+                val dv0 = ManifestFileIndex.read(spark, data, dvFiles,
+                  StructType(Seq(StructField("file", StringType),
                     StructField("pos", LongType),
                     StructField(BucketCol, IntegerType))))
-                  .parquet(dvPaths: _*)
                 val dv =
                   if (m.dvRows.exists(_ <= DvBroadcastMaxRows)) broadcast(dv0)
                   else dv0
@@ -1683,7 +1748,7 @@ object KeyedTable {
       var clCommit: Option[(Path, Path)] = None
       try {
         try {
-          inParallel(
+          inParallel(spark)(
             {
               if (!meta.autoIndex) {
                 val old = readRawWith(spark, warehouse, table, meta, manifestOf(base))
@@ -1709,7 +1774,7 @@ object KeyedTable {
                 clCommit = Some(stageChangelogBatch(spark, dir, changes))
               }
             },
-            toPhys(clusterByBucket(newB, base.buckets, meta.pk), meta)
+            toPhys(clusterByBucket(newB, touched, meta.pk), meta)
               .write.partitionBy(BucketCol).parquet(staging))
           commitStaged(spark, f, dir, data, staging, touched, "append",
             base, base.buckets, meta, add = true, streamEpoch = txn)
@@ -1886,7 +1951,7 @@ object KeyedTable {
       val staging = s"$dir/.staging-append-${UUID.randomUUID()}"
       try {
         // the expensive job — OUTSIDE the lock
-        toPhys(clusterByBucket(newB, base0.buckets, metaUsed.pk), metaUsed)
+        toPhys(clusterByBucket(newB, touched, metaUsed.pk), metaUsed)
           .write.partitionBy(BucketCol).parquet(staging)
         val preStats = stageFileStats(spark, f, staging,
           statColsTypedOf(metaUsed))
@@ -2118,7 +2183,7 @@ object KeyedTable {
       val staging = s"$dir/.staging-upsertc-${UUID.randomUUID()}"
       try {
         // the expensive merge job — OUTSIDE the lock
-        toPhys(clusterByBucket(out, base0.buckets, meta0.pk), meta0)
+        toPhys(clusterByBucket(out, touched, meta0.pk), meta0)
           .write.partitionBy(BucketCol).parquet(staging)
         val preStats = stageFileStats(spark, f, staging,
           statColsTypedOf(meta0))
@@ -2305,14 +2370,12 @@ object KeyedTable {
           posFrame
             .select(col(BucketCol), col(FileCol).as("file"),
               col(PosCol).as("pos"))
-            .repartition(touched.size, col(BucketCol))
-            .sortWithinPartitions(col(BucketCol), col("file"), col("pos"))
+            .transform(clusterByBucket(_, touched, Seq("file", "pos")))
             .write.partitionBy(BucketCol).parquet(dvStaging)
           toPhys(posFrame
             .select(meta0.schema.fieldNames.toSeq
               .map(c => newVal(c).as(c)) :+ col(BucketCol): _*)
-            .repartition(touched.size, col(BucketCol))
-            .sortWithinPartitions((BucketCol +: meta0.pk).map(col): _*),
+            .transform(clusterByBucket(_, touched, meta0.pk)),
             meta0)
             .write.partitionBy(BucketCol).parquet(staging)
         } finally posFrame.unpersist()
@@ -2323,8 +2386,7 @@ object KeyedTable {
         } :+ col(BucketCol)
         toPhys(raw.filter(col(BucketCol).isin(touched: _*))
           .select(rewritten: _*)
-          .repartition(touched.size, col(BucketCol))
-          .sortWithinPartitions((BucketCol +: meta0.pk).map(col): _*),
+          .transform(clusterByBucket(_, touched, meta0.pk)),
           meta0)
           .write.partitionBy(BucketCol).parquet(staging)
       }
@@ -2569,7 +2631,7 @@ object KeyedTable {
       val staging = s"$dir/.staging-mergec-${UUID.randomUUID()}"
       try {
         // the expensive merge job — OUTSIDE the lock
-        toPhys(clusterByBucket(out, base0.buckets, meta0.pk), meta0)
+        toPhys(clusterByBucket(out, touched, meta0.pk), meta0)
           .write.partitionBy(BucketCol).parquet(staging)
         val preStats = stageFileStats(spark, f, staging,
           statColsTypedOf(meta0))
@@ -2734,14 +2796,12 @@ object KeyedTable {
           .filter(coalesce(where, lit(false)))
           .select(col(BucketCol), col(FileCol).as("file"),
             col(PosCol).as("pos"))
-          .repartition(touched.size, col(BucketCol))
-          .sortWithinPartitions(col(BucketCol), col("file"), col("pos"))
+          .transform(clusterByBucket(_, touched, Seq("file", "pos")))
           .write.partitionBy(BucketCol).parquet(staging)
       } else {
         toPhys(raw.filter(col(BucketCol).isin(touched: _*))
           .filter(!coalesce(where, lit(false)))
-          .repartition(touched.size, col(BucketCol))
-          .sortWithinPartitions((BucketCol +: meta0.pk).map(col): _*),
+          .transform(clusterByBucket(_, touched, meta0.pk)),
           meta0)
           .write.partitionBy(BucketCol).parquet(staging)
       }
@@ -3011,22 +3071,20 @@ object KeyedTable {
           val dvStaging = s"$dir/.staging-merge-dv-${UUID.randomUUID()}"
           val dataStaging = s"$dir/.staging-merge-${UUID.randomUUID()}"
           try {
-            inParallel(
+            inParallel(spark)(
               { clCommit = stageChangelog() },
               {
                 observeStats(j).filter(presentOld)
                   .select(col(s"o.$BucketCol").as(BucketCol),
                     col(s"o.$FileCol").as("file"), col(s"o.$PosCol").as("pos"))
-                  .repartition(touched.size, col(BucketCol))
-                  .sortWithinPartitions(col(BucketCol), col("file"), col("pos"))
+                  .transform(clusterByBucket(_, touched, Seq("file", "pos")))
                   .write.partitionBy(BucketCol).parquet(dvStaging)
                 toPhys(j.filter(!del)
                   .select(meta.pk.map(col) ++ nonPk.toSeq.map { c =>
                     (if (incomingCols.contains(c)) col(s"n.$c")
                      else col(s"o.$c")).as(c)
                   } :+ col(s"n.$BucketCol").as(BucketCol): _*)
-                  .repartition(touched.size, col(BucketCol))
-                  .sortWithinPartitions((BucketCol +: meta.pk).map(col): _*),
+                  .transform(clusterByBucket(_, touched, meta.pk)),
                   meta)
                   .write.partitionBy(BucketCol).parquet(dataStaging)
               })
@@ -3057,9 +3115,9 @@ object KeyedTable {
             }
           val staging = s"$dir/.staging-${UUID.randomUUID()}"
           try {
-            inParallel(
+            inParallel(spark)(
               { clCommit = stageChangelog() },
-              toPhys(clusterByBucket(outObs, base.buckets, meta.pk), meta)
+              toPhys(clusterByBucket(outObs, touched, meta.pk), meta)
                 .write.partitionBy(BucketCol).mode(SaveMode.Overwrite).parquet(staging))
             // removeMissing on the merge path: a touched bucket whose rows
             // ALL tombstoned has no staged replacement and leaves the
@@ -3352,8 +3410,7 @@ object KeyedTable {
       try {
         toPhys(readRawWith(spark, warehouse, tableName, meta, manifestOf(base))
           .filter(col(BucketCol).isin(crowded: _*))
-          .repartition(crowded.size, col(BucketCol))
-          .sortWithinPartitions((BucketCol +: meta.pk).map(col): _*),
+          .transform(clusterByBucket(_, crowded, meta.pk)),
           meta)
           .write.partitionBy(BucketCol).parquet(staging)
         commitStaged(spark, f, dir, data, staging, crowded, "compact",
@@ -3388,8 +3445,7 @@ object KeyedTable {
         // the rewrite job — OUTSIDE the lock
         toPhys(readRawWith(spark, warehouse, tableName, meta0, manifestOf(base0))
           .filter(col(BucketCol).isin(crowded: _*))
-          .repartition(crowded.size, col(BucketCol))
-          .sortWithinPartitions((BucketCol +: meta0.pk).map(col): _*),
+          .transform(clusterByBucket(_, crowded, meta0.pk)),
           meta0)
           .write.partitionBy(BucketCol).parquet(staging)
         // footer stats of the staged files too — the flip must stay a
@@ -3635,8 +3691,7 @@ object KeyedTable {
         try {
           // the sort + rewrite job — OUTSIDE the lock
           val writer = toPhys(raw.withColumn("_z", z)
-            .repartition(base0.buckets, col(BucketCol))
-            .sortWithinPartitions(col(BucketCol), col("_z"))
+            .transform(clusterByBucket(_, touched, Seq("_z")))
             .drop("_z"), meta0)
             .write.partitionBy(BucketCol)
           parquetBlockBytes.fold(writer)(n =>
@@ -3767,24 +3822,22 @@ object KeyedTable {
               // by (file, pos) so the sidecar compresses and scans
               // well. The scan re-applies existing DVs (readRawPos),
               // so positions are never tombstoned twice.
-              inParallel({ stageCl() },
+              inParallel(spark)({ stageCl() },
                 readRawPos(spark, warehouse, tableName, meta,
                     manifestOf(base), withPos = true)
                   .filter(coalesce(where, lit(false)))
                   .select(col(BucketCol), col(FileCol).as("file"),
                     col(PosCol).as("pos"))
-                  .repartition(touched.size, col(BucketCol))
-                  .sortWithinPartitions(col(BucketCol), col("file"), col("pos"))
+                  .transform(clusterByBucket(_, touched, Seq("file", "pos")))
                   .write.partitionBy(BucketCol).parquet(staging))
               commitStagedDvs(spark, f, dir, data, staging, touched, base)
             } else {
               // copy-on-write: NULL predicate rows are NOT matches —
               // keep them (a bare !where would silently drop them)
-              inParallel({ stageCl() },
+              inParallel(spark)({ stageCl() },
                 toPhys(raw.filter(col(BucketCol).isin(touched: _*))
                   .filter(!coalesce(where, lit(false)))
-                  .repartition(touched.size, col(BucketCol))
-                  .sortWithinPartitions((BucketCol +: meta.pk).map(col): _*),
+                  .transform(clusterByBucket(_, touched, meta.pk)),
                   meta)
                   .write.partitionBy(BucketCol).parquet(staging))
               // removeMissing: a bucket whose rows ALL matched has no
@@ -3902,18 +3955,16 @@ object KeyedTable {
             val dvStaging = s"$dir/.staging-update-dv-${UUID.randomUUID()}"
             val dataStaging = s"$dir/.staging-update-${UUID.randomUUID()}"
             try {
-              inParallel({ stageCl() }, {
+              inParallel(spark)({ stageCl() }, {
                 posFrame
                   .select(col(BucketCol), col(FileCol).as("file"),
                     col(PosCol).as("pos"))
-                  .repartition(touched.size, col(BucketCol))
-                  .sortWithinPartitions(col(BucketCol), col("file"), col("pos"))
+                  .transform(clusterByBucket(_, touched, Seq("file", "pos")))
                   .write.partitionBy(BucketCol).parquet(dvStaging)
                 toPhys(posFrame
                   .select(meta.schema.fieldNames.toSeq
                     .map(c => newVal(c).as(c)) :+ col(BucketCol): _*)
-                  .repartition(touched.size, col(BucketCol))
-                  .sortWithinPartitions((BucketCol +: meta.pk).map(col): _*),
+                  .transform(clusterByBucket(_, touched, meta.pk)),
                   meta)
                   .write.partitionBy(BucketCol).parquet(dataStaging)
               })
@@ -3931,11 +3982,10 @@ object KeyedTable {
                 (if (set.contains(c)) when(matched, newVal(c)).otherwise(col(c))
                  else col(c)).as(c)
               } :+ col(BucketCol)
-              inParallel({ stageCl() },
+              inParallel(spark)({ stageCl() },
                 toPhys(raw.filter(col(BucketCol).isin(touched: _*))
                   .select(rewritten: _*)
-                  .repartition(touched.size, col(BucketCol))
-                  .sortWithinPartitions((BucketCol +: meta.pk).map(col): _*),
+                  .transform(clusterByBucket(_, touched, meta.pk)),
                   meta)
                   .write.partitionBy(BucketCol).parquet(staging))
               commitStaged(spark, f, dir, data, staging, touched, "update",
@@ -4392,8 +4442,7 @@ object KeyedTable {
               readRawWith(spark, warehouse, tableName, meta0, Some(base0))
                 .drop(BucketCol),
               meta0.pk, newBuckets)
-            .repartition(newBuckets, col(BucketCol))
-            .sortWithinPartitions((BucketCol +: meta0.pk).map(col): _*),
+            .transform(clusterByBucket(_, 0 until newBuckets, meta0.pk)),
             meta0)
             .write.partitionBy(BucketCol).parquet(staging)
           // a rebucket stages EVERY row — its footer stats must not be
@@ -4459,8 +4508,7 @@ object KeyedTable {
           readRawWith(spark, warehouse, tableName, meta, manifestOf(base))
             .drop(BucketCol),
           meta.pk, newBuckets)
-        .repartition(newBuckets, col(BucketCol))
-        .sortWithinPartitions((BucketCol +: meta.pk).map(col): _*),
+        .transform(clusterByBucket(_, 0 until newBuckets, meta.pk)),
         meta)
         .write.partitionBy(BucketCol).parquet(staging)
       // ONE snapshot flip switches both the file set and the bucket

@@ -140,19 +140,16 @@ final case class Manifest(version: Long, buckets: Int,
     if (segs.nonEmpty) 4
     else if (streams.nonEmpty) 3 else if (dvs.nonEmpty) 2 else 1
 
-  /** Absolute path of every live file (order: bucket, then name). */
-  def absolutePaths(dataDir: String): Seq[String] =
-    files.toSeq.sortBy(_._1).flatMap { case (b, fs) =>
-      fs.map(mf => s"$dataDir/${KeyedTable.BucketCol}=$b/${mf.name}")
-    }
+  /** (absolute path, length) of every live file (order: bucket, then
+    * name) — all a v1 file index needs, so reads never list. */
+  def absoluteFiles(dataDir: String): Seq[(String, Long)] =
+    Manifest.withPaths(files, dataDir)
 
-  /** Absolute path of every delete-vector file, restricted to buckets
-    * that still hold live data files (a DV without data is dead). */
-  def dvPaths(dataDir: String): Seq[String] =
-    dvs.toSeq.filter(kv => files.contains(kv._1)).sortBy(_._1)
-      .flatMap { case (b, fs) =>
-        fs.map(mf => s"$dataDir/${KeyedTable.BucketCol}=$b/${mf.name}")
-      }
+  /** (absolute path, length) of every delete-vector file, restricted to
+    * buckets that still hold live data files (a DV without data is
+    * dead). */
+  def dvFiles(dataDir: String): Seq[(String, Long)] =
+    Manifest.withPaths(dvs.filter(kv => files.contains(kv._1)), dataDir)
 
   /** Total deleted-position count of the live buckets' DVs; None when
     * some DV entry lacks a recorded row count (never written by this
@@ -201,6 +198,12 @@ final case class Manifest(version: Long, buckets: Int,
 
 object Manifest {
   val DirName = "_manifests"
+
+  private def withPaths(byBucket: Map[Int, Seq[ManifestFile]],
+                        dataDir: String): Seq[(String, Long)] =
+    byBucket.toSeq.sortBy(_._1).flatMap { case (b, fs) =>
+      fs.map(mf => s"$dataDir/${KeyedTable.BucketCol}=$b/${mf.name}" -> mf.len)
+    }
 
   /** One file entry's JSON. Arity encodes presence: [name, len] |
     * [name, len, rows] | [name, len, rows, min, max] (stats imply

@@ -31,4 +31,11 @@ object GraftBridge {
       : org.apache.spark.broadcast.Broadcast[
         org.apache.spark.util.SerializableConfiguration] =
     org.apache.spark.util.SerializableConfiguration.broadcast(sc, conf)
+
+  /** Every field nullable, nested ones too (`private[spark]`) — what a
+    * file source relation declares for its data schema, so a store read
+    * built on its own file index types its columns as a listed read
+    * does. */
+  def asNullable(s: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = s.asNullable
 }

@@ -64,6 +64,34 @@ class KeyedTableSpec extends SparkSpec {
     assert(KeyedTable.readSql(spark, w, "t").count() === 15)
   }
 
+  test("a failed PK-overlap probe cancels the append's concurrent staging write") {
+    import org.apache.spark.JobCounter.jobsRunBy
+    val w = wh()
+    KeyedTable.toSql(sample(50), w, "t", pk = Seq("id"))
+    val protocolConf = "spark.sql.sources.commitProtocolClass"
+    val prevProtocol = spark.conf.getOption(protocolConf)
+    // the staging write's tasks wait until killed, so the write is still
+    // running when the probe finds the overlap
+    BlockingCommitProtocol.blockPathsContaining = Some(".staging-append")
+    spark.conf.set(protocolConf, classOf[BlockingCommitProtocol].getName)
+    val (outcome, jobs) = try {
+      jobsRunBy(spark.sparkContext)(scala.util.Try(
+        KeyedTable.toSql(sample(5), w, "t", pk = Seq("id"), how = WriteMode.Append)))
+    } finally {
+      BlockingCommitProtocol.blockPathsContaining = None
+      prevProtocol.fold(spark.conf.unset(protocolConf))(spark.conf.set(protocolConf, _))
+    }
+    val e = outcome.failed.get
+    assert(e.isInstanceOf[StoreException] &&
+      e.getMessage.contains("would overwrite existing PKs"), e)
+    assert(jobs.exists(_.failure.exists(_.contains("cancelled"))),
+      s"no job ended cancelled: $jobs")
+    val leftovers = new java.io.File(KeyedTable.tableDir(w, "t")).list()
+      .filter(_.startsWith(".staging-"))
+    assert(leftovers.isEmpty, leftovers.toSeq)
+    assert(KeyedTable.readSql(spark, w, "t").count() === 50)
+  }
+
   test("upsert replaces full rows (incoming NULLs win) and inserts new keys") {
     import spark.implicits._
     val w = wh()
@@ -262,6 +290,49 @@ class KeyedTableSpec extends SparkSpec {
     assert(KeyedTable.readSql(spark, w, "t").collect().map(_.toSeq).toSet == before)
     // already-compacted table: no-op
     assert(KeyedTable.compact(spark, w, "t", minFiles = 4) == 0)
+  }
+
+  test("reads take their file index from the manifest: no listing job past 32 files") {
+    import org.apache.spark.JobCounter.jobsRunBy
+    val w = wh()
+    // 4 buckets, 11 commits: 44 live files, past Spark's 32-path
+    // threshold for listing input paths in a Spark job
+    KeyedTable.toSql(sample(100), w, "t", pk = Seq("id"), buckets = 4)
+    (1 to 10).foreach { k =>
+      KeyedTable.toSql(sample(100).withColumn("id", col("id") + k * 100L),
+        w, "t", pk = Seq("id"), how = WriteMode.Append)
+    }
+    val dir = KeyedTable.tableDir(w, "t")
+    assert(Manifest.current(spark, dir).get.files.values.map(_.size).sum > 32)
+    val before = KeyedTable.readSql(spark, w, "t")
+    def listing(jobs: Seq[org.apache.spark.JobCounter.JobRecord]) =
+      jobs.filter(_.description.startsWith("Listing leaf files"))
+    val (rows, readJobs) = jobsRunBy(spark.sparkContext)(
+      KeyedTable.readSql(spark, w, "t").collect())
+    assert(rows.length == 1100)
+    assert(listing(readJobs).isEmpty, readJobs)
+    val (n, compactJobs) = jobsRunBy(spark.sparkContext)(
+      KeyedTable.compact(spark, w, "t", minFiles = 2))
+    assert(n == 4)
+    assert(listing(compactJobs).isEmpty, compactJobs)
+    assert(KeyedTable.readSql(spark, w, "t").collect().toSet == rows.toSet)
+    // the bucket column still comes from the files' directories: point
+    // reads prune on it
+    (1L to 1100L by 37L).foreach { k =>
+      assert(KeyedTable.readSql(spark, w, "t", lowest = Seq(k), highest = Seq(k))
+        .collect().map(_.getLong(0)).toSeq == Seq(k))
+    }
+    // positional deletes (the `_metadata` row index) and their DV
+    // sidecars read through the same index
+    assert(KeyedTable.delete(spark, w, "t", col("id") % 100 === 7L,
+      mode = DeleteMode.MergeOnRead) == 11L)
+    assert(KeyedTable.readSql(spark, w, "t").count() == 1089)
+    // a frame resolved before the compaction names files vacuum deletes:
+    // reading it fails on the missing file, not with wrong rows
+    KeyedTable.vacuum(spark, w, "t", olderThanMs = 0L): Unit
+    val err = intercept[org.apache.spark.SparkException](before.collect())
+    assert(err.getMessage.contains("FILE_NOT_EXIST") ||
+      err.getMessage.contains("does not exist"), err.getMessage)
   }
 
   test("vacuum removes only stale staging/retired leftovers, never live data") {
@@ -478,5 +549,151 @@ class KeyedTableSpec extends SparkSpec {
     assert(!plan.contains("Exchange"), s"unexpected exchange in:\n$plan")
     assert(plan.contains("SortMergeJoin"), s"expected sort-merge join in:\n$plan")
     assert(plan.contains("BatchScan"), s"expected V2 batch scan in:\n$plan")
+  }
+
+  test("staged writes run min(buckets in play, cores) balanced tasks, one PK-sorted file per bucket") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    val w = wh()
+    val cores = spark.sparkContext.defaultParallelism
+    val taskOf = "part-(\\d{5})-".r
+    var model = Map.empty[Long, (Long, String, Double, Boolean)]
+    def recs(ids: Seq[Long], tag: String): Seq[(Long, String, Double, Boolean)] =
+      ids.map(i => (i, s"${tag}_$i", i * 1.5, i % 2 == 0))
+    def frame(rs: Seq[(Long, String, Double, Boolean)]): DataFrame = rs.toDF("id", "name", "score", "flag")
+    def bucketsOf(t: String, ids: Iterable[Long]): Set[Int] = {
+      val meta = TableMeta.read(spark, KeyedTable.tableDir(w, t))
+      ids.map(i => KeyedTable.bucketOfKey(spark, meta, meta.buckets, Seq(i))).toSet
+    }
+    def added(before: Map[Int, Seq[ManifestFile]],
+              after: Map[Int, Seq[ManifestFile]]): Seq[(Int, String)] =
+      after.toSeq.flatMap { case (b, fs) =>
+        val old = before.getOrElse(b, Nil).map(_.name).toSet
+        fs.map(_.name).filterNot(old).map(b -> _)
+      }
+    // the files one staged write added: exactly one per bucket in play,
+    // written by tasks 0 until min(buckets in play, cores) holding
+    // bucket counts that differ by at most one, each file sorted
+    def check(what: String, t: String, files: Seq[(Int, String)],
+              inPlay: Set[Int], sortedBy: Seq[String]): Unit = {
+      assert(files.map(_._1).sorted == inPlay.toSeq.sorted,
+        s"$what: new files per bucket ${files.groupBy(_._1).map(kv => kv._1 -> kv._2.size)}")
+      if (inPlay.nonEmpty) {
+        val n = math.min(inPlay.size, cores)
+        val byTask = files.groupBy(f => taskOf.findFirstMatchIn(f._2).get.group(1).toInt)
+        assert(byTask.keySet == (0 until n).toSet, s"$what: tasks ${byTask.keys.toSeq.sorted}")
+        val counts = byTask.values.map(_.size)
+        assert(counts.max - counts.min <= 1, s"$what: buckets per task $counts")
+        if (sortedBy.nonEmpty) {
+          val key = struct(sortedBy.map(col): _*)
+          val paths = files.map { case (b, f) => s"${KeyedTable.dataDir(w, t)}/pb_bucket=$b/$f" }
+          val outOfOrder = spark.read.parquet(paths: _*)
+            .select(col("_metadata.file_path").as("f"),
+              col("_metadata.row_index").as("i"), key.as("k"))
+            .withColumn("prev", lag(col("k"), 1).over(Window.partitionBy("f").orderBy("i")))
+            .filter(col("prev") >= col("k")).count()
+          assert(outOfOrder == 0, s"$what: rows out of ${sortedBy.mkString("(", ", ", ")")} order")
+        }
+      }
+    }
+    // runs one verb on table t; `dataIn` / `dvIn` are the buckets it
+    // should stage data files / DV sidecars for
+    def layout(verb: String, dataIn: Set[Int], dvIn: Set[Int] = Set.empty,
+               sortedBy: Seq[String] = Seq("id"))(run: => Unit): Unit = {
+      val none = Map.empty[Int, Seq[ManifestFile]]
+      val m0 = Manifest.current(spark, KeyedTable.tableDir(w, "t"))
+      run
+      val m1 = Manifest.current(spark, KeyedTable.tableDir(w, "t")).get
+      check(verb, "t", added(m0.fold(none)(_.files), m1.files), dataIn, sortedBy)
+      check(s"$verb (DV sidecars)", "t", added(m0.fold(none)(_.dvs), m1.dvs),
+        dvIn, Seq("file", "pos"))
+      assert(KeyedTable.readSql(spark, w, "t").as[(Long, String, Double, Boolean)].collect().toSet ==
+        model.values.toSet, verb)
+    }
+    def put(rs: Seq[(Long, String, Double, Boolean)]): Unit = model ++= rs.map(r => r._1 -> r)
+    val r = (a: Long, b: Long) => (a to b).toSeq
+
+    layout("create", (0 until 32).toSet) {
+      put(recs(r(1, 600), "c"))
+      KeyedTable.toSql(frame(recs(r(1, 600), "c")), w, "t", pk = Seq("id"))
+    }
+    layout("append", bucketsOf("t", r(601, 700))) {
+      put(recs(r(601, 700), "a"))
+      KeyedTable.toSql(frame(recs(r(601, 700), "a")), w, "t", pk = Seq("id"),
+        how = WriteMode.Append)
+    }
+    layout("appendConcurrent", bucketsOf("t", r(701, 800))) {
+      put(recs(r(701, 800), "ac"))
+      KeyedTable.appendConcurrent(frame(recs(r(701, 800), "ac")), w, "t")
+    }
+    val ups = r(1, 40) ++ r(801, 840)
+    layout("upsert", bucketsOf("t", ups)) {
+      put(recs(ups, "u"))
+      KeyedTable.toSql(frame(recs(ups, "u")), w, "t", pk = Seq("id"),
+        how = WriteMode.Upsert)
+    }
+    val upc = r(41, 80) ++ r(841, 880)
+    layout("upsertConcurrent", bucketsOf("t", upc)) {
+      put(recs(upc, "uc"))
+      KeyedTable.upsertConcurrent(frame(recs(upc, "uc")), w, "t")
+    }
+    def feed(keep: Seq[Long], drop: Seq[Long], tag: String): DataFrame =
+      frame(recs(keep ++ drop, tag)).withColumn("is_del", col("id").isin(drop: _*))
+    val (mKeep, mDrop) = (r(81, 100) ++ r(881, 890), r(101, 110))
+    layout("merge (merge-on-read)", bucketsOf("t", mKeep),
+        bucketsOf("t", r(81, 110))) {
+      put(recs(mKeep, "m")); model --= mDrop
+      KeyedTable.merge(feed(mKeep, mDrop, "m"), w, "t", deleteWhen = col("is_del"),
+        mode = DeleteMode.MergeOnRead)
+    }
+    val (cKeep, cDrop) = (r(111, 130) ++ r(891, 900), r(131, 140))
+    layout("mergeConcurrent (copy-on-write)", bucketsOf("t", cKeep ++ cDrop)) {
+      put(recs(cKeep, "mc")); model --= cDrop
+      KeyedTable.mergeConcurrent(feed(cKeep, cDrop, "mc"), w, "t",
+        deleteWhen = col("is_del"))
+    }
+    def renamed(ids: Seq[Long]): Unit =
+      put(ids.map(i => model(i).copy(_2 = "upd")))
+    layout("update (copy-on-write)", bucketsOf("t", r(141, 170))) {
+      renamed(r(141, 170))
+      KeyedTable.update(spark, w, "t", col("id").between(141L, 170L),
+        Map("name" -> lit("upd")), mode = DeleteMode.CopyOnWrite)
+    }
+    layout("updateConcurrent (merge-on-read)", bucketsOf("t", r(171, 190)),
+        bucketsOf("t", r(171, 190))) {
+      renamed(r(171, 190))
+      KeyedTable.updateConcurrent(spark, w, "t", col("id").between(171L, 190L),
+        Map("name" -> lit("upd")), mode = DeleteMode.MergeOnRead)
+    }
+    layout("deleteConcurrent (copy-on-write)", bucketsOf("t", r(191, 220))) {
+      model --= r(191, 220)
+      KeyedTable.deleteConcurrent(spark, w, "t", col("id").between(191L, 220L),
+        mode = DeleteMode.CopyOnWrite)
+    }
+    layout("delete (merge-on-read)", Set.empty, bucketsOf("t", r(221, 240))) {
+      model --= r(221, 240)
+      KeyedTable.delete(spark, w, "t", col("id").between(221L, 240L),
+        mode = DeleteMode.MergeOnRead)
+    }
+    def crowded(minFiles: Int): Set[Int] =
+      Manifest.current(spark, KeyedTable.tableDir(w, "t")).get.files
+        .filter(_._2.size >= minFiles).keySet
+    layout("compact", crowded(3)) {
+      KeyedTable.compact(spark, w, "t", minFiles = 3)
+    }
+    layout("zorderCompact", (0 until 32).toSet, sortedBy = Nil) {
+      KeyedTable.zorderCompact(spark, w, "t", Seq("id", "score"))
+    }
+    layout("rebucket", (0 until 40).toSet) {
+      KeyedTable.rebucket(spark, w, "t", 40)
+    }
+
+    // create's {0,1} → bool rewrite re-clusters the staged files
+    val bits = (1 to 300).map(i => (i.toLong, i % 2)).toDF("id", "bit")
+    KeyedTable.toSql(bits, w, "b", pk = Seq("id"))
+    val bFiles = Manifest.current(spark, KeyedTable.tableDir(w, "b")).get.files
+    check("create (bool rewrite)", "b", added(Map.empty, bFiles), (0 until 32).toSet, Seq("id"))
+    assert(KeyedTable.readSql(spark, w, "b").schema("bit").dataType ==
+      org.apache.spark.sql.types.BooleanType)
   }
 }
