@@ -174,16 +174,22 @@ object KeyedTable {
     * is the first thing that kills a 100 TB table. The shuffle this adds
     * is the write's only wide op.
     *
-    * The write runs `n = min(buckets in play, defaultParallelism)` tasks
-    * holding an even share of the buckets each: the buckets in play are
-    * numbered 0, 1, 2, … and `repartitionById` sends slot `s` to task
-    * `pmod(s, n)`, so per-task bucket counts differ by at most one. A
-    * hash repartition is uneven (Murmur3 puts 10 of 32 buckets on one of
-    * 4 tasks), and one task per bucket pays a task's scheduling and
-    * deserialization per bucket — on a 100-row upsert that overhead was
-    * most of the job. With at least as many cores as buckets in play,
-    * every bucket still gets a task of its own. When the buckets in play
-    * are consecutive (create, rebucket, most full rewrites) the slot is
+    * How many tasks depends on the write's size ([[writeBytes]], a
+    * driver-side estimate):
+    *  - a SMALL write — at most one advisory shuffle partition
+    *    (`spark.sql.adaptive.advisoryPartitionSizeInBytes`, 64 MB by
+    *    default) — runs `n = min(buckets in play, defaultParallelism)`
+    *    tasks. Per-task scheduling and deserialization, paid once per
+    *    bucket, was most of a 100-row upsert's write job;
+    *  - any other write runs one task per bucket in play, so a large
+    *    rewrite's parallelism never depends on how many cores happen to
+    *    be registered when it is planned (dynamic allocation scales on
+    *    pending tasks).
+    * The buckets in play are numbered 0, 1, 2, … and `repartitionById`
+    * sends slot `s` to task `pmod(s, n)`, so per-task bucket counts
+    * differ by at most one (a hash repartition is uneven: Murmur3 puts
+    * 10 of 32 buckets on one of 4 tasks). When the buckets in play are
+    * consecutive (create, rebucket, most full rewrites) the slot is
     * `pb_bucket` itself, so the planner sees the exchange as clustered
     * by the bucket column and a bucket-partitioned window on top (create's
     * PK check) reuses it.
@@ -199,8 +205,12 @@ object KeyedTable {
   private def clusterByBucket(df: DataFrame, inPlay: Seq[Int],
                               sortBy: Seq[String]): DataFrame = {
     val ids = inPlay.distinct.sorted
+    val spark = df.sparkSession
+    val small = writeBytes(df) <= spark.sessionState.conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
     val n = math.max(1,
-      math.min(ids.size, df.sparkSession.sparkContext.defaultParallelism))
+      if (small) math.min(ids.size, spark.sparkContext.defaultParallelism)
+      else ids.size)
     val slot =
       if (ids.isEmpty || ids.last - ids.head + 1 == ids.size) col(BucketCol)
       else {
@@ -213,6 +223,41 @@ object KeyedTable {
       }
     df.repartitionById(n, slot)
       .sortWithinPartitions((BucketCol +: sortBy).map(col): _*)
+  }
+
+  /** The bytes a staging write reads, estimated on the driver from the
+    * optimized plan without running a job: the sum over the plan's
+    * leaves. A scan of a store snapshot counts only the files its
+    * `pb_bucket` filter keeps (a delta write reads just its touched
+    * buckets), a persisted frame its cached size (before its first
+    * action, the plan it caches), and any other leaf counts Spark's own
+    * estimate — unknown sizes (an RDD) are
+    * huge, so such a write is never small. Leaves are summed rather than
+    * taking the root's estimate, which multiplies the sides of a join. */
+  private[store] def writeBytes(df: DataFrame): BigInt = {
+    import org.apache.spark.sql.catalyst.expressions.AttributeSet
+    import org.apache.spark.sql.catalyst.planning.PhysicalOperation
+    import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    def bytes(p: LogicalPlan): BigInt = p match {
+      case m: InMemoryRelation if !m.cacheBuilder.isCachedColumnBuffersLoaded =>
+        bytes(m.cacheBuilder.logicalPlan)
+      case PhysicalOperation(_, filters, l: LogicalRelation) if (l.relation match {
+          case r: HadoopFsRelation => r.location.isInstanceOf[ManifestFileIndex]
+          case _ => false
+        }) =>
+        val r = l.relation.asInstanceOf[HadoopFsRelation]
+        val partCols = AttributeSet(
+          l.output.filter(a => r.partitionSchema.fieldNames.contains(a.name)))
+        val partFilters = filters.filter(f =>
+          f.references.nonEmpty && f.references.subsetOf(partCols))
+        r.location.listFiles(partFilters, Nil)
+          .map(_.files.map(f => BigInt(f.getLen)).sum).sum
+      case l: LeafNode => l.stats.sizeInBytes
+      case other => other.children.map(bytes).sum
+    }
+    bytes(df.queryExecution.optimizedPlan)
   }
 
   /** Write `df` into `<warehouse>/<tableName>` keyed by `pk`.
@@ -914,13 +959,23 @@ object KeyedTable {
     * renames staging into place via [[commitChangelogBatch]] only AFTER
     * its data commit — a mutation that fails mid-commit leaves no batch
     * claiming changes that never landed — and deletes staging in a
-    * `finally` (a no-op once renamed). Batch numbers are monotonic
-    * under the write lock. */
+    * `finally` (a no-op once renamed). A staging write that throws —
+    * e.g. cancelled by [[inParallel]] because the concurrent data write
+    * failed — deletes its own partial staging before the caller ever
+    * learns its path. Batch numbers are monotonic under the write
+    * lock. */
   private def stageChangelogBatch(spark: SparkSession, dir: String,
                                   changes: DataFrame): (Path, Path) = {
     val clStaging = new Path(dir, s".staging-changelog-${UUID.randomUUID()}")
-    changes.write.parquet(clStaging.toString)
-    (clStaging, nextChangelogDst(fs(spark, dir), dir))
+    val f = fs(spark, dir)
+    try {
+      changes.write.parquet(clStaging.toString)
+      (clStaging, nextChangelogDst(f, dir))
+    } catch {
+      case e: Throwable =>
+        f.delete(clStaging, true)
+        throw e
+    }
   }
 
   /** Next `_changelog/batch=<n>` target. Batch numbers are monotonic

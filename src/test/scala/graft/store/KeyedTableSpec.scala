@@ -92,6 +92,62 @@ class KeyedTableSpec extends SparkSpec {
     assert(KeyedTable.readSql(spark, w, "t").count() === 50)
   }
 
+  test("a failed staging write cancels the concurrent changelog write and removes its staging") {
+    import org.apache.spark.JobCounter.jobsRunBy
+    val w = wh()
+    KeyedTable.toSql(sample(50), w, "t", pk = Seq("id"))
+    val protocolConf = "spark.sql.sources.commitProtocolClass"
+    val prevProtocol = spark.conf.getOption(protocolConf)
+    // the changelog batch's staging tasks wait until killed; the data
+    // staging write fails while they wait
+    BlockingCommitProtocol.blockPathsContaining = Some(".staging-changelog")
+    BlockingCommitProtocol.failPathsContaining = Some(".staging-append")
+    spark.conf.set(protocolConf, classOf[BlockingCommitProtocol].getName)
+    val more = sample(5).withColumn("id", col("id") + 100L)
+    val (outcome, jobs) = try {
+      jobsRunBy(spark.sparkContext)(scala.util.Try(
+        KeyedTable.toSql(more, w, "t", pk = Seq("id"), how = WriteMode.Append,
+          changelog = true)))
+    } finally {
+      BlockingCommitProtocol.blockPathsContaining = None
+      BlockingCommitProtocol.failPathsContaining = None
+      prevProtocol.fold(spark.conf.unset(protocolConf))(spark.conf.set(protocolConf, _))
+    }
+    assert(outcome.isFailure)
+    assert(jobs.exists(j => j.failure.exists(_.contains("cancelled"))),
+      s"no job ended cancelled: $jobs")
+    val leftovers = new java.io.File(KeyedTable.tableDir(w, "t")).list()
+      .filter(_.startsWith(".staging-"))
+    assert(leftovers.isEmpty, leftovers.toSeq)
+    assert(KeyedTable.readSql(spark, w, "t").count() === 50)
+  }
+
+  test("create's staging write plans exactly one Exchange and one Sort") {
+    import org.apache.spark.sql.execution.{QueryExecution, SortExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.executedPlan.toString.contains("InsertIntoHadoopFsRelationCommand"))
+          writes.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      KeyedTable.toSql(sample(200), wh(), "t", pk = Seq("id"))
+      org.apache.spark.JobCounter.drainListeners(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(writes.size == 1, s"${writes.size} writes")
+    val plan = writes.peek().executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    val exchanges = helper.collect(plan) { case e: ShuffleExchangeExec => e }
+    val sorts = helper.collect(plan) { case s: SortExec => s }
+    assert(exchanges.size == 1 && sorts.size == 1,
+      s"${exchanges.size} exchanges, ${sorts.size} sorts in:\n$plan")
+  }
+
   test("upsert replaces full rows (incoming NULLs win) and inserts new keys") {
     import spark.implicits._
     val w = wh()
@@ -551,12 +607,46 @@ class KeyedTableSpec extends SparkSpec {
     assert(plan.contains("BatchScan"), s"expected V2 batch scan in:\n$plan")
   }
 
+  private def addedFiles(before: Map[Int, Seq[ManifestFile]],
+                         after: Map[Int, Seq[ManifestFile]]): Seq[(Int, String)] =
+    after.toSeq.flatMap { case (b, fs) =>
+      val old = before.getOrElse(b, Nil).map(_.name).toSet
+      fs.map(_.name).filterNot(old).map(b -> _)
+    }
+
+  /** The files one staged write added to table `t`: exactly one per
+    * bucket in play, written by tasks 0 until `tasks` (read from the
+    * files' `part-NNNNN` writer ids) holding bucket counts that differ
+    * by at most one, each file's rows sorted by `sortedBy`. */
+  private def checkLayout(w: String, t: String, what: String,
+                          files: Seq[(Int, String)], inPlay: Set[Int],
+                          tasks: Int, sortedBy: Seq[String]): Unit = {
+    import org.apache.spark.sql.expressions.Window
+    val taskOf = "part-(\\d{5})-".r
+    assert(files.map(_._1).sorted == inPlay.toSeq.sorted,
+      s"$what: new files per bucket ${files.groupBy(_._1).map(kv => kv._1 -> kv._2.size)}")
+    if (inPlay.nonEmpty) {
+      val byTask = files.groupBy(f => taskOf.findFirstMatchIn(f._2).get.group(1).toInt)
+      assert(byTask.keySet == (0 until tasks).toSet, s"$what: tasks ${byTask.keys.toSeq.sorted}")
+      val counts = byTask.values.map(_.size)
+      assert(counts.max - counts.min <= 1, s"$what: buckets per task $counts")
+      if (sortedBy.nonEmpty) {
+        val key = struct(sortedBy.map(col): _*)
+        val paths = files.map { case (b, f) => s"${KeyedTable.dataDir(w, t)}/pb_bucket=$b/$f" }
+        val outOfOrder = spark.read.parquet(paths: _*)
+          .select(col("_metadata.file_path").as("f"),
+            col("_metadata.row_index").as("i"), key.as("k"))
+          .withColumn("prev", lag(col("k"), 1).over(Window.partitionBy("f").orderBy("i")))
+          .filter(col("prev") >= col("k")).count()
+        assert(outOfOrder == 0, s"$what: rows out of ${sortedBy.mkString("(", ", ", ")")} order")
+      }
+    }
+  }
+
   test("staged writes run min(buckets in play, cores) balanced tasks, one PK-sorted file per bucket") {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     val w = wh()
     val cores = spark.sparkContext.defaultParallelism
-    val taskOf = "part-(\\d{5})-".r
     var model = Map.empty[Long, (Long, String, Double, Boolean)]
     def recs(ids: Seq[Long], tag: String): Seq[(Long, String, Double, Boolean)] =
       ids.map(i => (i, s"${tag}_$i", i * 1.5, i % 2 == 0))
@@ -567,35 +657,10 @@ class KeyedTableSpec extends SparkSpec {
     }
     def added(before: Map[Int, Seq[ManifestFile]],
               after: Map[Int, Seq[ManifestFile]]): Seq[(Int, String)] =
-      after.toSeq.flatMap { case (b, fs) =>
-        val old = before.getOrElse(b, Nil).map(_.name).toSet
-        fs.map(_.name).filterNot(old).map(b -> _)
-      }
-    // the files one staged write added: exactly one per bucket in play,
-    // written by tasks 0 until min(buckets in play, cores) holding
-    // bucket counts that differ by at most one, each file sorted
+      addedFiles(before, after)
     def check(what: String, t: String, files: Seq[(Int, String)],
-              inPlay: Set[Int], sortedBy: Seq[String]): Unit = {
-      assert(files.map(_._1).sorted == inPlay.toSeq.sorted,
-        s"$what: new files per bucket ${files.groupBy(_._1).map(kv => kv._1 -> kv._2.size)}")
-      if (inPlay.nonEmpty) {
-        val n = math.min(inPlay.size, cores)
-        val byTask = files.groupBy(f => taskOf.findFirstMatchIn(f._2).get.group(1).toInt)
-        assert(byTask.keySet == (0 until n).toSet, s"$what: tasks ${byTask.keys.toSeq.sorted}")
-        val counts = byTask.values.map(_.size)
-        assert(counts.max - counts.min <= 1, s"$what: buckets per task $counts")
-        if (sortedBy.nonEmpty) {
-          val key = struct(sortedBy.map(col): _*)
-          val paths = files.map { case (b, f) => s"${KeyedTable.dataDir(w, t)}/pb_bucket=$b/$f" }
-          val outOfOrder = spark.read.parquet(paths: _*)
-            .select(col("_metadata.file_path").as("f"),
-              col("_metadata.row_index").as("i"), key.as("k"))
-            .withColumn("prev", lag(col("k"), 1).over(Window.partitionBy("f").orderBy("i")))
-            .filter(col("prev") >= col("k")).count()
-          assert(outOfOrder == 0, s"$what: rows out of ${sortedBy.mkString("(", ", ", ")")} order")
-        }
-      }
-    }
+              inPlay: Set[Int], sortedBy: Seq[String]): Unit =
+      checkLayout(w, t, what, files, inPlay, math.min(inPlay.size, cores), sortedBy)
     // runs one verb on table t; `dataIn` / `dvIn` are the buckets it
     // should stage data files / DV sidecars for
     def layout(verb: String, dataIn: Set[Int], dvIn: Set[Int] = Set.empty,
@@ -695,5 +760,59 @@ class KeyedTableSpec extends SparkSpec {
     check("create (bool rewrite)", "b", added(Map.empty, bFiles), (0 until 32).toSet, Seq("id"))
     assert(KeyedTable.readSql(spark, w, "b").schema("bit").dataType ==
       org.apache.spark.sql.types.BooleanType)
+  }
+  test("a write past one advisory partition runs one task per bucket in play") {
+    import spark.implicits._
+    val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prev = spark.conf.getOption(advisory)
+    val cores = spark.sparkContext.defaultParallelism
+    val w = wh()
+    val dir = KeyedTable.tableDir(w, "t")
+    def files(): Map[Int, Seq[ManifestFile]] = Manifest.current(spark, dir).get.files
+    def dvs(): Map[Int, Seq[ManifestFile]] = Manifest.current(spark, dir).get.dvs
+    KeyedTable.toSql(sample(3000), w, "t", pk = Seq("id"))
+    val meta = TableMeta.read(spark, dir)
+    val total = Manifest.current(spark, dir).get.totalBytes
+    // a delta over 16 buckets reads about half the table
+    val keys = (5001L to 6000L).groupBy(i =>
+      KeyedTable.bucketOfKey(spark, meta, meta.buckets, Seq(i))).toSeq.sortBy(_._1)
+      .take(16).map(_._2.head)
+    val inPlay = keys.map(i => KeyedTable.bucketOfKey(spark, meta, meta.buckets, Seq(i))).toSet
+    assert(inPlay.size == 16 && cores < 16)
+    try {
+      // every write larger than 1 byte is large
+      spark.conf.set(advisory, "1")
+      val f0 = files()
+      KeyedTable.toSql(sample(20).withColumn("id", col("id") + 3000L), w, "t",
+        pk = Seq("id"), how = WriteMode.Upsert)
+      val upIn = (3001L to 3020L)
+        .map(i => KeyedTable.bucketOfKey(spark, meta, meta.buckets, Seq(i))).toSet
+      checkLayout(w, "t", "large upsert", addedFiles(f0, files()), upIn, upIn.size, Seq("id"))
+      KeyedTable.toSql(sample(300), w, "c", pk = Seq("id"))
+      val c = addedFiles(Map.empty,
+        Manifest.current(spark, KeyedTable.tableDir(w, "c")).get.files)
+      checkLayout(w, "c", "large create", c, (0 until 32).toSet, 32, Seq("id"))
+      // the delta write reads only its touched buckets: small against a
+      // threshold of 3/4 of the table, while rebucketing the whole
+      // table is large
+      spark.conf.set(advisory, (total * 3 / 4).toString)
+      val f1 = files()
+      KeyedTable.toSql(keys.map(i => (i, "k", 1.0, true)).toDF("id", "name", "score", "flag"),
+        w, "t", pk = Seq("id"), how = WriteMode.Upsert)
+      checkLayout(w, "t", "small upsert", addedFiles(f1, files()), inPlay, cores, Seq("id"))
+      // its merge-on-read twin writes DVs from a persisted join before
+      // the join has run once: the estimate reads through the cache
+      val (f2, d2) = (files(), dvs())
+      KeyedTable.merge(keys.map(i => (i, "m", 2.0, false)).toDF("id", "name", "score", "flag")
+        .withColumn("is_del", lit(false)), w, "t", deleteWhen = col("is_del"),
+        mode = DeleteMode.MergeOnRead)
+      checkLayout(w, "t", "small merge-on-read", addedFiles(f2, files()), inPlay, cores, Seq("id"))
+      checkLayout(w, "t", "small merge-on-read (DV sidecars)", addedFiles(d2, dvs()),
+        inPlay, cores, Seq("file", "pos"))
+      KeyedTable.rebucket(spark, w, "t", 40)
+      checkLayout(w, "t", "large rebucket", addedFiles(Map.empty, files()),
+        (0 until 40).toSet, 40, Seq("id"))
+    } finally prev.fold(spark.conf.unset(advisory))(spark.conf.set(advisory, _))
+    assert(KeyedTable.readSql(spark, w, "t").count() === 3036)
   }
 }

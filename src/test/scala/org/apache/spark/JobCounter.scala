@@ -47,6 +47,10 @@ object JobCounter {
     }
   }
 
+  /** Returns once every event posted so far has reached its listeners,
+    * query-execution listeners included. */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
   def jobsOf[T](sc: SparkContext)(body: => T): (T, Int) = {
     val (r, jobs) = jobsRunBy(sc)(body)
     (r, jobs.size)
