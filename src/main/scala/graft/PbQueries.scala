@@ -792,10 +792,10 @@ object PbQueries {
     KeyedTable.toSql(Tables.orders(spark, sfDir), wh, "orders",
       pk = Seq("o_orderkey"), strictUtc = false)
     val dir = graft.store.KeyedTable.tableDir(wh, "orders")
-    val before = graft.store.Manifest.current(spark, dir).get
+    val before = graft.store.Manifest.current(spark, dir)
     KeyedTable.delete(spark, wh, "orders", col("o_orderkey") % 97 === 0,
       mode = graft.store.DeleteMode.MergeOnRead)
-    val after = graft.store.Manifest.current(spark, dir).get
+    val after = graft.store.Manifest.current(spark, dir)
     require(after.files == before.files && after.dvs.nonEmpty,
       "MoR delete must add tombstones without touching a data file")
     // the DSv2 scan path: masks apply inside the partition readers
@@ -814,12 +814,12 @@ object PbQueries {
     KeyedTable.toSql(Tables.customer(spark, sfDir), wh, "customer",
       pk = Seq("c_custkey"))
     val dir = graft.store.KeyedTable.tableDir(wh, "customer")
-    val before = graft.store.Manifest.current(spark, dir).get
+    val before = graft.store.Manifest.current(spark, dir)
     KeyedTable.update(spark, wh, "customer", col("c_custkey") % 31 === 0,
       Map("c_acctbal" -> (col("c_acctbal") + 50.0),
           "c_mktsegment" -> lit("MORSEG")),
       mode = graft.store.DeleteMode.MergeOnRead)
-    val after = graft.store.Manifest.current(spark, dir).get
+    val after = graft.store.Manifest.current(spark, dir)
     val beforeNames = before.files.view
       .mapValues(_.map(_.name).toSet).toMap
     require(before.files.forall { case (b, fls) =>
@@ -841,7 +841,7 @@ object PbQueries {
     val customer = Tables.customer(spark, sfDir)
     KeyedTable.toSql(customer, wh, "customer", pk = Seq("c_custkey"))
     val dir = graft.store.KeyedTable.tableDir(wh, "customer")
-    val before = graft.store.Manifest.current(spark, dir).get
+    val before = graft.store.Manifest.current(spark, dir)
     val feed = customer
       .filter(col("c_custkey") % 31 === 0 || col("c_custkey") % 41 === 0)
       .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
@@ -853,7 +853,7 @@ object PbQueries {
           lit(false).as("is_del")))
     KeyedTable.merge(feed, wh, "customer", deleteWhen = col("is_del"),
       mode = graft.store.DeleteMode.MergeOnRead)
-    val after = graft.store.Manifest.current(spark, dir).get
+    val after = graft.store.Manifest.current(spark, dir)
     require(before.files.forall { case (b, fls) =>
       fls.forall(f => after.files.getOrElse(b, Nil).exists(_.name == f.name))
     } && after.dvs.nonEmpty,
@@ -890,7 +890,7 @@ object PbQueries {
       .toTable(s"$cat.customer")
       .awaitTermination()
     val m = graft.store.Manifest.current(spark,
-      graft.store.KeyedTable.tableDir(wh, "customer")).get
+      graft.store.KeyedTable.tableDir(wh, "customer"))
     require(m.streams.nonEmpty && m.op.contains("stream"),
       "the sink must commit through the manifest epoch ledger")
     KeyedTable.readSql(spark, wh, "customer")
@@ -949,7 +949,7 @@ object PbQueries {
       .toTable(s"$cat.win_agg")
       .awaitTermination()
     val m = graft.store.Manifest.current(spark,
-      graft.store.KeyedTable.tableDir(wh, "win_agg")).get
+      graft.store.KeyedTable.tableDir(wh, "win_agg"))
     require(m.streams.nonEmpty,
       "the upsert sink must commit through the manifest epoch ledger")
     val out = KeyedTable.readSql(spark, wh, "win_agg")
@@ -1745,7 +1745,7 @@ object PbQueries {
             col("c_nationkey"), col("c_acctbal"), col("c_mktsegment")),
         wh, "customer", how = WriteMode.Append)
       val head = graft.store.Manifest.current(spark,
-        KeyedTable.tableDir(wh, "customer")).get
+        KeyedTable.tableDir(wh, "customer"))
       if (head.segs.isEmpty)
         throw new graft.store.StoreException(
           "pb_manifest_segments: the manifest chain did not segment")

@@ -394,8 +394,8 @@ case class GraftMergeCommand(warehouse: String, table: String,
     // commit racing this statement can never silently mis-route rows
     val pinned: Option[Long] =
       if (fastPath) None
-      else graft.store.Manifest.current(spark,
-        KeyedTable.tableDir(warehouse, table)).map(_.version)
+      else Some(graft.store.Manifest.current(spark,
+        KeyedTable.tableDir(warehouse, table)).version)
     val pre: DataFrame =
       if (fastPath) df
       else {

@@ -76,27 +76,19 @@ object Branches {
 
   private def writeFork(spark: SparkSession, branchDir: String,
                         fk: Fork): Unit = {
-    val p = new Path(branchDir, ForkFile)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = f.create(p, true)
-    try out.write(compact(render(JObject(
-      "baseVersion" -> (JInt(fk.baseVersion): JValue),
-      "baseMetaJson" -> (JString(fk.baseMetaJson): JValue),
-      "publishedBranchVersion" -> (JInt(fk.publishedBranchVersion): JValue))))
-      .getBytes("UTF-8"))
-    finally out.close()
+    SmallFile.replace(spark.sparkContext.hadoopConfiguration,
+      new Path(branchDir, ForkFile), compact(render(JObject(
+        "baseVersion" -> (JInt(fk.baseVersion): JValue),
+        "baseMetaJson" -> (JString(fk.baseMetaJson): JValue),
+        "publishedBranchVersion" ->
+          (JInt(fk.publishedBranchVersion): JValue))))
+        .getBytes("UTF-8"), "fork", "fork record")
   }
 
   private def readFork(spark: SparkSession, branchDir: String): Fork = {
     val p = new Path(branchDir, ForkFile)
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = f.open(p)
-    val s = try {
-      val bytes = new Array[Byte](f.getFileStatus(p).getLen.toInt)
-      in.readFully(bytes)
-      new String(bytes, "UTF-8")
-    } finally in.close()
-    val j = JsonMethods.parse(s)
+    val j = JsonMethods.parse(SmallFile.readUtf8(f, p))
     (j \ "baseVersion", j \ "baseMetaJson") match {
       case (JInt(v), JString(m)) =>
         // records written before the field existed: at fork time the
@@ -128,10 +120,7 @@ object Branches {
       throw new StoreException(s"no such table: $tableName")
     WriteLock.withLock(spark, baseDir, s"branch($branch)") {
       val meta = TableMeta.read(spark, baseDir)
-      val head = Manifest.current(spark, baseDir).getOrElse(
-        throw new StoreException(
-          s"$tableName has no manifest snapshot yet (legacy layout); " +
-          "run one mutation to adopt a baseline, then branch"))
+      val head = Manifest.current(spark, baseDir)
       val m = atVersion.map(Manifest.at(spark, baseDir, _)).getOrElse(head)
       val brDir = branchDirOf(baseDir, branch)
       if (TableMeta.exists(spark, brDir))
@@ -162,7 +151,7 @@ object Branches {
     val baseDir = KeyedTable.tableDir(wh, baseOnly(tableName))
     val rows = branchDirs(spark, baseDir).map { case (name, brDir) =>
       Row(name, readFork(spark, brDir).baseVersion,
-        Manifest.current(spark, brDir).map(_.version).getOrElse(-1L))
+        Manifest.current(spark, brDir).version)
     }
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows.sortBy(_.getString(0)), 1),
@@ -244,20 +233,20 @@ object Branches {
         // changelog absorbs (readChangelog merges batch schemas;
         // pre-evolution batches read NULL images for the new columns)
         val cdc = baseMeta.changelog || brMeta.changelog
-        val baseHead = Manifest.current(spark, baseDir).getOrElse(
-          throw new StoreException(s"$tableName has no manifest snapshot"))
+        val baseHead = Manifest.current(spark, baseDir)
         if (baseHead.version != fk.baseVersion)
           throw new StoreException(
             s"cannot fast-forward: $tableName advanced to version " +
             s"${baseHead.version} since the branch forked at " +
             s"${fk.baseVersion} — re-fork to rebase")
-        if (baseMeta.toJson != fk.baseMetaJson)
+        // parsed, not textual: a fork record written while the meta
+        // still carried the bucket count must not read as a change
+        if (baseMeta != TableMeta.fromJson(fk.baseMetaJson))
           throw new StoreException(
             s"cannot fast-forward: $tableName's metadata changed since " +
             "the branch forked (schema/constraint evolution) — re-fork " +
             "to rebase")
-        val brHead = Manifest.current(spark, brDir).getOrElse(
-          throw new StoreException(s"branch $branch has no snapshot"))
+        val brHead = Manifest.current(spark, brDir)
         // nothing-new compares within the BRANCH chain: the head the
         // last fork/publish synchronized to (never a cross-chain
         // version comparison — see Fork.publishedBranchVersion)

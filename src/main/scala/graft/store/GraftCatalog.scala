@@ -118,7 +118,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val v = version.toLongOption
       .getOrElse(KeyedTable.resolveTag(spark, dir, version))
     new KeyedBatchTable(TableMeta.read(spark, dir), dataDirOf(ident),
-      Some(Manifest.at(spark, dir, v)), dir)
+      Manifest.at(spark, dir, v), dir)
   }
 
   /** SQL `TIMESTAMP AS OF`: the newest snapshot committed at or before
@@ -126,7 +126,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
     val dir = tableDirOf(ident)
     new KeyedBatchTable(TableMeta.read(spark, dir), dataDirOf(ident),
-      Some(Manifest.atTimestamp(spark, dir, timestampMicros / 1000L)), dir)
+      Manifest.atTimestamp(spark, dir, timestampMicros / 1000L), dir)
   }
 
   override def dropTable(ident: Identifier): Boolean =

@@ -89,8 +89,7 @@ private[store] class KeyedStreamingWrite(meta: TableMeta, tableDir: String,
     Array.empty
 
   override def requiredNumPartitions(): Int =
-    Manifest.current(SparkSession.active, tableDir)
-      .map(_.buckets).getOrElse(meta.buckets)
+    Manifest.current(SparkSession.active, tableDir).buckets
 
   if (meta.autoIndex)
     throw new StoreException(
@@ -119,8 +118,7 @@ private[store] class KeyedStreamingWrite(meta: TableMeta, tableDir: String,
   // bucket count pinned at query start; a rebucket racing the stream
   // is detected at every commit and fails the epoch loudly
   private val buckets: Int =
-    Manifest.current(SparkSession.active, tableDir)
-      .map(_.buckets).getOrElse(meta.buckets)
+    Manifest.current(SparkSession.active, tableDir).buckets
 
   private val stagingRoot = s"$tableDir/.staging-stream-$queryId"
 

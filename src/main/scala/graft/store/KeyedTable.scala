@@ -394,7 +394,7 @@ object KeyedTable {
 
   /** PK validation (optional) and the touched-bucket id set in ONE
     * aggregation job over the (persisted) incoming frame: collect_set
-    * over the bucket column is bounded by meta.buckets, and fusing it
+    * over the bucket column is bounded by the bucket count, and fusing it
     * with the PK counters means append/upsert scan their delta once for
     * both answers instead of twice. */
   private def validateAndTouched(df: DataFrame, pk: Seq[String],
@@ -623,7 +623,7 @@ object KeyedTable {
         // a retry of a create-if-missing ingest job no-ops too
         Manifest(0L, buckets, v0Files, op = Some("create"),
           streams = txn.toList.toMap))
-      TableMeta.write(spark, dir, TableMeta(pkCols, buckets, autoIndex, schema, maxIdx))
+      TableMeta.write(spark, dir, TableMeta(pkCols, autoIndex, schema, maxIdx))
     } finally f.delete(new Path(staging), true)
   }
 
@@ -742,9 +742,8 @@ object KeyedTable {
     (from == TimestampNTZType && to == TimestampType)
   }
 
-  /** Live-file map from a directory listing — the adoption baseline for
-    * a table written before manifests existed (and create's way of
-    * enumerating its own fresh output). One listing per bucket dir. */
+  /** Live-file map of create's fresh output, from a directory listing
+    * (one listing per bucket dir) — what version 0 records. */
   private def listLiveFiles(f: FileSystem, data: Path): Map[Int, Seq[ManifestFile]] =
     if (!f.exists(data)) Map.empty
     else f.listStatus(data)
@@ -752,23 +751,10 @@ object KeyedTable {
       .map { d =>
         val b = d.getPath.getName.stripPrefix(s"$BucketCol=").toInt
         b -> f.listStatus(d.getPath).toSeq
-          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet") &&
-            // a delete-vector sidecar must never be adopted as DATA
-            // (only reachable if a vacuumed-away manifest chain left
-            // orphans; tables with DVs always have manifests)
-            !st.getPath.getName.contains("-dv-"))
+          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
           .sortBy(_.getPath.getName)
           .map(st => ManifestFile(st.getPath.getName, st.getLen))
       }.filter(_._2.nonEmpty).toMap
-
-  /** The snapshot a WRITER mutates against (caller holds the write
-    * lock): the current manifest, or — for a legacy table with none —
-    * the directory listing adopted as a version "-1" baseline so the
-    * first manifest this mutation commits is version 0. */
-  private def snapshotForWrite(spark: SparkSession, dir: String,
-                               data: String, meta: TableMeta): Manifest =
-    Manifest.current(spark, dir).getOrElse(
-      Manifest(-1L, meta.buckets, listLiveFiles(fs(spark, dir), new Path(data))))
 
   /** Driver-side pool for commit-time footer reads: a create/commit
     * touching B buckets would otherwise pay B SERIAL footer opens
@@ -1234,7 +1220,7 @@ object KeyedTable {
     try {
       // ------- UNLOCKED: sweep, validate, derive (vs snapshot-at-start)
       val meta0 = TableMeta.read(spark, tblDir)
-      val base0 = snapshotForWrite(spark, tblDir, data, meta0)
+      val base0 = Manifest.current(spark, tblDir)
       if (base0.streams.get(queryId).exists(_ >= epochId)) return
       if (base0.buckets != writerBuckets) rebucketError(base0.buckets)
       // sweep staging: keep only successful tasks' files; collect the
@@ -1299,7 +1285,7 @@ object KeyedTable {
       def deriveUpsert(baseM: Manifest, metaM: TableMeta)
           : (Option[Path], String) = {
         val oldPos = readRawPos(spark, wh, ref, metaM,
-            manifestOf(baseM), withPos = true)
+            baseM, withPos = true)
           .filter(col(BucketCol).isin(touched: _*))
         val j = staged.as("n")
           .join(oldPos.as("o"), metaM.pk.toIndexedSeq, "left")
@@ -1332,7 +1318,7 @@ object KeyedTable {
         // overlap pre-check vs the snapshot-at-start (the locked
         // re-check below covers files added since, so together they
         // cover the commit-time snapshot exactly)
-        val old = readRawWith(spark, wh, ref, meta0, manifestOf(base0))
+        val old = readRawWith(spark, wh, ref, meta0, base0)
           .filter(col(BucketCol).isin(touched: _*))
         val overlap = staged.join(old, meta0.pk.toIndexedSeq, "left_semi")
           .limit(5).select(meta0.pk.map(col): _*).collect()
@@ -1360,7 +1346,7 @@ object KeyedTable {
       // than fail the query; the section is a flip plus rare re-checks)
       WriteLock.withLockWait(spark, tblDir, "stream-sink", commitWaitMs) {
         val metaL = TableMeta.read(spark, tblDir)
-        val baseL = snapshotForWrite(spark, tblDir, data, metaL)
+        val baseL = Manifest.current(spark, tblDir)
         // authoritative replay re-check (another instance of the same
         // query may have committed this epoch while we staged)
         if (!baseL.streams.get(queryId).exists(_ >= epochId)) {
@@ -1388,7 +1374,7 @@ object KeyedTable {
               }.toMap
               if (addedByBucket.nonEmpty) {
                 val addedDf = readRawWith(spark, wh, ref, metaL,
-                  Some(baseL.copy(files = addedByBucket)))
+                  baseL.copy(files = addedByBucket))
                 val clash = staged.join(addedDf, meta0.pk.toIndexedSeq,
                     "left_semi")
                   .limit(5).select(meta0.pk.map(col): _*).collect()
@@ -1472,53 +1458,39 @@ object KeyedTable {
                        schema: Option[String] = None): Boolean = {
     val dir = tableDir(schemaDir(warehouse0, schema), tableName)
     WriteLock.withLock(spark, dir, s"dropStreamLedger($queryId)") {
-      Manifest.current(spark, dir) match {
-        case Some(m) if m.streams.contains(queryId) =>
-          Manifest.commit(spark, dir, m.copy(version = m.version + 1,
-            op = Some(s"dropStreamLedger($queryId)"), tsMs = None,
-            streams = m.streams - queryId))
-          true
-        case _ => false
+      val m = Manifest.current(spark, dir)
+      m.streams.contains(queryId) && {
+        Manifest.commit(spark, dir, m.copy(version = m.version + 1,
+          op = Some(s"dropStreamLedger($queryId)"), tsMs = None,
+          streams = m.streams - queryId))
+        true
       }
     }
   }
 
   /** Shared Auto/CoW/MoR strategy decision for every row-mutating
     * commit (delete, update, merge) — pure manifest arithmetic, zero
-    * IO: MoR needs a manifest (positions resolve against its file
-    * set); Auto takes MoR while the matched row count stays within
+    * IO: Auto takes MoR while the matched row count stays within
     * [[MorMaxFraction]] of the touched buckets' live rows (past that,
     * most of the touched data is changing and the CoW rewrite — which
-    * also re-compacts — wins). An EXPLICIT MergeOnRead request on a
-    * pre-manifest table fails with the remedy rather than silently
-    * degrading into a full bucket rewrite. */
-  private def morDecision(baseM: Option[Manifest], mode: DeleteMode,
-                          touched: Seq[Int], matched: Long,
-                          what: String, tableName: String): Boolean =
-    baseM match {
-      case None =>
-        if (mode == DeleteMode.MergeOnRead)
-          throw new StoreException(
-            s"$what(mode=MergeOnRead) on $tableName: the table predates " +
-            "manifest snapshots, so positional delete vectors cannot " +
-            "resolve. Run any rewriting mutation (or use mode=Auto) " +
-            "once to adopt a manifest baseline, then retry")
-        false
-      case Some(m) => mode match {
-        case DeleteMode.CopyOnWrite => false
-        case DeleteMode.MergeOnRead => true
-        case DeleteMode.Auto =>
-          val touchedSet = touched.toSet
-          val fls = m.files.filter(kv => touchedSet(kv._1))
-            .valuesIterator.flatten.toSeq
-          val dvDead = m.dvs.filter(kv => touchedSet(kv._1))
-            .valuesIterator.flatten.flatMap(_.rows).sum
-          if (!fls.forall(_.rows.isDefined)) false // unknown sizes: CoW
-          else {
-            val live = fls.flatMap(_.rows).sum - dvDead
-            matched <= (live * MorMaxFraction).toLong
-          }
-      }
+    * also re-compacts — wins). A touched file without a recorded row
+    * count makes Auto choose CoW. */
+  private def morDecision(m: Manifest, mode: DeleteMode,
+                          touched: Seq[Int], matched: Long): Boolean =
+    mode match {
+      case DeleteMode.CopyOnWrite => false
+      case DeleteMode.MergeOnRead => true
+      case DeleteMode.Auto =>
+        val touchedSet = touched.toSet
+        val fls = m.files.filter(kv => touchedSet(kv._1))
+          .valuesIterator.flatten.toSeq
+        val dvDead = m.dvs.filter(kv => touchedSet(kv._1))
+          .valuesIterator.flatten.flatMap(_.rows).sum
+        if (!fls.forall(_.rows.isDefined)) false // unknown sizes: CoW
+        else {
+          val live = fls.flatMap(_.rows).sum - dvDead
+          matched <= (live * MorMaxFraction).toLong
+        }
     }
 
   /** Commit a merge-on-read UPDATE/MERGE: the staged POST-IMAGE data
@@ -1620,8 +1592,8 @@ object KeyedTable {
 
   /** Raw bucket-partitioned read with the evolved logical schema (old
     * files lacking evolved columns yield NULLs). Resolves the file set
-    * through the current manifest snapshot when one exists — never a
-    * directory walk, and immune to in-flight commits. */
+    * through the current manifest snapshot — never a directory walk,
+    * and immune to in-flight commits. */
   private def readRaw(spark: SparkSession, warehouse: String, table: String,
                       meta: TableMeta): DataFrame =
     readRawWith(spark, warehouse, table, meta,
@@ -1649,7 +1621,7 @@ object KeyedTable {
 
   private def readRawWith(spark: SparkSession, warehouse: String,
                           table: String, meta: TableMeta,
-                          mf: Option[Manifest]): DataFrame =
+                          mf: Manifest): DataFrame =
     readRawPos(spark, warehouse, table, meta, mf, withPos = false)
 
   /** RENAME COLUMN boundary, write side: alias every renamed LOGICAL
@@ -1683,7 +1655,7 @@ object KeyedTable {
     * sees live rows only. The no-DV case adds zero plan nodes. */
   private def readRawPos(spark: SparkSession, warehouse: String,
                          table: String, meta: TableMeta,
-                         mf: Option[Manifest],
+                         m: Manifest,
                          withPos: Boolean): DataFrame = {
     // files carry PHYSICAL names: scan with the physical schema, then
     // toLogical (below) aliases the frame back — renames cost one
@@ -1692,54 +1664,46 @@ object KeyedTable {
       meta.physSchema.fields :+
         StructField(BucketCol, IntegerType, nullable = true))
     val data = dataDir(warehouse, table)
-    toLogical(mf match {
-      case Some(m) =>
-        val files = m.absoluteFiles(data)
-        val dvFiles = m.dvFiles(data)
-        if (files.isEmpty) {
-          val s =
-            if (!withPos) withBucketField
-            else StructType(withBucketField.fields :+
-              StructField(FileCol, StringType) :+ StructField(PosCol, LongType))
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
-        } else {
-          // the file index comes from the manifest's (path, length)
-          // entries — no listing job, no per-file stat; basePath keeps
-          // pb_bucket recoverable from the files' dir names
-          val base = ManifestFileIndex.read(spark, data, files, withBucketField)
-          if (dvFiles.isEmpty && !withPos) base
+    val files = m.absoluteFiles(data)
+    val dvFiles = m.dvFiles(data)
+    toLogical(if (files.isEmpty) {
+      val s =
+        if (!withPos) withBucketField
+        else StructType(withBucketField.fields :+
+          StructField(FileCol, StringType) :+ StructField(PosCol, LongType))
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
+    } else {
+      // the file index comes from the manifest's (path, length)
+      // entries — no listing job, no per-file stat; basePath keeps
+      // pb_bucket recoverable from the files' dir names
+      val base = ManifestFileIndex.read(spark, data, files, withBucketField)
+      if (dvFiles.isEmpty && !withPos) base
+      else {
+        val withId = base
+          .withColumn(FileCol, col("_metadata.file_name"))
+          .withColumn(PosCol, col("_metadata.row_index"))
+        val masked =
+          if (dvFiles.isEmpty) withId
           else {
-            val withId = base
-              .withColumn(FileCol, col("_metadata.file_name"))
-              .withColumn(PosCol, col("_metadata.row_index"))
-            val masked =
-              if (dvFiles.isEmpty) withId
-              else {
-                // a row's identity is (bucket, file, pos): one staging
-                // TASK can write same-named part files into several
-                // bucket dirs, so the file name alone is NOT globally
-                // unique — the bucket term (recovered from the DV
-                // sidecar's own directory via basePath) disambiguates
-                val dv0 = ManifestFileIndex.read(spark, data, dvFiles,
-                  StructType(Seq(StructField("file", StringType),
-                    StructField("pos", LongType),
-                    StructField(BucketCol, IntegerType))))
-                val dv =
-                  if (m.dvRows.exists(_ <= DvBroadcastMaxRows)) broadcast(dv0)
-                  else dv0
-                withId.join(dv,
-                  withId(BucketCol) === dv(BucketCol) &&
-                    withId(FileCol) === dv("file") && withId(PosCol) === dv("pos"),
-                  "left_anti")
-              }
-            if (withPos) masked else masked.drop(FileCol, PosCol)
+            // a row's identity is (bucket, file, pos): one staging
+            // TASK can write same-named part files into several
+            // bucket dirs, so the file name alone is NOT globally
+            // unique — the bucket term (recovered from the DV
+            // sidecar's own directory via basePath) disambiguates
+            val dv0 = ManifestFileIndex.read(spark, data, dvFiles,
+              StructType(Seq(StructField("file", StringType),
+                StructField("pos", LongType),
+                StructField(BucketCol, IntegerType))))
+            val dv =
+              if (m.dvRows.exists(_ <= DvBroadcastMaxRows)) broadcast(dv0)
+              else dv0
+            withId.join(dv,
+              withId(BucketCol) === dv(BucketCol) &&
+                withId(FileCol) === dv("file") && withId(PosCol) === dv("pos"),
+              "left_anti")
           }
-        }
-      case None => // legacy pre-manifest table (never carries DVs)
-        if (withPos)
-          throw new StoreException(
-            "position-exposing read requires a manifest snapshot")
-        spark.read.schema(withBucketField).parquet(data)
+        if (withPos) masked else masked.drop(FileCol, PosCol)
+      }
     }, meta)
   }
 
@@ -1754,7 +1718,7 @@ object KeyedTable {
     // mutation runs under the table lock, so one check here is
     // race-free — BEFORE the auto-index mark bumps or any job runs
     if (txn.exists { case (id, v) =>
-          Manifest.current(spark, dir).exists(_.streams.get(id).exists(_ >= v))
+          Manifest.current(spark, dir).streams.get(id).exists(_ >= v)
         }) return
     // table-property CDC (see TableMeta.changelog): an append to a
     // changelog-maintained table logs its rows as `insert` ops — old_*
@@ -1782,7 +1746,7 @@ object KeyedTable {
       }
 
     val data = dataDir(warehouse, table)
-    val base = snapshotForWrite(spark, dir, data, meta)
+    val base = Manifest.current(spark, dir)
     val newB = withBucket(aligned0, meta.pk, base.buckets)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1806,7 +1770,7 @@ object KeyedTable {
           inParallel(spark)(
             {
               if (!meta.autoIndex) {
-                val old = readRawWith(spark, warehouse, table, meta, manifestOf(base))
+                val old = readRawWith(spark, warehouse, table, meta, base)
                   .filter(col(BucketCol).isin(touched: _*))
                 val overlap = newB.join(old, meta.pk, "left_semi").limit(5)
                   .select(meta.pk.map(col): _*).collect()
@@ -1842,11 +1806,6 @@ object KeyedTable {
       if (meta2 != meta) TableMeta.write(spark, dir, meta2)
     } finally newB.unpersist()
   }
-
-  /** A writer baseline as a reader manifest: the adopted version "-1"
-    * baseline of a legacy table means "no manifest — read the dirs". */
-  private def manifestOf(base: Manifest): Option[Manifest] =
-    if (base.version >= 0) Some(base) else None
 
   /** OPTIMISTIC append: the Delta/Iceberg commit model for the one
     * mutation shape that composes — appends add uniquely-named files,
@@ -1885,10 +1844,7 @@ object KeyedTable {
     * Auto-index tables reserve their id range under a short lock before
     * staging (the high-water mark is the one piece of append state that
     * cannot be merged after the fact); a crash after reserving leaves
-    * an id gap, never a duplicate — same rule as [[append]].
-    * A pre-manifest legacy table (no snapshot isolation to commit
-    * against) falls back to the classic locked append, waiting up to
-    * `commitWaitMs` for the lock. */
+    * an id gap, never a duplicate — same rule as [[append]]. */
   def appendConcurrent(df: DataFrame, warehouse0: String, tableName: String,
                        addNewColumns: Boolean = false,
                        validate: Boolean = true,
@@ -1914,16 +1870,7 @@ object KeyedTable {
     }
     val data = dataDir(wh, tableName)
     val meta0 = TableMeta.read(spark, dir)
-    val base0 = Manifest.current(spark, dir).getOrElse {
-      // legacy table: no snapshot to diff against — classic locked
-      // append (which adopts a manifest, so the NEXT call is optimistic)
-      WriteLock.withLockWait(spark, dir, "appendConcurrent(legacy)",
-        commitWaitMs) {
-        append(cleaned, wh, tableName, addNewColumns, validate, changelog,
-          txn)
-      }
-      return
-    }
+    val base0 = Manifest.current(spark, dir)
     // idempotent-retry fast exit against the snapshot-at-start (cheap,
     // unlocked); the LOCKED commit below re-checks against the latest
     // snapshot, which is what makes two racing attempts with the same
@@ -1972,7 +1919,7 @@ object KeyedTable {
         // provisional overlap pre-check against the snapshot-at-start
         // (unlocked; the locked re-check below covers everything added
         // since, so together they cover the commit-time snapshot)
-        val old = readRawWith(spark, wh, tableName, metaUsed, Some(base0))
+        val old = readRawWith(spark, wh, tableName, metaUsed, base0)
           .filter(col(BucketCol).isin(touched: _*))
         val overlap = newB.join(old, metaUsed.pk, "left_semi").limit(5)
           .select(metaUsed.pk.map(col): _*).collect()
@@ -2015,7 +1962,7 @@ object KeyedTable {
         WriteLock.withLockWait(spark, dir, "appendConcurrent(commit)",
             commitWaitMs) {
           val metaLatest = TableMeta.read(spark, dir)
-          val baseLatest = snapshotForWrite(spark, dir, data, metaLatest)
+          val baseLatest = Manifest.current(spark, dir)
           // a racing attempt with the same txn token committed while
           // this one staged: no-op (staging cleaned by the finally) —
           // checked FIRST so a replay never trips the conflict guards
@@ -2045,7 +1992,7 @@ object KeyedTable {
             }.toMap
             if (addedByBucket.nonEmpty) {
               val addedDf = readRawWith(spark, wh, tableName, metaLatest,
-                Some(baseLatest.copy(files = addedByBucket)))
+                baseLatest.copy(files = addedByBucket))
               val clash = newB.join(addedDf, metaUsed.pk, "left_semi")
                 .limit(5).select(metaUsed.pk.map(col): _*).collect()
               if (clash.nonEmpty)
@@ -2140,9 +2087,7 @@ object KeyedTable {
     * disjoint — the bucket window is exactly the granularity the
     * commit replaces. Plain upserts only (partial-column semantics
     * included); merge feeds and deletes keep the locked path.
-    * Auto-index tables refuse (same contract as [[upsert]]); a
-    * pre-manifest legacy table falls back to the classic locked
-    * upsert. */
+    * Auto-index tables refuse (same contract as [[upsert]]). */
   def upsertConcurrent(df: DataFrame, warehouse0: String, tableName: String,
                        addNewColumns: Boolean = false,
                        validate: Boolean = true,
@@ -2170,15 +2115,7 @@ object KeyedTable {
     if (meta0.autoIndex)
       throw new StoreException(
         "Cannot upsert into a table with an automatically generated index (reference: sql.py:177)")
-    val base0 = Manifest.current(spark, dir).getOrElse {
-      // legacy table: no snapshot to window against — classic locked
-      // upsert (which adopts a manifest, so the NEXT call is optimistic)
-      WriteLock.withLockWait(spark, dir, "upsertConcurrent(legacy)",
-        commitWaitMs) {
-        upsert(cleaned, wh, tableName, addNewColumns, validate, changelog)
-      }
-      return
-    }
+    val base0 = Manifest.current(spark, dir)
     val wantChangelog = changelog || meta0.changelog
     // partial-column contract: only columns PRESENT in the incoming
     // frame overwrite; the rest keep stored values (reference
@@ -2192,7 +2129,7 @@ object KeyedTable {
       enforceChecks(newB, meta0.checks, "upsertConcurrent")
       val touched = validateAndTouched(newB, meta0.pk, validate)
       val oldTouched = readRawWith(spark, wh, tableName,
-          meta0.copy(schema = evolved), Some(base0))
+          meta0.copy(schema = evolved), base0)
         .filter(col(BucketCol).isin(touched: _*))
       val marked = newB.withColumn("_graft_new", lit(true))
       val nonPk = evolved.fieldNames.filterNot(meta0.pk.contains)
@@ -2248,7 +2185,7 @@ object KeyedTable {
         WriteLock.withLockWait(spark, dir, "upsertConcurrent(commit)",
             commitWaitMs) {
           val metaLatest = TableMeta.read(spark, dir)
-          val baseLatest = snapshotForWrite(spark, dir, data, metaLatest)
+          val baseLatest = Manifest.current(spark, dir)
           enforceChecks(newB,
             metaLatest.checks -- meta0.checks.keySet,
             "upsertConcurrent(commit)")
@@ -2359,17 +2296,10 @@ object KeyedTable {
           s"update cannot SET primary-key column $c (a key move is a " +
           "delete + insert; use merge or delete/append)")
     }
-    val base0 = Manifest.current(spark, dir).getOrElse {
-      // legacy table: classic locked update
-      return WriteLock.withLockWait(spark, dir, "updateConcurrent(legacy)",
-        commitWaitMs) {
-        update(spark, warehouse0, tableName, where, set, schema,
-          changelog, mode)
-      }
-    }
+    val base0 = Manifest.current(spark, dir)
     val cdc = changelog || meta0.changelog
     val data = dataDir(warehouse, tableName)
-    val raw = readRawWith(spark, warehouse, tableName, meta0, Some(base0))
+    val raw = readRawWith(spark, warehouse, tableName, meta0, base0)
     val matched = coalesce(where, lit(false))
     val probe = raw.filter(matched).groupBy(col(BucketCol))
       .agg(count(lit(1)).as("n")).collect()
@@ -2410,15 +2340,14 @@ object KeyedTable {
     }
     val clStaging: Option[Path] = if (cdc) Some(stageImages()) else None
     var clLate: Option[Path] = None
-    val mor = morDecision(Some(base0), mode, touched, nMatched,
-      "update", tableName)
+    val mor = morDecision(base0, mode, touched, nMatched)
     val staging = s"$dir/.staging-updatec-${UUID.randomUUID()}"
     val dvStaging = s"$dir/.staging-updatec-dv-${UUID.randomUUID()}"
     try {
       // the expensive rewrite job(s) — OUTSIDE the lock
       if (mor) {
         val posFrame = readRawPos(spark, warehouse, tableName, meta0,
-            Some(base0), withPos = true)
+            base0, withPos = true)
           .filter(matched)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
@@ -2455,7 +2384,7 @@ object KeyedTable {
       WriteLock.withLockWait(spark, dir, "updateConcurrent(commit)",
           commitWaitMs) {
         val metaLatest = TableMeta.read(spark, dir)
-        val baseLatest = snapshotForWrite(spark, dir, data, metaLatest)
+        val baseLatest = Manifest.current(spark, dir)
         if (baseLatest.buckets != base0.buckets)
           throw new ConcurrentWriteException(
             s"bucket count changed ${base0.buckets} -> " +
@@ -2574,14 +2503,7 @@ object KeyedTable {
     val keep = cleaned0.columns.filter(c =>
       c == MergeDelCol || addNewColumns || meta0.schema.fieldNames.contains(c))
     val cleaned = cleaned0.select(keep.map(col).toIndexedSeq: _*)
-    val base0 = Manifest.current(spark, dir).getOrElse {
-      // legacy table: classic locked merge
-      return WriteLock.withLockWait(spark, dir, "mergeConcurrent(legacy)",
-        commitWaitMs) {
-        upsert(cleaned, wh, tableName, addNewColumns, validate, changelog,
-          tombstoned = true, deleteOnlyMatched = deleteOnlyMatched)
-      }
-    }
+    val base0 = Manifest.current(spark, dir)
     // SQL MERGE routing guard: a partial clause shape pre-filters the
     // feed against a PINNED snapshot's key set before reaching here —
     // if the table moved past that version before this call captured
@@ -2607,7 +2529,7 @@ object KeyedTable {
     try {
       val touched = validateAndTouched(newB, meta0.pk, validate)
       val oldTouched = readRawWith(spark, wh, tableName,
-          meta0.copy(schema = evolved), Some(base0))
+          meta0.copy(schema = evolved), base0)
         .filter(col(BucketCol).isin(touched: _*))
       val marked = newB.withColumn("_graft_new", lit(true))
       val presentOld = col(s"o.$BucketCol").isNotNull
@@ -2696,7 +2618,7 @@ object KeyedTable {
         WriteLock.withLockWait(spark, dir, "mergeConcurrent(commit)",
             commitWaitMs) {
           val metaLatest = TableMeta.read(spark, dir)
-          val baseLatest = snapshotForWrite(spark, dir, data, metaLatest)
+          val baseLatest = Manifest.current(spark, dir)
           // strictVersion: ANY movement aborts (the locked path's
           // contract) — for shapes whose semantics read the WHOLE
           // snapshot (SQL `WHEN NOT MATCHED BY SOURCE` sync), where the
@@ -2796,17 +2718,10 @@ object KeyedTable {
       throw new StoreException(
         s"deleteConcurrent: table $tableName does not exist")
     val meta0 = TableMeta.read(spark, dir)
-    val base0 = Manifest.current(spark, dir).getOrElse {
-      // legacy table: no snapshot to window against — classic locked
-      // delete (which adopts a manifest, so the NEXT call is optimistic)
-      return WriteLock.withLockWait(spark, dir, "deleteConcurrent(legacy)",
-        commitWaitMs) {
-        delete(spark, warehouse0, tableName, where, schema, changelog, mode)
-      }
-    }
+    val base0 = Manifest.current(spark, dir)
     val cdc = changelog || meta0.changelog
     val data = dataDir(warehouse, tableName)
-    val raw = readRawWith(spark, warehouse, tableName, meta0, Some(base0))
+    val raw = readRawWith(spark, warehouse, tableName, meta0, base0)
     val probe = raw.filter(where).groupBy(col(BucketCol))
       .agg(count(lit(1)).as("n")).collect()
     val touched = probe.map(_.getInt(0)).toSeq
@@ -2823,8 +2738,7 @@ object KeyedTable {
       return 0L
     }
     val f = fs(spark, dir)
-    val mor = morDecision(Some(base0), mode, touched, deleted,
-      "delete", tableName)
+    val mor = morDecision(base0, mode, touched, deleted)
     // CDC delete images against the snapshot-at-start pre-image —
     // valid at commit BECAUSE the window check proves that pre-image
     // is still the live truth
@@ -2846,7 +2760,7 @@ object KeyedTable {
     try {
       // the expensive rewrite/position job — OUTSIDE the lock
       if (mor) {
-        readRawPos(spark, warehouse, tableName, meta0, Some(base0),
+        readRawPos(spark, warehouse, tableName, meta0, base0,
             withPos = true)
           .filter(coalesce(where, lit(false)))
           .select(col(BucketCol), col(FileCol).as("file"),
@@ -2869,7 +2783,7 @@ object KeyedTable {
       WriteLock.withLockWait(spark, dir, "deleteConcurrent(commit)",
           commitWaitMs) {
         val metaLatest = TableMeta.read(spark, dir)
-        val baseLatest = snapshotForWrite(spark, dir, data, metaLatest)
+        val baseLatest = Manifest.current(spark, dir)
         if (baseLatest.buckets != base0.buckets)
           throw new ConcurrentWriteException(
             s"bucket count changed ${base0.buckets} -> " +
@@ -2980,7 +2894,7 @@ object KeyedTable {
       passthrough = if (tombstoned) Set(MergeDelCol) else Set.empty)
 
     val data = dataDir(warehouse, table)
-    val base = snapshotForWrite(spark, dir, data, meta)
+    val base = Manifest.current(spark, dir)
     val newB = withBucket(aligned, meta.pk, base.buckets)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -2990,7 +2904,7 @@ object KeyedTable {
       val touched = validateAndTouched(newB, meta.pk, validate)
       // read with the evolved schema: old files yield NULL for new columns
       val oldTouched = readRawWith(spark, warehouse, table,
-          meta.copy(schema = evolved), manifestOf(base))
+          meta.copy(schema = evolved), base)
         .filter(col(BucketCol).isin(touched: _*))
       // checks see the incoming images; merge tombstones are DELETES,
       // exempt by construction (they remove rows, not write them) —
@@ -3072,7 +2986,7 @@ object KeyedTable {
       // as observe() metrics — one fewer join of the touched buckets.
       val newRow = col("n._graft_new").isNotNull
       val statsEarly: Option[(Long, Long, Long)] =
-        if (tombstoned && mode == DeleteMode.Auto && manifestOf(base).isDefined) {
+        if (tombstoned && mode == DeleteMode.Auto) {
           val r = marked.as("n")
             .join(oldTouched.as("o"), meta.pk.toIndexedSeq, "left")
             .agg(
@@ -3099,8 +3013,8 @@ object KeyedTable {
       // a delta-sized appended file; inserts are additive anyway. The
       // shared Auto arithmetic compares |updated + deleted| against
       // the touched buckets' live rows.
-      val mor = tombstoned && morDecision(manifestOf(base), mode, touched,
-        statsEarly.map(s => s._2 + s._3).getOrElse(0L), "merge", table)
+      val mor = tombstoned && morDecision(base, mode, touched,
+        statsEarly.map(s => s._2 + s._3).getOrElse(0L))
 
       // Commit: write to staging, move the staged files in, flip the
       // manifest — one atomic snapshot publish; readers of the
@@ -3118,7 +3032,7 @@ object KeyedTable {
           // post-image writes both consume ONE compute of it instead
           // of re-running the join per write (§5 reuse).
           val oldPos = readRawPos(spark, warehouse, table,
-              meta.copy(schema = evolved), manifestOf(base), withPos = true)
+              meta.copy(schema = evolved), base, withPos = true)
             .filter(col(BucketCol).isin(touched: _*))
           val j = marked.as("n")
             .join(oldPos.as("o"), meta.pk.toIndexedSeq, "left")
@@ -3203,22 +3117,14 @@ object KeyedTable {
     } finally newB.unpersist()
   }
 
-  /** Compact buckets that have accumulated many small files (each
-    * append adds one file per touched bucket — the small-files problem
-    * at 100 TB). Buckets with at least `minFiles` parquet files are
-    * rewritten to a single file via staging + per-bucket swap (same
-    * commit protocol as upsert, so readers never see a half state);
-    * buckets below the threshold are untouched. Returns the number of
-    * buckets compacted. */
   /** Per-bucket layout health from FOOTER metadata only — (bucket,
     * n_files, n_rows, n_row_groups, bytes): the report that drives
     * compaction policy ("which buckets accumulated small files from
     * appends", "is the row-group geometry still scan-friendly") as an
-    * O(files) driver metadata pass with zero data bytes read — the
-    * same listing discipline as the scan (bucket dirs only, *.parquet
-    * only), so the numbers describe exactly what a query would read.
-    * Missing buckets report a zero row so the frame always has
-    * `meta.buckets` rows. */
+    * O(files) driver metadata pass with zero data bytes read — over
+    * the current snapshot's live files, so the numbers describe
+    * exactly what a query would read. Missing buckets report a zero
+    * row so the frame always has one row per bucket. */
   def bucketStats(spark: SparkSession, warehouse0: String, tableName: String,
                   schema: Option[String] = None): DataFrame = {
     val warehouse = schemaDir(warehouse0, schema)
@@ -3240,10 +3146,8 @@ object KeyedTable {
   private[store] def bucketHealthRows(spark: SparkSession, dir: String,
                                       data0: String)
       : Seq[(Int, Long, Long, Long, Long, Long, Long)] = {
-    val meta = TableMeta.read(spark, dir)
     val conf = spark.sparkContext.hadoopConfiguration
     val data = new Path(data0)
-    val f = fs(spark, dir)
     def footersOf(ps: Seq[Path]): (Long, Long) = { // (rows, rowGroups)
       import scala.jdk.CollectionConverters._
       val tasks = ps.map { p =>
@@ -3265,36 +3169,17 @@ object KeyedTable {
       statsPool.invokeAll(tasks.asJava).asScala.map(_.get())
         .foldLeft((0L, 0L)) { case ((r, g), (r2, g2)) => (r + r2, g + g2) }
     }
-    val mf = Manifest.current(spark, dir)
-    val (nBuckets, byBucket)
-        : (Int, Map[Int, (Long, Long, Long, Long, Long, Long)]) =
-      mf match {
-        case Some(m) =>
-          // n_files/bytes/DV arithmetic straight from the snapshot
-          // (zero listings); row-group geometry from pooled footer reads
-          (m.buckets, m.files.map { case (b, fls) =>
-            val (rows, groups) = footersOf(
-              fls.map(mfF => new Path(data, s"$BucketCol=$b/${mfF.name}")))
-            val dvl = if (fls.isEmpty) Nil else m.dvs.getOrElse(b, Nil)
-            b -> ((fls.size.toLong, rows, groups, fls.map(_.len).sum,
-              dvl.size.toLong, dvl.flatMap(_.rows).sum))
-          })
-        case None =>
-          (meta.buckets,
-            if (!f.exists(data))
-              Map.empty[Int, (Long, Long, Long, Long, Long, Long)]
-            else f.listStatus(data)
-              .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$BucketCol="))
-              .map { d =>
-                val b = d.getPath.getName.stripPrefix(s"$BucketCol=").toInt
-                val files = f.listStatus(d.getPath)
-                  .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-                val (rows, groups) = footersOf(files.toSeq.map(_.getPath))
-                b -> ((files.length.toLong, rows, groups,
-                  files.map(_.getLen).sum, 0L, 0L))
-              }.toMap)
-      }
-    (0 until nBuckets).map { b =>
+    // n_files/bytes/DV arithmetic straight from the snapshot (zero
+    // listings); row-group geometry from pooled footer reads
+    val m = Manifest.current(spark, dir)
+    val byBucket = m.files.map { case (b, fls) =>
+      val (rows, groups) = footersOf(
+        fls.map(mfF => new Path(data, s"$BucketCol=$b/${mfF.name}")))
+      val dvl = if (fls.isEmpty) Nil else m.dvs.getOrElse(b, Nil)
+      b -> ((fls.size.toLong, rows, groups, fls.map(_.len).sum,
+        dvl.size.toLong, dvl.flatMap(_.rows).sum))
+    }
+    (0 until m.buckets).map { b =>
       val (nf, nr, ng, bytes, dvf, dvr) =
         byBucket.getOrElse(b, (0L, 0L, 0L, 0L, 0L, 0L))
       (b, nf, nr, ng, bytes, dvf, dvr)
@@ -3424,24 +3309,21 @@ object KeyedTable {
     }
   }
 
+  /** Compact buckets that have accumulated many small files (each
+    * append adds one file per touched bucket — the small-files problem
+    * at 100 TB). Buckets with at least `minFiles` parquet files are
+    * rewritten to a single file outside the lock and committed by one
+    * manifest flip (readers never see a half state); buckets below
+    * the threshold are untouched. Returns the number of buckets
+    * compacted. */
   def compact(spark: SparkSession, warehouse0: String, tableName: String,
               minFiles: Int = 4, schema: Option[String] = None,
               commitWaitMs: Long = 60000L): Int = {
     val warehouse = schemaDir(warehouse0, schema)
     val dir = tableDir(warehouse, tableName)
-    if (Manifest.current(spark, dir).isEmpty)
-      // legacy table: no snapshot to window against — classic locked
-      // compact (which adopts a manifest, so the NEXT call is optimistic)
-      WriteLock.withLock(spark, dir, "compact") {
-        val meta = TableMeta.read(spark, dir)
-        val base = snapshotForWrite(spark, dir, dataDir(warehouse, tableName), meta)
-        val crowded = (0 until base.buckets).filter(b =>
-          base.files.getOrElse(b, Nil).size >= minFiles)
-        compactBuckets(spark, warehouse, tableName, dir, meta, base, crowded)
-      }
-    else retryMaintenance("compact") {
+    retryMaintenance("compact") {
       val meta0 = TableMeta.read(spark, dir)
-      val base0 = Manifest.current(spark, dir).get
+      val base0 = Manifest.current(spark, dir)
       val crowded = (0 until base0.buckets).filter(b =>
         base0.files.getOrElse(b, Nil).size >= minFiles)
       compactBucketsConcurrent(spark, warehouse, tableName, dir, meta0,
@@ -3449,37 +3331,12 @@ object KeyedTable {
     }
   }
 
-  /** Rewrite exactly `crowded` buckets to one file each via staging +
-    * per-bucket swap (the upsert commit protocol — readers never see a
-    * half state). Caller holds the write lock (the LEGACY pre-manifest
-    * path; manifested tables go through
-    * [[compactBucketsConcurrent]]). Returns #rewritten. */
-  private def compactBuckets(spark: SparkSession, warehouse: String,
-                             tableName: String, dir: String, meta: TableMeta,
-                             base: Manifest, crowded: Seq[Int]): Int = {
-    if (crowded.isEmpty) 0
-    else {
-      val data = dataDir(warehouse, tableName)
-      val f = fs(spark, dir)
-      val staging = s"$dir/.staging-compact-${UUID.randomUUID()}"
-      try {
-        toPhys(readRawWith(spark, warehouse, tableName, meta, manifestOf(base))
-          .filter(col(BucketCol).isin(crowded: _*))
-          .transform(clusterByBucket(_, crowded, meta.pk)),
-          meta)
-          .write.partitionBy(BucketCol).parquet(staging)
-        commitStaged(spark, f, dir, data, staging, crowded, "compact",
-          base, base.buckets, meta)
-      } finally f.delete(new Path(staging), true)
-      crowded.size
-    }
-  }
-
-  /** [[compactBuckets]] WITHOUT holding the write lock for the rewrite
-    * — the [[upsertConcurrent]] bucket-window protocol applied to
-    * layout maintenance (its easiest client: no logical change, so the
-    * only conflict is a touched bucket's file/DV window moving). The
-    * crowded-bucket rewrite (reading THROUGH the buckets' delete
+  /** Rewrite exactly `crowded` buckets to one file each WITHOUT
+    * holding the write lock for the rewrite — the [[upsertConcurrent]]
+    * bucket-window protocol applied to layout maintenance (its easiest
+    * client: no logical change, so the only conflict is a touched
+    * bucket's file/DV window moving). The crowded-bucket rewrite
+    * (reading THROUGH the buckets' delete
     * vectors — the commit drops them, materializing the tombstones)
     * stages against the snapshot-at-start outside the lock; a brief
     * locked flip re-validates [[maintenanceWindowCheck]] and commits.
@@ -3498,7 +3355,7 @@ object KeyedTable {
       val staging = s"$dir/.staging-compact-${UUID.randomUUID()}"
       try {
         // the rewrite job — OUTSIDE the lock
-        toPhys(readRawWith(spark, warehouse, tableName, meta0, manifestOf(base0))
+        toPhys(readRawWith(spark, warehouse, tableName, meta0, base0)
           .filter(col(BucketCol).isin(crowded: _*))
           .transform(clusterByBucket(_, crowded, meta0.pk)),
           meta0)
@@ -3511,7 +3368,7 @@ object KeyedTable {
         // ---------------- LOCKED: re-validate, commit ----------------
         WriteLock.withLockWait(spark, dir, "compact(commit)", commitWaitMs) {
           val metaLatest = TableMeta.read(spark, dir)
-          val baseLatest = snapshotForWrite(spark, dir, data, metaLatest)
+          val baseLatest = Manifest.current(spark, dir)
           maintenanceWindowCheck(base0, baseLatest, meta0, metaLatest,
             crowded, "compact")
           commitStaged(spark, f, dir, data, staging, crowded, "compact",
@@ -3544,24 +3401,6 @@ object KeyedTable {
                       commitWaitMs: Long = 60000L): Seq[Int] = {
     val warehouse = schemaDir(warehouse0, schema)
     val dir = tableDir(warehouse, tableName)
-    if (Manifest.current(spark, dir).isEmpty)
-      // legacy table: classic locked policy pass (adopts a manifest, so
-      // the NEXT call is optimistic) — breach decision from the
-      // footer-only bucketStats report (no manifest row counts yet)
-      return WriteLock.withLock(spark, dir, "compactIfNeeded") {
-        val meta = TableMeta.read(spark, dir)
-        val base = snapshotForWrite(spark, dir, dataDir(warehouse, tableName), meta)
-        val crowded = bucketStats(spark, warehouse0, tableName, schema)
-          .collect().toSeq
-          .filter { r =>
-            val (nf, nr) = (r.getLong(1), r.getLong(2))
-            nf > maxFilesPerBucket ||
-              (nf > 1 && minAvgRowsPerFile > 0 && nr / nf < minAvgRowsPerFile)
-          }
-          .map(_.getInt(0)).sorted
-        compactBuckets(spark, warehouse, tableName, dir, meta, base, crowded)
-        crowded
-      }
     // OPTIMISTIC policy pass: the breach decision AND the rewrite both
     // run against the current snapshot outside the lock — the healthy
     // steady state (nothing crowded) now costs one manifest read and
@@ -3569,7 +3408,7 @@ object KeyedTable {
     // sink epoch without contending with the sink's own committers.
     retryMaintenance("compactIfNeeded") {
       val meta = TableMeta.read(spark, dir)
-      val base = Manifest.current(spark, dir).get
+      val base = Manifest.current(spark, dir)
       // delete-vector density straight from the manifest (zero IO): a
       // bucket whose tombstoned fraction breaches the bound rewrites —
       // the read-side anti-join cost is bounded BY POLICY, and the
@@ -3589,12 +3428,12 @@ object KeyedTable {
       // counts (every file this code writes does): the no-op case then
       // costs one manifest read — which is what lets maintenance ride
       // every upsert-mode (and opt-in append-mode, see auto_compact)
-      // streaming-sink epoch. Tables with uncounted files
-      // (legacy/adopted) fall back to the footer-only bucketStats
-      // report (O(files) footer opens, still zero data pages).
+      // streaming-sink epoch. A table with a file whose footer could
+      // not be read at commit (no recorded count) falls back to the
+      // footer-only bucketStats report (O(files) footer opens, still
+      // zero data pages).
       val crowded: Seq[Int] =
-        if (base.version >= 0 &&
-            base.files.valuesIterator.flatten.forall(_.rows.isDefined))
+        if (base.files.valuesIterator.flatten.forall(_.rows.isDefined))
           base.files.toSeq.collect { case (b, fls)
             if fls.size > maxFilesPerBucket ||
               (fls.size > 1 && minAvgRowsPerFile > 0 &&
@@ -3701,18 +3540,6 @@ object KeyedTable {
     val warehouse = schemaDir(warehouse0, schema)
     val dir = tableDir(warehouse, tableName)
     val data = dataDir(warehouse, tableName)
-    if (Manifest.current(spark, dir).isEmpty) {
-      // legacy table: adopt a manifest under the lock first (a trivial
-      // zero-touched commit), then the optimistic pass below runs
-      // against a real snapshot
-      WriteLock.withLock(spark, dir, "zorder(adopt)") {
-        val meta = TableMeta.read(spark, dir)
-        val base = snapshotForWrite(spark, dir, data, meta)
-        if (base.version < 0)
-          Manifest.commit(spark, dir, base.copy(version = 0,
-            op = Some("adopt"))): Unit
-      }
-    }
     // OPTIMISTIC rewrite ([[maintenanceWindowCheck]] + retry): the
     // min/max aggregate, the Morton sort, and the full bucket rewrite
     // all run against the snapshot-at-start OUTSIDE the lock — a
@@ -3726,9 +3553,9 @@ object KeyedTable {
         if (!meta0.schema.fieldNames.contains(c))
           throw new StoreException(s"zorder column $c not in table schema")
       }
-      val base0 = Manifest.current(spark, dir).get
+      val base0 = Manifest.current(spark, dir)
       val touched = base0.files.keys.toSeq.sorted
-      val raw = readRawWith(spark, warehouse, tableName, meta0, Some(base0))
+      val raw = readRawWith(spark, warehouse, tableName, meta0, base0)
       // 2 scalars per column from one aggregate — broadcast into the
       // sort key; a column whose min is NULL (all-NULL/empty) degrades
       // to a constant-0 lane in zValue
@@ -3766,7 +3593,7 @@ object KeyedTable {
           WriteLock.withLockWait(spark, dir, "zorder(commit)",
               commitWaitMs) {
             val metaLatest = TableMeta.read(spark, dir)
-            val baseLatest = snapshotForWrite(spark, dir, data, metaLatest)
+            val baseLatest = Manifest.current(spark, dir)
             maintenanceWindowCheck(base0, baseLatest, meta0, metaLatest,
               touched, "zorderCompact")
             // Z-ordering makes per-file bounds on the clustered columns
@@ -3835,8 +3662,8 @@ object KeyedTable {
       // express the flag — SQL `DELETE FROM graft.t` reaches here through
       // KeyedTableSource.deleteWhere with the default
       val cdc = changelog || meta.changelog
-      val base = snapshotForWrite(spark, dir, dataDir(warehouse, tableName), meta)
-      val raw = readRawWith(spark, warehouse, tableName, meta, manifestOf(base))
+      val base = Manifest.current(spark, dir)
+      val raw = readRawWith(spark, warehouse, tableName, meta, base)
       // one job: matching-row count per touched bucket (≤ buckets rows)
       val probe = raw.filter(where).groupBy(col(BucketCol))
         .agg(count(lit(1)).as("n")).collect()
@@ -3844,8 +3671,7 @@ object KeyedTable {
       val deleted = probe.map(_.getLong(1)).sum
       // strategy decision from manifest arithmetic alone (zero IO)
       val mor: Boolean =
-        morDecision(manifestOf(base), mode, touched, deleted,
-          "delete", tableName)
+        morDecision(base, mode, touched, deleted)
       if (touched.nonEmpty) {
         val data = dataDir(warehouse, tableName)
         val f = fs(spark, dir)
@@ -3879,7 +3705,7 @@ object KeyedTable {
               // so positions are never tombstoned twice.
               inParallel(spark)({ stageCl() },
                 readRawPos(spark, warehouse, tableName, meta,
-                    manifestOf(base), withPos = true)
+                    base, withPos = true)
                   .filter(coalesce(where, lit(false)))
                   .select(col(BucketCol), col(FileCol).as("file"),
                     col(PosCol).as("pos"))
@@ -3957,8 +3783,8 @@ object KeyedTable {
             "delete + insert; use merge or delete/append)")
       }
       val cdc = changelog || meta.changelog
-      val base = snapshotForWrite(spark, dir, dataDir(warehouse, tableName), meta)
-      val raw = readRawWith(spark, warehouse, tableName, meta, manifestOf(base))
+      val base = Manifest.current(spark, dir)
+      val raw = readRawWith(spark, warehouse, tableName, meta, base)
       // NULL predicate rows are NOT matches (kept unchanged)
       val matched = coalesce(where, lit(false))
       // one job: matching-row count per touched bucket (≤ buckets rows)
@@ -3995,8 +3821,7 @@ object KeyedTable {
           raw.filter(matched).select(meta.schema.fieldNames.toSeq
             .map(c => newVal(c).as(c)): _*),
           meta.checks, "update")
-        val mor = morDecision(manifestOf(base), mode, touched, nMatched,
-          "update", tableName)
+        val mor = morDecision(base, mode, touched, nMatched)
         try {
           if (mor) {
             // merge-on-read: tombstone the matched rows' positions and
@@ -4004,7 +3829,7 @@ object KeyedTable {
             // the buckets. One read of the matched set feeds both
             // staged writes (persisted: the filter job runs once).
             val posFrame = readRawPos(spark, warehouse, tableName, meta,
-                manifestOf(base), withPos = true)
+                base, withPos = true)
               .filter(matched)
               .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
             val dvStaging = s"$dir/.staging-update-dv-${UUID.randomUUID()}"
@@ -4424,7 +4249,7 @@ object KeyedTable {
         throw new StoreException(
           s"merge target $tableName does not exist (create it with toSql first)")
       expectedVersion.foreach { v =>
-        val cur = Manifest.current(spark, dir).map(_.version).getOrElse(-1L)
+        val cur = Manifest.current(spark, dir).version
         if (cur != v)
           throw new ConcurrentWriteException(
             s"merge into $tableName planned against snapshot $v but the " +
@@ -4446,21 +4271,15 @@ object KeyedTable {
     * two tables must co-partition for the storage-partitioned PK join
     * (equal bucket counts are its precondition). Necessarily a full
     * rewrite — rehashing moves every row — but it's ONE shuffle
-    * (repartition on the new bucket) + one write, via staging + swap
-    * so readers never observe a half state; the meta updates last, so
-    * a reader that raced the swap still sees a consistent (old-count)
-    * view resolve to the new files only with the new meta. */
+    * (repartition on the new bucket) + one write, then ONE manifest
+    * flip that switches both the file set and the bucket count, so
+    * readers never observe a half state. */
   def rebucket(spark: SparkSession, warehouse0: String, tableName: String,
                newBuckets: Int, schema: Option[String] = None,
                commitWaitMs: Long = 60000L): Unit = {
     require(newBuckets > 0, s"bucket count must be positive, got $newBuckets")
     val warehouse = schemaDir(warehouse0, schema)
     val dir = tableDir(warehouse, tableName)
-    if (Manifest.current(spark, dir).isEmpty)
-      // legacy table: classic locked rebucket (adopts a manifest)
-      return WriteLock.withLock(spark, dir, "rebucket") {
-        rebucketLocked(spark, warehouse, tableName, newBuckets, dir)
-      }
     // OPTIMISTIC rebucket: rehashing moves every row, so the conflict
     // window is necessarily COARSE — any manifest flip between the
     // start snapshot and the commit invalidates the staged layout (the
@@ -4477,24 +4296,14 @@ object KeyedTable {
     retryMaintenance("rebucket") {
       val meta0 = TableMeta.read(spark, dir)
       val data = dataDir(warehouse, tableName)
-      val base0 = Manifest.current(spark, dir).get
-      if (base0.buckets == newBuckets) {
-        // keep meta honest if it lags the manifest (crash between a
-        // prior rebucket's manifest flip and its meta write)
-        if (meta0.buckets != newBuckets)
-          WriteLock.withLockWait(spark, dir, "rebucket(meta)",
-              commitWaitMs) {
-            val m = TableMeta.read(spark, dir)
-            if (m.buckets != newBuckets)
-              TableMeta.write(spark, dir, m.copy(buckets = newBuckets))
-          }
-      } else {
+      val base0 = Manifest.current(spark, dir)
+      if (base0.buckets != newBuckets) {
         val f = fs(spark, dir)
         val staging = s"$dir/.staging-rebucket-${UUID.randomUUID()}"
         try {
           // the full shuffle + rewrite — OUTSIDE the lock
           toPhys(withBucket(
-              readRawWith(spark, warehouse, tableName, meta0, Some(base0))
+              readRawWith(spark, warehouse, tableName, meta0, base0)
                 .drop(BucketCol),
               meta0.pk, newBuckets)
             .transform(clusterByBucket(_, 0 until newBuckets, meta0.pk)),
@@ -4509,7 +4318,7 @@ object KeyedTable {
           WriteLock.withLockWait(spark, dir, "rebucket(commit)",
               commitWaitMs) {
             val metaLatest = TableMeta.read(spark, dir)
-            val baseLatest = snapshotForWrite(spark, dir, data, metaLatest)
+            val baseLatest = Manifest.current(spark, dir)
             if (baseLatest.version != base0.version)
               throw new ConcurrentWriteException(
                 s"table advanced v${base0.version} -> v${baseLatest.version} " +
@@ -4527,61 +4336,19 @@ object KeyedTable {
             // Old-layout buckets with no staged replacement
             // (newBuckets < old) leave the snapshot via removeMissing;
             // the old files stay for readers of previous snapshots
-            // until vacuum. Meta updates after, as the mirror legacy
-            // (pre-manifest) code paths read.
+            // until vacuum.
             commitStaged(spark, f, dir, data, staging,
               0 until math.max(base0.buckets, newBuckets), "rebucket",
               baseLatest, newBuckets, metaLatest, removeMissing = true,
               preStats = Some(preStats))
             // a full rewrite: every live file now carries the current
             // schema, so dropped names may be re-added safely
-            TableMeta.write(spark, dir,
-              metaLatest.copy(buckets = newBuckets, dropped = Nil))
+            if (metaLatest.dropped.nonEmpty)
+              TableMeta.write(spark, dir, metaLatest.copy(dropped = Nil))
           }
         } finally f.delete(new Path(staging), true)
       }
     }
-  }
-
-  private def rebucketLocked(spark: SparkSession, warehouse: String,
-                             tableName: String, newBuckets: Int,
-                             dir: String): Unit = {
-    val meta = TableMeta.read(spark, dir)
-    val data = dataDir(warehouse, tableName)
-    val base = snapshotForWrite(spark, dir, data, meta)
-    if (base.buckets == newBuckets) {
-      // keep meta honest if it lags the manifest (crash between a prior
-      // rebucket's manifest flip and its meta write)
-      if (meta.buckets != newBuckets)
-        TableMeta.write(spark, dir, meta.copy(buckets = newBuckets))
-      return
-    }
-    val f = fs(spark, dir)
-    val staging = s"$dir/.staging-rebucket-${UUID.randomUUID()}"
-    try {
-      toPhys(withBucket(
-          readRawWith(spark, warehouse, tableName, meta, manifestOf(base))
-            .drop(BucketCol),
-          meta.pk, newBuckets)
-        .transform(clusterByBucket(_, 0 until newBuckets, meta.pk)),
-        meta)
-        .write.partitionBy(BucketCol).parquet(staging)
-      // ONE snapshot flip switches both the file set and the bucket
-      // count (the manifest carries `buckets`), so no reader can ever
-      // pair the old count with the new layout — the failure mode the
-      // old dir-swap ordering had to reason about. Old-layout buckets
-      // with no staged replacement (newBuckets < old) leave the
-      // snapshot via removeMissing; the old files stay for readers of
-      // previous snapshots until vacuum. Meta updates after, as the
-      // mirror legacy (pre-manifest) code paths read.
-      commitStaged(spark, f, dir, data, staging,
-        0 until math.max(base.buckets, newBuckets), "rebucket",
-        base, newBuckets, meta, removeMissing = true)
-      // a full rewrite: every live file now carries the current schema,
-      // so dropped column names may be re-added safely (see dropColumns)
-      TableMeta.write(spark, dir,
-        meta.copy(buckets = newBuckets, dropped = Nil))
-    } finally f.delete(new Path(staging), true)
   }
 
   /** Reclaim a table's garbage, bounded by `olderThanMs` (default 24 h)
@@ -4652,14 +4419,14 @@ object KeyedTable {
     // live invisibly between the walk and the flip.
     val preCutoff = System.currentTimeMillis() - olderThanMs
     val preWalk: Option[(Set[(String, Long)], Seq[(String, Path)], Seq[Path])] =
-      Manifest.current(spark, dir).map { _ =>
+      Manifest.latest(spark, dir).map { _ =>
         val preBranches = Branches.branchDirs(spark, dir)
         def predictedSurviving(refDir: String, extraProtected: Set[String])
             : Seq[Manifest] = {
           val prot: Set[String] =
             Tags.read(spark, refDir).values.map(Manifest.versionName).toSet ++
               extraProtected ++
-              Manifest.current(spark, refDir)
+              Manifest.latest(spark, refDir)
                 .map(mm => Manifest.versionName(mm.version)).toSet
           val mdirR = Manifest.dir(refDir)
           val mtimeOf: Map[String, Long] =
@@ -4741,7 +4508,7 @@ object KeyedTable {
       // (branch mutations stage in their own dir before moving files
       // into the shared data dir)
       var removed = (p +: branches.map(b => new Path(b._2))).map { root =>
-        val ledger: Set[String] = Manifest.current(spark, root.toString)
+        val ledger: Set[String] = Manifest.latest(spark, root.toString)
           .map(_.streams.keySet).getOrElse(Set.empty)
         f.listStatus(root).count { st =>
           val n = st.getPath.getName
@@ -4790,7 +4557,7 @@ object KeyedTable {
             st.getModificationTime < cutoff && reap(st.getPath, false))
           removed += 1
       }
-      Manifest.current(spark, dir).foreach { m =>
+      Manifest.latest(spark, dir).foreach { m =>
         // Order matters: FIRST expire old manifests past the age bound
         // (never the current one, never a TAGGED one — a tag is a
         // retention contract, see [[Tags]]), THEN reap data files
@@ -4821,7 +4588,7 @@ object KeyedTable {
         // snapshots referenced become reapable in the same pass.
         branches.foreach { case (_, brDir) =>
           val bmdir = Manifest.dir(brDir)
-          Manifest.current(spark, brDir).foreach { bm =>
+          Manifest.latest(spark, brDir).foreach { bm =>
             val keepB: Set[String] =
               Tags.read(spark, brDir).values.map(Manifest.versionName).toSet +
                 Manifest.versionName(bm.version) +
@@ -4909,9 +4676,10 @@ object KeyedTable {
     * committed (unexpired) manifest version with its physical totals
     * (bucket count, live files, rows, bytes), read from the manifests
     * alone — zero data IO, zero footer opens (row counts ride in the
-    * manifest; −1 when some adopted legacy file lacks one). The audit
-    * view behind time travel: what each `asOfVersion` would read, and
-    * how the table's physical footprint evolved commit by commit. */
+    * manifest; −1 when a file's footer could not be read at commit).
+    * The audit view behind time travel: what each `asOfVersion` would
+    * read, and how the table's physical footprint evolved commit by
+    * commit. */
   def history(spark: SparkSession, warehouse0: String, tableName: String,
               schema: Option[String] = None): DataFrame = {
     val dir = tableDir(schemaDir(warehouse0, schema), tableName)
@@ -5054,8 +4822,7 @@ object KeyedTable {
     val since = Manifest.at(spark, dir, sinceVersion)
     val to = toVersion match {
       case Some(v) => Manifest.at(spark, dir, v)
-      case None => Manifest.current(spark, dir).getOrElse(
-        throw new StoreException(s"table $tableName has no snapshot"))
+      case None => Manifest.current(spark, dir)
     }
     if (to.version < since.version)
       throw new StoreException(
@@ -5086,7 +4853,7 @@ object KeyedTable {
     // (the window is dv-stable per the guard above), and added files
     // are too new for any DV to name them
     readRawWith(spark, warehouse, tableName, meta,
-      Some(to.copy(files = added, dvs = Map.empty)))
+      to.copy(files = added, dvs = Map.empty))
       .select(meta.schema.fieldNames.toIndexedSeq.map(col): _*)
   }
 
@@ -5128,10 +4895,7 @@ object KeyedTable {
     val dir = tableDir(warehouse, tableName)
     WriteLock.withLock(spark, dir, "restore") {
       val meta = TableMeta.read(spark, dir)
-      val cur = Manifest.current(spark, dir).getOrElse(
-        throw new StoreException(
-          s"table $tableName has no snapshot history to restore " +
-          "(pre-manifest table: mutate it once to adopt a baseline)"))
+      val cur = Manifest.current(spark, dir)
       val v = version.getOrElse(resolveTag(spark, dir, tag.get))
       if (v == cur.version) cur.version else {
       val target = Manifest.at(spark, dir, v)
@@ -5161,13 +4925,8 @@ object KeyedTable {
           commitChangelogBatch(f, "restore", src, dst)
         }
       } finally clCommit.foreach { case (src, _) => f.delete(src, true) }
-      // restoring across a rebucket: the manifest is the layout
-      // authority everywhere, but keep the meta's count in sync the way
-      // rebucket itself does (legacy listing fallbacks read it)
-      val metaSync = meta.copy(
-        buckets = target.buckets,
-        changelog = meta.changelog || cdc)
-      if (metaSync != meta) TableMeta.write(spark, dir, metaSync)
+      if (cdc && !meta.changelog)
+        TableMeta.write(spark, dir, meta.copy(changelog = true))
       cur.version + 1
       }
     }
@@ -5211,9 +4970,7 @@ object KeyedTable {
     val meta = TableMeta.read(spark, dir)
     val mFrom = Manifest.at(spark, dir, fromVersion)
     val mTo = toVersion.map(Manifest.at(spark, dir, _))
-      .orElse(Manifest.current(spark, dir)).getOrElse(
-        throw new StoreException(
-          s"$tableName has no manifest snapshot to diff against"))
+      .getOrElse(Manifest.current(spark, dir))
     val aPresent = col(s"a.${meta.pk.head}").isNotNull
     val bPresent = col(s"b.${meta.pk.head}").isNotNull
     val nonPk = meta.schema.fieldNames.filterNot(meta.pk.contains).toSeq
@@ -5512,10 +5269,10 @@ object KeyedTable {
           // batches, so this floor is strictly above the existing one
           // — never a regression.
           val floor = expire.last._1 + 1
-          val fp = new Path(clRoot, ChangelogFloorFile)
-          val out = f.create(fp, true)
-          try out.write(s"""{"firstBatch": $floor}""".getBytes("UTF-8"))
-          finally out.close()
+          SmallFile.replace(spark.sparkContext.hadoopConfiguration,
+            new Path(clRoot, ChangelogFloorFile),
+            s"""{"firstBatch": $floor}""".getBytes("UTF-8"), "floor",
+            "changelog floor marker")
           (expire.size, orphans.map(_._2.getPath) ++ expire.map(_._2.getPath))
         }
       }
@@ -5579,12 +5336,7 @@ object KeyedTable {
   private def changelogFloor(f: FileSystem, clRoot: Path): Long = {
     val fp = new Path(clRoot, ChangelogFloorFile)
     if (!f.exists(fp)) return 0L
-    val in = f.open(fp)
-    val s = try {
-      val bytes = new Array[Byte](f.getFileStatus(fp).getLen.toInt)
-      in.readFully(bytes)
-      new String(bytes, "UTF-8")
-    } finally in.close()
+    val s = SmallFile.readUtf8(f, fp)
     """"firstBatch"\s*:\s*(\d+)""".r.findFirstMatchIn(s) match {
       case Some(m) => m.group(1).toLong
       case None => throw new StoreException(
@@ -5669,19 +5421,19 @@ object KeyedTable {
       highest.zipWithIndex.collect { case (v, i) if v != null => col(meta.pk(i)) <= lit(v) }
     val dir = tableDir(warehouse, tableName)
     val mf = asOfVersion.orElse(asOfTag.map(resolveTag(spark, dir, _))) match {
-      case Some(v) => Some(Manifest.at(spark, dir, v))
+      case Some(v) => Manifest.at(spark, dir, v)
       case None => Manifest.current(spark, dir)
     }
     // Bucket pruning: a hash layout can't prune an arbitrary range, but
     // two shapes name their buckets exactly, hashed on the driver
-    // (bucketOfKey) with the SNAPSHOT's bucket count (a rebucket changes
-    // it; the manifest is the authority when present):
+    // (bucketOfKey) with the SNAPSHOT's bucket count (a rebucket
+    // changes it):
     //  - point lookup (every dimension pinned): one bucket;
     //  - a NARROW integral range on a single-column PK: the keys in
     //    [lo, hi] are enumerable, so the bucket set is their hashes.
     // A fractional bound on an integral PK compares in floating point,
     // where one bound can equal several keys: no pruning then.
-    val buckets = mf.map(_.buckets).getOrElse(meta.buckets)
+    val buckets = mf.buckets
     val fractionalOnIntegral = Seq(lowest, highest).exists(meta.pk.zip(_).exists {
       case (c, _: Float | _: Double) => meta.schema(c).dataType match {
         case ByteType | ShortType | IntegerType | LongType => true
@@ -5706,21 +5458,20 @@ object KeyedTable {
     // files per bucket, before any footer is opened
     val lo0 = lowest.headOption.filter(_ != null).flatMap(Manifest.normBound)
     val hi0 = highest.headOption.filter(_ != null).flatMap(Manifest.normBound)
-    val mfPruned = mf.map { m0 =>
-      val m = kept.fold(m0) { bs =>
-        val keep = bs.toSet
-        m0.copy(files = m0.files.filter(kv => keep(kv._1)),
-          dvs = m0.dvs.filter(kv => keep(kv._1)))
-      }
-      if (lo0.isEmpty && hi0.isEmpty) m
-      else m.copy(files = m.files.map { case (b, fls) =>
+    val mfKept = kept.fold(mf) { bs =>
+      val keep = bs.toSet
+      mf.copy(files = mf.files.filter(kv => keep(kv._1)),
+        dvs = mf.dvs.filter(kv => keep(kv._1)))
+    }
+    val mfPruned =
+      if (lo0.isEmpty && hi0.isEmpty) mfKept
+      else mfKept.copy(files = mfKept.files.map { case (b, fls) =>
         b -> fls.filter(_.mayOverlap(lo0, hi0))
       }.filter(_._2.nonEmpty))
-    }
     val raw = readRawWith(spark, warehouse, tableName, meta, mfPruned)
-    // the partition filter stays on the frame: it is what prunes a
-    // legacy (manifest-less) read, and the range predicates below
-    // still prune row groups within the kept buckets
+    // the partition filter stays on the frame, so the plan names the
+    // kept buckets (PartitionFilters); the range predicates below
+    // still prune row groups within them
     val pruned = kept.fold(raw)(bs => raw.filter(col(BucketCol).isin(bs: _*)))
     val filtered = conds.foldLeft(pruned)(_ filter _)
     filtered.select(meta.schema.fieldNames.toIndexedSeq.map(col): _*)

@@ -45,7 +45,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 class KeyedTableSource extends TableProvider {
 
   private def meta(options: CaseInsensitiveStringMap)
-      : (TableMeta, String, Option[Manifest]) = {
+      : (TableMeta, String, Manifest) = {
     val warehouse = options.get("warehouse")
     val table = options.get("table")
     require(warehouse != null && table != null,
@@ -60,9 +60,9 @@ class KeyedTableSource extends TableProvider {
     // that version's own delete vectors) — how snapshotDiff plans its
     // two sides shuffle-free.
     val mf = Option(options.get("version")) match {
-      case Some(v) => Some(Manifest.at(spark, dir,
+      case Some(v) => Manifest.at(spark, dir,
         v.toLongOption.getOrElse(throw new StoreException(
-          s"bad version option '$v': expected a snapshot version number"))))
+          s"bad version option '$v': expected a snapshot version number")))
       case None => Manifest.current(spark, dir)
     }
     (TableMeta.read(spark, dir), KeyedTable.dataDir(warehouse, table), mf)
@@ -160,7 +160,7 @@ object KeyedTableSource {
   * Spark's output resolution fails on arity. Reads always re-resolve
   * through `loadTable`, which never sets this. */
 private[store] class KeyedBatchTable(val meta: TableMeta, dataDir: String,
-                                     mf: Option[Manifest] = None,
+                                     mf: Manifest,
                                      tableDir0: String = null,
                                      writeShape: StructType = null)
     extends Table with SupportsRead
@@ -185,7 +185,7 @@ private[store] class KeyedBatchTable(val meta: TableMeta, dataDir: String,
     val m = new util.HashMap[String, String]()
     m.put("format", "parquet")
     m.put("primary_key", meta.pk.mkString(","))
-    m.put("buckets", mf.map(_.buckets).getOrElse(meta.buckets).toString)
+    m.put("buckets", mf.buckets.toString)
     m.put("auto_index", meta.autoIndex.toString)
     m.put("changelog", meta.changelog.toString)
     m.put("commit_mode",
@@ -197,7 +197,7 @@ private[store] class KeyedBatchTable(val meta: TableMeta, dataDir: String,
     if (meta.renames.nonEmpty)
       m.put("renamed_columns", meta.renames.toSeq.sorted
         .map { case (l, p) => s"$l<-$p" }.mkString(","))
-    mf.foreach(s => m.put("current_version", s.version.toString))
+    m.put("current_version", mf.version.toString)
     m
   }
 
@@ -422,7 +422,7 @@ private[store] class KeyedBatchTable(val meta: TableMeta, dataDir: String,
 
 private[store] class KeyedScanBuilder(meta: TableMeta, dataDir: String,
                                       full: StructType,
-                                      mf: Option[Manifest] = None,
+                                      mf: Manifest,
                                       streamOpts: Map[String, String] = Map.empty,
                                       tableDir: String = null)
     extends ScanBuilder with SupportsPushDownRequiredColumns
@@ -470,7 +470,7 @@ private[store] class KeyedScanBuilder(meta: TableMeta, dataDir: String,
       // delete vectors remove rows the footers still count (and may
       // hold the extreme min/max values): never push over a DV'd
       // snapshot — the masked scan answers exactly
-      mf.forall(_.dvs.isEmpty)
+      mf.dvs.isEmpty
 
   override def pushAggregation(agg: Aggregation): Boolean = {
     if (!supportCompletePushDown(agg)) return false
@@ -500,15 +500,15 @@ private[store] class KeyedLocalAggScan(schema: StructType, row: InternalRow,
 private[store] class KeyedScan(meta: TableMeta, dataDir: String,
                                required: StructType,
                                pushed: Array[Filter] = Array.empty,
-                               mf: Option[Manifest] = None,
+                               mf: Manifest,
                                streamOpts: Map[String, String] = Map.empty,
                                tableDir0: String = null)
     extends Scan with Batch with SupportsReportPartitioning
     with SupportsRuntimeFiltering with SupportsReportStatistics {
 
-  /** The snapshot's bucket count when a manifest is pinned (authoritative
-    * across rebuckets), else the meta's (legacy tables). */
-  private val numBuckets: Int = mf.map(_.buckets).getOrElse(meta.buckets)
+  /** The pinned snapshot's bucket count (authoritative across
+    * rebuckets). */
+  private val numBuckets: Int = mf.buckets
 
   private val readDataSchema =
     StructType(required.fields.filterNot(_.name == KeyedTable.BucketCol))
@@ -560,7 +560,7 @@ private[store] class KeyedScan(meta: TableMeta, dataDir: String,
     *    deterministic hash of the pinned values (the same point-lookup
     *    pruning readSql performs, reached through Catalyst pushdown:
     *    e.g. the probe side of a filtered storage-partitioned join).
-    * All `meta.buckets` partitions are still EMITTED (pruned ones with
+    * All `numBuckets` partitions are still EMITTED (pruned ones with
     * empty file lists) so partition values stay identical across
     * co-bucketed tables and the SPJ zip is never disturbed. */
   private lazy val keptBuckets: Option[Set[Int]] = {
@@ -709,14 +709,11 @@ private[store] class KeyedScan(meta: TableMeta, dataDir: String,
     * DV files exist; each executor task loads its own bucket's masks in
     * `createReader` (see [[DvMaskReaderFactory]]). Empty for the common
     * no-DV snapshot. */
-  private lazy val dvPathsByBucket: Map[Int, Array[String]] = mf match {
-    case Some(m) if m.dvs.nonEmpty =>
-      m.dvs.map { case (b, fls) =>
-        b -> fls.map(f =>
-          s"$dataDir/${KeyedTable.BucketCol}=$b/${f.name}").toArray
-      }
-    case _ => Map.empty
-  }
+  private lazy val dvPathsByBucket: Map[Int, Array[String]] =
+    mf.dvs.map { case (b, fls) =>
+      b -> fls.map(f =>
+        s"$dataDir/${KeyedTable.BucketCol}=$b/${f.name}").toArray
+    }
 
   override def planInputPartitions(): Array[InputPartition] = {
     // static (pushdown) ∩ runtime (dynamic pruning) bucket sets; the
@@ -724,57 +721,31 @@ private[store] class KeyedScan(meta: TableMeta, dataDir: String,
     // BatchScanExec makes (original + filtered partitions)
     val kept: Option[Set[Int]] =
       Seq(keptBuckets, runtimeBuckets).flatten.reduceOption(_ intersect _)
-    mf match {
-      case Some(m) =>
-        // the manifest IS the file index (names + lengths + leading-PK
-        // stats): planning a scan costs ZERO filesystem calls — at
-        // thousands of buckets on an object store, listings are the
-        // planning latency floor this removes — reads one immutable
-        // snapshot regardless of concurrent commits, and FILE-SKIPS on
-        // the pushed leading-PK bounds before any footer is opened
-        (0 until m.buckets).map { b =>
-          val key = new GenericInternalRow(Array[Any](b))
-          val files: Array[PartitionedFile] =
-            if (!kept.forall(_.contains(b))) Array.empty
-            else m.files.getOrElse(b, Nil)
-              .filter(fileMayMatch)
-              .map { mfF =>
-                val p = new Path(dataDir, s"${KeyedTable.BucketCol}=$b/${mfF.name}")
-                new PartitionedFile(key, SparkPath.fromPath(p),
-                  0L, mfF.len, Array.empty[String], 0L, mfF.len,
-                  Map.empty[String, Any])
-              }.toArray
-          // each task carries only ITS bucket's tombstone file names
-          // (an empty/pruned bucket loads nothing)
-          new KeyedFilePartition(b, files, key,
-            if (files.isEmpty) Array.empty[String]
-            else dvPathsByBucket.getOrElse(b, Array.empty[String]),
-            rowOnly = dvPathsByBucket.nonEmpty): InputPartition
-        }.toArray
-      case None => // legacy pre-manifest table: one listing of data/
-        val spark = SparkSession.active
-        val root = new Path(dataDir)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // ONE listing of the data dir (not an exists() RPC per bucket —
-        // thousands of buckets would mean thousands of driver round-trips)
-        val bucketDirs = fs.listStatus(root).filter(_.isDirectory)
-          .map(st => st.getPath.getName -> st.getPath).toMap
-        (0 until numBuckets).map { b =>
-          val key = new GenericInternalRow(Array[Any](b))
-          val files: Array[PartitionedFile] =
-            bucketDirs.get(s"${KeyedTable.BucketCol}=$b") match {
-              case Some(dir) if kept.forall(_.contains(b)) =>
-                fs.listStatus(dir)
-                  .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-                  .sortBy(_.getPath.getName)
-                  .map(st => new PartitionedFile(key, SparkPath.fromPath(st.getPath),
-                    0L, st.getLen, Array.empty[String], st.getModificationTime,
-                    st.getLen, Map.empty[String, Any]))
-              case _ => Array.empty[PartitionedFile]
-            }
-          new KeyedFilePartition(b, files, key): InputPartition
-        }.toArray
-    }
+    // the manifest IS the file index (names + lengths + leading-PK
+    // stats): planning a scan costs ZERO filesystem calls — at
+    // thousands of buckets on an object store, listings are the
+    // planning latency floor this removes — reads one immutable
+    // snapshot regardless of concurrent commits, and FILE-SKIPS on
+    // the pushed leading-PK bounds before any footer is opened
+    (0 until numBuckets).map { b =>
+      val key = new GenericInternalRow(Array[Any](b))
+      val files: Array[PartitionedFile] =
+        if (!kept.forall(_.contains(b))) Array.empty
+        else mf.files.getOrElse(b, Nil)
+          .filter(fileMayMatch)
+          .map { mfF =>
+            val p = new Path(dataDir, s"${KeyedTable.BucketCol}=$b/${mfF.name}")
+            new PartitionedFile(key, SparkPath.fromPath(p),
+              0L, mfF.len, Array.empty[String], 0L, mfF.len,
+              Map.empty[String, Any])
+          }.toArray
+      // each task carries only ITS bucket's tombstone file names
+      // (an empty/pruned bucket loads nothing)
+      new KeyedFilePartition(b, files, key,
+        if (files.isEmpty) Array.empty[String]
+        else dvPathsByBucket.getOrElse(b, Array.empty[String]),
+        rowOnly = dvPathsByBucket.nonEmpty): InputPartition
+    }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -787,7 +758,7 @@ private[store] class KeyedScan(meta: TableMeta, dataDir: String,
           KeyedTableSource.physStruct(readDataSchema, meta),
           readPartitionSchema, filters.flatMap(
             KeyedTableSource.physFilter(_, meta.physName)))
-    if (mf.forall(_.dvs.isEmpty)) mk(dataFilters)
+    if (mf.dvs.isEmpty) mk(dataFilters)
     // masked files read through the no-filter delegate (the ordinal
     // counter must see every row); clean files keep row-group pruning.
     // The broadcast conf lets executors open their bucket's sidecars —
@@ -798,8 +769,9 @@ private[store] class KeyedScan(meta: TableMeta, dataDir: String,
         SparkSession.active.sparkContext.hadoopConfiguration))
   }
 
-  /** Size statistics from ONE directory listing of the (statically
-    * pruned) bucket dirs — no footer opens, no data bytes. Without this
+  /** Size statistics from the snapshot's file lengths over the
+    * (statically pruned) buckets — zero filesystem calls, no footer
+    * opens, no data bytes. Without this
     * Catalyst has no size for a V2 relation and assumes
     * `defaultSizeInBytes` (effectively infinite), so a small keyed
     * dimension would NEVER auto-broadcast in a join against a fact
@@ -811,35 +783,19 @@ private[store] class KeyedScan(meta: TableMeta, dataDir: String,
     val spark = SparkSession.active
     val factor = spark.conf
       .get("spark.sql.sources.fileCompressionFactor", "1.0").toDouble
-    val bytes: Long = mf match {
-      case Some(m) => // lengths live in the snapshot: zero fs calls
-        m.files.iterator.collect {
-          case (b, fls) if keptBuckets.forall(_.contains(b)) =>
-            fls.map(_.len).sum
-        }.sum
-      case None =>
-        val root = new Path(dataDir)
-        val fsys = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fsys.exists(root)) 0L
-        else fsys.listStatus(root).filter(_.isDirectory).flatMap { d =>
-          val b = d.getPath.getName.stripPrefix(s"${KeyedTable.BucketCol}=")
-          val keep = keptBuckets.forall(s => b.toIntOption.exists(s.contains))
-          if (!keep) Nil
-          else fsys.listStatus(d.getPath)
-            .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-            .map(_.getLen).toSeq
-        }.sum
-    }
+    val bytes: Long = mf.files.iterator.collect {
+      case (b, fls) if keptBuckets.forall(_.contains(b)) => fls.map(_.len).sum
+    }.sum
     val scaled = math.max(1L, (bytes * factor).toLong)
     // row counts ride in the manifest (recorded at commit time), so the
-    // estimate costs nothing; files missing counts (legacy/adopted)
-    // decline rather than under-report. Delete-vector positions
-    // subtract — each tombstones exactly one live row.
-    val rowsOpt: Option[Long] = mf.flatMap { m =>
-      val kept = m.files.toSeq.collect {
+    // estimate costs nothing; files missing counts (a footer read that
+    // failed at commit) decline rather than under-report. Delete-vector
+    // positions subtract — each tombstones exactly one live row.
+    val rowsOpt: Option[Long] = {
+      val kept = mf.files.toSeq.collect {
         case (b, fls) if keptBuckets.forall(_.contains(b)) => fls
       }.flatten
-      val dead = m.dvs.toSeq.collect {
+      val dead = mf.dvs.toSeq.collect {
         case (b, fls) if keptBuckets.forall(_.contains(b)) => fls
       }.flatten
       if (kept.nonEmpty && kept.forall(_.rows.isDefined) &&
@@ -897,53 +853,36 @@ private[store] object FooterAgg {
   }
 
   def compute(agg: Aggregation, meta: TableMeta, dataDir: String,
-              mf: Option[Manifest] = None): Option[(StructType, InternalRow, String)] =
+              mf: Manifest): Option[(StructType, InternalRow, String)] =
     try {
       // defense in depth (the builder already declines): footer counts
       // and extrema are pre-delete-vector values
-      if (mf.exists(_.dvs.nonEmpty)) return None
+      if (mf.dvs.nonEmpty) return None
       // COUNT(*)-only aggregations over a manifest whose every file
       // carries its row count are pure driver ARITHMETIC — zero footer
       // opens, zero filesystem calls: `SELECT count(*) FROM graft.t`
       // over a 100 TB table costs one manifest read
-      mf match {
-        case Some(m) if agg.aggregateExpressions.forall(_.isInstanceOf[CountStar]) =>
-          val fls = m.files.valuesIterator.flatten.toSeq
-          if (fls.forall(_.rows.isDefined)) {
-            val total = fls.flatMap(_.rows).sum
-            val out = agg.aggregateExpressions.map { _ =>
-              (StructField("count(*)", LongType, nullable = false),
-                java.lang.Long.valueOf(total): Any)
-            }
-            return Some((StructType(out.map(_._1)),
-              new GenericInternalRow(out.map(_._2).toArray),
-              s"$dataDir [count(*)] (manifest row counts, zero IO)"))
+      if (agg.aggregateExpressions.forall(_.isInstanceOf[CountStar])) {
+        val fls = mf.files.valuesIterator.flatten.toSeq
+        if (fls.forall(_.rows.isDefined)) {
+          val total = fls.flatMap(_.rows).sum
+          val out = agg.aggregateExpressions.map { _ =>
+            (StructField("count(*)", LongType, nullable = false),
+              java.lang.Long.valueOf(total): Any)
           }
-        case _ => ()
+          return Some((StructType(out.map(_._1)),
+            new GenericInternalRow(out.map(_._2).toArray),
+            s"$dataDir [count(*)] (manifest row counts, zero IO)"))
+        }
       }
       val conf = SparkSession.active.sparkContext.hadoopConfiguration
-      // LIVE files only: the current snapshot's list when a manifest
-      // exists (superseded files awaiting vacuum must not be counted),
-      // else the legacy directory walk
-      val files: Seq[org.apache.parquet.hadoop.util.HadoopInputFile] = mf match {
-        case Some(m) =>
-          m.files.toSeq.sortBy(_._1).flatMap { case (b, fls) =>
-            fls.map(mfF => org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              new Path(dataDir, s"${KeyedTable.BucketCol}=$b/${mfF.name}"), conf))
-          }
-        case None =>
-          val root = new Path(dataDir)
-          val fs = root.getFileSystem(conf)
-          val statuses =
-            if (!fs.exists(root)) Array.empty[org.apache.hadoop.fs.FileStatus]
-            else fs.listStatus(root)
-              .filter(st => st.isDirectory &&
-                st.getPath.getName.startsWith(s"${KeyedTable.BucketCol}="))
-              .flatMap(d => fs.listStatus(d.getPath))
-              .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-          statuses.toSeq.map(st =>
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-      }
+      // LIVE files only: the snapshot's list (superseded files
+      // awaiting vacuum must not be counted)
+      val files: Seq[org.apache.parquet.hadoop.util.HadoopInputFile] =
+        mf.files.toSeq.sortBy(_._1).flatMap { case (b, fls) =>
+          fls.map(mfF => org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new Path(dataDir, s"${KeyedTable.BucketCol}=$b/${mfF.name}"), conf))
+        }
       val needCols: Set[String] = agg.aggregateExpressions.toSet.flatMap {
         (f: org.apache.spark.sql.connector.expressions.aggregate.AggregateFunc) => f match {
           case c: Count => colOf(c.column)

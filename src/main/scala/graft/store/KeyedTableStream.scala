@@ -131,14 +131,13 @@ private[store] class KeyedMicroBatchStream(
   @volatile private var availableNowCap: Option[Long] = None
 
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap =
-      Some(Manifest.current(spark, tableDir).map(_.version).getOrElse(-1L))
+    availableNowCap = Some(Manifest.current(spark, tableDir).version)
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = start.asInstanceOf[KeyedVersionOffset].version
-    val live = Manifest.current(spark, tableDir).map(_.version).getOrElse(-1L)
+    val live = Manifest.current(spark, tableDir).version
     val capped = (availableNowCap.toSeq ++ endingVersion.toSeq)
       .foldLeft(live)(math.min)
     val vCap =
@@ -186,14 +185,13 @@ private[store] class KeyedMicroBatchStream(
   }
 
   override def reportLatestOffset(): Offset =
-    KeyedVersionOffset(
-      Manifest.current(spark, tableDir).map(_.version).getOrElse(-1L))
+    KeyedVersionOffset(Manifest.current(spark, tableDir).version)
 
   override def initialOffset(): Offset = {
     val v = sinceVersion match {
       case None => -1L
       case Some(s) if s.equalsIgnoreCase("latest") =>
-        Manifest.current(spark, tableDir).map(_.version).getOrElse(-1L)
+        Manifest.current(spark, tableDir).version
       case Some(s) => s.toLongOption.getOrElse(throw new StoreException(
         s"bad sinceVersion '$s': a version number or 'latest'"))
     }

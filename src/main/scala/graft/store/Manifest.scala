@@ -36,8 +36,8 @@ final case class ColStats(min: Any, max: Any)
   *   What min/max cannot express: a pushed `IS NULL` skips files whose
   *   count is 0, a pushed `IS NOT NULL` skips files that are ALL null
   *   (which also have NO min/max entry, so range bounds alone could
-  *   never prune them). Absent entries (legacy files, unset parquet
-  *   null counts) are never pruned on. */
+  *   never prune them). Absent entries (unset parquet null counts) are
+  *   never pruned on. */
 final case class ManifestFile(name: String, len: Long,
                               rows: Option[Long] = None,
                               stats: Option[ColStats] = None,
@@ -87,9 +87,8 @@ final case class ManifestFile(name: String, len: Long,
   *    snapshots are undisturbed). Old manifests double as time-travel
   *    snapshots until vacuumed ([[KeyedTable.readSql]] `asOfVersion`).
   *
-  * Tables written before manifests existed have none; every read/write
-  * path falls back to directory listing for them, and their first
-  * mutation adopts the listing as the version-0 baseline.
+  * Create commits version 0, so every table has a manifest; a table
+  * dir without one fails [[Manifest.current]] loudly.
   */
 /** `dvs` — DELETE VECTORS (merge-on-read): per bucket, the positional
   * tombstone sidecar files a MoR delete committed instead of rewriting
@@ -587,8 +586,19 @@ object Manifest {
     v
   }
 
-  /** Latest committed snapshot, or None for a pre-manifest table. */
-  def current(spark: SparkSession, tableDir: String): Option[Manifest] =
+  /** Latest committed snapshot. Every table commits version 0 at
+    * create, so a table dir with no version is damaged (its
+    * `_manifests/` was removed): StoreException naming the dir. */
+  def current(spark: SparkSession, tableDir: String): Manifest =
+    latest(spark, tableDir).getOrElse(throw new StoreException(
+      s"table at $tableDir has no manifest snapshot (no version under " +
+      s"${dir(tableDir)}); the table cannot be read or written"))
+
+  /** Latest committed snapshot, None before the first commit lands —
+    * only [[KeyedTable.vacuum]] needs that state: it reaps the debris
+    * of a first commit that failed. */
+  private[store] def latest(spark: SparkSession,
+                            tableDir: String): Option[Manifest] =
     versions(spark, tableDir).lastOption.map(read(spark, tableDir, _))
 
   /** Every surviving snapshot, ascending — ONE directory listing for

@@ -20,11 +20,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * with no executor tasks).
   *
   *  - `t$history`: one row per unexpired snapshot —
-  *    (version, buckets, n_files, n_rows, bytes); n_rows NULL when an
-  *    adopted legacy file lacks a recorded count.
+  *    (version, buckets, n_files, n_rows, bytes); n_rows NULL when a
+  *    file's footer could not be read at commit (no recorded count).
   *  - `t$tags`: (tag, version) pins ([[Tags]]).
   *  - `t$files`: the CURRENT snapshot's live files —
-  *    (bucket, file, bytes, rows); empty for pre-manifest tables.
+  *    (bucket, file, bytes, rows).
   *  - `t$checks`: registered CHECK constraints — (name, predicate).
   *  - `t$streams`: the streaming-sink epoch ledger — one
   *    (query_id, epoch_id) high-water mark per sink query that ever
@@ -134,14 +134,13 @@ private[store] object MetaTables {
           UTF8String.fromString(t), v)): InternalRow
       }.toArray
     case "files" =>
-      Manifest.current(spark, tableDir).toSeq.flatMap { m =>
-        m.files.toSeq.sortBy(_._1).flatMap { case (b, fls) =>
+      Manifest.current(spark, tableDir).files.toSeq.sortBy(_._1).flatMap {
+        case (b, fls) =>
           fls.sortBy(_.name).map { f =>
             new GenericInternalRow(Array[Any](
               b, UTF8String.fromString(f.name), f.len,
               f.rows.map(Long.box).orNull)): InternalRow
           }
-        }
       }.toArray
     case "checks" =>
       TableMeta.read(spark, tableDir).checks.toSeq.sortBy(_._1).map {
@@ -154,15 +153,13 @@ private[store] object MetaTables {
           new GenericInternalRow(Array[Any](
             UTF8String.fromString(name),
             Branches.forkVersionOf(spark, brDir),
-            Manifest.current(spark, brDir)
-              .map(_.version).getOrElse(-1L))): InternalRow
+            Manifest.current(spark, brDir).version)): InternalRow
       }.toArray
     case "streams" =>
-      Manifest.current(spark, tableDir).toSeq.flatMap { m =>
-        m.streams.toSeq.sortBy(_._1).map { case (q, e) =>
+      Manifest.current(spark, tableDir).streams.toSeq.sortBy(_._1).map {
+        case (q, e) =>
           new GenericInternalRow(Array[Any](
             UTF8String.fromString(q), e)): InternalRow
-        }
       }.toArray
     case "changelog" =>
       KeyedTable.changelogBatchStats(spark, tableDir).map {

@@ -28,10 +28,14 @@ object PkJoin {
 
   def pkJoin(spark: SparkSession, warehouse: String,
              leftTable: String, rightTable: String): DataFrame = {
-    val lm = TableMeta.read(spark, KeyedTable.tableDir(warehouse, leftTable))
-    val rm = TableMeta.read(spark, KeyedTable.tableDir(warehouse, rightTable))
-    require(lm.buckets == rm.buckets,
-      s"bucket counts differ: ${lm.buckets} vs ${rm.buckets} — co-partitioned join needs equal clustering")
+    val lDir = KeyedTable.tableDir(warehouse, leftTable)
+    val rDir = KeyedTable.tableDir(warehouse, rightTable)
+    val lm = TableMeta.read(spark, lDir)
+    val rm = TableMeta.read(spark, rDir)
+    val lb = Manifest.current(spark, lDir).buckets
+    val rb = Manifest.current(spark, rDir).buckets
+    require(lb == rb,
+      s"bucket counts differ: $lb vs $rb — co-partitioned join needs equal clustering")
     require(lm.pk.length == rm.pk.length,
       s"composite PK arity differs: ${lm.pk} vs ${rm.pk}")
     val lTypes = lm.pk.map(c => lm.schema(c).dataType)

@@ -1,8 +1,6 @@
 package graft.store
 
-import java.util.UUID
-
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.json4s._
@@ -17,8 +15,12 @@ import org.json4s.jackson.JsonMethods.{compact, render}
   * (the Spark-native replacement for the reference's ALTER TABLE,
   * /root/reference/pandabase/sql.py:509).
   *
+  * The bucket count is not here: the manifest snapshot owns it
+  * ([[Manifest.buckets]]), so a rebucket switches it in the same flip as
+  * the file set. A `buckets` key in a meta file written by an older
+  * version is ignored.
+  *
   * @param pk       primary-key column names (the reference's index / MultiIndex)
-  * @param buckets  hash-bucket count for the `pb_bucket` partition layout
   * @param autoIndex true when the PK is the synthetic Names.AutoIndex column
   * @param schema   logical schema (PK columns first), JSON-serialized Spark StructType
   * @param maxAutoIndex high-water mark of assigned auto-index ids, so an
@@ -76,7 +78,6 @@ import org.json4s.jackson.JsonMethods.{compact, render}
   *   working because the bytes' names never moved. */
 final case class TableMeta(
     pk: Seq[String],
-    buckets: Int,
     autoIndex: Boolean,
     schema: StructType,
     maxAutoIndex: Option[Long] = None,
@@ -98,7 +99,6 @@ final case class TableMeta(
 
   def toJson: String = compact(render(JObject(
     "pk" -> JArray(pk.map(JString(_)).toList) ::
-    "buckets" -> JInt(buckets) ::
     "autoIndex" -> JBool(autoIndex) ::
     "schema" -> JString(schema.json) ::
     (maxAutoIndex.map(m => List("maxAutoIndex" -> (JInt(m): JValue))).getOrElse(Nil) ++
@@ -136,7 +136,6 @@ object TableMeta {
   def fromJson(s: String): TableMeta = {
     val j = JsonMethods.parse(s)
     val JArray(pks) = (j \ "pk"): @unchecked
-    val JInt(buckets) = (j \ "buckets"): @unchecked
     val JBool(auto) = (j \ "autoIndex"): @unchecked
     val JString(schemaJson) = (j \ "schema"): @unchecked
     val maxIdx = (j \ "maxAutoIndex") match {
@@ -168,100 +167,23 @@ object TableMeta {
       case _ => Map.empty[String, String]
     }
     TableMeta(
-      pks.map { case JString(x) => x; case o => o.toString },
-      buckets.toInt, auto,
+      pks.map { case JString(x) => x; case o => o.toString }, auto,
       DataType.fromJson(schemaJson).asInstanceOf[StructType],
       maxIdx, cl, sc, dr, ck, od, rn)
   }
 
   def path(tableDir: String): Path = new Path(tableDir, FileName)
 
-  /** ATOMIC publish of the meta file — the staged-publish discipline
-    * every other store mutation already follows, applied to the ONE
-    * file that is rewritten in place across its life. A truncating
-    * `fs.create(p, overwrite = true)` here would hand lock-free meta
-    * readers a torn/empty file on progressive-visibility filesystems
-    * (file/HDFS) and would let a crash between truncate and write lose
-    * the table's schema/PK/renames durably. Instead the new body is
-    * COMPLETE before it becomes visible:
-    *
-    *  - object stores: `create(p, overwrite = true)` IS the atomic
-    *    replace — the PUT at close is all-or-nothing and readers see
-    *    old-object-or-new, never bytes in flight;
-    *  - `file`: body to a `.tmp-meta-*` sibling, then a kernel-atomic
-    *    `Files.move(ATOMIC_MOVE)` replace (a reader holding the old
-    *    inode finishes its read untouched); any stale Hadoop `.crc`
-    *    sibling from a pre-atomic-write binary is removed so
-    *    checksummed `fs.open` readers never fail validation;
-    *  - HDFS-like: body to a tmp sibling via the FileSystem, then
-    *    `rename` (replace-capable connectors succeed atomically) or the
-    *    FileContext OVERWRITE rename (namenode-atomic) when the plain
-    *    rename refuses an existing target.
-    *
-    * When NO atomic replace can be performed (rename failed and the
-    * scheme has no FileContext binding), the write FAILS LOUDLY with
-    * the previous meta intact — losing an edit beats destroying the
-    * table's schema. Crash debris is a root `.tmp-*` sibling, reaped by
-    * vacuum past the age bound like every other staged temp. */
+  /** ATOMIC publish of the meta file ([[SmallFile.replace]]): lock-free
+    * meta readers see the old or the new meta in full, never a torn
+    * one, and a failed publish leaves the previous meta intact. */
   def write(spark: SparkSession, tableDir: String, meta: TableMeta): Unit = {
     val p = path(tableDir)
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = p.getFileSystem(conf)
-    val body = meta.toJson.getBytes("UTF-8")
-    CommitArbiter.schemeOf(fs) match {
-      case s if CommitArbiter.NonAtomicSchemes.contains(s) =>
-        val out = fs.create(p, true)
-        try out.write(body) finally out.close()
-      case "file" =>
-        val target = new java.io.File(p.toUri.getPath)
-        Option(target.getParentFile).foreach(_.mkdirs())
-        val tmp = new java.io.File(target.getParentFile,
-          s".tmp-meta-${java.util.UUID.randomUUID()}")
-        try {
-          val out = new java.io.FileOutputStream(tmp)
-          try { out.write(body); out.getFD.sync() } finally out.close()
-          java.nio.file.Files.move(tmp.toPath, target.toPath,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          // raw write bypasses Hadoop's checksum layer; a stale `.crc`
-          // from an fs.create-written ancestor would fail fs.open reads
-          new java.io.File(target.getParentFile, s".${target.getName}.crc")
-            .delete(): Unit
-        } finally { tmp.delete(); () }
-      case scheme =>
-        val tmp = new Path(p.getParent, s".tmp-meta-${UUID.randomUUID()}")
-        val out = fs.create(tmp, false)
-        try {
-          try out.write(body) finally out.close()
-          val renamed = fs.rename(tmp, p)
-          if (!renamed) {
-            if (!fs.exists(p))
-              throw new StoreException(
-                s"metadata publish rename $tmp -> $p failed with no " +
-                "existing target (filesystem error); table metadata " +
-                "unchanged")
-            // HDFS semantics: rename refuses an existing target — the
-            // FileContext API exposes the namenode's atomic
-            // rename-with-overwrite
-            try {
-              val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-                p.toUri, conf)
-              fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-            } catch {
-              case scala.util.control.NonFatal(e) => throw new StoreException(
-                s"cannot atomically replace table metadata at $p on scheme " +
-                s"'$scheme' (plain rename refused an existing target and " +
-                s"the FileContext overwrite-rename failed: $e); the " +
-                "PREVIOUS metadata is intact — this store never " +
-                "truncate-rewrites the meta file")
-            }
-          }
-        } finally {
-          try { if (fs.exists(tmp)) fs.delete(tmp, false): Unit }
-          catch { case _: Exception => () }
-        }
-    }
-    cache.put(p.toString, (fs.getFileStatus(p).getModificationTime, meta))
+    SmallFile.replace(conf, p, meta.toJson.getBytes("UTF-8"), "meta",
+      "metadata")
+    cache.put(p.toString,
+      (p.getFileSystem(conf).getFileStatus(p).getModificationTime, meta))
   }
 
   def read(spark: SparkSession, tableDir: String): TableMeta = {
@@ -270,19 +192,7 @@ object TableMeta {
     val mtime = fs.getFileStatus(p).getModificationTime
     val hit = cache.get(p.toString)
     if (hit != null && hit._1 == mtime) return hit._2
-    // read-to-EOF of ONE opened stream: with [[write]]'s atomic replace
-    // the open resolves either the old or the new meta in full; sizing
-    // the buffer from a SECOND getFileStatus (the old shape) could pair
-    // a replaced length with the originally-opened content and parse a
-    // truncated prefix
-    val in = fs.open(p)
-    val meta = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      fromJson(buf.toString("UTF-8"))
-    } finally in.close()
+    val meta = fromJson(SmallFile.readUtf8(fs, p))
     cache.put(p.toString, (mtime, meta))
     meta
   }

@@ -1,7 +1,5 @@
 package graft.store
 
-import java.util.UUID
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.json4s._
@@ -20,8 +18,9 @@ import org.json4s.jackson.JsonMethods.{compact, render}
   *
   * Concurrency: the file is read-modify-write, so tag/dropTag run under
   * the table's write lock (callers in [[KeyedTable]] take it); the
-  * publish itself is write-temp-then-rename, so lock-free READERS of
-  * `_tags.json` always see a complete JSON document, never a torn one.
+  * publish itself is an atomic replace ([[SmallFile.replace]]), so
+  * lock-free READERS of `_tags.json` always see a complete JSON
+  * document, never a torn or missing one.
   */
 private[store] object Tags {
   val FileName = "_tags.json"
@@ -36,13 +35,7 @@ private[store] object Tags {
     val f = fsOf(spark, tableDir)
     val p = pathOf(tableDir)
     if (!f.exists(p)) return Map.empty
-    val in = f.open(p)
-    val s = try {
-      val bytes = new Array[Byte](f.getFileStatus(p).getLen.toInt)
-      in.readFully(bytes)
-      new String(bytes, "UTF-8")
-    } finally in.close()
-    JsonMethods.parse(s) match {
+    JsonMethods.parse(SmallFile.readUtf8(f, p)) match {
       case JObject(fields) => fields.map {
         case (n, JInt(v)) => n -> v.toLong
         case (n, o) => throw new StoreException(s"bad tag entry $n: $o")
@@ -51,29 +44,15 @@ private[store] object Tags {
     }
   }
 
-  /** Overwrite the tag map (caller holds the write lock). Publishes via
-    * temp + rename so concurrent readers never see a torn file. */
+  /** Overwrite the tag map (caller holds the write lock). A failed
+    * publish throws with the previous tags intact. */
   def write(spark: SparkSession, tableDir: String,
             tags: Map[String, Long]): Unit = {
-    val f = fsOf(spark, tableDir)
     val p = pathOf(tableDir)
-    if (tags.isEmpty) { f.delete(p, false); return }
+    if (tags.isEmpty) { fsOf(spark, tableDir).delete(p, false); return }
     val json = compact(render(JObject(
       tags.toList.sortBy(_._1).map { case (n, v) => n -> (JInt(v): JValue) })))
-    val tmp = new Path(tableDir, s".tmp-tags-${UUID.randomUUID()}")
-    val out = f.create(tmp, false)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-    if (!f.rename(tmp, p)) {
-      // target existed (rename-over is non-posix on some Hadoop FS):
-      // delete-then-rename is safe HERE because the caller holds the
-      // write lock (no competing tag writer) and readers tolerate a
-      // brief absence (missing file = no tags = resolution error, not
-      // corruption)
-      f.delete(p, false)
-      if (!f.rename(tmp, p)) {
-        f.delete(tmp, false)
-        throw new StoreException(s"could not publish tags file $p")
-      }
-    }
+    SmallFile.replace(spark.sparkContext.hadoopConfiguration, p,
+      json.getBytes("UTF-8"), "tags", "tags")
   }
 }

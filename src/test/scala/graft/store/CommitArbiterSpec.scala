@@ -284,7 +284,7 @@ class CommitArbiterSpec extends SparkSpec {
       val got = KeyedTable.readSql(spark, wh, t)
         .select("id").as[Long].collect().sorted.toSeq
       assert(got == Seq(1L, 2L, 10L, 11L, 20L, 21L))
-      assert(Manifest.current(spark, s"$wh/$t").get.version == 2L)
+      assert(Manifest.current(spark, s"$wh/$t").version == 2L)
     }
   }
 }

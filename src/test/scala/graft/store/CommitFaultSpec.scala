@@ -42,7 +42,7 @@ class CommitFaultSpec extends SparkSpec {
   }
 
   private def version(table: String): Long =
-    Manifest.current(spark, s"$wh/$table").get.version
+    Manifest.current(spark, s"$wh/$table").version
 
   test("upsert: staged-file move fails -> snapshot unchanged, no row lost") {
     val t = freshTable("t_move_fail")
@@ -228,5 +228,78 @@ class CommitFaultSpec extends SparkSpec {
     }
     assert(f.getFileStatus(metaPath).getLen == bytesBefore)
     assert(!TableMeta.read(spark, dir).changelog)
+  }
+
+  /** Arms the publish rename of the small file at `target` (tmp sibling
+    * `.tmp-<kind>-*` -> target), runs `edit`, and checks the atomic
+    * replace contract: the edit throws, the old file is byte-intact,
+    * and no tmp sibling is left behind. */
+  private def failedPublishLeavesOldFile(target: org.apache.hadoop.fs.Path,
+                                         kind: String)(edit: => Any): Unit = {
+    val f = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def bytes(): Seq[Byte] = {
+      val in = f.open(target)
+      try in.readAllBytes().toSeq finally in.close()
+    }
+    val before = bytes()
+    val e = intercept[StoreException] {
+      FaultyFileSystem.armed(s".tmp-$kind-", target.getName)(edit)
+    }
+    assert(e.getMessage.contains("is intact"), e.getMessage)
+    assert(bytes() == before, s"$target changed by a failed publish")
+    assert(!f.listStatus(target.getParent)
+      .exists(_.getPath.getName.startsWith(s".tmp-$kind-")))
+  }
+
+  test("changelog floor publish fails -> old floor intact, nothing reaped") {
+    import org.apache.hadoop.fs.Path
+    val t = freshTable("t_floor_fail")
+    KeyedTable.setChangelog(spark, wh, t, enabled = true)
+    (7L to 10L).foreach { i =>
+      KeyedTable.toSql(df((i, "n", i * 1.0)), wh, t,
+        pk = Seq("id"), how = WriteMode.Append)   // batches 0..3
+    }
+    assert(KeyedTable.expireChangelog(spark, wh, t, beforeBatch = Some(1L)) == 1)
+    val floor = new Path(s"$wh/$t/${KeyedTable.ChangelogDir}/_floor.json")
+    failedPublishLeavesOldFile(floor, "floor") {
+      KeyedTable.expireChangelog(spark, wh, t, beforeBatch = Some(3L))
+    }
+    assert(KeyedTable.changelogFloor(spark, wh, t) == 1L)
+    // the floor write precedes every delete: batches 1..3 all survive
+    assert(KeyedTable.readChangelog(spark, wh, t, sinceBatch = 1)
+      .selectExpr("cast(batch as long)").distinct().count() == 3L)
+    assert(KeyedTable.expireChangelog(spark, wh, t, beforeBatch = Some(3L)) == 2)
+    assert(KeyedTable.changelogFloor(spark, wh, t) == 3L)
+  }
+
+  test("branch fork record publish fails -> old record intact and readable") {
+    import org.apache.hadoop.fs.Path
+    val t = freshTable("t_ffrec_fail")
+    val fork = Branches.create(spark, wh, t, "stage")
+    KeyedTable.toSql(df((7L, "g", 7.0)), wh, s"$t@stage",
+      pk = Seq("id"), how = WriteMode.Append)
+    val record = new Path(s"$wh/$t/${Branches.DirName}/stage/_fork")
+    // the fork record is rewritten last by a publish
+    failedPublishLeavesOldFile(record, "fork") {
+      Branches.fastForward(spark, wh, t, "stage")
+    }
+    assert(Branches.list(spark, wh, t).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq == Seq("stage" -> fork))
+  }
+
+  test("tags publish fails -> old tags intact, tagged snapshot still resolves") {
+    import org.apache.hadoop.fs.Path
+    val t = freshTable("t_tags_fail")
+    KeyedTable.tagSnapshot(spark, wh, t, "v0")
+    KeyedTable.toSql(df((7L, "g", 7.0)), wh, t,
+      pk = Seq("id"), how = WriteMode.Append)
+    failedPublishLeavesOldFile(new Path(s"$wh/$t/${Tags.FileName}"), "tags") {
+      KeyedTable.tagSnapshot(spark, wh, t, "v1")
+    }
+    assert(Tags.read(spark, s"$wh/$t") == Map("v0" -> 0L))
+    assert(KeyedTable.readSql(spark, wh, t, asOfTag = Some("v0")).count() ==
+      base.size.toLong)
+    KeyedTable.tagSnapshot(spark, wh, t, "v1")
+    assert(Tags.read(spark, s"$wh/$t") == Map("v0" -> 0L, "v1" -> 1L))
   }
 }

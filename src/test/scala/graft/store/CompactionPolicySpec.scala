@@ -29,10 +29,10 @@ class CompactionPolicySpec extends SparkSpec {
       w, "t", pk = Seq("k"), buckets = 4)
     // drive SOME buckets past the file threshold with appends that land
     // in a subset of buckets only (keys chosen per their hash bucket)
-    val meta = TableMeta.read(spark, s"$w/t")
+    val buckets = Manifest.current(spark, s"$w/t").buckets
     def bucketOf(k: Long): Int = {
       val row = Seq(Tuple1(k)).toDF("k")
-        .select(pmod(xxhash64(col("k")), lit(meta.buckets)).cast("int"))
+        .select(pmod(xxhash64(col("k")), lit(buckets)).cast("int"))
         .head()
       row.getInt(0)
     }

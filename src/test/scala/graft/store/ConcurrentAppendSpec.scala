@@ -206,18 +206,4 @@ class ConcurrentAppendSpec extends SparkSpec {
       s"got $cl")
     noStagingLeft(t)
   }
-
-  test("legacy (pre-manifest) table falls back to the locked append and adopts") {
-    val t = "t_capp_legacy"
-    KeyedTable.toSql(df((1L, "a")), wh, t, pk = Seq("id"), buckets = 2)
-    // simulate a pre-manifest table: drop the manifest dir; readers fall
-    // back to directory listing, so this is a supported legacy state
-    val dir = KeyedTable.tableDir(wh, t)
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(Manifest.dir(dir), true)
-    assert(Manifest.current(spark, dir).isEmpty)
-    KeyedTable.appendConcurrent(df((2L, "b")), wh, t)
-    assert(ids(KeyedTable.readSql(spark, wh, t)) == Seq(1L, 2L))
-    assert(Manifest.current(spark, dir).nonEmpty, "fallback adopts a manifest")
-  }
 }

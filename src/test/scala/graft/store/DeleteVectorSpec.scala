@@ -24,7 +24,7 @@ class DeleteVectorSpec extends SparkSpec {
       w, t, pk = Seq("k"), buckets = buckets)
 
   private def manifest(w: String, t: String): Manifest =
-    Manifest.current(spark, KeyedTable.tableDir(w, t)).get
+    Manifest.current(spark, KeyedTable.tableDir(w, t))
 
   private def keysOf(df: DataFrame): Seq[Long] =
     df.select("k").collect().map(_.getLong(0)).sorted.toSeq

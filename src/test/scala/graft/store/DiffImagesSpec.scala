@@ -52,7 +52,7 @@ class DiffImagesSpec extends SparkSpec {
     val brDir = KeyedTable.tableDir(wh, ref)
     val brMeta = TableMeta.read(spark, brDir)
     val mFork = Manifest.at(spark, brDir, 0L)
-    val mHead = Manifest.current(spark, brDir).get
+    val mHead = Manifest.current(spark, brDir)
     val images = KeyedTable.diffImages(spark, wh, ref, brMeta, mFork, mHead)
     assertNoExchange(images, "the WAP publish image diff")
     val got = imageRows(images)
@@ -81,7 +81,7 @@ class DiffImagesSpec extends SparkSpec {
       .toDF("id", "g", "v"), wh, t, pk = Seq("id"), how = WriteMode.Upsert)
     val dir = KeyedTable.tableDir(wh, t)
     val meta = TableMeta.read(spark, dir)
-    val cur = Manifest.current(spark, dir).get
+    val cur = Manifest.current(spark, dir)
     val target = Manifest.at(spark, dir, 0L)
     val images = KeyedTable.diffImages(spark, wh, t, meta, cur, target)
     assertNoExchange(images, "the restore image diff")

@@ -22,10 +22,10 @@ class DropColumnSpec extends SparkSpec {
       (1L to 20L).map(i => (i, s"v$i", i * 1.0, s"extra$i"))
         .toDF("k", "v", "x", "junk"),
       w, "t", pk = Seq("k"))
-    val before = Manifest.current(spark, s"$w/t").get.version
+    val before = Manifest.current(spark, s"$w/t").version
     KeyedTable.dropColumns(spark, w, "t", Seq("junk"))
     // metadata-only: no new snapshot, no rewrite
-    assert(Manifest.current(spark, s"$w/t").get.version == before)
+    assert(Manifest.current(spark, s"$w/t").version == before)
     val out = KeyedTable.readSql(spark, w, "t")
     assert(out.columns.toSeq == Seq("k", "v", "x"))
     assert(out.count() == 20L)

@@ -25,7 +25,7 @@ class IdempotentAppendSpec extends SparkSpec {
       .map(_.getLong(0)).sorted.toSeq
 
   private def version(t: String): Long =
-    Manifest.current(spark, KeyedTable.tableDir(wh, t)).get.version
+    Manifest.current(spark, KeyedTable.tableDir(wh, t)).version
 
   test("a replayed txn append is a no-op: no new version, no duplicates, no error") {
     val t = "t_txn_replay"
@@ -53,7 +53,7 @@ class IdempotentAppendSpec extends SparkSpec {
     KeyedTable.toSql(df((4L, "d")), wh, t,
       how = WriteMode.Append, txn = Some(("job", 2L)))
     assert(ids(t) == Seq(1L, 2L, 3L, 4L))
-    assert(Manifest.current(spark, KeyedTable.tableDir(wh, t)).get
+    assert(Manifest.current(spark, KeyedTable.tableDir(wh, t))
       .streams == Map("job" -> 2L))
   }
 
@@ -62,7 +62,7 @@ class IdempotentAppendSpec extends SparkSpec {
     KeyedTable.toSql(df((1L, "a")), wh, t, pk = Seq("id"),
       how = WriteMode.Append, buckets = 2, txn = Some(("boot", 7L)))
     assert(ids(t) == Seq(1L))
-    assert(Manifest.current(spark, KeyedTable.tableDir(wh, t)).get
+    assert(Manifest.current(spark, KeyedTable.tableDir(wh, t))
       .streams == Map("boot" -> 7L))
     val v0 = version(t)
     KeyedTable.toSql(df((1L, "a")), wh, t, pk = Seq("id"),
@@ -133,7 +133,7 @@ class IdempotentAppendSpec extends SparkSpec {
     threads.foreach(_.start()); threads.foreach(_.join())
     // exactly one attempt's rows landed — never zero, never doubled
     assert(ids(t) == Seq(0L, 1L, 2L))
-    assert(Manifest.current(spark, KeyedTable.tableDir(wh, t)).get
+    assert(Manifest.current(spark, KeyedTable.tableDir(wh, t))
       .streams == Map("race" -> 1L))
   }
 

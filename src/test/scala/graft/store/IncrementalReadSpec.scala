@@ -44,12 +44,12 @@ class IncrementalReadSpec extends SparkSpec {
     val t = "t_incr_poll"
     KeyedTable.toSql(df((1L, "a")), wh, t, pk = Seq("id"), buckets = 2)
     var cursor = Manifest.current(spark,
-      KeyedTable.tableDir(wh, t)).get.version
+      KeyedTable.tableDir(wh, t)).version
     val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
     for (batch <- Seq(Seq(2L, 3L), Seq(4L), Seq(5L, 6L))) {
       KeyedTable.toSql(df(batch.map(i => (i, s"n$i")): _*), wh, t,
         pk = Seq("id"), how = WriteMode.Append)
-      val cur = Manifest.current(spark, KeyedTable.tableDir(wh, t)).get.version
+      val cur = Manifest.current(spark, KeyedTable.tableDir(wh, t)).version
       seen ++= ids(KeyedTable.readIncremental(spark, wh, t, cursor,
         toVersion = Some(cur)))
       cursor = cur

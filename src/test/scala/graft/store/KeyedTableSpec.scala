@@ -359,7 +359,7 @@ class KeyedTableSpec extends SparkSpec {
         w, "t", pk = Seq("id"), how = WriteMode.Append)
     }
     val dir = KeyedTable.tableDir(w, "t")
-    assert(Manifest.current(spark, dir).get.files.values.map(_.size).sum > 32)
+    assert(Manifest.current(spark, dir).files.values.map(_.size).sum > 32)
     val before = KeyedTable.readSql(spark, w, "t")
     def listing(jobs: Seq[org.apache.spark.JobCounter.JobRecord]) =
       jobs.filter(_.description.startsWith("Listing leaf files"))
@@ -653,7 +653,8 @@ class KeyedTableSpec extends SparkSpec {
     def frame(rs: Seq[(Long, String, Double, Boolean)]): DataFrame = rs.toDF("id", "name", "score", "flag")
     def bucketsOf(t: String, ids: Iterable[Long]): Set[Int] = {
       val meta = TableMeta.read(spark, KeyedTable.tableDir(w, t))
-      ids.map(i => KeyedTable.bucketOfKey(spark, meta, meta.buckets, Seq(i))).toSet
+      val buckets = Manifest.current(spark, KeyedTable.tableDir(w, t)).buckets
+      ids.map(i => KeyedTable.bucketOfKey(spark, meta, buckets, Seq(i))).toSet
     }
     def added(before: Map[Int, Seq[ManifestFile]],
               after: Map[Int, Seq[ManifestFile]]): Seq[(Int, String)] =
@@ -665,10 +666,12 @@ class KeyedTableSpec extends SparkSpec {
     // should stage data files / DV sidecars for
     def layout(verb: String, dataIn: Set[Int], dvIn: Set[Int] = Set.empty,
                sortedBy: Seq[String] = Seq("id"))(run: => Unit): Unit = {
+      val dir = KeyedTable.tableDir(w, "t")
       val none = Map.empty[Int, Seq[ManifestFile]]
-      val m0 = Manifest.current(spark, KeyedTable.tableDir(w, "t"))
+      // before create there is no table, hence no snapshot
+      val m0 = Option.when(TableMeta.exists(spark, dir))(Manifest.current(spark, dir))
       run
-      val m1 = Manifest.current(spark, KeyedTable.tableDir(w, "t")).get
+      val m1 = Manifest.current(spark, dir)
       check(verb, "t", added(m0.fold(none)(_.files), m1.files), dataIn, sortedBy)
       check(s"$verb (DV sidecars)", "t", added(m0.fold(none)(_.dvs), m1.dvs),
         dvIn, Seq("file", "pos"))
@@ -741,7 +744,7 @@ class KeyedTableSpec extends SparkSpec {
         mode = DeleteMode.MergeOnRead)
     }
     def crowded(minFiles: Int): Set[Int] =
-      Manifest.current(spark, KeyedTable.tableDir(w, "t")).get.files
+      Manifest.current(spark, KeyedTable.tableDir(w, "t")).files
         .filter(_._2.size >= minFiles).keySet
     layout("compact", crowded(3)) {
       KeyedTable.compact(spark, w, "t", minFiles = 3)
@@ -756,7 +759,7 @@ class KeyedTableSpec extends SparkSpec {
     // create's {0,1} → bool rewrite re-clusters the staged files
     val bits = (1 to 300).map(i => (i.toLong, i % 2)).toDF("id", "bit")
     KeyedTable.toSql(bits, w, "b", pk = Seq("id"))
-    val bFiles = Manifest.current(spark, KeyedTable.tableDir(w, "b")).get.files
+    val bFiles = Manifest.current(spark, KeyedTable.tableDir(w, "b")).files
     check("create (bool rewrite)", "b", added(Map.empty, bFiles), (0 until 32).toSet, Seq("id"))
     assert(KeyedTable.readSql(spark, w, "b").schema("bit").dataType ==
       org.apache.spark.sql.types.BooleanType)
@@ -768,16 +771,17 @@ class KeyedTableSpec extends SparkSpec {
     val cores = spark.sparkContext.defaultParallelism
     val w = wh()
     val dir = KeyedTable.tableDir(w, "t")
-    def files(): Map[Int, Seq[ManifestFile]] = Manifest.current(spark, dir).get.files
-    def dvs(): Map[Int, Seq[ManifestFile]] = Manifest.current(spark, dir).get.dvs
+    def files(): Map[Int, Seq[ManifestFile]] = Manifest.current(spark, dir).files
+    def dvs(): Map[Int, Seq[ManifestFile]] = Manifest.current(spark, dir).dvs
     KeyedTable.toSql(sample(3000), w, "t", pk = Seq("id"))
     val meta = TableMeta.read(spark, dir)
-    val total = Manifest.current(spark, dir).get.totalBytes
+    val buckets = Manifest.current(spark, dir).buckets
+    val total = Manifest.current(spark, dir).totalBytes
     // a delta over 16 buckets reads about half the table
     val keys = (5001L to 6000L).groupBy(i =>
-      KeyedTable.bucketOfKey(spark, meta, meta.buckets, Seq(i))).toSeq.sortBy(_._1)
+      KeyedTable.bucketOfKey(spark, meta, buckets, Seq(i))).toSeq.sortBy(_._1)
       .take(16).map(_._2.head)
-    val inPlay = keys.map(i => KeyedTable.bucketOfKey(spark, meta, meta.buckets, Seq(i))).toSet
+    val inPlay = keys.map(i => KeyedTable.bucketOfKey(spark, meta, buckets, Seq(i))).toSet
     assert(inPlay.size == 16 && cores < 16)
     try {
       // every write larger than 1 byte is large
@@ -786,11 +790,11 @@ class KeyedTableSpec extends SparkSpec {
       KeyedTable.toSql(sample(20).withColumn("id", col("id") + 3000L), w, "t",
         pk = Seq("id"), how = WriteMode.Upsert)
       val upIn = (3001L to 3020L)
-        .map(i => KeyedTable.bucketOfKey(spark, meta, meta.buckets, Seq(i))).toSet
+        .map(i => KeyedTable.bucketOfKey(spark, meta, buckets, Seq(i))).toSet
       checkLayout(w, "t", "large upsert", addedFiles(f0, files()), upIn, upIn.size, Seq("id"))
       KeyedTable.toSql(sample(300), w, "c", pk = Seq("id"))
       val c = addedFiles(Map.empty,
-        Manifest.current(spark, KeyedTable.tableDir(w, "c")).get.files)
+        Manifest.current(spark, KeyedTable.tableDir(w, "c")).files)
       checkLayout(w, "c", "large create", c, (0 until 32).toSet, 32, Seq("id"))
       // the delta write reads only its touched buckets: small against a
       // threshold of 3/4 of the table, while rebucketing the whole

@@ -93,7 +93,7 @@ class MaintenanceConcurrencySpec extends SparkSpec {
     assert(got.size == 40)
     // the zorder DID commit (as the latest rewrite op in the chain)
     val dir = KeyedTable.tableDir(wh, t)
-    assert(Manifest.current(spark, dir).get.op.contains("zorder"))
+    assert(Manifest.current(spark, dir).op.contains("zorder"))
   }
 
   test("compactIfNeeded commits through a disjoint ingest and " +
@@ -145,7 +145,7 @@ class MaintenanceConcurrencySpec extends SparkSpec {
     byBucket(quietB).foreach(k => assert(got(k) == -1.0))
     assert(got.size == 40 + 14)
     // the re-staged compact landed: the crowded bucket is one file now
-    val m = Manifest.current(spark, KeyedTable.tableDir(wh, t)).get
+    val m = Manifest.current(spark, KeyedTable.tableDir(wh, t))
     assert(m.files(crowdedB).size == 1,
       s"crowded bucket must end compacted, got ${m.files(crowdedB)}")
   }
@@ -161,8 +161,7 @@ class MaintenanceConcurrencySpec extends SparkSpec {
     }
     assert(entered == 2, "any commit in the window must force a re-stage")
     val dir = KeyedTable.tableDir(wh, t)
-    assert(Manifest.current(spark, dir).get.buckets == 8)
-    assert(TableMeta.read(spark, dir).buckets == 8)
+    assert(Manifest.current(spark, dir).buckets == 8)
     val got = KeyedTable.readSql(spark, wh, t).collect()
       .map(_.getAs[Long]("id")).sorted
     assert(got.toSeq == ((1L to 40L) :+ 1000L),
@@ -188,35 +187,9 @@ class MaintenanceConcurrencySpec extends SparkSpec {
     assert(e.getMessage.contains("gave up after"), e.getMessage)
     // every INGEST commit stands; the table layout is simply unchanged
     val dir = KeyedTable.tableDir(wh, t)
-    assert(Manifest.current(spark, dir).get.buckets == 4)
+    assert(Manifest.current(spark, dir).buckets == 4)
     val got = KeyedTable.readSql(spark, wh, t).collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[Double]("bal")).toMap
     hot.foreach(k => assert(got(k) == n * 1.0))
-  }
-
-  test("compact still works on a legacy (pre-manifest) table via the " +
-      "locked fallback") {
-    val t = "t_maint_legacy"
-    // additive commits only (appends never supersede a file), so the
-    // directory listing IS the live set once the manifests are gone
-    KeyedTable.toSql(df((1L to 20L).map(row): _*), wh, t,
-      pk = Seq("id"), buckets = 2)
-    (1 to 3).foreach { i =>
-      KeyedTable.toSql(
-        df((20L * i + 1 to 20L * (i + 1)).map(row): _*),
-        wh, t, how = WriteMode.Append)
-    }
-    // strip the manifests: the table becomes pre-manifest legacy
-    val dir = KeyedTable.tableDir(wh, t)
-    val f = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    f.delete(Manifest.dir(dir), true)
-    Manifest.invalidate(dir)
-    val n = KeyedTable.compact(spark, wh, t, minFiles = 2)
-    assert(n > 0)
-    val got = KeyedTable.readSql(spark, wh, t).collect()
-      .map(r => r.getAs[Long]("id") -> r.getAs[Double]("bal")).toMap
-    assert(got.size == 80)
-    (1L to 80L).foreach(k => assert(got(k) == k * 1.0))
   }
 }

@@ -50,7 +50,7 @@ class ManifestSegmentSpec extends SparkSpec {
       KeyedTable.toSql(df((1L to 80L).map(i => (i, s"n$i", i * 1.0)): _*),
         wh, t, pk = Seq("id"), buckets = 8)
       val dir = KeyedTable.tableDir(wh, t)
-      val v0 = Manifest.current(spark, dir).get
+      val v0 = Manifest.current(spark, dir)
       assert(v0.segs.nonEmpty, "threshold 1 must segment from creation")
       assert(v0.files.keySet == v0.segs.keySet)
       // upsert ONE bucket's keys: find a populated bucket via layout
@@ -62,7 +62,7 @@ class ManifestSegmentSpec extends SparkSpec {
       val before = segFiles(t)
       KeyedTable.toSql(df(byBucket(touched).map(k => (k, "UPD", 9.0)): _*),
         wh, t, how = WriteMode.Upsert)
-      val v1 = Manifest.current(spark, dir).get
+      val v1 = Manifest.current(spark, dir)
       assert(v1.version == v0.version + 1)
       // every untouched bucket's segment reference is IDENTICAL
       (v0.segs.keySet - touched).foreach { b =>
@@ -143,7 +143,7 @@ class ManifestSegmentSpec extends SparkSpec {
       KeyedTable.delete(spark, wh, t, col("id") === 7L,
         mode = DeleteMode.MergeOnRead) // v1: DV rides a segment
       val dir = KeyedTable.tableDir(wh, t)
-      val v1 = Manifest.current(spark, dir).get
+      val v1 = Manifest.current(spark, dir)
       assert(v1.dvs.nonEmpty, "the MoR delete must land as a DV")
       assert(v1.segs.nonEmpty)
       assert(KeyedTable.readSql(spark, wh, t).count() == 29)
@@ -181,7 +181,7 @@ class ManifestSegmentSpec extends SparkSpec {
       assert(real == predicted, s"dry=$predicted real=$real")
       val after = segFiles(t)
       val dir = KeyedTable.tableDir(wh, t)
-      val head = Manifest.current(spark, dir).get
+      val head = Manifest.current(spark, dir)
       assert(head.segs.values.toSet subsetOf after,
         "every referenced segment survives")
       assert(after == head.segs.values.toSet,
@@ -197,17 +197,17 @@ class ManifestSegmentSpec extends SparkSpec {
       KeyedTable.toSql(df((1L to 8L).map(i => (i, s"n$i", i * 1.0)): _*),
         wh, t, pk = Seq("id"), buckets = 2) // 2 files: inline
       val dir = KeyedTable.tableDir(wh, t)
-      assert(Manifest.current(spark, dir).get.segs.isEmpty)
+      assert(Manifest.current(spark, dir).segs.isEmpty)
       // additive appends push the entry count past the threshold
       (1 to 3).foreach { r =>
         KeyedTable.toSql(df((100L * r to 100L * r + 7)
           .map(i => (i, s"a$i", 1.0)): _*), wh, t, how = WriteMode.Append)
       }
-      val head = Manifest.current(spark, dir).get
+      val head = Manifest.current(spark, dir)
       assert(head.segs.nonEmpty, "past the threshold the chain segments")
       // and a tiny follow-up commit stays segmented (reuse needs it)
       KeyedTable.toSql(df((5000L, "z", 1.0)), wh, t, how = WriteMode.Append)
-      assert(Manifest.current(spark, dir).get.segs.nonEmpty)
+      assert(Manifest.current(spark, dir).segs.nonEmpty)
       assert(KeyedTable.readSql(spark, wh, t).count() == 8 + 24 + 1)
     }
   }

@@ -2,7 +2,7 @@ package graft.store
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 
 import graft.SparkSpec
 import graft.TempDirs
@@ -10,8 +10,7 @@ import graft.TempDirs
 /** Snapshot semantics of the manifest layer: lock-free readers racing
   * any mutation observe a complete snapshot (old or new, never a
   * partial table), old snapshots stay readable until vacuum expires
-  * them (time travel), and pre-manifest tables are adopted on first
-  * mutation. */
+  * them (time travel), and a table without a manifest fails loudly. */
 class ManifestSpec extends SparkSpec {
 
   private lazy val wh: String = TempDirs.tempDir("graft-manifest")
@@ -122,7 +121,7 @@ class ManifestSpec extends SparkSpec {
     val t2dir = s"$wh/t_vacuum_tmp_nofirst"
     f.mkdirs(new Path(t2dir))
     TableMeta.write(spark, t2dir,
-      TableMeta(Seq("id"), 2, autoIndex = false,
+      TableMeta(Seq("id"), autoIndex = false,
         KeyedTable.readSql(spark, wh, t).schema))
     val m2 = Manifest.dir(t2dir)
     f.mkdirs(m2)
@@ -158,22 +157,71 @@ class ManifestSpec extends SparkSpec {
       .filter(col("id") === 1L).head().getString(1) == "A")
   }
 
-  test("pre-manifest tables read via listing and adopt a manifest on first mutation") {
-    val t = "t_legacy"
+  test("a table without a manifest fails every entry point and commits nothing") {
+    val t = "t_no_manifest"
     KeyedTable.toSql(df(base: _*), wh, t, pk = Seq("id"), buckets = 2)
-    // simulate a table written before manifests existed
     val dir = s"$wh/$t"
     val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def dataFiles(): Set[String] =
+      f.listStatus(new Path(dir, "data")).filter(_.isDirectory)
+        .flatMap(d => f.listStatus(d.getPath).map(_.getPath.toString)).toSet
+    val filesBefore = dataFiles()
+    val metaBefore = TableMeta.read(spark, dir)
     f.delete(Manifest.dir(dir), true)
-    assert(Manifest.current(spark, dir).isEmpty)
-    assert(ids(KeyedTable.readSql(spark, wh, t)) == Seq(1L, 2L, 3L, 4L, 5L, 6L))
-    assert(ids(KeyedTableSource.read(spark, wh, t)) == Seq(1L, 2L, 3L, 4L, 5L, 6L))
-    // first mutation adopts the listing as the baseline → version 0
-    KeyedTable.toSql(df((7L, "g", 7.0)), wh, t, pk = Seq("id"),
-      how = WriteMode.Append)
-    assert(Manifest.current(spark, dir).map(_.version).contains(0L))
-    assert(ids(KeyedTable.readSql(spark, wh, t)) ==
-      Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L))
+    Manifest.invalidate(dir)
+    val cat = "graft_mspec_nomf"
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    // the StoreException itself, or the one a Spark layer wrapped
+    def storeError(what: String)(body: => Any): String = {
+      val e = intercept[Throwable](body)
+      Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case s: StoreException => s.getMessage }
+        .getOrElse(fail(s"$what failed without a StoreException: $e"))
+    }
+    val one = df((7L, "g", 7.0))
+    val messages = Seq(
+      "readSql" -> storeError("readSql")(
+        KeyedTable.readSql(spark, wh, t).collect()),
+      "KeyedTableSource.read" -> storeError("KeyedTableSource.read")(
+        KeyedTableSource.read(spark, wh, t).collect()),
+      "SQL SELECT" -> storeError("SQL SELECT")(
+        spark.sql(s"SELECT * FROM $cat.$t").collect()),
+      "toSql append" -> storeError("toSql append")(
+        KeyedTable.toSql(one, wh, t, pk = Seq("id"), how = WriteMode.Append)),
+      "appendConcurrent" -> storeError("appendConcurrent")(
+        KeyedTable.appendConcurrent(one, wh, t)),
+      "upsertConcurrent" -> storeError("upsertConcurrent")(
+        KeyedTable.upsertConcurrent(one, wh, t)),
+      "update" -> storeError("update")(
+        KeyedTable.update(spark, wh, t, col("id") === 1L,
+          Map("v" -> lit(0.0)))),
+      "compact" -> storeError("compact")(
+        KeyedTable.compact(spark, wh, t, minFiles = 1)),
+      "compactIfNeeded" -> storeError("compactIfNeeded")(
+        KeyedTable.compactIfNeeded(spark, wh, t, maxFilesPerBucket = 0)),
+      "zorderCompact" -> storeError("zorderCompact")(
+        KeyedTable.zorderCompact(spark, wh, t, Seq("id", "v"))),
+      "rebucket" -> storeError("rebucket")(
+        KeyedTable.rebucket(spark, wh, t, 4)),
+      "Branches.create" -> storeError("Branches.create")(
+        Branches.create(spark, wh, t, "b1")),
+      "restoreSnapshot" -> storeError("restoreSnapshot")(
+        KeyedTable.restoreSnapshot(spark, wh, t, version = Some(0L))))
+    val expected = messages.head._2
+    assert(expected.contains("has no manifest snapshot") &&
+      expected.contains(t), expected)
+    messages.foreach { case (what, m) =>
+      assert(m == expected, s"$what failed with a different error: $m")
+    }
+    // nothing committed: no manifest, no staging, no branch, the same
+    // data files and meta
+    assert(Manifest.versions(spark, dir).isEmpty)
+    assert(!f.listStatus(new Path(dir))
+      .exists(_.getPath.getName.startsWith(".staging-")))
+    assert(Branches.branchDirs(spark, dir).isEmpty)
+    assert(dataFiles() == filesBefore)
+    assert(TableMeta.read(spark, dir) == metaBefore)
   }
 
   test("SQL time travel: VERSION AS OF / TIMESTAMP AS OF resolve snapshots") {

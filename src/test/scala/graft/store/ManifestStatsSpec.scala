@@ -28,7 +28,7 @@ class ManifestStatsSpec extends SparkSpec {
 
   test("append commits record leading-PK stats; overlap math prunes files") {
     val t = build("t_stats")
-    val m = Manifest.current(spark, s"$wh/$t").get
+    val m = Manifest.current(spark, s"$wh/$t")
     val all = m.files.values.flatten.toSeq
     // every commit — create included — records rows and leading-PK
     // stats per file from one footer read
@@ -115,7 +115,7 @@ class ManifestStatsSpec extends SparkSpec {
 
   test("DSv2 scan file-skips on pushed leading-PK bounds") {
     val t = build("t_stats_v2")
-    val total = Manifest.current(spark, s"$wh/$t").get
+    val total = Manifest.current(spark, s"$wh/$t")
       .files.values.map(_.size).sum
     val df = KeyedTableSource.read(spark, wh, t).filter(col("id") >= 250L)
     val scans = df.queryExecution.executedPlan.collect {

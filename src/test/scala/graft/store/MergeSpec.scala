@@ -74,7 +74,7 @@ class MergeSpec extends SparkSpec {
     val (_, _, del) = KeyedTable.merge(feed, w, "t",
       deleteWhen = col("is_del"))
     assert(del == b0.size.toLong)
-    assert(Manifest.current(spark, s"$w/t").get.files.getOrElse(0, Nil).isEmpty,
+    assert(Manifest.current(spark, s"$w/t").files.getOrElse(0, Nil).isEmpty,
       "emptied bucket still referenced by the new snapshot")
     assert(KeyedTable.readSql(spark, w, "t").count() == 50L - b0.size)
   }

@@ -25,8 +25,8 @@ class MetaAtomicPublishSpec extends SparkSpec {
     StructField("a", StringType),
     StructField("b", DoubleType)))
 
-  private def metaA = TableMeta(Seq("id"), 4, autoIndex = false, schema)
-  private def metaB = TableMeta(Seq("id"), 4, autoIndex = false, schema,
+  private def metaA = TableMeta(Seq("id"), autoIndex = false, schema)
+  private def metaB = TableMeta(Seq("id"), autoIndex = false, schema,
     statsCols = Seq("a", "b"), checks = Map("b_pos" -> "b > 0"),
     renames = Map("bb" -> "b"))
 
@@ -100,7 +100,7 @@ class MetaAtomicPublishSpec extends SparkSpec {
   test("rename round-trips survive the atomic publish: full meta field " +
        "set (renames/checks/statsCols/dropped) re-reads exactly") {
     val dir = Files.createTempDirectory("graft-meta-fields").toString
-    val m = TableMeta(Seq("id"), 8, autoIndex = true, schema,
+    val m = TableMeta(Seq("id"), autoIndex = true, schema,
       maxAutoIndex = Some(41L), changelog = true,
       statsCols = Seq("b"), dropped = Seq("old_col"),
       checks = Map("c1" -> "b > 0"), optimisticDml = true,

@@ -53,7 +53,7 @@ class MetaTablesSpec extends SparkSpec {
       val files = spark.sql(s"SELECT bucket, rows FROM $cat.`$t" + "$files`")
       assert(files.collect().map(_.getLong(1)).sum == 3L)
       // the file count agrees with the manifest
-      val mf = Manifest.current(spark, wh + s"/$t").get
+      val mf = Manifest.current(spark, wh + s"/$t")
       assert(files.count() == mf.files.valuesIterator.map(_.size).sum)
       // registered CHECK constraints surface as (name, predicate) rows
       KeyedTable.addCheckConstraint(spark, wh, t, "v_pos", "v >= 0")
@@ -115,7 +115,7 @@ class MetaTablesSpec extends SparkSpec {
     val deleted = KeyedTable.delete(spark, wh, t, col("id") === 2L,
       mode = DeleteMode.MergeOnRead)
     assert(deleted == 1L)
-    val m = Manifest.current(spark, s"$wh/$t").get
+    val m = Manifest.current(spark, s"$wh/$t")
     assert(m.dvs.nonEmpty, "fixture must actually have delete vectors")
     withCat { cat =>
       val rows = spark.sql(

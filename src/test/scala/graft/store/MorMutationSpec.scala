@@ -25,7 +25,7 @@ class MorMutationSpec extends SparkSpec {
       w, t, pk = Seq("k"), buckets = buckets)
 
   private def manifest(w: String, t: String): Manifest =
-    Manifest.current(spark, KeyedTable.tableDir(w, t)).get
+    Manifest.current(spark, KeyedTable.tableDir(w, t))
 
   private def byKey(df: DataFrame): Map[Long, (String, Double)] =
     df.collect().map(r => r.getLong(0) -> ((r.getString(1), r.getDouble(2)))).toMap
@@ -143,20 +143,5 @@ class MorMutationSpec extends SparkSpec {
     KeyedTable.compact(spark, w, "t", minFiles = 1)
     assert(manifest(w, "t").dvs.isEmpty, "compaction must materialize DVs")
     assert(byKey(KeyedTable.readSql(spark, w, "t")) == want)
-  }
-
-  test("explicit MergeOnRead update on a pre-manifest table fails loudly") {
-    val w = wh(); mk(w, "t")
-    // simulate a legacy table: remove the manifest lineage
-    val dir = KeyedTable.tableDir(w, "t")
-    val f = new org.apache.hadoop.fs.Path(dir, Manifest.DirName)
-    val fs = f.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(f, true)
-    Manifest.invalidate(dir)
-    val e = intercept[StoreException] {
-      KeyedTable.update(spark, w, "t", col("k") === 1L,
-        Map("v" -> lit(0.0)), mode = DeleteMode.MergeOnRead)
-    }
-    assert(e.getMessage.contains("manifest"))
   }
 }

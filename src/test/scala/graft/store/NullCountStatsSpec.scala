@@ -69,7 +69,7 @@ class NullCountStatsSpec extends SparkSpec {
     KeyedTable.toSql(mixedSlice(301, 400), wh, t, pk = Seq("id"),
       how = WriteMode.Append)
 
-    val m = Manifest.current(spark, s"$wh/$t").get
+    val m = Manifest.current(spark, s"$wh/$t")
     val all = m.files.values.flatten.toSeq
     val counted = all.filter(_.nulls.contains("v"))
     assert(counted.nonEmpty, s"no file recorded null counts: $all")
@@ -112,13 +112,13 @@ class NullCountStatsSpec extends SparkSpec {
     KeyedTable.appendConcurrent(
       (51L to 100L).map(i => (i, None: Option[Double])).toDF("id", "v"),
       wh, t): Unit
-    val before = Manifest.current(spark, s"$wh/$t").get
+    val before = Manifest.current(spark, s"$wh/$t")
       .files.values.flatten.toSeq
     assert(before.exists(f => f.nulls.get("v").exists(n => n > 0L)),
       s"optimistic append recorded no null count: $before")
     assert(KeyedTable.compact(spark, wh, t, minFiles = 2) > 0,
       "compaction must actually rewrite the crowded buckets")
-    val after = Manifest.current(spark, s"$wh/$t").get
+    val after = Manifest.current(spark, s"$wh/$t")
       .files.values.flatten.toSeq
     // the rewrite's files re-record counts (create's rows joined in, so
     // the merged files are mixed: 0 < count < rows)

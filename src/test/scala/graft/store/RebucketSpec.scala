@@ -22,7 +22,7 @@ class RebucketSpec extends SparkSpec {
 
     KeyedTable.rebucket(spark, wh, "t", newBuckets = 16)
 
-    assert(TableMeta.read(spark, s"$wh/t").buckets == 16)
+    assert(Manifest.current(spark, s"$wh/t").buckets == 16)
     val back = KeyedTable.readSql(spark, wh, "t")
     assert(back.count() == 200)
     assert(back.select("id", "name", "v").exceptAll(df).isEmpty)
@@ -60,7 +60,7 @@ class RebucketSpec extends SparkSpec {
     val df = (1L to 50L).map(i => (i, i.toString)).toDF("id", "s")
     KeyedTable.toSql(df, wh, "t", pk = Seq("id"), how = WriteMode.CreateOnly, buckets = 4)
     KeyedTable.rebucket(spark, wh, "t", newBuckets = 4) // no-op
-    assert(TableMeta.read(spark, s"$wh/t").buckets == 4)
+    assert(Manifest.current(spark, s"$wh/t").buckets == 4)
 
     KeyedTable.rebucket(spark, wh, "t", newBuckets = 8)
     // upsert against the rebucketed table routes by the NEW hash

@@ -92,7 +92,7 @@ class RenameColumnSpec extends SparkSpec {
     val t = "t_rn_chain"
     KeyedTable.toSql(df((1L, "a", 1.5), (2L, "b", 2.5)), wh, t,
       pk = Seq("id"), buckets = 2)
-    val v0 = Manifest.current(spark, KeyedTable.tableDir(wh, t)).get.version
+    val v0 = Manifest.current(spark, KeyedTable.tableDir(wh, t)).version
     KeyedTable.renameColumn(spark, wh, t, "v", "score")
     KeyedTable.renameColumn(spark, wh, t, "score", "rating")
     val meta = TableMeta.read(spark, KeyedTable.tableDir(wh, t))
@@ -222,7 +222,7 @@ class RenameColumnSpec extends SparkSpec {
       .filter(col("score") >= 30.0).select("id")
       .as[Long].collect().sorted.toSeq
     assert(hit == Seq(30L, 31L))
-    val m = Manifest.current(spark, KeyedTable.tableDir(wh, t)).get
+    val m = Manifest.current(spark, KeyedTable.tableDir(wh, t))
     // stat entries for files written both before and after the rename
     // are keyed by the PHYSICAL name
     val extras = m.files.values.flatten.flatMap(_.extra.keys).toSet

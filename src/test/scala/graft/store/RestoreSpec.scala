@@ -98,8 +98,7 @@ class RestoreSpec extends SparkSpec {
     KeyedTable.rebucket(spark, wh, t, newBuckets = 8) // v1
     assert(KeyedTable.restoreSnapshot(spark, wh, t, version = Some(0L)) == 2L)
     assert(values(KeyedTable.readSql(spark, wh, t)) == base.toSet)
-    assert(Manifest.current(spark, wh + s"/$t").get.buckets == 2)
-    assert(TableMeta.read(spark, wh + s"/$t").buckets == 2)
+    assert(Manifest.current(spark, wh + s"/$t").buckets == 2)
     // the restored layout keeps working as a write target
     KeyedTable.toSql(df((6L, "f", 6.0)), wh, t,
       pk = Seq("id"), how = WriteMode.Append)

@@ -66,7 +66,7 @@ class SnapshotDiffPropertySpec extends SparkSpec {
           live = live.filterNot(k => k % m == r)
       }
     }
-    val head = Manifest.current(spark, KeyedTable.tableDir(wh, t)).get.version
+    val head = Manifest.current(spark, KeyedTable.tableDir(wh, t)).version
     assert(head >= mutations) // every mutation committed a version
     // every ordered version pair, including non-adjacent and (v, v)
     val pairs = for {

@@ -36,10 +36,10 @@ class SqlCreateTableSpec extends SparkSpec {
         CREATE TABLE $cat.t (k BIGINT, v DOUBLE, g STRING)
         TBLPROPERTIES ('primary_key'='k', 'buckets'='4')""")
       val meta = TableMeta.read(spark, KeyedTable.tableDir(w, "t"))
-      assert(meta.pk == Seq("k") && meta.buckets == 4)
+      assert(meta.pk == Seq("k"))
       // born with an (empty) version-0 snapshot — manifest-native
-      assert(Manifest.current(spark, KeyedTable.tableDir(w, "t"))
-        .exists(m => m.version == 0L && m.files.isEmpty))
+      val m = Manifest.current(spark, KeyedTable.tableDir(w, "t"))
+      assert(m.buckets == 4 && m.version == 0L && m.files.isEmpty)
       assert(spark.sql(s"SELECT * FROM $cat.t").count() == 0L)
       spark.sql(s"INSERT INTO $cat.t VALUES (1, 1.5, 'a', NULL), (2, 2.5, 'b', NULL)")
       assert(spark.sql(s"SELECT sum(v) FROM $cat.t").head().getDouble(0) == 4.0)
@@ -60,7 +60,7 @@ class SqlCreateTableSpec extends SparkSpec {
         AS SELECT k, v FROM $cat.src WHERE k % 2 = 0""")
       assert(KeyedTable.readSql(spark, w, "derived")
         .select("k").as[Long].collect().sorted.toSeq == Seq(2L, 4L, 6L, 8L, 10L))
-      assert(TableMeta.read(spark, KeyedTable.tableDir(w, "derived")).buckets == 2)
+      assert(Manifest.current(spark, KeyedTable.tableDir(w, "derived")).buckets == 2)
     }
   }
 

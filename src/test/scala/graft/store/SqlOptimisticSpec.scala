@@ -36,7 +36,7 @@ class SqlOptimisticSpec extends SparkSpec {
   }
 
   private def currentOp(t: String): Option[String] =
-    Manifest.current(spark, KeyedTable.tableDir(wh, t)).flatMap(_.op)
+    Manifest.current(spark, KeyedTable.tableDir(wh, t)).op
 
   test("SET/UNSET TBLPROPERTIES('commit_mode') routes every SQL DML " +
       "verb onto the optimistic twins and back") {

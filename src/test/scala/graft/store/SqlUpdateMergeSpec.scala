@@ -399,8 +399,8 @@ class SqlUpdateMergeSpec extends SparkSpec {
     val w = wh()
     KeyedTable.toSql(Seq((1L, "a", 1.0)).toDF("k", "g", "v"),
       w, "t", pk = Seq("k"))
-    val pinned = Manifest.current(spark,
-      KeyedTable.tableDir(w, "t")).map(_.version)
+    val pinned = Some(Manifest.current(spark,
+      KeyedTable.tableDir(w, "t")).version)
     // a commit lands between the (hypothetical) routing read and merge
     KeyedTable.toSql(Seq((2L, "b", 2.0)).toDF("k", "g", "v"),
       w, "t", pk = Seq("k"), how = WriteMode.Append)
@@ -413,8 +413,8 @@ class SqlUpdateMergeSpec extends SparkSpec {
     assert(KeyedTable.readSql(spark, w, "t")
       .filter(col("k") === 1L).head().getDouble(2) == 1.0)
     KeyedTable.merge(feed, w, "t", deleteWhen = col("is_del"),
-      expectedVersion = Manifest.current(spark,
-        KeyedTable.tableDir(w, "t")).map(_.version))
+      expectedVersion = Some(Manifest.current(spark,
+        KeyedTable.tableDir(w, "t")).version))
     assert(KeyedTable.readSql(spark, w, "t")
       .filter(col("k") === 1L).head().getDouble(2) == 9.0)
   }

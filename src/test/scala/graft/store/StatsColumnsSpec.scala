@@ -43,7 +43,7 @@ class StatsColumnsSpec extends SparkSpec {
       how = WriteMode.Append)
     KeyedTable.toSql(slice(201, 300), wh, t, pk = Seq("id"),
       how = WriteMode.Append)
-    val m = Manifest.current(spark, s"$wh/$t").get
+    val m = Manifest.current(spark, s"$wh/$t")
     val all = m.files.values.flatten.toSeq
     // files from the two post-registration appends carry price stats;
     // the create's files (pre-registration) legitimately do not
@@ -84,7 +84,7 @@ class StatsColumnsSpec extends SparkSpec {
       how = WriteMode.Append)
     KeyedTable.toSql(slice("dd", 301, 350), wh, t, pk = Seq("id"),
       how = WriteMode.Append)
-    val total = Manifest.current(spark, s"$wh/$t").get
+    val total = Manifest.current(spark, s"$wh/$t")
       .files.values.flatten.size
     val df = KeyedTableSource.read(spark, wh, t)
       .filter(col("name").startsWith("cc"))
@@ -107,7 +107,7 @@ class StatsColumnsSpec extends SparkSpec {
       wh, t, pk = Seq("id"), buckets = 2)
     KeyedTable.zorderCompact(spark, wh, t, Seq("x", "y"))
     assert(TableMeta.read(spark, s"$wh/$t").statsCols.toSet == Set("x", "y"))
-    val m = Manifest.current(spark, s"$wh/$t").get
+    val m = Manifest.current(spark, s"$wh/$t")
     val all = m.files.values.flatten.toSeq
     assert(all.nonEmpty &&
       all.forall(f => f.extra.contains("x") && f.extra.contains("y")),

@@ -146,7 +146,7 @@ class StreamEpochConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
     commitEpoch(t, staging, files, "q_disj", 0L, 4)
     assert(values(t) == Map(1L -> "a", 60L -> "batch", 70L -> "sink"))
     // the ledger advanced exactly once
-    val m = Manifest.current(spark, KeyedTable.tableDir(wh, t)).get
+    val m = Manifest.current(spark, KeyedTable.tableDir(wh, t))
     assert(m.streams == Map("q_disj" -> 0L))
     noStagingLeft(t)
   }
@@ -215,12 +215,12 @@ class StreamEpochConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
       assert(dropped.length == 1 && dropped(0).getBoolean(0))
       assert(ledger() == Set(("qb", 7L)))
       // unknown query: false, no commit
-      val v = Manifest.current(spark, KeyedTable.tableDir(wh, t)).get.version
+      val v = Manifest.current(spark, KeyedTable.tableDir(wh, t)).version
       val again = spark.sql(
         s"CALL $cat.system.drop_stream_ledger('$t', 'qa')").collect()
       assert(!again(0).getBoolean(0))
       assert(Manifest.current(spark,
-        KeyedTable.tableDir(wh, t)).get.version == v)
+        KeyedTable.tableDir(wh, t)).version == v)
       // round trip: the query can re-commit — its ledger re-creates
       // (this is also the documented hazard: a replayed epoch of a
       // DROPPED query re-applies, which is why the CALL is only for
@@ -298,7 +298,7 @@ class StreamEpochConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
     val want = Set(0L) ++ (0 until 4).map(1000L + _) ++
       (for { w <- 1 to 3; i <- 0 until 3 } yield 100L * w + i)
     assert(got == want, s"missing: ${want -- got}; extra: ${got -- want}")
-    val m = Manifest.current(spark, KeyedTable.tableDir(wh, t)).get
+    val m = Manifest.current(spark, KeyedTable.tableDir(wh, t))
     assert(m.streams == Map("q_race" -> 3L))
     noStagingLeft(t)
   }

@@ -58,7 +58,7 @@ class StreamSinkSpec extends SparkSpec {
       .sortBy(_._1).toSeq
     assert(got == (1L to 200L).map(i => (i, s"v$i", i * 1.0)))
     // the epoch ledger landed in the manifest, same flip as the data
-    val m = Manifest.current(spark, KeyedTable.tableDir(wh, "t")).get
+    val m = Manifest.current(spark, KeyedTable.tableDir(wh, "t"))
     assert(m.streams.size == 1 && m.op.contains("stream"))
     // the DSv2 read and SPJ machinery see the streamed rows too
     assert(KeyedTableSource.read(spark, wh, "t").count() == 200L)
@@ -89,21 +89,21 @@ class StreamSinkSpec extends SparkSpec {
     KeyedTable.commitStreamEpoch(spark, dir, KeyedTable.dataDir(wh, "t"),
       "q1", 0L, s0, 2, f0)
     assert(KeyedTable.readSql(spark, wh, "t").count() == 3L)
-    val v1 = Manifest.current(spark, dir).get.version
+    val v1 = Manifest.current(spark, dir).version
     // REPLAY the same epoch (restart semantics): rows already committed
     // must not land twice, no new snapshot, staging swept
     val (s0b, f0b) = stageEpoch(0L, Seq((2L, 2.0), (3L, 3.0)))
     KeyedTable.commitStreamEpoch(spark, dir, KeyedTable.dataDir(wh, "t"),
       "q1", 0L, s0b, 2, f0b)
     assert(KeyedTable.readSql(spark, wh, "t").count() == 3L)
-    assert(Manifest.current(spark, dir).get.version == v1)
+    assert(Manifest.current(spark, dir).version == v1)
     assert(!new java.io.File(s0b).exists(), "replayed staging must be swept")
     // the NEXT epoch still lands
     val (s1, f1) = stageEpoch(1L, Seq((4L, 4.0)))
     KeyedTable.commitStreamEpoch(spark, dir, KeyedTable.dataDir(wh, "t"),
       "q1", 1L, s1, 2, f1)
     assert(KeyedTable.readSql(spark, wh, "t").count() == 4L)
-    assert(Manifest.current(spark, dir).get.streams == Map("q1" -> 1L))
+    assert(Manifest.current(spark, dir).streams == Map("q1" -> 1L))
   }
 
   test("zombie-task leftovers never reach the table") {
@@ -133,7 +133,7 @@ class StreamSinkSpec extends SparkSpec {
     KeyedTable.commitStreamEpoch(spark, dir, KeyedTable.dataDir(wh, "t"),
       "q2", 0L, staging, 2, Set(s"$bDir/${good.getName}"))
     assert(KeyedTable.readSql(spark, wh, "t").count() == 2L)
-    val m = Manifest.current(spark, dir).get
+    val m = Manifest.current(spark, dir)
     assert(!m.files.valuesIterator.flatten.exists(_.name.contains("zombie")))
   }
 
@@ -154,13 +154,13 @@ class StreamSinkSpec extends SparkSpec {
         .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
         .map(st => s"${d.getPath.getName}/${st.getPath.getName}")
     }.toSet
-    val v0 = Manifest.current(spark, dir).get.version
+    val v0 = Manifest.current(spark, dir).version
     val e = intercept[StoreException] {
       KeyedTable.commitStreamEpoch(spark, dir, KeyedTable.dataDir(wh, "t"),
         "q3", 0L, staging, 2, files)
     }
     assert(e.getMessage.contains("overwrite existing PKs"))
-    assert(Manifest.current(spark, dir).get.version == v0)
+    assert(Manifest.current(spark, dir).version == v0)
     assert(KeyedTable.readSql(spark, wh, "t").count() == 2L)
   }
 
@@ -194,7 +194,7 @@ class StreamSinkSpec extends SparkSpec {
     val want = (1L to 49L).map(i => (i, "old", i * 1.0)) ++
       (50L to 150L).map(i => (i, "new", i * 2.0))
     assert(got == want)
-    val m = Manifest.current(spark, KeyedTable.tableDir(wh, "t")).get
+    val m = Manifest.current(spark, KeyedTable.tableDir(wh, "t"))
     assert(m.streams.size == 1, "epoch ledger must land with the upsert")
   }
 
@@ -264,13 +264,13 @@ class StreamSinkSpec extends SparkSpec {
       KeyedTable.readSql(spark, wh, "t").collect()
         .map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq
     assert(state() == Seq((1L, 10.0), (2L, 99.0), (3L, 30.0)))
-    val v1 = Manifest.current(spark, dir).get.version
+    val v1 = Manifest.current(spark, dir).version
     // replay: no double-apply, no new snapshot
     val (s0b, f0b) = stage(0L)
     KeyedTable.commitStreamEpoch(spark, dir, KeyedTable.dataDir(wh, "t"),
       "qu", 0L, s0b, 2, f0b, upsertMode = true)
     assert(state() == Seq((1L, 10.0), (2L, 99.0), (3L, 30.0)))
-    assert(Manifest.current(spark, dir).get.version == v1)
+    assert(Manifest.current(spark, dir).version == v1)
     // CDC: one batch with update (2: 20->99) + insert (3) images
     val log = KeyedTable.readChangelog(spark, wh, "t")
       .select("k", "op", "old_v", "new_v").collect()
@@ -308,9 +308,9 @@ class StreamSinkSpec extends SparkSpec {
     val (cat, wh) = mkCatalog()
     KeyedTable.toSql(Seq((0L, 0.0)).toDF("k", "v"), wh, "t",
       pk = Seq("k"), buckets = 1)
-    val v0 = Manifest.current(spark, KeyedTable.tableDir(wh, "t")).get.version
+    val v0 = Manifest.current(spark, KeyedTable.tableDir(wh, "t")).version
     drainEpochs(cat, "t", 20, Map.empty)
-    val m = Manifest.current(spark, KeyedTable.tableDir(wh, "t")).get
+    val m = Manifest.current(spark, KeyedTable.tableDir(wh, "t"))
     // one file per epoch accumulated: every commit stayed additive, so
     // an incremental consumer can tail the whole window
     assert(m.files(0).size == 21, s"got ${m.files(0).size} files")
@@ -323,7 +323,7 @@ class StreamSinkSpec extends SparkSpec {
     KeyedTable.toSql(Seq((0L, 0.0)).toDF("k", "v"), wh, "t",
       pk = Seq("k"), buckets = 1)
     drainEpochs(cat, "t", 20, Map("auto_compact" -> "true"))
-    val m = Manifest.current(spark, KeyedTable.tableDir(wh, "t")).get
+    val m = Manifest.current(spark, KeyedTable.tableDir(wh, "t"))
     // the policy (maxFilesPerBucket=16) fired mid-stream: the layout
     // never ran away, and the data is intact
     assert(m.files(0).size <= 17, s"got ${m.files(0).size} files")

@@ -52,11 +52,11 @@ class UpdateSpec extends SparkSpec {
       KeyedTable.update(spark, w, "t", lit(true), Map("k" -> lit(2L))))
     intercept[StoreException](
       KeyedTable.update(spark, w, "t", lit(true), Map("nope" -> lit(1))))
-    val v0 = Manifest.current(spark, s"$w/t").get.version
+    val v0 = Manifest.current(spark, s"$w/t").version
     assert(KeyedTable.update(spark, w, "t", col("x") > 100,
       Map("x" -> lit(0.0))) == 0L)
     // no match → no new snapshot
-    assert(Manifest.current(spark, s"$w/t").get.version == v0)
+    assert(Manifest.current(spark, s"$w/t").version == v0)
   }
 
   test("only buckets holding matches are rewritten") {
@@ -64,14 +64,14 @@ class UpdateSpec extends SparkSpec {
     KeyedTable.toSql(
       (1L to 200L).map(i => (i, i * 1.0)).toDF("k", "x"),
       w, "t", pk = Seq("k"), buckets = 8)
-    val before = Manifest.current(spark, s"$w/t").get
+    val before = Manifest.current(spark, s"$w/t")
     // pin the predicate to keys of ONE bucket (whatever bucket k=7 is
     // in, by the store's own hash)
     val target = Seq(7L).toDF("k")
       .select(pmod(xxhash64(col("k")), lit(8L)).cast("int"))
       .head().getInt(0)
     KeyedTable.update(spark, w, "t", col("k") === 7L, Map("x" -> lit(-7.0)))
-    val after = Manifest.current(spark, s"$w/t").get
+    val after = Manifest.current(spark, s"$w/t")
     (0 until 8).foreach { b =>
       val (fb, fa) = (before.files.getOrElse(b, Nil).map(_.name),
         after.files.getOrElse(b, Nil).map(_.name))
