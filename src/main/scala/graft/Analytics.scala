@@ -1859,7 +1859,6 @@ object Analytics {
     * < C of cumulative share. */
   def ordersPareto(s: SparkSession, d: String, shards: Int = 32): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val spark = s
     val cr = Tables.orders(s, d).groupBy(col("o_custkey"))
       .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("rev"))
     val tot = cr.agg(sum(col("rev")).as("t"))

@@ -640,7 +640,6 @@ object Knn {
     * eigenvalue of G). */
   def topSingularVector(embs: DataFrame, vecCol: String, dim: Int = 64,
                         iters: Int = 2): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     import graft.functions.Rounding.portableRoundDouble
     val spark = embs.sparkSession
     // The whole upper-triangle Gram as ONE native aggregate

@@ -39,7 +39,6 @@ object Packing {
   def withPackId(docs: DataFrame, idCol: String, tokens: Column,
                  budget: Long, shards: Int = 32): DataFrame = {
     require(budget > 0, s"token budget must be positive, got $budget")
-    val spark = docs.sparkSession
     val base = docs.withColumn("doc_tokens", tokens.cast("long"))
     val qs = (1 until shards).map(_.toDouble / shards)
     // the operator's ONE driver action: shards-1 approximate id edges,

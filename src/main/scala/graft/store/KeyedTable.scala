@@ -3,7 +3,7 @@ package graft.store
 import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -319,20 +319,9 @@ object KeyedTable {
     }
     if (autoIndex && pk.nonEmpty)
       throw new StoreException("pass either pk or autoIndex=true, not both")
-    if (strictUtc) {
-      val naive = df.schema.fields.filter(_.dataType == TimestampNTZType)
-      if (naive.nonEmpty)
-        throw new StoreException(
-          s"Column(s) ${naive.map(_.name).mkString(", ")} timezone must be set " +
-          "(naive TimestampNTZ rejected; convert to a UTC instant, or pass " +
-          "strictUtc=false to pin the wall-clock to UTC) (reference: sql.py:133)")
-    }
+    if (strictUtc) rejectNaive(df, StrictUtcHint)
 
-    // clean column names (reference silently cleans; helpers.py:228)
-    val cleaned = df.columns.foldLeft(df) { (d, c) =>
-      val cc = Names.cleanName(c)
-      if (cc == c) d else d.withColumnRenamed(c, cc)
-    }
+    val cleaned = cleanColumns(df)
     val pkClean = pk.map(Names.cleanName)
     pkClean.foreach { k =>
       if (!cleaned.columns.contains(k))
@@ -382,10 +371,13 @@ object KeyedTable {
             throw new StoreException(
               s"Table $tableName already exists; how=CreateOnly (reference: sql.py:171)")
           case WriteMode.Append =>
-            append(cleaned, wh, tableName, addNewColumns, validate, changelog,
-              txn)
+            appendWith(Locked, cleaned, wh, tableName, addNewColumns,
+              validate, changelog, txn)
           case WriteMode.Upsert =>
-            upsert(cleaned, wh, tableName, addNewColumns, validate, changelog)
+            upsertWith(Locked, cleaned, wh, tableName, addNewColumns,
+              validate, changelog, tombstoned = false,
+              deleteOnlyMatched = false, DeleteMode.CopyOnWrite,
+              expectedVersion = None, strictVersion = false)
             ()
         }
       }
@@ -484,8 +476,8 @@ object KeyedTable {
 
   private def create(df0: DataFrame, warehouse: String, tableName: String,
                      pk: Seq[String], autoIndex: Boolean, buckets: Int,
-                     validate: Boolean, inferBool: Boolean = false,
-                     txn: Option[(String, Long)] = None): Unit = {
+                     validate: Boolean, inferBool: Boolean,
+                     txn: Option[(String, Long)]): Unit = {
     val spark = df0.sparkSession
     val (df1, pkCols, maxIdx) =
       if (autoIndex) {
@@ -802,7 +794,8 @@ object KeyedTable {
       .map(c => meta.physName(c) -> meta.schema(c).dataType)
 
   /** Footer stats of every staged parquet file under `staging`,
-    * collected OUTSIDE the lock — the rename into the live bucket dirs
+    * collected before the flip (outside the lock, except under a row
+    * verb's locked policy) — the rename into the live bucket dirs
     * preserves content, so [[commitStaged]] applies these verbatim via
     * its `preStats` hook instead of re-opening O(staged files) footers
     * inside the flip. Keyed by (bucket, staged file name). The
@@ -951,15 +944,20 @@ object KeyedTable {
     * learns its path. Batch numbers are monotonic under the write
     * lock. */
   private def stageChangelogBatch(spark: SparkSession, dir: String,
-                                  changes: DataFrame): (Path, Path) = {
+                                  changes: DataFrame): (Path, Path) =
+    (stageChanges(spark, dir, changes), nextChangelogDst(fs(spark, dir), dir))
+
+  /** [[stageChangelogBatch]] without the batch number: the row verbs
+    * take it inside their flip ([[StagedChanges]]). */
+  private def stageChanges(spark: SparkSession, dir: String,
+                           changes: DataFrame): Path = {
     val clStaging = new Path(dir, s".staging-changelog-${UUID.randomUUID()}")
-    val f = fs(spark, dir)
     try {
       changes.write.parquet(clStaging.toString)
-      (clStaging, nextChangelogDst(f, dir))
+      clStaging
     } catch {
       case e: Throwable =>
-        f.delete(clStaging, true)
+        fs(spark, dir).delete(clStaging, true)
         throw e
     }
   }
@@ -1007,12 +1005,11 @@ object KeyedTable {
     * `preStats`: footer stats PRE-COLLECTED from the staging files
     * OUTSIDE the lock, keyed by (bucket, staged file name) — see
     * [[stageFileStats]]. Rename never changes content, so they apply
-    * verbatim to the moved files. The optimistic MAINTENANCE paths
-    * must pass this: a zorder/rebucket stages the WHOLE table, and
-    * paying O(table) footer opens inside the flip would turn the
-    * "brief" lock hold back into a writer outage. Any file the map
+    * verbatim to the moved files. A zorder/rebucket stages the WHOLE
+    * table, and paying O(table) footer opens inside the flip would turn
+    * the "brief" lock hold back into a writer outage. Any file the map
     * misses (raced staging edits — never happens from this code) is
-    * read at commit as before.
+    * read at commit.
     *
     * GUARD RAIL for new mutation verbs: commitStaged runs INSIDE the
     * locked flip — keep it metadata arithmetic plus renames. Collect
@@ -1025,8 +1022,7 @@ object KeyedTable {
                            add: Boolean = false,
                            removeMissing: Boolean = false,
                            streamEpoch: Option[(String, Long)] = None,
-                           preStats: Option[Map[(Int, String),
-                             FileFooter]] = None)
+                           preStats: Map[(Int, String), FileFooter])
       : Manifest = {
     val conf = spark.sparkContext.hadoopConfiguration
     val statCol = meta.pk.headOption
@@ -1068,14 +1064,11 @@ object KeyedTable {
     def stagedNameOf(dst: Path): String =
       dst.getName.stripPrefix(s"$commitId-")
     val pre: Map[Path, FileFooter] =
-      preStats.fold(Map.empty[Path, FileFooter]) {
-        ps =>
-          movedByBucket.iterator.flatMap { case (b, fls) =>
-            fls.flatMap { case (dst, _) =>
-              ps.get((b, stagedNameOf(dst))).map(dst -> _)
-            }
-          }.toMap
-      }
+      movedByBucket.iterator.flatMap { case (b, fls) =>
+        fls.flatMap { case (dst, _) =>
+          preStats.get((b, stagedNameOf(dst))).map(dst -> _)
+        }
+      }.toMap
     val footer = pre ++ pkFileStatsAll(conf,
       movedByBucket.valuesIterator.flatten.map(_._1)
         .filterNot(pre.contains).toSeq, statColsTyped)
@@ -1132,7 +1125,7 @@ object KeyedTable {
   private def commitStagedDvs(spark: SparkSession, f: FileSystem, dir: String,
                               data: String, staging: String,
                               touched: Seq[Int], base: Manifest,
-                              op: String = "delete"): Manifest = {
+                              op: String): Manifest = {
     val conf = spark.sparkContext.hadoopConfiguration
     val commitId = UUID.randomUUID().toString.take(8)
     val moved = scala.collection.mutable.ArrayBuffer.empty[Path]
@@ -1395,7 +1388,7 @@ object KeyedTable {
             commitStaged(spark, f, tblDir, data, staging, touched,
               "stream", baseL, baseL.buckets, metaL, add = true,
               streamEpoch = Some(queryId -> epochId),
-              preStats = Some(preStats))
+              preStats = preStats)
             clSrc.foreach(src =>
               commitChangelogBatch(f, "stream", src,
                 nextChangelogDst(f, tblDir)))
@@ -1418,7 +1411,7 @@ object KeyedTable {
             commitStagedMorMut(spark, f, tblDir, data, staging, dvStaging,
               touched, "stream-upsert", baseL, metaL,
               streamEpoch = Some(queryId -> epochId),
-              preStats = Some(preStats))
+              preStats = preStats)
             clSrc.foreach(src =>
               commitChangelogBatch(f, "stream-upsert", src,
                 nextChangelogDst(f, tblDir)))
@@ -1508,9 +1501,8 @@ object KeyedTable {
                                  dataStaging: String, dvStaging: String,
                                  touched: Seq[Int], op: String,
                                  base: Manifest, meta: TableMeta,
-                                 streamEpoch: Option[(String, Long)] = None,
-                                 preStats: Option[Map[(Int, String),
-                                   FileFooter]] = None)
+                                 streamEpoch: Option[(String, Long)],
+                                 preStats: Map[(Int, String), FileFooter])
       : Manifest = {
     val conf = spark.sparkContext.hadoopConfiguration
     val statCol = meta.pk.headOption
@@ -1549,20 +1541,17 @@ object KeyedTable {
       }.toMap
     val dataMoved = moveIn(dataStaging, "")
     val dvMoved = moveIn(dvStaging, "dv-")
-    // post-image footer stats pre-collected OUTSIDE the lock when the
-    // caller staged them (see [[stageFileStats]]); DV position files
-    // stay in-lock — delta-sized, and the upsert-mode sink RE-DERIVES
-    // them inside the lock on a window conflict
+    // post-image footer stats pre-collected OUTSIDE the lock (see
+    // [[stageFileStats]]); DV position files stay in-lock — delta-sized,
+    // and the upsert-mode sink RE-DERIVES them inside the lock on a
+    // window conflict
     val pre: Map[Path, FileFooter] =
-      preStats.fold(Map.empty[Path, FileFooter]) {
-        ps =>
-          dataMoved.iterator.flatMap { case (b, fls) =>
-            fls.flatMap { case (dst, _) =>
-              ps.get((b, dst.getName.stripPrefix(s"$commitId-")))
-                .map(dst -> _)
-            }
-          }.toMap
-      }
+      dataMoved.iterator.flatMap { case (b, fls) =>
+        fls.flatMap { case (dst, _) =>
+          preStats.get((b, dst.getName.stripPrefix(s"$commitId-")))
+            .map(dst -> _)
+        }
+      }.toMap
     val footer = pre ++ pkFileStatsAll(conf,
       dataMoved.valuesIterator.flatten.map(_._1)
         .filterNot(pre.contains).toSeq, statColsTyped)
@@ -1707,188 +1696,183 @@ object KeyedTable {
     }, meta)
   }
 
-  private def append(df: DataFrame, warehouse: String, table: String,
-                     addNewColumns: Boolean, validate: Boolean,
-                     changelog0: Boolean = false,
-                     txn: Option[(String, Long)] = None): Unit = {
-    val spark = df.sparkSession
-    val dir = tableDir(warehouse, table)
-    val meta0 = TableMeta.read(spark, dir)
-    // idempotent-retry fast exit (see toSql's txn contract): the whole
-    // mutation runs under the table lock, so one check here is
-    // race-free — BEFORE the auto-index mark bumps or any job runs
-    if (txn.exists { case (id, v) =>
-          Manifest.current(spark, dir).streams.get(id).exists(_ >= v)
-        }) return
-    // table-property CDC (see TableMeta.changelog): an append to a
-    // changelog-maintained table logs its rows as `insert` ops — old_*
-    // all NULL, new_* = the incoming values; no pre-image join needed
-    // (appends are overlap-checked, every row is new by contract)
-    val changelog = changelog0 || meta0.changelog
+  /** Who holds the write lock through a row verb's pin → stage → flip
+    * (the protocol each body — [[appendWith]], [[upsertWith]],
+    * [[updateWith]], [[deleteWith]] — states for itself). Not an option:
+    * the locked entry points ([[toSql]], [[delete]], [[update]],
+    * [[merge]]) run their body under [[Locked]] inside their own
+    * `WriteLock.withLock`, the `*Concurrent` twins under [[Optimistic]]. */
+  private sealed trait CommitPolicy {
+    /** The verb's name in manifests, changelog errors, CHECK errors and
+      * lock holders: `verb` locked, `<verb>Concurrent` optimistic. */
+    def label(verb: String): String = this match {
+      case Locked => verb
+      case Optimistic(_) => s"${verb}Concurrent"
+    }
 
-    val (aligned0, evolved, meta) =
-      if (meta0.autoIndex) {
-        // continue the synthetic PK from the stored high-water mark —
-        // no table scan; pre-field tables recover via footer stats
-        val cur = meta0.maxAutoIndex
-          .getOrElse(footerMaxAutoIndex(spark, warehouse, table, meta0))
-        val (withIds, n) = assignAutoIndex(df, cur + 1L)
-        val m = meta0.copy(maxAutoIndex = Some(cur + n))
-        // the mark commits BEFORE the data write: a crash between the
-        // two leaves it too high (harmless id gap), never too low
-        // (duplicate ids on the next append)
-        TableMeta.write(spark, dir, m)
-        val (a, e) = align(withIds, m, addNewColumns)
-        (a, e, m)
-      } else {
-        val (a, e) = align(df, meta0, addNewColumns)
-        (a, e, meta0)
-      }
+    /** Run a short section — the flip, an auto-index reservation, a
+      * CDC-flag write — exclusively: inline when the caller already
+      * holds the lock, else queuing up to `waitMs` for it. */
+    def exclusive[A](spark: SparkSession, dir: String, op: String)
+                    (body: => A): A = this match {
+      case Locked => body
+      case Optimistic(waitMs) =>
+        WriteLock.withLockWait(spark, dir, op, waitMs)(body)
+    }
 
-    val data = dataDir(warehouse, table)
-    val base = Manifest.current(spark, dir)
-    val newB = withBucket(aligned0, meta.pk, base.buckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      enforceChecks(newB, meta.checks, "append")
-      // validate AFTER persist so the (possibly expensive) incoming
-      // pipeline is computed once; one fused job answers the PK check
-      // and the touched-bucket set off the cache
-      val touched = validateAndTouched(newB, meta.pk, validate && !meta.autoIndex)
-      // staged write + ADDITIVE manifest commit: the new files extend
-      // the touched buckets' lists; nothing live is replaced.
-      // The PK-overlap probe and the (optional) changelog batch read
-      // only the live snapshot + the cached delta — independent of the
-      // staging write, so the three jobs overlap (guide §2.6); any
-      // failure aborts before the commit flips anything, exactly as
-      // the sequential order did.
-      val staging = s"$dir/.staging-append-${UUID.randomUUID()}"
-      val f = fs(spark, dir)
-      var clCommit: Option[(Path, Path)] = None
-      try {
-        try {
-          inParallel(spark)(
-            {
-              if (!meta.autoIndex) {
-                val old = readRawWith(spark, warehouse, table, meta, base)
-                  .filter(col(BucketCol).isin(touched: _*))
-                val overlap = newB.join(old, meta.pk, "left_semi").limit(5)
-                  .select(meta.pk.map(col): _*).collect()
-                if (overlap.nonEmpty)
-                  throw new StoreException(
-                    s"Append would overwrite existing PKs, e.g. ${overlap.mkString(", ")} " +
-                    "(reference: sql.py:264 append raises on repeated index)")
-              }
-              // Changelog batch: all inserts (every row is new by the
-              // overlap contract); staged before the data commit,
-              // renamed in only after it — same ordering as upsert's
-              if (changelog) {
-                val nonPk = evolved.fieldNames.filterNot(meta.pk.contains).toSeq
-                val images = nonPk.flatMap { c =>
-                  Seq(lit(null).cast(evolved(c).dataType).as(s"old_$c"),
-                    col(c).as(s"new_$c"))
-                }
-                val changes = newB
-                  .select(meta.pk.map(col) ++ (lit("insert").as("op") +: images): _*)
-                clCommit = Some(stageChangelogBatch(spark, dir, changes))
-              }
-            },
-            toPhys(clusterByBucket(newB, touched, meta.pk), meta)
-              .write.partitionBy(BucketCol).parquet(staging))
-          commitStaged(spark, f, dir, data, staging, touched, "append",
-            base, base.buckets, meta, add = true, streamEpoch = txn)
-        } finally f.delete(new Path(staging), true)
-        clCommit.foreach { case (src, dst) =>
-          commitChangelogBatch(f, "append", src, dst)
-        }
-      } finally clCommit.foreach { case (src, _) => f.delete(src, true) }
-      val meta2 = meta.copy(schema = evolved, changelog = changelog)
-      if (meta2 != meta) TableMeta.write(spark, dir, meta2)
-    } finally newB.unpersist()
+    /** The test seam between stage and flip: only the optimistic policy
+      * leaves a window there for another writer to land in. */
+    def betweenPhases(hook: () => Unit): Unit = this match {
+      case Locked => ()
+      case Optimistic(_) => hook()
+    }
   }
 
-  /** OPTIMISTIC append: the Delta/Iceberg commit model for the one
-    * mutation shape that composes — appends add uniquely-named files,
-    * so two appends to the same table (even the same buckets) never
-    * physically conflict; only the manifest flip must serialize.
-    *
-    * [[toSql]]'s append holds the write lock for the WHOLE mutation —
-    * planning, validation, and the (possibly huge) staged write job —
-    * so N ingest jobs into one table serialize end-to-end: at 1000
-    * executors the cluster runs one append's tasks while N−1 drivers
-    * wait. This path instead:
-    *
-    *  1. UNLOCKED: reads the current snapshot, buckets + validates the
-    *     delta, pre-checks PK overlap against the snapshot-at-start
-    *     (delta-bounded), and runs the staged write job;
-    *  2. LOCKED (briefly, queuing up to `commitWaitMs` behind other
-    *     committers — the section is a manifest flip, not a write job):
-    *     re-validates against the LATEST state and commits.
-    *
-    * Commit-time conflict rules (all throw [[ConcurrentWriteException]]
-    * with the table unchanged and staging cleaned; retry the call):
-    *  - bucket count changed (a rebucket won the race) — staged files
-    *    are bucketed under the old layout;
-    *  - schema conflict: a column now typed differently than our staged
-    *    files wrote it, or since dropped (writing it would silently
-    *    discard or later resurrect data);
-    *  - PK overlap with rows committed since our snapshot — checked
-    *    against only the files ADDED between snapshot-at-start and
-    *    latest (usually none ⇒ zero IO): a key live at commit time is
-    *    either in a start-snapshot file (pre-checked) or in an added
-    *    file (re-checked), so the two checks together cover the latest
-    *    snapshot exactly. (A key DELETED since the start may fail the
-    *    pre-check spuriously; the retry then succeeds — conservative,
-    *    never unsound.)
-    *
-    * Auto-index tables reserve their id range under a short lock before
-    * staging (the high-water mark is the one piece of append state that
-    * cannot be merged after the fact); a crash after reserving leaves
-    * an id gap, never a duplicate — same rule as [[append]]. */
-  def appendConcurrent(df: DataFrame, warehouse0: String, tableName: String,
-                       addNewColumns: Boolean = false,
-                       validate: Boolean = true,
-                       schema: Option[String] = None,
-                       changelog: Boolean = false,
-                       commitWaitMs: Long = 60000L,
-                       txn: Option[(String, Long)] = None): Unit = {
-    val spark = df.sparkSession
-    val wh = schemaDir(warehouse0, schema)
-    val dir = tableDir(wh, tableName)
-    if (!TableMeta.exists(spark, dir))
-      throw new StoreException(
-        s"appendConcurrent: table $tableName does not exist " +
-        "(create it with toSql first — creation must arbitrate under the lock)")
-    val naive = df.schema.fields.filter(_.dataType == TimestampNTZType)
-    if (naive.nonEmpty)
-      throw new StoreException(
-        s"Column(s) ${naive.map(_.name).mkString(", ")} timezone must be set " +
-        "(naive TimestampNTZ rejected, as in toSql strictUtc)")
-    val cleaned = df.columns.foldLeft(df) { (d, c) =>
+  /** The caller holds the write lock from the pin to the flip: the
+    * pinned snapshot IS the latest, so every re-validation passes. */
+  private case object Locked extends CommitPolicy
+
+  /** Stage unlocked against the pinned snapshot; take the lock (queuing
+    * up to `waitMs` behind other committers) only to re-validate and
+    * flip. A failed re-validation throws [[ConcurrentWriteException]]
+    * with the table unchanged and staging cleaned — retry the call. */
+  private final case class Optimistic(waitMs: Long) extends CommitPolicy
+
+  /** Identifier cleaning of incoming column names (the reference cleans
+    * silently; helpers.py:228). */
+  private def cleanColumns(df: DataFrame): DataFrame =
+    df.columns.foldLeft(df) { (d, c) =>
       val cc = Names.cleanName(c)
       if (cc == c) d else d.withColumnRenamed(c, cc)
     }
+
+  private val StrictUtcHint =
+    "(naive TimestampNTZ rejected; convert to a UTC instant, or pass " +
+    "strictUtc=false to pin the wall-clock to UTC) (reference: sql.py:133)"
+  private val OptimisticUtcHint =
+    "(naive TimestampNTZ rejected, as in toSql strictUtc)"
+
+  /** Reject naive (TimestampNTZ) datetime columns; `hint` ends the
+    * message. */
+  private def rejectNaive(df: DataFrame, hint: String): Unit = {
+    val naive = df.schema.fields.filter(_.dataType == TimestampNTZType)
+    if (naive.nonEmpty)
+      throw new StoreException(
+        s"Column(s) ${naive.map(_.name).mkString(", ")} timezone must be set $hint")
+  }
+
+  private def requireTable(spark: SparkSession, dir: String,
+                           missing: => String): Unit =
+    if (!TableMeta.exists(spark, dir)) throw new StoreException(missing)
+
+  /** Flip-time layout check: staged files are bucketed for the pinned
+    * bucket count, which a concurrent rebucket may have changed. */
+  private def checkBucketCount(base0: Manifest, latest: Manifest,
+                               verb: String): Unit =
+    if (latest.buckets != base0.buckets)
+      throw new ConcurrentWriteException(
+        s"bucket count changed ${base0.buckets} -> ${latest.buckets} " +
+        "(concurrent rebucket); staged files use the old layout — " +
+        s"retry the $verb")
+
+  /** The touched buckets whose live file or delete-vector set moved
+    * between two snapshots: a rewrite staged against the first read a
+    * pre-image that is no longer the truth (and MoR positions index
+    * files that may be gone). */
+  private def movedBuckets(base0: Manifest, latest: Manifest,
+                           touched: Seq[Int]): Seq[Int] =
+    if (latest.version == base0.version) Nil
+    else {
+      def window(m: Manifest, b: Int): (Set[String], Set[String]) =
+        (m.files.getOrElse(b, Nil).map(_.name).toSet,
+          m.dvs.getOrElse(b, Nil).map(_.name).toSet)
+      touched.filter(b => window(base0, b) != window(latest, b))
+    }
+
+  /** The bucket-level conflict window of the replace-shaped verbs
+    * (upsert, merge, update, delete): two writers into DISJOINT bucket
+    * sets both commit; a same-bucket commit since the pin aborts this
+    * one. Per bucket, not per key — the commit replaces whole buckets,
+    * so a same-bucket write invalidates the staged output even when the
+    * keys are disjoint. */
+  private def checkWindow(base0: Manifest, latest: Manifest,
+                          touched: Seq[Int], verb: String,
+                          staged: String): Unit = {
+    val dirty = movedBuckets(base0, latest, touched)
+    if (dirty.nonEmpty)
+      throw new ConcurrentWriteException(
+        s"bucket(s) ${dirty.sorted.take(5).mkString(", ")} changed " +
+        s"since this $verb staged (concurrent mutation with an " +
+        s"overlapping touched-bucket set); the staged $staged read a " +
+        s"stale pre-image — retry the $verb")
+  }
+
+  /** A row verb's changelog batch (see [[readChangelog]]). Staged from
+    * the pinned pre-image alongside the data write; staged LATE, inside
+    * the flip, when a concurrent writer switched the table's CDC on
+    * since the pin (every mutation of a CDC table must land a batch);
+    * renamed into the next batch number only after the data flip, so a
+    * failed mutation leaves no batch claiming changes that never
+    * landed. [[discard]] removes the staging in a `finally` (a no-op
+    * once published). */
+  private final class StagedChanges(spark: SparkSession, dir: String) {
+    @volatile private var src: Option[Path] = None
+    def stage(changes: DataFrame): Unit =
+      src = Some(stageChanges(spark, dir, changes))
+    def stageLate(cdcNow: Boolean, changes: => DataFrame): Unit =
+      if (cdcNow && src.isEmpty) stage(changes)
+    def publish(f: FileSystem, op: String): Unit =
+      src.foreach(s => commitChangelogBatch(f, op, s, nextChangelogDst(f, dir)))
+    def discard(f: FileSystem): Unit = src.foreach(f.delete(_, true))
+  }
+
+  /** The append body behind [[toSql]]'s `how = Append` (under
+    * [[Locked]]) and [[appendConcurrent]] (under [[Optimistic]]).
+    * Appends add uniquely named files, so two appends to the same
+    * buckets never physically conflict; only the flip serializes.
+    *
+    *  1. PIN the meta and the manifest. A `txn` token at or below the
+    *     recorded version exits here, before any id or job.
+    *  2. STAGE: auto-index tables reserve their id range in a short
+    *     exclusive section (the mark commits before the data: a crash
+    *     leaves an id gap, never a duplicate); the delta is bucketed,
+    *     CHECKed and PK-validated off one cache; the PK-overlap probe
+    *     against the pinned snapshot and the insert images run
+    *     alongside the staging write; the staged footers' stats are
+    *     collected.
+    *  3. FLIP, re-validating against the latest snapshot: a `txn` that
+    *     landed meanwhile makes this a no-op; CHECKs registered since
+    *     the pin are enforced; a rebucket, a re-typed or dropped staged
+    *     column abort; the overlap probe re-runs on only the files
+    *     ADDED since the pin (usually none — no IO), so with the pinned
+    *     probe it covers the commit-time snapshot exactly. The staged
+    *     files extend their buckets; the batch lands after the flip.
+    *
+    * Under [[Locked]] the pinned snapshot is the latest, so step 3's
+    * checks pass by construction and the labels are `append`. */
+  private def appendWith(policy: CommitPolicy, df: DataFrame, wh: String,
+                         tableName: String, addNewColumns: Boolean,
+                         validate: Boolean, changelog: Boolean,
+                         txn: Option[(String, Long)]): Unit = {
+    val spark = df.sparkSession
+    val label = policy.label("append")
+    val dir = tableDir(wh, tableName)
     val data = dataDir(wh, tableName)
     val meta0 = TableMeta.read(spark, dir)
     val base0 = Manifest.current(spark, dir)
-    // idempotent-retry fast exit against the snapshot-at-start (cheap,
-    // unlocked); the LOCKED commit below re-checks against the latest
-    // snapshot, which is what makes two racing attempts with the same
-    // token commit exactly once
-    if (txn.exists { case (id, v) =>
-          base0.streams.get(id).exists(_ >= v) }) return
+    def replayed(m: Manifest): Boolean =
+      txn.exists { case (id, v) => m.streams.get(id).exists(_ >= v) }
+    if (replayed(base0)) return
+    // table-property CDC (see TableMeta.changelog): an append logs its
+    // rows as `insert` ops — every row is new by the overlap contract
     val wantChangelog = changelog || meta0.changelog
 
-    // ---------------- UNLOCKED: plan, validate, stage ----------------
     val (aligned0, evolved, metaUsed) =
       if (meta0.autoIndex) {
-        val n = cleaned.count()
-        // short lock: reserve [cur+1, cur+n]; mark-before-data as in
-        // append (crash ⇒ id gap, never a duplicate). Assignment and
-        // alignment run AFTER release — only the high-water-mark bump
-        // needs exclusion.
-        val (start, m) = WriteLock.withLockWait(spark, dir,
-            "appendConcurrent(reserve-ids)", commitWaitMs) {
+        // continue the synthetic PK from the stored high-water mark —
+        // no table scan; pre-field tables recover via footer stats
+        val n = df.count()
+        val (start, m) = policy.exclusive(spark, dir, s"$label(reserve-ids)") {
           val m0 = TableMeta.read(spark, dir)
           val cur = m0.maxAutoIndex
             .getOrElse(footerMaxAutoIndex(spark, wh, tableName, m0))
@@ -1896,135 +1880,128 @@ object KeyedTable {
           TableMeta.write(spark, dir, m1)
           (cur + 1L, m1)
         }
-        val (withIds, n2) = assignAutoIndex(cleaned, start)
+        val (withIds, n2) = assignAutoIndex(df, start)
         if (n2 != n)
           throw new StoreException(
-            s"appendConcurrent: incoming frame is non-deterministic " +
+            s"$label: incoming frame is non-deterministic " +
             s"($n rows at reservation, $n2 at assignment); ids would " +
             "escape the reserved range — materialize the input first")
         val (a, e) = align(withIds, m, addNewColumns)
         (a, e, m)
       } else {
-        val (a, e) = align(cleaned, meta0, addNewColumns)
+        val (a, e) = align(df, meta0, addNewColumns)
         (a, e, meta0)
       }
     val newB = withBucket(aligned0, metaUsed.pk, base0.buckets)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val f = fs(spark, dir)
+    val staging = s"$dir/.staging-append-${UUID.randomUUID()}"
+    val changes = new StagedChanges(spark, dir)
+    def inserts: DataFrame = {
+      val nonPk = evolved.fieldNames.filterNot(metaUsed.pk.contains).toSeq
+      val images = nonPk.flatMap { c =>
+        Seq(lit(null).cast(evolved(c).dataType).as(s"old_$c"),
+          col(c).as(s"new_$c"))
+      }
+      newB.select(metaUsed.pk.map(col) ++ (lit("insert").as("op") +: images): _*)
+    }
     try {
-      enforceChecks(newB, metaUsed.checks, "appendConcurrent")
+      enforceChecks(newB, metaUsed.checks, label)
+      // validate AFTER persist so the (possibly expensive) incoming
+      // pipeline is computed once; one fused job answers the PK check
+      // and the touched-bucket set off the cache
       val touched = validateAndTouched(newB, metaUsed.pk,
         validate && !metaUsed.autoIndex)
-      if (!metaUsed.autoIndex) {
-        // provisional overlap pre-check against the snapshot-at-start
-        // (unlocked; the locked re-check below covers everything added
-        // since, so together they cover the commit-time snapshot)
-        val old = readRawWith(spark, wh, tableName, metaUsed, base0)
-          .filter(col(BucketCol).isin(touched: _*))
-        val overlap = newB.join(old, metaUsed.pk, "left_semi").limit(5)
-          .select(metaUsed.pk.map(col): _*).collect()
-        if (overlap.nonEmpty)
-          throw new StoreException(
-            s"Append would overwrite existing PKs, e.g. ${overlap.mkString(", ")} " +
-            "(reference: sql.py:264 append raises on repeated index)")
-      }
-      // changelog images staged UNLOCKED (append images need no
-      // pre-image join); batch number + rename happen inside the lock.
-      // The same staging runs INSIDE the lock if a concurrent writer
-      // enabled the changelog property while we staged without one —
-      // every mutation on a CDC table must land a batch (the invariant
-      // readChangelog documents), and newB is persisted, so the
-      // lock-time job is one cached-scan write, not a recompute.
-      def stageInsertImages(): Path = {
-        val nonPk = evolved.fieldNames.filterNot(metaUsed.pk.contains).toSeq
-        val images = nonPk.flatMap { c =>
-          Seq(lit(null).cast(evolved(c).dataType).as(s"old_$c"),
-            col(c).as(s"new_$c"))
-        }
-        val changes = newB
-          .select(metaUsed.pk.map(col) ++ (lit("insert").as("op") +: images): _*)
-        val p = new Path(dir, s".staging-changelog-${UUID.randomUUID()}")
-        changes.write.parquet(p.toString)
-        p
-      }
-      val clStaging: Option[Path] =
-        if (wantChangelog) Some(stageInsertImages()) else None
-      var clLate: Option[Path] = None
-      val staging = s"$dir/.staging-append-${UUID.randomUUID()}"
-      try {
-        // the expensive job — OUTSIDE the lock
+      // the overlap probe and the insert images read only the pinned
+      // snapshot and the cached delta — independent of the staging
+      // write, so the jobs overlap (guide §2.6); the first failure
+      // cancels the other side's jobs
+      inParallel(spark)(
+        {
+          if (!metaUsed.autoIndex) {
+            val old = readRawWith(spark, wh, tableName, metaUsed, base0)
+              .filter(col(BucketCol).isin(touched: _*))
+            val overlap = newB.join(old, metaUsed.pk, "left_semi").limit(5)
+              .select(metaUsed.pk.map(col): _*).collect()
+            if (overlap.nonEmpty)
+              throw new StoreException(
+                s"Append would overwrite existing PKs, e.g. ${overlap.mkString(", ")} " +
+                "(reference: sql.py:264 append raises on repeated index)")
+          }
+          if (wantChangelog) changes.stage(inserts)
+        },
         toPhys(clusterByBucket(newB, touched, metaUsed.pk), metaUsed)
-          .write.partitionBy(BucketCol).parquet(staging)
-        val preStats = stageFileStats(spark, f, staging,
-          statColsTypedOf(metaUsed))
+          .write.partitionBy(BucketCol).parquet(staging))
+      val preStats = stageFileStats(spark, f, staging,
+        statColsTypedOf(metaUsed))
 
-        // ---------------- LOCKED: re-validate, commit ----------------
-        WriteLock.withLockWait(spark, dir, "appendConcurrent(commit)",
-            commitWaitMs) {
-          val metaLatest = TableMeta.read(spark, dir)
-          val baseLatest = Manifest.current(spark, dir)
-          // a racing attempt with the same txn token committed while
-          // this one staged: no-op (staging cleaned by the finally) —
-          // checked FIRST so a replay never trips the conflict guards
-          if (txn.exists { case (id, v) =>
-                baseLatest.streams.get(id).exists(_ >= v) }) return
-          // a CHECK constraint registered since this append staged was
-          // validated against a snapshot that excludes our rows — the
-          // commit must enforce the NEW constraints itself (the common
-          // case pays nothing: no new checks, no job)
-          enforceChecks(newB,
-            metaLatest.checks -- metaUsed.checks.keySet,
-            "appendConcurrent(commit)")
-          if (baseLatest.buckets != base0.buckets)
-            throw new ConcurrentWriteException(
-              s"bucket count changed ${base0.buckets} -> " +
-              s"${baseLatest.buckets} (concurrent rebucket); staged files " +
-              "use the old layout — retry the append")
-          val mergedSchema = mergeEvolved(evolved, metaUsed, metaLatest)
-          if (!metaUsed.autoIndex && baseLatest.version != base0.version) {
-            // re-check overlap against only the files ADDED since our
-            // snapshot in the buckets we touch — usually none ⇒ no IO
-            val addedByBucket = touched.flatMap { b =>
-              val before = base0.files.getOrElse(b, Nil).map(_.name).toSet
-              val now = baseLatest.files.getOrElse(b, Nil)
-                .filterNot(x => before.contains(x.name))
-              if (now.isEmpty) None else Some(b -> now)
-            }.toMap
-            if (addedByBucket.nonEmpty) {
-              val addedDf = readRawWith(spark, wh, tableName, metaLatest,
-                baseLatest.copy(files = addedByBucket))
-              val clash = newB.join(addedDf, metaUsed.pk, "left_semi")
-                .limit(5).select(metaUsed.pk.map(col): _*).collect()
-              if (clash.nonEmpty)
-                throw new ConcurrentWriteException(
-                  s"PK(s) ${clash.mkString(", ")} were written by a " +
-                  "concurrent mutation after this append staged; retry " +
-                  "(or use upsert semantics if overwrite is intended)")
-            }
+      policy.exclusive(spark, dir, s"$label(commit)") {
+        val metaLatest = TableMeta.read(spark, dir)
+        val baseLatest = Manifest.current(spark, dir)
+        // checked FIRST so a replay never trips the conflict guards
+        if (replayed(baseLatest)) return
+        enforceChecks(newB, metaLatest.checks -- metaUsed.checks.keySet,
+          s"$label(commit)")
+        checkBucketCount(base0, baseLatest, "append")
+        val mergedSchema = mergeEvolved(evolved, metaUsed, metaLatest)
+        if (!metaUsed.autoIndex && baseLatest.version != base0.version) {
+          val addedByBucket = touched.flatMap { b =>
+            val before = base0.files.getOrElse(b, Nil).map(_.name).toSet
+            val now = baseLatest.files.getOrElse(b, Nil)
+              .filterNot(x => before.contains(x.name))
+            if (now.isEmpty) None else Some(b -> now)
+          }.toMap
+          if (addedByBucket.nonEmpty) {
+            val addedDf = readRawWith(spark, wh, tableName, metaLatest,
+              baseLatest.copy(files = addedByBucket))
+            val clash = newB.join(addedDf, metaUsed.pk, "left_semi")
+              .limit(5).select(metaUsed.pk.map(col): _*).collect()
+            if (clash.nonEmpty)
+              throw new ConcurrentWriteException(
+                s"PK(s) ${clash.mkString(", ")} were written by a " +
+                "concurrent mutation after this append staged; retry " +
+                "(or use upsert semantics if overwrite is intended)")
           }
-          // a concurrent writer may have ENABLED the changelog property
-          // since this append staged without one — commit must still
-          // land this append's batch or downstream log consumers would
-          // silently miss these rows (see readChangelog's invariant)
-          if (metaLatest.changelog && clStaging.isEmpty)
-            clLate = Some(stageInsertImages())
-          commitStaged(spark, f, dir, data, staging, touched,
-            "appendConcurrent", baseLatest, baseLatest.buckets,
-            metaLatest.copy(schema = mergedSchema), add = true,
-            streamEpoch = txn, preStats = Some(preStats))
-          (clStaging orElse clLate).foreach { src =>
-            commitChangelogBatch(f, "appendConcurrent", src,
-              nextChangelogDst(f, dir))
-          }
-          val metaFinal = metaLatest.copy(schema = mergedSchema,
-            changelog = wantChangelog || metaLatest.changelog)
-          if (metaFinal != metaLatest) TableMeta.write(spark, dir, metaFinal)
         }
-      } finally {
-        f.delete(new Path(staging), true)
-        (clStaging.toSeq ++ clLate.toSeq).foreach(p => f.delete(p, true))
+        changes.stageLate(metaLatest.changelog, inserts)
+        commitStaged(spark, f, dir, data, staging, touched, label,
+          baseLatest, baseLatest.buckets,
+          metaLatest.copy(schema = mergedSchema), add = true,
+          streamEpoch = txn, preStats = preStats)
+        changes.publish(f, label)
+        val metaFinal = metaLatest.copy(schema = mergedSchema,
+          changelog = wantChangelog || metaLatest.changelog)
+        if (metaFinal != metaLatest) TableMeta.write(spark, dir, metaFinal)
       }
-    } finally newB.unpersist()
+    } finally {
+      f.delete(new Path(staging), true)
+      changes.discard(f)
+      newB.unpersist()
+    }
+  }
+
+  /** OPTIMISTIC append ([[appendWith]] under [[Optimistic]]): stages
+    * unlocked and takes the write lock only for the flip, queuing up to
+    * `commitWaitMs` behind other committers, so N ingest jobs into one
+    * table overlap their write jobs. Same contract as [[toSql]]'s
+    * append, `txn` included; the table must exist. Throws
+    * [[ConcurrentWriteException]] (table unchanged; retry) on a
+    * concurrent rebucket, a re-typed or dropped staged column, or a PK
+    * another writer committed since this append pinned its snapshot. */
+  def appendConcurrent(df: DataFrame, warehouse0: String, tableName: String,
+                       addNewColumns: Boolean = false,
+                       validate: Boolean = true,
+                       schema: Option[String] = None,
+                       changelog: Boolean = false,
+                       commitWaitMs: Long = 60000L,
+                       txn: Option[(String, Long)] = None): Unit = {
+    val wh = schemaDir(warehouse0, schema)
+    requireTable(df.sparkSession, tableDir(wh, tableName),
+      s"appendConcurrent: table $tableName does not exist " +
+      "(create it with toSql first — creation must arbitrate under the lock)")
+    rejectNaive(df, OptimisticUtcHint)
+    appendWith(Optimistic(commitWaitMs), cleanColumns(df), wh, tableName,
+      addNewColumns, validate, changelog, txn)
   }
 
   /** Merge this append's (possibly evolved) schema into the table's
@@ -2055,185 +2032,11 @@ object KeyedTable {
     StructType(metaLatest.schema.fields ++ extra)
   }
 
-  /** Upsert WITHOUT holding the write lock for the merge job — the
-    * [[appendConcurrent]] protocol extended to a REPLACE-shaped
-    * mutation via a BUCKET-LEVEL conflict window (the Delta/Iceberg
-    * multi-writer story): two upserts into DISJOINT bucket sets both
-    * commit; overlapping ones abort-and-retry instead of corrupting
-    * each other's pre-image.
-    *
-    *  1. UNLOCKED: snapshot-at-start, bucket + validate the delta,
-    *     full-outer-merge it against the snapshot's TOUCHED buckets,
-    *     stage the replacement bucket files (CoW) and the changelog
-    *     images (classified against the same pre-image);
-    *  2. LOCKED (briefly — a manifest flip, not a write job):
-    *     re-validate against the LATEST state and commit.
-    *
-    * Commit-time conflict rules (all throw [[ConcurrentWriteException]]
-    * with the table unchanged and staging cleaned; retry the call):
-    *  - bucket count changed (a rebucket won the race);
-    *  - schema conflict (a staged column re-typed or dropped since);
-    *  - TOUCHED-BUCKET overlap: any touched bucket whose manifest
-    *    window (file set OR delete-vector set) changed since the start
-    *    snapshot — the staged merge read a pre-image that is no longer
-    *    the truth. Disjoint-bucket writers never trip this: their
-    *    buckets carry over untouched through each other's commits, so
-    *    N upsert jobs into N key ranges overlap their merge work and
-    *    serialize only on the flip.
-    *
-    * Versus [[appendConcurrent]] the window is per-BUCKET, not per-KEY:
-    * an upsert rewrites whole buckets, so a same-bucket concurrent
-    * write invalidates the staged output even when the KEYS are
-    * disjoint — the bucket window is exactly the granularity the
-    * commit replaces. Plain upserts only (partial-column semantics
-    * included); merge feeds and deletes keep the locked path.
-    * Auto-index tables refuse (same contract as [[upsert]]). */
-  def upsertConcurrent(df: DataFrame, warehouse0: String, tableName: String,
-                       addNewColumns: Boolean = false,
-                       validate: Boolean = true,
-                       schema: Option[String] = None,
-                       changelog: Boolean = false,
-                       commitWaitMs: Long = 60000L): Unit = {
-    val spark = df.sparkSession
-    val wh = schemaDir(warehouse0, schema)
-    val dir = tableDir(wh, tableName)
-    if (!TableMeta.exists(spark, dir))
-      throw new StoreException(
-        s"upsertConcurrent: table $tableName does not exist " +
-        "(create it with toSql first — creation must arbitrate under the lock)")
-    val naive = df.schema.fields.filter(_.dataType == TimestampNTZType)
-    if (naive.nonEmpty)
-      throw new StoreException(
-        s"Column(s) ${naive.map(_.name).mkString(", ")} timezone must be set " +
-        "(naive TimestampNTZ rejected, as in toSql strictUtc)")
-    val cleaned = df.columns.foldLeft(df) { (d, c) =>
-      val cc = Names.cleanName(c)
-      if (cc == c) d else d.withColumnRenamed(c, cc)
-    }
-    val data = dataDir(wh, tableName)
-    val meta0 = TableMeta.read(spark, dir)
-    if (meta0.autoIndex)
-      throw new StoreException(
-        "Cannot upsert into a table with an automatically generated index (reference: sql.py:177)")
-    val base0 = Manifest.current(spark, dir)
-    val wantChangelog = changelog || meta0.changelog
-    // partial-column contract: only columns PRESENT in the incoming
-    // frame overwrite; the rest keep stored values (reference
-    // sql.py:299) — captured before align pads the schema
-    val incomingCols = cleaned.columns.toSet
-    val (aligned, evolved) = align(cleaned, meta0, addNewColumns)
-    val newB = withBucket(aligned, meta0.pk, base0.buckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val f = fs(spark, dir)
-    try {
-      enforceChecks(newB, meta0.checks, "upsertConcurrent")
-      val touched = validateAndTouched(newB, meta0.pk, validate)
-      val oldTouched = readRawWith(spark, wh, tableName,
-          meta0.copy(schema = evolved), base0)
-        .filter(col(BucketCol).isin(touched: _*))
-      val marked = newB.withColumn("_graft_new", lit(true))
-      val nonPk = evolved.fieldNames.filterNot(meta0.pk.contains)
-      val out = oldTouched.as("o")
-        .join(marked.as("n"), meta0.pk.toIndexedSeq, "full_outer")
-        .select(meta0.pk.map(col) ++ nonPk.map { c =>
-          val merged =
-            if (incomingCols.contains(c))
-              when(col("n._graft_new").isNotNull, col(s"n.$c"))
-                .otherwise(col(s"o.$c"))
-            else col(s"o.$c")
-          merged.as(c)
-        } :+ coalesce(col(s"n.$BucketCol"), col(s"o.$BucketCol"))
-          .as(BucketCol): _*)
-      // changelog images classified against the snapshot-at-start
-      // pre-image — valid at commit BECAUSE the touched-bucket window
-      // check proves that pre-image is still the live truth
-      def stageImages(): Path = {
-        val presentOld = col(s"o.$BucketCol").isNotNull
-        val valueCols = incomingCols.toSeq
-          .filterNot(meta0.pk.contains).filter(nonPk.contains).sorted
-        val changedCond = valueCols
-          .map(c => !(col(s"n.$c") <=> col(s"o.$c")))
-          .reduceOption(_ || _).getOrElse(lit(false))
-        val images = nonPk.toSeq.flatMap { c =>
-          val post =
-            if (incomingCols.contains(c)) col(s"n.$c") else col(s"o.$c")
-          Seq(col(s"o.$c").as(s"old_$c"), post.as(s"new_$c"))
-        }
-        val changes = marked.as("n")
-          .join(oldTouched.as("o"), meta0.pk.toIndexedSeq, "left")
-          .select(meta0.pk.map(col) ++ (
-            when(!presentOld, lit("insert"))
-              .when(changedCond, lit("update"))
-              .otherwise(lit("unchanged")).as("op") +: images): _*)
-        val p = new Path(dir, s".staging-changelog-${UUID.randomUUID()}")
-        changes.write.parquet(p.toString)
-        p
-      }
-      val clStaging: Option[Path] =
-        if (wantChangelog) Some(stageImages()) else None
-      var clLate: Option[Path] = None
-      val staging = s"$dir/.staging-upsertc-${UUID.randomUUID()}"
-      try {
-        // the expensive merge job — OUTSIDE the lock
-        toPhys(clusterByBucket(out, touched, meta0.pk), meta0)
-          .write.partitionBy(BucketCol).parquet(staging)
-        val preStats = stageFileStats(spark, f, staging,
-          statColsTypedOf(meta0))
-        UpsertConcurrentHooks.betweenPhases()
-
-        // ---------------- LOCKED: re-validate, commit ----------------
-        WriteLock.withLockWait(spark, dir, "upsertConcurrent(commit)",
-            commitWaitMs) {
-          val metaLatest = TableMeta.read(spark, dir)
-          val baseLatest = Manifest.current(spark, dir)
-          enforceChecks(newB,
-            metaLatest.checks -- meta0.checks.keySet,
-            "upsertConcurrent(commit)")
-          if (baseLatest.buckets != base0.buckets)
-            throw new ConcurrentWriteException(
-              s"bucket count changed ${base0.buckets} -> " +
-              s"${baseLatest.buckets} (concurrent rebucket); staged files " +
-              "use the old layout — retry the upsert")
-          val mergedSchema = mergeEvolved(evolved, meta0, metaLatest)
-          if (baseLatest.version != base0.version) {
-            def window(m: Manifest, b: Int): (Set[String], Set[String]) =
-              (m.files.getOrElse(b, Nil).map(_.name).toSet,
-                m.dvs.getOrElse(b, Nil).map(_.name).toSet)
-            val dirty = touched
-              .filter(b => window(base0, b) != window(baseLatest, b))
-            if (dirty.nonEmpty)
-              throw new ConcurrentWriteException(
-                s"bucket(s) ${dirty.sorted.take(5).mkString(", ")} changed " +
-                "since this upsert staged (concurrent mutation with an " +
-                "overlapping touched-bucket set); the staged merge read a " +
-                "stale pre-image — retry the upsert")
-          }
-          if (metaLatest.changelog && clStaging.isEmpty)
-            clLate = Some(stageImages())
-          commitStaged(spark, f, dir, data, staging, touched,
-            "upsertConcurrent", baseLatest, baseLatest.buckets,
-            metaLatest.copy(schema = mergedSchema),
-            preStats = Some(preStats))
-          (clStaging orElse clLate).foreach { src =>
-            commitChangelogBatch(f, "upsertConcurrent", src,
-              nextChangelogDst(f, dir))
-          }
-          val metaFinal = metaLatest.copy(schema = mergedSchema,
-            changelog = wantChangelog || metaLatest.changelog)
-          if (metaFinal != metaLatest) TableMeta.write(spark, dir, metaFinal)
-        }
-      } finally {
-        f.delete(new Path(staging), true)
-        (clStaging.toSeq ++ clLate.toSeq).foreach(p => f.delete(p, true))
-      }
-    } finally newB.unpersist()
-  }
-
   /** Test-only interleave seam: invoked between [[upsertConcurrent]]'s
-    * unlocked stage phase and its locked commit, so a spec can land an
-    * interfering mutation deterministically inside the window the
-    * bucket-level conflict check must catch (or, for a disjoint-bucket
-    * writer, must NOT catch). A no-op in production. */
+    * stage phase and its flip, so a spec can land an interfering
+    * mutation deterministically inside the window the bucket-level
+    * conflict check must catch (or, for a disjoint-bucket writer, must
+    * NOT catch). A no-op in production. */
   private[store] object UpsertConcurrentHooks {
     @volatile var betweenPhases: () => Unit = () => ()
   }
@@ -2254,38 +2057,371 @@ object KeyedTable {
     @volatile var betweenPhases: () => Unit = () => ()
   }
 
-  /** Predicate UPDATE without holding the write lock for the rewrite —
-    * the fourth face of the bucket-level optimistic protocol
-    * ([[upsertConcurrent]] / [[deleteConcurrent]] / [[mergeConcurrent]]):
-    * every row-mutating verb now has an optimistic twin. Same contract
-    * as [[update]]: `set` maps existing NON-PK columns to expressions
-    * over the row's CURRENT values (cast to the stored type), only
-    * matching buckets rewrite (CoW) or tombstone + re-append (MoR,
-    * [[DeleteMode]].Auto deciding from the same manifest arithmetic),
-    * CHECKs see the post-images, CDC logs update/unchanged rows with
-    * exact before/after images. Returns the matched-row count.
+  /** Marker column carried through a merge's delta: TRUE = this key's
+    * stored row is tombstoned (deleted if present, ignored if absent). */
+  private val MergeDelCol = "_graft_merge_del"
+
+  /** A merge feed: the tombstone flag FIRST (over the raw delta
+    * columns, so `deleteWhen` may name feed-only columns), then the
+    * identifier cleaning; [[upsertWith]] drops the feed-only columns. */
+  private def mergeFeed(df: DataFrame, deleteWhen: Column): DataFrame =
+    cleanColumns(df.withColumn(MergeDelCol, coalesce(deleteWhen, lit(false))))
+
+  /** The upsert and merge body behind [[toSql]]'s `how = Upsert` and
+    * [[merge]] (under [[Locked]]) and [[upsertConcurrent]] and
+    * [[mergeConcurrent]] (under [[Optimistic]]).
     *
-    * The probe, the staged rewrite (or DV positions + post-image
-    * files), and the CDC images run against the snapshot-at-start
-    * OUTSIDE the lock; the locked flip aborts on rebucket, ANY schema
-    * change, or a touched bucket whose file/DV window moved — the
-    * staged bucket images (and MoR position ordinals) are only valid
-    * against the exact pre-image they read. A backfill sweep
-    * partitioned by key range runs N update jobs that serialize only
-    * on manifest flips. */
-  def updateConcurrent(spark: SparkSession, warehouse0: String,
-                       tableName: String, where: Column,
-                       set: Map[String, Column],
+    * Upsert overwrites ONLY the columns present in the incoming frame
+    * (NULLs included); absent columns keep their stored values
+    * (reference sql.py:299; tests/test_sql.py:533). With `tombstoned`
+    * (merge) the frame carries [[MergeDelCol]]: a marked row DELETES
+    * its stored match; unmatched it is a no-op, or — under
+    * `deleteOnlyMatched`, SQL MERGE clause semantics — an ordinary
+    * insert candidate. Returns (inserted, updated, deleted) for a
+    * merge, (0, 0, 0) for an upsert.
+    *
+    *  1. PIN the meta and the manifest; a merge's `expectedVersion`
+    *     (the SQL MERGE routing read's snapshot) must be the pinned one.
+    *  2. STAGE against the pinned snapshot: validate the cached delta
+    *     (one fused job also yields the touched buckets — only those
+    *     are read or rewritten), CHECK the rows it writes, then either
+    *     rewrite the touched buckets by one full-outer merge
+    *     (copy-on-write) or — a merge under [[DeleteMode]] MergeOnRead,
+    *     or Auto below [[MorMaxFraction]] — tombstone the matched rows'
+    *     positions and append the delta's surviving images. The
+    *     changelog images (insert / update / unchanged / delete,
+    *     classified by one delta-sized join) stage alongside; the
+    *     staged footers' stats are collected.
+    *  3. FLIP, re-validating: a `strictVersion` merge aborts on ANY
+    *     movement (a full-snapshot sync must not miss an insert into an
+    *     untouched bucket); a rebucket, a re-typed or dropped staged
+    *     column, or a moved touched bucket ([[checkWindow]]) abort;
+    *     CHECKs registered since the pin are enforced.
+    *
+    * The merge counts cost a dedicated delta-sized join only under
+    * Auto, which needs the matched count before choosing the write
+    * path; under an explicit mode they ride the staging write as
+    * observe() metrics. Under [[Locked]] step 3's checks pass by
+    * construction; the labels are `upsert` / `merge`, and a merge's
+    * commit is recorded as `upsert`. */
+  private def upsertWith(policy: CommitPolicy, df0: DataFrame, wh: String,
+                         tableName: String, addNewColumns: Boolean,
+                         validate: Boolean, changelog: Boolean,
+                         tombstoned: Boolean, deleteOnlyMatched: Boolean,
+                         mode: DeleteMode, expectedVersion: Option[Long],
+                         strictVersion: Boolean): (Long, Long, Long) = {
+    val spark = df0.sparkSession
+    val verb = if (tombstoned) "merge" else "upsert"
+    val label = policy.label(verb)
+    val commitOp = if (policy == Locked) "upsert" else label
+    val dir = tableDir(wh, tableName)
+    val data = dataDir(wh, tableName)
+    val meta0 = TableMeta.read(spark, dir)
+    if (meta0.autoIndex)
+      throw new StoreException(
+        "Cannot upsert into a table with an automatically generated index (reference: sql.py:177)")
+    val base0 = Manifest.current(spark, dir)
+    // SQL MERGE routing guard: a partial clause shape pre-filters the
+    // feed against a PINNED snapshot's key set; once that is this
+    // call's snapshot, the window check at the flip covers every later
+    // movement (feed rows route by their own PK, whose bucket is by
+    // construction in the touched set)
+    expectedVersion.foreach { v =>
+      if (base0.version != v)
+        throw new ConcurrentWriteException(
+          s"$label into $tableName planned against snapshot $v " +
+          s"but the table is now at ${base0.version} (concurrent commit " +
+          "since the routing read); table unchanged — retry the merge")
+    }
+    val df =
+      if (!tombstoned) df0
+      else df0.select(df0.columns.filter(c => c == MergeDelCol ||
+        addNewColumns || meta0.schema.fieldNames.contains(c))
+        .map(col).toIndexedSeq: _*)
+    // table-property semantics: once ANY mutation has captured CDC the
+    // meta flag is set and every later mutation captures it too
+    val wantChangelog = changelog || meta0.changelog
+    val incomingCols = df.columns.toSet - MergeDelCol
+    val (aligned, evolved) = align(df, meta0, addNewColumns,
+      passthrough = if (tombstoned) Set(MergeDelCol) else Set.empty)
+    val newB = withBucket(aligned, meta0.pk, base0.buckets)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val f = fs(spark, dir)
+    val staging = s"$dir/.staging-$verb-${UUID.randomUUID()}"
+    val dvStaging = s"$dir/.staging-$verb-dv-${UUID.randomUUID()}"
+    val changes = new StagedChanges(spark, dir)
+    try {
+      val touched = validateAndTouched(newB, meta0.pk, validate)
+      // read with the evolved schema: old files yield NULL for new columns
+      val oldTouched = readRawWith(spark, wh, tableName,
+          meta0.copy(schema = evolved), base0)
+        .filter(col(BucketCol).isin(touched: _*))
+      val marked = newB.withColumn("_graft_new", lit(true))
+      val newRow = col("n._graft_new").isNotNull
+      // the target row exists (every join below aliases it "o")
+      val presentOld = col(s"o.$BucketCol").isNotNull
+      val del: Column = {
+        val flag =
+          if (tombstoned) coalesce(col(s"n.$MergeDelCol"), lit(false))
+          else lit(false)
+        if (deleteOnlyMatched) flag && presentOld else flag
+      }
+      // the rows this verb WRITES: tombstones remove rows and are
+      // exempt — except an unmatched one under deleteOnlyMatched, an
+      // insert candidate. The flip re-enforces new CHECKs over this
+      // same construction.
+      def checkRows: DataFrame =
+        if (!tombstoned) newB
+        else {
+          val keepRows = newB.filter(!coalesce(col(MergeDelCol), lit(false)))
+          if (!deleteOnlyMatched) keepRows
+          else keepRows.unionByName(
+            newB.filter(coalesce(col(MergeDelCol), lit(false)))
+              .join(oldTouched.select(meta0.pk.map(col): _*),
+                meta0.pk.toIndexedSeq, "left_anti"))
+        }
+      enforceChecks(checkRows, meta0.checks, label)
+      val nonPk = evolved.fieldNames.filterNot(meta0.pk.contains).toSeq
+      def post(c: String): Column =
+        if (incomingCols.contains(c))
+          when(newRow, col(s"n.$c")).otherwise(col(s"o.$c"))
+        else col(s"o.$c")
+      def images: DataFrame = {
+        val valueCols = incomingCols.toSeq
+          .filterNot(meta0.pk.contains).filter(nonPk.contains).sorted
+        val changedCond = valueCols
+          .map(c => !(col(s"n.$c") <=> col(s"o.$c")))
+          .reduceOption(_ || _).getOrElse(lit(false))
+        // a tombstoned match is a delete: post-image NULL
+        val cols = nonPk.flatMap { c =>
+          Seq(col(s"o.$c").as(s"old_$c"),
+            when(del, lit(null)).otherwise(post(c)).as(s"new_$c"))
+        }
+        marked.as("n")
+          .join(oldTouched.as("o"), meta0.pk.toIndexedSeq, "left")
+          // a tombstone for an ABSENT key changed nothing — no log row
+          .filter(!(del && !presentOld))
+          .select(meta0.pk.map(col) ++ (
+            when(del, lit("delete"))
+              .when(!presentOld, lit("insert"))
+              .when(changedCond, lit("update"))
+              .otherwise(lit("unchanged")).as("op") +: cols): _*)
+      }
+      val statAggs = Seq(
+        coalesce(sum(when(newRow && !del && !presentOld, 1L).otherwise(0L)), lit(0L)).as("ins"),
+        coalesce(sum(when(newRow && !del && presentOld, 1L).otherwise(0L)), lit(0L)).as("upd"),
+        coalesce(sum(when(del && presentOld, 1L).otherwise(0L)), lit(0L)).as("del"))
+      val statsEarly: Option[(Long, Long, Long)] =
+        if (tombstoned && mode == DeleteMode.Auto) {
+          val r = marked.as("n")
+            .join(oldTouched.as("o"), meta0.pk.toIndexedSeq, "left")
+            .agg(statAggs.head, statAggs.tail: _*).head()
+          Some((r.getLong(0), r.getLong(1), r.getLong(2)))
+        } else None
+      val statsObs =
+        if (tombstoned && statsEarly.isEmpty)
+          Some(org.apache.spark.sql.Observation())
+        else None
+      def observeStats(j: DataFrame): DataFrame =
+        statsObs.fold(j)(ob => j.observe(ob, statAggs.head, statAggs.tail: _*))
+      // merge-on-read: the matched rows — updates and tombstones —
+      // decompose into position deletes plus a delta-sized appended
+      // file; inserts are additive anyway
+      val mor = tombstoned && morDecision(base0, mode, touched,
+        statsEarly.map(s => s._2 + s._3).getOrElse(0L))
+      if (mor) {
+        // one LEFT join of the delta against the touched buckets'
+        // position-exposing read, persisted so the DV and post-image
+        // writes consume ONE compute of it
+        val oldPos = readRawPos(spark, wh, tableName,
+            meta0.copy(schema = evolved), base0, withPos = true)
+          .filter(col(BucketCol).isin(touched: _*))
+        val j = marked.as("n")
+          .join(oldPos.as("o"), meta0.pk.toIndexedSeq, "left")
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try inParallel(spark)(
+          if (wantChangelog) changes.stage(images),
+          {
+            observeStats(j).filter(presentOld)
+              .select(col(s"o.$BucketCol").as(BucketCol),
+                col(s"o.$FileCol").as("file"), col(s"o.$PosCol").as("pos"))
+              .transform(clusterByBucket(_, touched, Seq("file", "pos")))
+              .write.partitionBy(BucketCol).parquet(dvStaging)
+            toPhys(j.filter(!del)
+              .select(meta0.pk.map(col) ++ nonPk.map(c => post(c).as(c)) :+
+                col(s"n.$BucketCol").as(BucketCol): _*)
+              .transform(clusterByBucket(_, touched, meta0.pk)), meta0)
+              .write.partitionBy(BucketCol).parquet(staging)
+          })
+        finally j.unpersist()
+      } else {
+        // one full-outer merge per touched bucket: survivors keep old
+        // rows, matches take incoming values for incoming columns,
+        // inserts take incoming values, tombstoned matches drop out;
+        // the observe node sits before the tombstone filter so every
+        // counter sees every joined row
+        val out = observeStats(oldTouched.as("o")
+            .join(marked.as("n"), meta0.pk.toIndexedSeq, "full_outer"))
+          .filter(!del)
+          .select(meta0.pk.map(col) ++ nonPk.map(c => post(c).as(c)) :+
+            coalesce(col(s"n.$BucketCol"), col(s"o.$BucketCol")).as(BucketCol): _*)
+        inParallel(spark)(
+          if (wantChangelog) changes.stage(images),
+          toPhys(clusterByBucket(out, touched, meta0.pk), meta0)
+            .write.partitionBy(BucketCol).parquet(staging))
+      }
+      val preStats = stageFileStats(spark, f, staging, statColsTypedOf(meta0))
+      policy.betweenPhases(
+        if (tombstoned) MergeConcurrentHooks.betweenPhases
+        else UpsertConcurrentHooks.betweenPhases)
+
+      policy.exclusive(spark, dir, s"$label(commit)") {
+        val metaLatest = TableMeta.read(spark, dir)
+        val baseLatest = Manifest.current(spark, dir)
+        if (strictVersion && baseLatest.version != base0.version)
+          throw new ConcurrentWriteException(
+            s"table moved ${base0.version} -> ${baseLatest.version} " +
+            "while this merge staged and strict version enforcement is " +
+            "on (full-snapshot-sync merge); retry the merge")
+        checkBucketCount(base0, baseLatest, verb)
+        val mergedSchema = mergeEvolved(evolved, meta0, metaLatest)
+        checkWindow(base0, baseLatest, touched, verb, "merge")
+        // AFTER the window validation: a CHECK added meanwhile may
+        // reference a column this frame does not carry — a clean
+        // conflict (the retry re-stages against the evolved schema),
+        // never a raw AnalysisException
+        try enforceChecks(checkRows,
+          metaLatest.checks -- meta0.checks.keySet, s"$label(commit)")
+        catch {
+          case e: org.apache.spark.sql.AnalysisException =>
+            throw new ConcurrentWriteException(
+              s"a CHECK constraint added while this $verb staged " +
+              s"references column(s) this $verb's frame does not carry " +
+              s"(concurrent schema change): ${e.getMessage}; retry the " +
+              verb)
+        }
+        changes.stageLate(metaLatest.changelog, images)
+        val metaCommit = metaLatest.copy(schema = mergedSchema)
+        if (mor)
+          commitStagedMorMut(spark, f, dir, data, staging, dvStaging,
+            touched, commitOp, baseLatest, metaCommit, streamEpoch = None,
+            preStats = preStats)
+        else
+          // removeMissing on a merge: a touched bucket whose rows ALL
+          // tombstoned has no staged replacement and leaves the snapshot
+          commitStaged(spark, f, dir, data, staging, touched, commitOp,
+            baseLatest, baseLatest.buckets, metaCommit,
+            removeMissing = tombstoned, preStats = preStats)
+        changes.publish(f, commitOp)
+        val metaFinal = metaCommit.copy(
+          changelog = wantChangelog || metaLatest.changelog)
+        if (metaFinal != metaLatest) TableMeta.write(spark, dir, metaFinal)
+      }
+      if (!tombstoned) (0L, 0L, 0L)
+      else statsEarly.getOrElse {
+        val m = statsObs.get.get
+        (m("ins").asInstanceOf[Long], m("upd").asInstanceOf[Long],
+          m("del").asInstanceOf[Long])
+      }
+    } finally {
+      f.delete(new Path(staging), true)
+      f.delete(new Path(dvStaging), true)
+      changes.discard(f)
+      newB.unpersist()
+    }
+  }
+
+  /** OPTIMISTIC upsert ([[upsertWith]] under [[Optimistic]]): stages
+    * the bucket rewrite unlocked and takes the write lock only for the
+    * flip, so N upsert jobs into N key ranges overlap their merge work.
+    * Same contract as [[toSql]]'s upsert, partial-column semantics
+    * included; the table must exist. Throws
+    * [[ConcurrentWriteException]] (table unchanged; retry) on a
+    * concurrent rebucket, a re-typed or dropped staged column, or a
+    * commit since the pin into any bucket this upsert touches. */
+  def upsertConcurrent(df: DataFrame, warehouse0: String, tableName: String,
+                       addNewColumns: Boolean = false,
+                       validate: Boolean = true,
                        schema: Option[String] = None,
                        changelog: Boolean = false,
-                       mode: DeleteMode = DeleteMode.Auto,
-                       commitWaitMs: Long = 60000L): Long = {
-    require(set.nonEmpty, "update needs at least one SET column")
-    val warehouse = schemaDir(warehouse0, schema)
-    val dir = tableDir(warehouse, tableName)
-    if (!TableMeta.exists(spark, dir))
-      throw new StoreException(
-        s"updateConcurrent: table $tableName does not exist")
+                       commitWaitMs: Long = 60000L): Unit = {
+    val wh = schemaDir(warehouse0, schema)
+    requireTable(df.sparkSession, tableDir(wh, tableName),
+      s"upsertConcurrent: table $tableName does not exist " +
+      "(create it with toSql first — creation must arbitrate under the lock)")
+    rejectNaive(df, OptimisticUtcHint)
+    upsertWith(Optimistic(commitWaitMs), cleanColumns(df), wh, tableName,
+      addNewColumns, validate, changelog, tombstoned = false,
+      deleteOnlyMatched = false, DeleteMode.CopyOnWrite,
+      expectedVersion = None, strictVersion = false)
+    ()
+  }
+
+  /** OPTIMISTIC merge ([[upsertWith]] under [[Optimistic]]): same
+    * contract as [[merge]], always copy-on-write (a change feed large
+    * enough to want the optimistic path is usually past
+    * [[MorMaxFraction]] anyway). `strictVersion` aborts the flip on ANY
+    * commit since the pin, not only on touched buckets — for shapes
+    * that read the whole snapshot (SQL `WHEN NOT MATCHED BY SOURCE`).
+    * Throws [[ConcurrentWriteException]] (table unchanged; retry) like
+    * [[upsertConcurrent]]. Returns (inserted, updated, deleted). */
+  def mergeConcurrent(df: DataFrame, warehouse0: String, tableName: String,
+                      deleteWhen: Column,
+                      schema: Option[String] = None,
+                      addNewColumns: Boolean = false,
+                      validate: Boolean = true,
+                      changelog: Boolean = false,
+                      strictUtc: Boolean = true,
+                      deleteOnlyMatched: Boolean = false,
+                      commitWaitMs: Long = 60000L,
+                      expectedVersion: Option[Long] = None,
+                      strictVersion: Boolean = false): (Long, Long, Long) = {
+    val wh = schemaDir(warehouse0, schema)
+    if (strictUtc) rejectNaive(df, OptimisticUtcHint)
+    requireTable(df.sparkSession, tableDir(wh, tableName),
+      s"mergeConcurrent target $tableName does not exist (create it with toSql first)")
+    upsertWith(Optimistic(commitWaitMs), mergeFeed(df, deleteWhen), wh,
+      tableName, addNewColumns, validate, changelog, tombstoned = true,
+      deleteOnlyMatched, DeleteMode.CopyOnWrite, expectedVersion,
+      strictVersion)
+  }
+
+  /** A no-match update or delete that asked for `changelog` still arms
+    * table-property CDC for later writers. */
+  private def armChangelog(policy: CommitPolicy, spark: SparkSession,
+                           dir: String, op: String): Unit =
+    policy.exclusive(spark, dir, op) {
+      val m = TableMeta.read(spark, dir)
+      if (!m.changelog) TableMeta.write(spark, dir, m.copy(changelog = true))
+    }
+
+  /** The predicate-update body behind [[update]] (under [[Locked]]) and
+    * [[updateConcurrent]] (under [[Optimistic]]).
+    *
+    *  1. PIN the meta and the manifest.
+    *  2. STAGE against the pinned snapshot: one probe job counts the
+    *     matches per bucket (≤ buckets rows); CHECKs see every matched
+    *     row's post-image; then either the touched buckets are
+    *     rewritten (copy-on-write) or — [[DeleteMode]] MergeOnRead, or
+    *     Auto below [[MorMaxFraction]] — the matched rows' positions
+    *     are tombstoned and their post-images appended, moving
+    *     |matches| rows, never the buckets. The update / unchanged
+    *     images stage alongside; the staged footers' stats are
+    *     collected.
+    *  3. FLIP, re-validating: a rebucket, ANY schema change (the
+    *     staged bucket images use the old schema) or a moved touched
+    *     bucket ([[checkWindow]]) abort; CHECKs registered since the
+    *     pin are enforced over the post-images.
+    *
+    * Under [[Locked]] step 3's checks pass by construction and the
+    * labels are `update`. Returns the matched-row count. */
+  private def updateWith(policy: CommitPolicy, spark: SparkSession,
+                         wh: String, tableName: String, where: Column,
+                         set: Map[String, Column], changelog: Boolean,
+                         mode: DeleteMode): Long = {
+    val label = policy.label("update")
+    val dir = tableDir(wh, tableName)
+    val data = dataDir(wh, tableName)
     val meta0 = TableMeta.read(spark, dir)
     set.keys.foreach { c =>
       if (!meta0.schema.fieldNames.contains(c))
@@ -2298,8 +2434,8 @@ object KeyedTable {
     }
     val base0 = Manifest.current(spark, dir)
     val cdc = changelog || meta0.changelog
-    val data = dataDir(warehouse, tableName)
-    val raw = readRawWith(spark, warehouse, tableName, meta0, base0)
+    val raw = readRawWith(spark, wh, tableName, meta0, base0)
+    // NULL predicate rows are NOT matches (kept unchanged)
     val matched = coalesce(where, lit(false))
     val probe = raw.filter(matched).groupBy(col(BucketCol))
       .agg(count(lit(1)).as("n")).collect()
@@ -2307,50 +2443,41 @@ object KeyedTable {
     val nMatched = probe.map(_.getLong(1)).sum
     if (touched.isEmpty) {
       if (cdc && !meta0.changelog)
-        WriteLock.withLockWait(spark, dir, "updateConcurrent(cdc-flag)",
-            commitWaitMs) {
-          val m = TableMeta.read(spark, dir)
-          if (!m.changelog) TableMeta.write(spark, dir, m.copy(changelog = true))
-        }
+        armChangelog(policy, spark, dir, s"$label(cdc-flag)")
       return 0L
     }
     val f = fs(spark, dir)
+    // the typed post-image of column c on a matched row
     def newVal(c: String): Column =
       set.get(c).map(_.cast(meta0.schema(c).dataType)).getOrElse(col(c))
-    // the check sees the POST-image of every matched row, before staging
-    enforceChecks(
-      raw.filter(matched).select(meta0.schema.fieldNames.toSeq
-        .map(c => newVal(c).as(c)): _*),
-      meta0.checks, "updateConcurrent")
-    def stageImages(): Path = {
+    def postImages: DataFrame = raw.filter(matched)
+      .select(meta0.schema.fieldNames.toSeq.map(c => newVal(c).as(c)): _*)
+    enforceChecks(postImages, meta0.checks, label)
+    val changes = new StagedChanges(spark, dir)
+    def images: DataFrame = {
       val nonPk = meta0.schema.fieldNames.filterNot(meta0.pk.contains).toSeq
       val changedCond = set.keys.toSeq.sorted
         .map(c => !(newVal(c) <=> col(c)))
         .reduceOption(_ || _).getOrElse(lit(false))
-      val images = nonPk.flatMap { c =>
+      val cols = nonPk.flatMap { c =>
         Seq(col(c).as(s"old_$c"), newVal(c).as(s"new_$c"))
       }
-      val changes = raw.filter(matched)
+      raw.filter(matched)
         .select(meta0.pk.map(col) ++ (
           when(changedCond, lit("update"))
-            .otherwise(lit("unchanged")).as("op") +: images): _*)
-      val p = new Path(dir, s".staging-changelog-${UUID.randomUUID()}")
-      changes.write.parquet(p.toString)
-      p
+            .otherwise(lit("unchanged")).as("op") +: cols): _*)
     }
-    val clStaging: Option[Path] = if (cdc) Some(stageImages()) else None
-    var clLate: Option[Path] = None
     val mor = morDecision(base0, mode, touched, nMatched)
-    val staging = s"$dir/.staging-updatec-${UUID.randomUUID()}"
-    val dvStaging = s"$dir/.staging-updatec-dv-${UUID.randomUUID()}"
+    val staging = s"$dir/.staging-update-${UUID.randomUUID()}"
+    val dvStaging = s"$dir/.staging-update-dv-${UUID.randomUUID()}"
     try {
-      // the expensive rewrite job(s) — OUTSIDE the lock
       if (mor) {
-        val posFrame = readRawPos(spark, warehouse, tableName, meta0,
+        // one read of the matched set feeds both staged writes
+        val posFrame = readRawPos(spark, wh, tableName, meta0,
             base0, withPos = true)
           .filter(matched)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
+        try inParallel(spark)(if (cdc) changes.stage(images), {
           posFrame
             .select(col(BucketCol), col(FileCol).as("file"),
               col(PosCol).as("pos"))
@@ -2362,79 +2489,50 @@ object KeyedTable {
             .transform(clusterByBucket(_, touched, meta0.pk)),
             meta0)
             .write.partitionBy(BucketCol).parquet(staging)
-        } finally posFrame.unpersist()
+        })
+        finally posFrame.unpersist()
       } else {
         val rewritten = meta0.schema.fieldNames.toSeq.map { c =>
           (if (set.contains(c)) when(matched, newVal(c)).otherwise(col(c))
            else col(c)).as(c)
         } :+ col(BucketCol)
-        toPhys(raw.filter(col(BucketCol).isin(touched: _*))
-          .select(rewritten: _*)
-          .transform(clusterByBucket(_, touched, meta0.pk)),
-          meta0)
-          .write.partitionBy(BucketCol).parquet(staging)
+        inParallel(spark)(if (cdc) changes.stage(images),
+          toPhys(raw.filter(col(BucketCol).isin(touched: _*))
+            .select(rewritten: _*)
+            .transform(clusterByBucket(_, touched, meta0.pk)),
+            meta0)
+            .write.partitionBy(BucketCol).parquet(staging))
       }
-      // post-image staging has the same bucket layout in BOTH modes —
-      // pre-collect its footer stats outside the lock either way
+      // post-image staging has the same bucket layout in BOTH modes
       val preStats = stageFileStats(spark, f, staging,
         statColsTypedOf(meta0))
-      UpdateConcurrentHooks.betweenPhases()
+      policy.betweenPhases(UpdateConcurrentHooks.betweenPhases)
 
-      // ---------------- LOCKED: re-validate, commit ----------------
-      WriteLock.withLockWait(spark, dir, "updateConcurrent(commit)",
-          commitWaitMs) {
+      policy.exclusive(spark, dir, s"$label(commit)") {
         val metaLatest = TableMeta.read(spark, dir)
         val baseLatest = Manifest.current(spark, dir)
-        if (baseLatest.buckets != base0.buckets)
-          throw new ConcurrentWriteException(
-            s"bucket count changed ${base0.buckets} -> " +
-            s"${baseLatest.buckets} (concurrent rebucket); staged files " +
-            "use the old layout — retry the update")
+        checkBucketCount(base0, baseLatest, "update")
         if (metaLatest.schema != meta0.schema)
           throw new ConcurrentWriteException(
             "table schema changed while this update staged (the rewrite " +
             "republished bucket images under the old schema); retry the " +
             "update")
-        def window(m: Manifest, b: Int): (Set[String], Set[String]) =
-          (m.files.getOrElse(b, Nil).map(_.name).toSet,
-            m.dvs.getOrElse(b, Nil).map(_.name).toSet)
-        if (baseLatest.version != base0.version) {
-          val dirty = touched
-            .filter(b => window(base0, b) != window(baseLatest, b))
-          if (dirty.nonEmpty)
-            throw new ConcurrentWriteException(
-              s"bucket(s) ${dirty.sorted.take(5).mkString(", ")} changed " +
-              "since this update staged (concurrent mutation with an " +
-              "overlapping touched-bucket set); the staged rewrite read " +
-              "a stale pre-image — retry the update")
-        }
-        // a CHECK registered while this update staged lives in
-        // TableMeta, so neither the manifest window nor the schema
-        // check above would catch it — re-enforce the delta against
-        // the matched rows' POST-images. Runs AFTER the window/schema
-        // validation: with the schema proven unchanged, a new check can
-        // only reference columns this frame carries, so a clean
-        // constraint error (never a raw AnalysisException about a
-        // concurrently-added column) is what surfaces inside the lock.
-        enforceChecks(
-          raw.filter(matched).select(meta0.schema.fieldNames.toSeq
-            .map(c => newVal(c).as(c)): _*),
-          metaLatest.checks -- meta0.checks.keySet,
-          "updateConcurrent(commit)")
-        if (metaLatest.changelog && clStaging.isEmpty)
-          clLate = Some(stageImages())
+        checkWindow(base0, baseLatest, touched, "update", "rewrite")
+        // a CHECK registered meanwhile lives in TableMeta, which neither
+        // check above sees; with the schema proven unchanged it can only
+        // reference columns the post-images carry
+        enforceChecks(postImages, metaLatest.checks -- meta0.checks.keySet,
+          s"$label(commit)")
+        changes.stageLate(metaLatest.changelog, images)
         if (mor)
           commitStagedMorMut(spark, f, dir, data, staging, dvStaging,
-            touched, "updateConcurrent", baseLatest, metaLatest,
-            preStats = Some(preStats))
+            touched, label, baseLatest, metaLatest, streamEpoch = None,
+            preStats = preStats)
         else
-          commitStaged(spark, f, dir, data, staging, touched,
-            "updateConcurrent", baseLatest, baseLatest.buckets, metaLatest,
-            preStats = Some(preStats))
-        (clStaging orElse clLate).foreach { src =>
-          commitChangelogBatch(f, "updateConcurrent", src,
-            nextChangelogDst(f, dir))
-        }
+          commitStaged(spark, f, dir, data, staging, touched, label,
+            baseLatest, baseLatest.buckets, metaLatest,
+            preStats = preStats)
+        changes.publish(f, label)
         if (cdc && !metaLatest.changelog)
           TableMeta.write(spark, dir, metaLatest.copy(changelog = true))
       }
@@ -2442,679 +2540,161 @@ object KeyedTable {
     } finally {
       f.delete(new Path(staging), true)
       f.delete(new Path(dvStaging), true)
-      (clStaging.toSeq ++ clLate.toSeq).foreach(p => f.delete(p, true))
+      changes.discard(f)
     }
   }
 
-  /** MERGE (mixed insert/update/delete change feed) WITHOUT holding the
-    * write lock for the merge job — the third face of the bucket-level
-    * optimistic protocol ([[upsertConcurrent]], [[deleteConcurrent]]).
-    * Same contract as [[merge]]: `deleteWhen` rows tombstone their
-    * stored match (under `deleteOnlyMatched`, SQL MERGE semantics — an
-    * unmatched tombstone inserts instead of no-op'ing); everything
-    * else upserts with partial-column semantics. Returns (inserted,
-    * updated, deleted).
-    *
-    * The full-outer merge, the stats job, the CDC images, and the CoW
-    * rewrite all run against the snapshot-at-start OUTSIDE the lock;
-    * the locked flip re-validates the same window as
-    * [[upsertConcurrent]] (bucket count, schema, touched buckets'
-    * file+DV sets) and commits. CoW only: the MoR decomposition's
-    * position ordinals would also survive the window, but a change
-    * feed large enough to want the optimistic path is usually past
-    * [[MorMaxFraction]] anyway — explicit `DeleteMode` dialing stays
-    * on the locked [[merge]]. N change feeds into N key ranges overlap
-    * their merge work and serialize only on manifest flips. */
-  def mergeConcurrent(df: DataFrame, warehouse0: String, tableName: String,
-                      deleteWhen: Column,
-                      schema: Option[String] = None,
-                      addNewColumns: Boolean = false,
-                      validate: Boolean = true,
-                      changelog: Boolean = false,
-                      strictUtc: Boolean = true,
-                      deleteOnlyMatched: Boolean = false,
-                      commitWaitMs: Long = 60000L,
-                      expectedVersion: Option[Long] = None,
-                      strictVersion: Boolean = false): (Long, Long, Long) = {
-    val spark = df.sparkSession
-    val wh = schemaDir(warehouse0, schema)
-    val dir = tableDir(wh, tableName)
-    if (strictUtc) {
-      val naive = df.schema.fields.filter(_.dataType == TimestampNTZType)
-      if (naive.nonEmpty)
-        throw new StoreException(
-          s"Column(s) ${naive.map(_.name).mkString(", ")} timezone must be set " +
-          "(naive TimestampNTZ rejected, as in toSql strictUtc)")
-    }
-    if (!TableMeta.exists(spark, dir))
-      throw new StoreException(
-        s"mergeConcurrent target $tableName does not exist (create it with toSql first)")
-    // tombstone flag FIRST (over the raw delta columns), then the same
-    // identifier cleaning as merge; feed-only columns drop after
-    val flagged = df.withColumn(MergeDelCol, coalesce(deleteWhen, lit(false)))
-    val cleaned0 = df.columns.foldLeft(flagged) { (d, c) =>
-      val cc = Names.cleanName(c)
-      if (cc == c) d else d.withColumnRenamed(c, cc)
-    }
-    val meta0 = TableMeta.read(spark, dir)
-    if (meta0.autoIndex)
-      throw new StoreException(
-        "Cannot upsert into a table with an automatically generated index (reference: sql.py:177)")
-    val keep = cleaned0.columns.filter(c =>
-      c == MergeDelCol || addNewColumns || meta0.schema.fieldNames.contains(c))
-    val cleaned = cleaned0.select(keep.map(col).toIndexedSeq: _*)
-    val base0 = Manifest.current(spark, dir)
-    // SQL MERGE routing guard: a partial clause shape pre-filters the
-    // feed against a PINNED snapshot's key set before reaching here —
-    // if the table moved past that version before this call captured
-    // its own snapshot, the routing is stale and must abort (once
-    // base0 == pinned, the touched-bucket window check at the flip
-    // covers every later movement: feed rows route by their own PK,
-    // whose bucket is by construction in the touched set)
-    expectedVersion.foreach { v =>
-      if (base0.version != v)
-        throw new ConcurrentWriteException(
-          s"mergeConcurrent into $tableName planned against snapshot $v " +
-          s"but the table is now at ${base0.version} (concurrent commit " +
-          "since the routing read); table unchanged — retry the merge")
-    }
-    val wantChangelog = changelog || meta0.changelog
-    val incomingCols = cleaned.columns.toSet - MergeDelCol
-    val (aligned, evolved) = align(cleaned, meta0, addNewColumns,
-      passthrough = Set(MergeDelCol))
-    val data = dataDir(wh, tableName)
-    val newB = withBucket(aligned, meta0.pk, base0.buckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val f = fs(spark, dir)
-    try {
-      val touched = validateAndTouched(newB, meta0.pk, validate)
-      val oldTouched = readRawWith(spark, wh, tableName,
-          meta0.copy(schema = evolved), base0)
-        .filter(col(BucketCol).isin(touched: _*))
-      val marked = newB.withColumn("_graft_new", lit(true))
-      val presentOld = col(s"o.$BucketCol").isNotNull
-      val del: Column = {
-        val flag = coalesce(col(s"n.$MergeDelCol"), lit(false))
-        if (deleteOnlyMatched) flag && presentOld else flag
-      }
-      // checks see the incoming images; tombstones are deletes, exempt
-      // — except an UNMATCHED tombstone under deleteOnlyMatched, which
-      // is an insert candidate (same contract as [[upsert]]). ONE
-      // construction, reused verbatim by the commit-time re-enforcement
-      // of concurrently-added checks below — filtering out ALL
-      // tombstones there would let an unmatched-tombstone INSERT bypass
-      // a check registered while this merge staged.
-      def checkRows: DataFrame = {
-        val keepRows = newB.filter(!coalesce(col(MergeDelCol), lit(false)))
-        if (!deleteOnlyMatched) keepRows
-        else keepRows.unionByName(
-          newB.filter(coalesce(col(MergeDelCol), lit(false)))
-            .join(oldTouched.select(meta0.pk.map(col): _*),
-              meta0.pk.toIndexedSeq, "left_anti"))
-      }
-      enforceChecks(checkRows, meta0.checks, "mergeConcurrent")
-      val nonPk = evolved.fieldNames.filterNot(meta0.pk.contains)
-      val out = oldTouched.as("o")
-        .join(marked.as("n"), meta0.pk.toIndexedSeq, "full_outer")
-        .filter(!del)
-        .select(meta0.pk.map(col) ++ nonPk.map { c =>
-          val merged =
-            if (incomingCols.contains(c))
-              when(col("n._graft_new").isNotNull, col(s"n.$c"))
-                .otherwise(col(s"o.$c"))
-            else col(s"o.$c")
-          merged.as(c)
-        } :+ coalesce(col(s"n.$BucketCol"), col(s"o.$BucketCol"))
-          .as(BucketCol): _*)
-      def stageImages(): Path = {
-        val valueCols = incomingCols.toSeq
-          .filterNot(meta0.pk.contains).filter(nonPk.contains).sorted
-        val changedCond = valueCols
-          .map(c => !(col(s"n.$c") <=> col(s"o.$c")))
-          .reduceOption(_ || _).getOrElse(lit(false))
-        val images = nonPk.toSeq.flatMap { c =>
-          val post =
-            if (incomingCols.contains(c)) col(s"n.$c") else col(s"o.$c")
-          Seq(col(s"o.$c").as(s"old_$c"),
-            when(del, lit(null)).otherwise(post).as(s"new_$c"))
-        }
-        val changes = marked.as("n")
-          .join(oldTouched.as("o"), meta0.pk.toIndexedSeq, "left")
-          // a tombstone for an ABSENT key changed nothing — no log row
-          .filter(!(del && !presentOld))
-          .select(meta0.pk.map(col) ++ (
-            when(del, lit("delete"))
-              .when(!presentOld, lit("insert"))
-              .when(changedCond, lit("update"))
-              .otherwise(lit("unchanged")).as("op") +: images): _*)
-        val p = new Path(dir, s".staging-changelog-${UUID.randomUUID()}")
-        changes.write.parquet(p.toString)
-        p
-      }
-      val clStaging: Option[Path] =
-        if (wantChangelog) Some(stageImages()) else None
-      var clLate: Option[Path] = None
-      // merge reports what it did (one delta-sized job)
-      val stats: (Long, Long, Long) = {
-        val r = marked.as("n")
-          .join(oldTouched.as("o"), meta0.pk.toIndexedSeq, "left")
-          .agg(
-            coalesce(sum(when(!del && !presentOld, 1L).otherwise(0L)), lit(0L)),
-            coalesce(sum(when(!del && presentOld, 1L).otherwise(0L)), lit(0L)),
-            coalesce(sum(when(del && presentOld, 1L).otherwise(0L)), lit(0L)))
-          .head()
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }
-      val staging = s"$dir/.staging-mergec-${UUID.randomUUID()}"
-      try {
-        // the expensive merge job — OUTSIDE the lock
-        toPhys(clusterByBucket(out, touched, meta0.pk), meta0)
-          .write.partitionBy(BucketCol).parquet(staging)
-        val preStats = stageFileStats(spark, f, staging,
-          statColsTypedOf(meta0))
-        MergeConcurrentHooks.betweenPhases()
-
-        // ---------------- LOCKED: re-validate, commit ----------------
-        WriteLock.withLockWait(spark, dir, "mergeConcurrent(commit)",
-            commitWaitMs) {
-          val metaLatest = TableMeta.read(spark, dir)
-          val baseLatest = Manifest.current(spark, dir)
-          // strictVersion: ANY movement aborts (the locked path's
-          // contract) — for shapes whose semantics read the WHOLE
-          // snapshot (SQL `WHEN NOT MATCHED BY SOURCE` sync), where the
-          // touched-bucket window alone would let a concurrent insert
-          // into an untouched bucket survive a full-table sync
-          // (write-serializable, Delta's WriteSerializable anomaly)
-          if (strictVersion && baseLatest.version != base0.version)
-            throw new ConcurrentWriteException(
-              s"table moved ${base0.version} -> ${baseLatest.version} " +
-              "while this merge staged and strict version enforcement is " +
-              "on (full-snapshot-sync merge); retry the merge")
-          if (baseLatest.buckets != base0.buckets)
-            throw new ConcurrentWriteException(
-              s"bucket count changed ${base0.buckets} -> " +
-              s"${baseLatest.buckets} (concurrent rebucket); staged files " +
-              "use the old layout — retry the merge")
-          val mergedSchema = mergeEvolved(evolved, meta0, metaLatest)
-          if (baseLatest.version != base0.version) {
-            def window(m: Manifest, b: Int): (Set[String], Set[String]) =
-              (m.files.getOrElse(b, Nil).map(_.name).toSet,
-                m.dvs.getOrElse(b, Nil).map(_.name).toSet)
-            val dirty = touched
-              .filter(b => window(base0, b) != window(baseLatest, b))
-            if (dirty.nonEmpty)
-              throw new ConcurrentWriteException(
-                s"bucket(s) ${dirty.sorted.take(5).mkString(", ")} changed " +
-                "since this merge staged (concurrent mutation with an " +
-                "overlapping touched-bucket set); the staged merge read a " +
-                "stale pre-image — retry the merge")
-          }
-          // re-enforce checks added while this merge staged, AFTER the
-          // window validation. Merge legally evolves schema, so a new
-          // check may reference a column this feed does not carry —
-          // that surfaces as a clean conflict (retry re-stages against
-          // the evolved schema), never a raw AnalysisException.
-          try enforceChecks(checkRows,
-            metaLatest.checks -- meta0.checks.keySet,
-            "mergeConcurrent(commit)")
-          catch {
-            case e: org.apache.spark.sql.AnalysisException =>
-              throw new ConcurrentWriteException(
-                "a CHECK constraint added while this merge staged " +
-                "references column(s) this merge's frame does not carry " +
-                s"(concurrent schema change): ${e.getMessage}; retry the " +
-                "merge")
-          }
-          if (metaLatest.changelog && clStaging.isEmpty)
-            clLate = Some(stageImages())
-          // removeMissing: a touched bucket whose rows ALL tombstoned
-          // has no staged replacement and leaves the snapshot
-          commitStaged(spark, f, dir, data, staging, touched,
-            "mergeConcurrent", baseLatest, baseLatest.buckets,
-            metaLatest.copy(schema = mergedSchema), removeMissing = true,
-            preStats = Some(preStats))
-          (clStaging orElse clLate).foreach { src =>
-            commitChangelogBatch(f, "mergeConcurrent", src,
-              nextChangelogDst(f, dir))
-          }
-          val metaFinal = metaLatest.copy(schema = mergedSchema,
-            changelog = wantChangelog || metaLatest.changelog)
-          if (metaFinal != metaLatest) TableMeta.write(spark, dir, metaFinal)
-        }
-        stats
-      } finally {
-        f.delete(new Path(staging), true)
-        (clStaging.toSeq ++ clLate.toSeq).foreach(p => f.delete(p, true))
-      }
-    } finally newB.unpersist()
-  }
-
-  /** Predicate delete WITHOUT holding the write lock for the rewrite —
-    * [[upsertConcurrent]]'s bucket-level optimistic protocol applied
-    * to [[delete]]: the matched-bucket probe, the CoW survivor rewrite
-    * (or the MoR delete-vector staging — [[DeleteMode]].Auto decides
-    * from the same manifest arithmetic), and the CDC delete images all
-    * run against the snapshot-at-start OUTSIDE the lock; a brief
-    * locked flip re-validates and commits. Abort-and-retry
-    * ([[ConcurrentWriteException]], table unchanged, staging cleaned)
-    * when the manifest window shows a rebucket, ANY schema change (a
-    * full-bucket rewrite staged under the old schema must not publish
-    * over a new one), or a TOUCHED bucket whose file/delete-vector set
-    * changed — the staged survivors (or staged positions: MoR DV
-    * ordinals are only valid against the exact files they indexed)
-    * read a pre-image that is no longer the truth. Disjoint-bucket
-    * deletes and upserts interleave freely: a GDPR erasure sweep
-    * partitioned by key range runs N jobs that serialize only on
-    * manifest flips. Returns the number of deleted rows. */
-  def deleteConcurrent(spark: SparkSession, warehouse0: String,
+  /** OPTIMISTIC predicate update ([[updateWith]] under [[Optimistic]]):
+    * same contract as [[update]]; stages unlocked and takes the write
+    * lock only for the flip, so a backfill split by key range runs N
+    * update jobs that serialize only on manifest flips. Throws
+    * [[ConcurrentWriteException]] (table unchanged; retry) on a
+    * concurrent rebucket, ANY schema change, or a commit since the pin
+    * into a touched bucket. Returns the matched-row count. */
+  def updateConcurrent(spark: SparkSession, warehouse0: String,
                        tableName: String, where: Column,
+                       set: Map[String, Column],
                        schema: Option[String] = None,
                        changelog: Boolean = false,
                        mode: DeleteMode = DeleteMode.Auto,
                        commitWaitMs: Long = 60000L): Long = {
-    val warehouse = schemaDir(warehouse0, schema)
-    val dir = tableDir(warehouse, tableName)
-    if (!TableMeta.exists(spark, dir))
-      throw new StoreException(
-        s"deleteConcurrent: table $tableName does not exist")
+    require(set.nonEmpty, "update needs at least one SET column")
+    val wh = schemaDir(warehouse0, schema)
+    requireTable(spark, tableDir(wh, tableName),
+      s"updateConcurrent: table $tableName does not exist")
+    updateWith(Optimistic(commitWaitMs), spark, wh, tableName, where, set,
+      changelog, mode)
+  }
+
+  /** The predicate-delete body behind [[delete]] (under [[Locked]]) and
+    * [[deleteConcurrent]] (under [[Optimistic]]).
+    *
+    *  1. PIN the meta and the manifest.
+    *  2. STAGE against the pinned snapshot: one probe job counts the
+    *     matches per bucket (≤ buckets rows; a PK-pinning `where`
+    *     prunes its scan like a range read); then either the touched
+    *     buckets are rewritten without the matched rows
+    *     (copy-on-write — a bucket whose rows ALL match leaves the
+    *     snapshot) or — [[DeleteMode]] MergeOnRead, or Auto below
+    *     [[MorMaxFraction]] — only the matched rows' positions are
+    *     staged as per-bucket delete-vector sidecars
+    *     ([[commitStagedDvs]]), moving kilobytes, not buckets. The
+    *     delete images (pre-image in `old_*`, `new_*` NULL) stage
+    *     alongside.
+    *  3. FLIP, re-validating: a rebucket, ANY schema change or a moved
+    *     touched bucket ([[checkWindow]]) abort — the staged survivors,
+    *     or positions, read a pre-image that is no longer the truth.
+    *
+    * Under [[Locked]] step 3's checks pass by construction and the
+    * labels are `delete`. Returns the number of deleted rows. */
+  private def deleteWith(policy: CommitPolicy, spark: SparkSession,
+                         wh: String, tableName: String, where: Column,
+                         changelog: Boolean, mode: DeleteMode): Long = {
+    val label = policy.label("delete")
+    val dir = tableDir(wh, tableName)
+    val data = dataDir(wh, tableName)
     val meta0 = TableMeta.read(spark, dir)
     val base0 = Manifest.current(spark, dir)
+    // meta.changelog (table-property CDC) covers the paths that cannot
+    // express the flag — SQL `DELETE FROM graft.t`
     val cdc = changelog || meta0.changelog
-    val data = dataDir(warehouse, tableName)
-    val raw = readRawWith(spark, warehouse, tableName, meta0, base0)
+    val raw = readRawWith(spark, wh, tableName, meta0, base0)
     val probe = raw.filter(where).groupBy(col(BucketCol))
       .agg(count(lit(1)).as("n")).collect()
     val touched = probe.map(_.getInt(0)).toSeq
     val deleted = probe.map(_.getLong(1)).sum
     if (touched.isEmpty) {
-      // parity with [[delete]]: an explicit changelog request on a
-      // no-match delete still arms table-property CDC for later writers
       if (cdc && !meta0.changelog)
-        WriteLock.withLockWait(spark, dir, "deleteConcurrent(cdc-flag)",
-            commitWaitMs) {
-          val m = TableMeta.read(spark, dir)
-          if (!m.changelog) TableMeta.write(spark, dir, m.copy(changelog = true))
-        }
+        armChangelog(policy, spark, dir, s"$label(cdc-flag)")
       return 0L
     }
     val f = fs(spark, dir)
+    // strategy decision from manifest arithmetic alone (zero IO)
     val mor = morDecision(base0, mode, touched, deleted)
-    // CDC delete images against the snapshot-at-start pre-image —
-    // valid at commit BECAUSE the window check proves that pre-image
-    // is still the live truth
-    def stageImages(): Path = {
+    val changes = new StagedChanges(spark, dir)
+    def images: DataFrame = {
       val nonPk = meta0.schema.fieldNames.filterNot(meta0.pk.contains)
-      val images = nonPk.toSeq.flatMap { c =>
+      val cols = nonPk.toSeq.flatMap { c =>
         Seq(col(c).as(s"old_$c"),
           lit(null).cast(meta0.schema(c).dataType).as(s"new_$c"))
       }
-      val changes = raw.filter(where)
-        .select(meta0.pk.map(col) ++ (lit("delete").as("op") +: images): _*)
-      val p = new Path(dir, s".staging-changelog-${UUID.randomUUID()}")
-      changes.write.parquet(p.toString)
-      p
+      raw.filter(where)
+        .select(meta0.pk.map(col) ++ (lit("delete").as("op") +: cols): _*)
     }
-    val clStaging: Option[Path] = if (cdc) Some(stageImages()) else None
-    var clLate: Option[Path] = None
-    val staging = s"$dir/.staging-deletec-${UUID.randomUUID()}"
+    val staging = s"$dir/.staging-delete-${UUID.randomUUID()}"
     try {
-      // the expensive rewrite/position job — OUTSIDE the lock
       if (mor) {
-        readRawPos(spark, warehouse, tableName, meta0, base0,
-            withPos = true)
-          .filter(coalesce(where, lit(false)))
-          .select(col(BucketCol), col(FileCol).as("file"),
-            col(PosCol).as("pos"))
-          .transform(clusterByBucket(_, touched, Seq("file", "pos")))
-          .write.partitionBy(BucketCol).parquet(staging)
+        // positions sorted by (file, pos) per bucket; the scan
+        // re-applies existing DVs, so no position tombstones twice
+        inParallel(spark)(if (cdc) changes.stage(images),
+          readRawPos(spark, wh, tableName, meta0, base0, withPos = true)
+            .filter(coalesce(where, lit(false)))
+            .select(col(BucketCol), col(FileCol).as("file"),
+              col(PosCol).as("pos"))
+            .transform(clusterByBucket(_, touched, Seq("file", "pos")))
+            .write.partitionBy(BucketCol).parquet(staging))
       } else {
-        toPhys(raw.filter(col(BucketCol).isin(touched: _*))
-          .filter(!coalesce(where, lit(false)))
-          .transform(clusterByBucket(_, touched, meta0.pk)),
-          meta0)
-          .write.partitionBy(BucketCol).parquet(staging)
+        // NULL predicate rows are NOT matches — keep them (a bare
+        // !where would silently drop them)
+        inParallel(spark)(if (cdc) changes.stage(images),
+          toPhys(raw.filter(col(BucketCol).isin(touched: _*))
+            .filter(!coalesce(where, lit(false)))
+            .transform(clusterByBucket(_, touched, meta0.pk)),
+            meta0)
+            .write.partitionBy(BucketCol).parquet(staging))
       }
       val preStats =
         if (mor) Map.empty[(Int, String), FileFooter]
         else stageFileStats(spark, f, staging, statColsTypedOf(meta0))
-      DeleteConcurrentHooks.betweenPhases()
+      policy.betweenPhases(DeleteConcurrentHooks.betweenPhases)
 
-      // ---------------- LOCKED: re-validate, commit ----------------
-      WriteLock.withLockWait(spark, dir, "deleteConcurrent(commit)",
-          commitWaitMs) {
+      policy.exclusive(spark, dir, s"$label(commit)") {
         val metaLatest = TableMeta.read(spark, dir)
         val baseLatest = Manifest.current(spark, dir)
-        if (baseLatest.buckets != base0.buckets)
-          throw new ConcurrentWriteException(
-            s"bucket count changed ${base0.buckets} -> " +
-            s"${baseLatest.buckets} (concurrent rebucket); staged files " +
-            "use the old layout — retry the delete")
+        checkBucketCount(base0, baseLatest, "delete")
         if (metaLatest.schema != meta0.schema)
           throw new ConcurrentWriteException(
             "table schema changed while this delete staged (the CoW " +
             "rewrite republished whole buckets under the old schema); " +
             "retry the delete")
-        def window(m: Manifest, b: Int): (Set[String], Set[String]) =
-          (m.files.getOrElse(b, Nil).map(_.name).toSet,
-            m.dvs.getOrElse(b, Nil).map(_.name).toSet)
-        if (baseLatest.version != base0.version) {
-          val dirty = touched
-            .filter(b => window(base0, b) != window(baseLatest, b))
-          if (dirty.nonEmpty)
-            throw new ConcurrentWriteException(
-              s"bucket(s) ${dirty.sorted.take(5).mkString(", ")} changed " +
-              "since this delete staged (concurrent mutation with an " +
-              "overlapping touched-bucket set); the staged rewrite read " +
-              "a stale pre-image — retry the delete")
-        }
-        if (metaLatest.changelog && clStaging.isEmpty)
-          clLate = Some(stageImages())
+        checkWindow(base0, baseLatest, touched, "delete", "rewrite")
+        changes.stageLate(metaLatest.changelog, images)
         if (mor)
           commitStagedDvs(spark, f, dir, data, staging, touched, baseLatest,
-            op = "deleteConcurrent")
+            label)
         else
-          commitStaged(spark, f, dir, data, staging, touched,
-            "deleteConcurrent", baseLatest, baseLatest.buckets, metaLatest,
-            removeMissing = true, preStats = Some(preStats))
-        (clStaging orElse clLate).foreach { src =>
-          commitChangelogBatch(f, "deleteConcurrent", src,
-            nextChangelogDst(f, dir))
-        }
+          commitStaged(spark, f, dir, data, staging, touched, label,
+            baseLatest, baseLatest.buckets, metaLatest,
+            removeMissing = true, preStats = preStats)
+        changes.publish(f, label)
         if (cdc && !metaLatest.changelog)
           TableMeta.write(spark, dir, metaLatest.copy(changelog = true))
       }
       deleted
     } finally {
       f.delete(new Path(staging), true)
-      (clStaging.toSeq ++ clLate.toSeq).foreach(p => f.delete(p, true))
+      changes.discard(f)
     }
   }
 
-  /** Change-data-capture: with `changelog = true` an upsert also writes,
-    * per incoming row, one (pk…, op, old_<c>…, new_<c>…) record —
-    * op ∈ insert (key absent before) / update (key present, some
-    * INCOMING column's value changed, null-safe) / unchanged — plus,
-    * for every non-PK column `c` of the (evolved) table schema, the
-    * pre-image value `old_<c>` (NULL for inserts) and the post-image
-    * value `new_<c>` (the merged result: incoming value when `c` was
-    * present in the delta, stored value otherwise). The before/after
-    * images are what make the log CONSUMABLE: an incremental aggregate
-    * applies `f(new) − f(old)` per changed row without ever reading the
-    * table (see [[graft.operators.CdcConsumer]]).
-    *
-    * Commit protocol: the batch is MATERIALIZED to a `.staging-changelog-*`
-    * dir before the bucket swap (the classification must join the
-    * pre-image while it still exists) but only RENAMED into
-    * `_changelog/batch=<n>` after the swap commits — a failed upsert
-    * leaves no committed-looking batch recording changes that never
-    * landed. Batch numbers are monotonic under the write lock;
-    * [[readChangelog]] reads them back with the batch column.
-    * Cost: one extra join of the delta against the touched buckets —
-    * proportional to the delta, never the table. Downstream incremental
-    * pipelines (index maintenance, cache invalidation, derived-table
-    * refresh) consume the log instead of diffing 100 TB snapshots. */
-  /** Marker column carried through a merge's delta: TRUE = this key's
-    * stored row is tombstoned (deleted if present, ignored if absent). */
-  private val MergeDelCol = "_graft_merge_del"
-
-  /** `tombstoned = true` (the [[merge]] path): `df` carries
-    * [[MergeDelCol]]; marked rows DELETE their stored match instead of
-    * upserting. Returns (inserted, updated, deleted) — computed only on
-    * the merge path (one extra delta-sized job); (0,0,0) otherwise. */
-  /** `deleteOnlyMatched` (merge path only): SQL MERGE semantics for
-    * tombstones — a WHEN MATCHED DELETE can only ever apply to MATCHED
-    * rows, so an unmatched tombstone row is an ordinary insert
-    * candidate (it reached this commit because an INSERT clause
-    * selected it). The default (false) keeps the programmatic change-
-    * feed contract: an unmatched tombstone is a no-op. */
-  private def upsert(df: DataFrame, warehouse: String, table: String,
-                     addNewColumns: Boolean, validate: Boolean,
-                     changelog0: Boolean = false,
-                     tombstoned: Boolean = false,
-                     deleteOnlyMatched: Boolean = false,
-                     mode: DeleteMode = DeleteMode.CopyOnWrite): (Long, Long, Long) = {
-    val spark = df.sparkSession
-    val dir = tableDir(warehouse, table)
-    val meta = TableMeta.read(spark, dir)
-    // table-property semantics: once ANY mutation has captured CDC the
-    // meta flag is set and every later mutation captures it too — a
-    // consumer folding the log never misses a write that forgot the flag
-    val changelog = changelog0 || meta.changelog
-    if (meta.autoIndex)
-      throw new StoreException(
-        "Cannot upsert into a table with an automatically generated index (reference: sql.py:177)")
-
-    // Reference upsert overwrites ONLY the columns present in the
-    // incoming frame (including with NULLs/NaNs); columns absent from it
-    // keep their stored values (sql.py:299 "overwrites ALL VALUES that
-    // are present in source DataFrame"; tests/test_sql.py:533
-    // test_upsert_individual_values2 upserts a single column).
-    val incomingCols = df.columns.toSet - MergeDelCol
-    val (aligned, evolved) = align(df, meta, addNewColumns,
-      passthrough = if (tombstoned) Set(MergeDelCol) else Set.empty)
-
-    val data = dataDir(warehouse, table)
-    val base = Manifest.current(spark, dir)
-    val newB = withBucket(aligned, meta.pk, base.buckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // validate off the cache — one computation of the delta pipeline;
-      // the same fused job returns the touched buckets (only those are
-      // read or rewritten)
-      val touched = validateAndTouched(newB, meta.pk, validate)
-      // read with the evolved schema: old files yield NULL for new columns
-      val oldTouched = readRawWith(spark, warehouse, table,
-          meta.copy(schema = evolved), base)
-        .filter(col(BucketCol).isin(touched: _*))
-      // checks see the incoming images; merge tombstones are DELETES,
-      // exempt by construction (they remove rows, not write them) —
-      // except under deleteOnlyMatched, where an UNMATCHED tombstone is
-      // an insert candidate and must pass like any other written row
-      enforceChecks(
-        if (!tombstoned) newB
-        else {
-          val keep = newB.filter(!coalesce(col(MergeDelCol), lit(false)))
-          if (!deleteOnlyMatched) keep
-          else keep.unionByName(
-            newB.filter(coalesce(col(MergeDelCol), lit(false)))
-              .join(oldTouched.select(meta.pk.map(col): _*),
-                meta.pk.toIndexedSeq, "left_anti"))
-        },
-        meta.checks, if (tombstoned) "merge" else "upsert")
-      // One full-outer merge per touched bucket: survivors keep old rows,
-      // matches take incoming values for incoming columns (old otherwise),
-      // inserts take incoming values; merge's tombstoned matches drop
-      // out. Single shuffle, no union.
-      val marked = newB.withColumn("_graft_new", lit(true))
-      // the target row exists (both join shapes below alias it "o")
-      val presentOld = col(s"o.$BucketCol").isNotNull
-      // incoming row is a tombstone (merge path; never-true otherwise);
-      // under deleteOnlyMatched a tombstone acts only on a MATCHED key —
-      // unmatched it degrades to an ordinary insert (SQL MERGE clauses)
-      val del: Column = {
-        val flag =
-          if (tombstoned) coalesce(col(s"n.$MergeDelCol"), lit(false))
-          else lit(false)
-        if (deleteOnlyMatched) flag && presentOld else flag
-      }
-      val nonPk = evolved.fieldNames.filterNot(meta.pk.contains)
-      val out = oldTouched.as("o")
-        .join(marked.as("n"), meta.pk.toIndexedSeq, "full_outer")
-        .filter(!del)
-        .select(meta.pk.map(col) ++ nonPk.map { c =>
-          val merged =
-            if (incomingCols.contains(c))
-              when(col("n._graft_new").isNotNull, col(s"n.$c")).otherwise(col(s"o.$c"))
-            else col(s"o.$c")
-          merged.as(c)
-        } :+ coalesce(col(s"n.$BucketCol"), col(s"o.$BucketCol")).as(BucketCol): _*)
-
-      // Changelog batch: materialized to staging BEFORE the swap (the
-      // classification join needs the pre-image), committed by rename
-      // only AFTER the swap — an upsert that fails mid-commit leaves no
-      // batch directory claiming changes that never landed. The staging
-      // job itself is INDEPENDENT of the data staging write (both read
-      // the live snapshot + the cached delta), so the two writes run
-      // concurrently below (guide §2.6).
-      def stageChangelog(): Option[(Path, Path)] = if (!changelog) None else {
-        val valueCols = incomingCols.toSeq.filterNot(meta.pk.contains).sorted
-        val changedCond = valueCols
-          .map(c => !(col(s"n.$c") <=> col(s"o.$c")))
-          .reduceOption(_ || _).getOrElse(lit(false))
-        val images = nonPk.toSeq.flatMap { c =>
-          val post = if (incomingCols.contains(c)) col(s"n.$c") else col(s"o.$c")
-          // a tombstoned match is a delete: post-image NULL
-          Seq(col(s"o.$c").as(s"old_$c"),
-            when(del, lit(null)).otherwise(post).as(s"new_$c"))
-        }
-        val changes = marked.as("n")
-          .join(oldTouched.as("o"), meta.pk.toIndexedSeq, "left")
-          // a tombstone for an ABSENT key changed nothing — no log row
-          .filter(!(del && !presentOld))
-          .select(meta.pk.map(col) ++ (
-            when(del, lit("delete"))
-              .when(!presentOld, lit("insert"))
-              .when(changedCond, lit("update"))
-              .otherwise(lit("unchanged")).as("op") +: images): _*)
-        Some(stageChangelogBatch(spark, dir, changes))
-      }
-
-      // merge reports what it did. A DEDICATED delta-sized join job is
-      // paid only when the Auto merge-on-read decision needs the
-      // matched count BEFORE the write path is chosen; under an
-      // explicit mode the same three counters ride the staging write
-      // as observe() metrics — one fewer join of the touched buckets.
-      val newRow = col("n._graft_new").isNotNull
-      val statsEarly: Option[(Long, Long, Long)] =
-        if (tombstoned && mode == DeleteMode.Auto) {
-          val r = marked.as("n")
-            .join(oldTouched.as("o"), meta.pk.toIndexedSeq, "left")
-            .agg(
-              coalesce(sum(when(!del && !presentOld, 1L).otherwise(0L)), lit(0L)),
-              coalesce(sum(when(!del && presentOld, 1L).otherwise(0L)), lit(0L)),
-              coalesce(sum(when(del && presentOld, 1L).otherwise(0L)), lit(0L)))
-            .head()
-          Some((r.getLong(0), r.getLong(1), r.getLong(2)))
-        } else None
-      val statsObs: Option[org.apache.spark.sql.Observation] =
-        if (tombstoned && statsEarly.isEmpty)
-          Some(org.apache.spark.sql.Observation())
-        else None
-      def observeStats(j: DataFrame): DataFrame = statsObs match {
-        case None => j
-        case Some(ob) => j.observe(ob,
-          coalesce(sum(when(newRow && !del && !presentOld, 1L).otherwise(0L)), lit(0L)).as("ins"),
-          coalesce(sum(when(newRow && !del && presentOld, 1L).otherwise(0L)), lit(0L)).as("upd"),
-          coalesce(sum(when(del && presentOld, 1L).otherwise(0L)), lit(0L)).as("del"))
-      }
-
-      // merge-on-read eligibility (merge path only): the matched rows
-      // — updates and tombstones — decompose into position deletes +
-      // a delta-sized appended file; inserts are additive anyway. The
-      // shared Auto arithmetic compares |updated + deleted| against
-      // the touched buckets' live rows.
-      val mor = tombstoned && morDecision(base, mode, touched,
-        statsEarly.map(s => s._2 + s._3).getOrElse(0L))
-
-      // Commit: write to staging, move the staged files in, flip the
-      // manifest — one atomic snapshot publish; readers of the
-      // previous snapshot are undisturbed.
-      val f = fs(spark, dir)
-      var clCommit: Option[(Path, Path)] = None
-      try {
-        if (mor) {
-          // delta-driven: one LEFT join of the (delta-sized) change
-          // feed against the touched buckets' position-exposing read —
-          // every matched old row's position tombstones; every
-          // surviving delta row (update post-image or insert) lands in
-          // a NEW file of its bucket. Untouched rows never move.
-          // The join output is delta-sized — persisted, so the DV and
-          // post-image writes both consume ONE compute of it instead
-          // of re-running the join per write (§5 reuse).
-          val oldPos = readRawPos(spark, warehouse, table,
-              meta.copy(schema = evolved), base, withPos = true)
-            .filter(col(BucketCol).isin(touched: _*))
-          val j = marked.as("n")
-            .join(oldPos.as("o"), meta.pk.toIndexedSeq, "left")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val dvStaging = s"$dir/.staging-merge-dv-${UUID.randomUUID()}"
-          val dataStaging = s"$dir/.staging-merge-${UUID.randomUUID()}"
-          try {
-            inParallel(spark)(
-              { clCommit = stageChangelog() },
-              {
-                observeStats(j).filter(presentOld)
-                  .select(col(s"o.$BucketCol").as(BucketCol),
-                    col(s"o.$FileCol").as("file"), col(s"o.$PosCol").as("pos"))
-                  .transform(clusterByBucket(_, touched, Seq("file", "pos")))
-                  .write.partitionBy(BucketCol).parquet(dvStaging)
-                toPhys(j.filter(!del)
-                  .select(meta.pk.map(col) ++ nonPk.toSeq.map { c =>
-                    (if (incomingCols.contains(c)) col(s"n.$c")
-                     else col(s"o.$c")).as(c)
-                  } :+ col(s"n.$BucketCol").as(BucketCol): _*)
-                  .transform(clusterByBucket(_, touched, meta.pk)),
-                  meta)
-                  .write.partitionBy(BucketCol).parquet(dataStaging)
-              })
-            commitStagedMorMut(spark, f, dir, data, dataStaging,
-              dvStaging, touched, "upsert", base, meta)
-          } finally {
-            j.unpersist()
-            f.delete(new Path(dvStaging), true)
-            f.delete(new Path(dataStaging), true)
-          }
-        } else {
-          val outObs =
-            if (statsObs.isEmpty) out
-            else {
-              // same projection/filter as `out`, with the observe node
-              // between the join and the tombstone filter so all three
-              // counters see every joined row
-              val joined = observeStats(
-                oldTouched.as("o").join(marked.as("n"), meta.pk.toIndexedSeq, "full_outer"))
-              joined.filter(!del)
-                .select(meta.pk.map(col) ++ nonPk.map { c =>
-                  val merged =
-                    if (incomingCols.contains(c))
-                      when(col("n._graft_new").isNotNull, col(s"n.$c")).otherwise(col(s"o.$c"))
-                    else col(s"o.$c")
-                  merged.as(c)
-                } :+ coalesce(col(s"n.$BucketCol"), col(s"o.$BucketCol")).as(BucketCol): _*)
-            }
-          val staging = s"$dir/.staging-${UUID.randomUUID()}"
-          try {
-            inParallel(spark)(
-              { clCommit = stageChangelog() },
-              toPhys(clusterByBucket(outObs, touched, meta.pk), meta)
-                .write.partitionBy(BucketCol).mode(SaveMode.Overwrite).parquet(staging))
-            // removeMissing on the merge path: a touched bucket whose rows
-            // ALL tombstoned has no staged replacement and leaves the
-            // snapshot (the delete semantics); plain upserts always stage
-            // every touched bucket
-            commitStaged(spark, f, dir, data, staging, touched, "upsert",
-              base, base.buckets, meta, removeMissing = tombstoned)
-          } finally f.delete(new Path(staging), true)
-        }
-        // data swap done — the changelog batch may now claim it happened
-        clCommit.foreach { case (src, dst) =>
-          commitChangelogBatch(f, "upsert", src, dst)
-        }
-      } finally
-        // no-op when the rename above committed it; removes the phantom
-        // batch when the staging write or the swap threw
-        clCommit.foreach { case (src, _) => f.delete(src, true) }
-      val meta2 = meta.copy(schema = evolved, changelog = changelog)
-      if (meta2 != meta) TableMeta.write(spark, dir, meta2)
-      val stats: (Long, Long, Long) =
-        if (!tombstoned) (0L, 0L, 0L)
-        else statsEarly.getOrElse {
-          val m = statsObs.get.get
-          (m("ins").asInstanceOf[Long], m("upd").asInstanceOf[Long],
-            m("del").asInstanceOf[Long])
-        }
-      stats
-    } finally newB.unpersist()
+  /** OPTIMISTIC predicate delete ([[deleteWith]] under [[Optimistic]]):
+    * same contract as [[delete]]; stages unlocked and takes the write
+    * lock only for the flip, so an erasure sweep split by key range
+    * runs N jobs that serialize only on manifest flips. Throws
+    * [[ConcurrentWriteException]] (table unchanged; retry) on a
+    * concurrent rebucket, ANY schema change, or a commit since the pin
+    * into a touched bucket. Returns the number of deleted rows. */
+  def deleteConcurrent(spark: SparkSession, warehouse0: String,
+                       tableName: String, where: Column,
+                       schema: Option[String] = None,
+                       changelog: Boolean = false,
+                       mode: DeleteMode = DeleteMode.Auto,
+                       commitWaitMs: Long = 60000L): Long = {
+    val wh = schemaDir(warehouse0, schema)
+    requireTable(spark, tableDir(wh, tableName),
+      s"deleteConcurrent: table $tableName does not exist")
+    deleteWith(Optimistic(commitWaitMs), spark, wh, tableName, where,
+      changelog, mode)
   }
 
   /** Per-bucket layout health from FOOTER metadata only — (bucket,
@@ -3295,18 +2875,12 @@ object KeyedTable {
       throw new ConcurrentWriteException(
         s"table schema changed while $op staged (the rewrite republished " +
         "whole buckets under the old schema) — re-staging")
-    if (baseLatest.version != base0.version) {
-      def window(m: Manifest, b: Int): (Set[String], Set[String]) =
-        (m.files.getOrElse(b, Nil).map(_.name).toSet,
-          m.dvs.getOrElse(b, Nil).map(_.name).toSet)
-      val dirty = touched
-        .filter(b => window(base0, b) != window(baseLatest, b))
-      if (dirty.nonEmpty)
-        throw new ConcurrentWriteException(
-          s"bucket(s) ${dirty.sorted.take(5).mkString(", ")} changed " +
-          s"since $op staged (concurrent mutation with an overlapping " +
-          "touched-bucket set) — re-staging")
-    }
+    val dirty = movedBuckets(base0, baseLatest, touched)
+    if (dirty.nonEmpty)
+      throw new ConcurrentWriteException(
+        s"bucket(s) ${dirty.sorted.take(5).mkString(", ")} changed " +
+        s"since $op staged (concurrent mutation with an overlapping " +
+        "touched-bucket set) — re-staging")
   }
 
   /** Compact buckets that have accumulated many small files (each
@@ -3373,7 +2947,7 @@ object KeyedTable {
             crowded, "compact")
           commitStaged(spark, f, dir, data, staging, crowded, "compact",
             baseLatest, baseLatest.buckets, metaLatest,
-            preStats = Some(preStats))
+            preStats = preStats)
         }
       } finally f.delete(new Path(staging), true)
       crowded.size
@@ -3614,7 +3188,7 @@ object KeyedTable {
               }
             commitStaged(spark, f, dir, data, staging, touched,
               "zorder", baseLatest, baseLatest.buckets, metaStat,
-              preStats = Some(preStats))
+              preStats = preStats)
             // full rewrite of every base0 bucket — and any bucket born
             // AFTER the drop was already written post-drop — so dropped
             // names are re-addable again (see dropColumns)
@@ -3626,260 +3200,43 @@ object KeyedTable {
     }
   }
 
-  /** #11q predicate delete: remove every row matching `where`, touching
-    * ONLY the buckets that contain a match, under the write lock with
-    * the manifest-flip commit protocol (readers never observe a half
-    * state). Two physical strategies ([[DeleteMode]]):
-    *
-    *  - **merge-on-read** (the small-delete path, chosen by Auto when
-    *    the matched set is ≤ [[MorMaxFraction]] of the touched buckets'
-    *    live rows): the matched rows' positions — `(file, row ordinal)`
-    *    via `_metadata.row_index` — are written as per-bucket DELETE
-    *    VECTOR parquet sidecars and committed in the manifest
-    *    ([[commitStagedDvs]]); no data file is rewritten, so a 1-row
-    *    GDPR erasure in a crowded bucket moves kilobytes, not the
-    *    bucket. Reads anti-join the DVs ([[readRawPos]] and the DSv2
-    *    scan's in-reader mask); the next rewriting commit of the
-    *    bucket (upsert/update/compact/zorder/rebucket/CoW delete)
-    *    materializes and drops them.
-    *  - **copy-on-write** (chosen by Auto for bulk deletes, or when
-    *    the table predates manifests): rewrite the touched buckets
-    *    without the matched rows — a bucket whose rows ALL match
-    *    simply leaves the snapshot.
-    *
-    * The touched-bucket probe is one aggregation bounded by the bucket
-    * count; when `where` pins the PK, stats prune its scan like a
-    * range read. Returns the number of rows deleted. */
+  /** #11q predicate delete: remove every row matching `where` (a NULL
+    * predicate is no match), rewriting or tombstoning ONLY the buckets
+    * that contain a match, in one manifest flip under the write lock —
+    * readers never observe a half state. `mode` picks the physical
+    * strategy ([[DeleteMode]]; [[deleteWith]] describes both).
+    * `changelog` (or the table property) logs one `delete` row per
+    * removed row. Returns the number of rows deleted. */
   def delete(spark: SparkSession, warehouse0: String, tableName: String,
              where: Column, schema: Option[String] = None,
              changelog: Boolean = false,
              mode: DeleteMode = DeleteMode.Auto): Long = {
-    val warehouse = schemaDir(warehouse0, schema)
-    val dir = tableDir(warehouse, tableName)
-    WriteLock.withLock(spark, dir, "delete") {
-      val meta = TableMeta.read(spark, dir)
-      // meta.changelog (table-property CDC) covers the paths that cannot
-      // express the flag — SQL `DELETE FROM graft.t` reaches here through
-      // KeyedTableSource.deleteWhere with the default
-      val cdc = changelog || meta.changelog
-      val base = Manifest.current(spark, dir)
-      val raw = readRawWith(spark, warehouse, tableName, meta, base)
-      // one job: matching-row count per touched bucket (≤ buckets rows)
-      val probe = raw.filter(where).groupBy(col(BucketCol))
-        .agg(count(lit(1)).as("n")).collect()
-      val touched = probe.map(_.getInt(0)).toSeq
-      val deleted = probe.map(_.getLong(1)).sum
-      // strategy decision from manifest arithmetic alone (zero IO)
-      val mor: Boolean =
-        morDecision(base, mode, touched, deleted)
-      if (touched.nonEmpty) {
-        val data = dataDir(warehouse, tableName)
-        val f = fs(spark, dir)
-        // CDC: deletes are changes too — without them a derived
-        // aggregate maintained from the log silently keeps vanished
-        // rows. One `delete` row per removed row, pre-image in old_*,
-        // new_* all NULL; same commit ordering as upsert's batches
-        // (staged on the pre-image, renamed in only after the data
-        // commit — a failed delete leaves no phantom batch).
-        // the changelog batch reads the same live snapshot the staging
-        // write does — the two jobs are independent and overlap (§2.6)
-        var clCommit: Option[(Path, Path)] = None
-        def stageCl(): Unit = if (cdc) {
-          val nonPk = meta.schema.fieldNames.filterNot(meta.pk.contains)
-          val images = nonPk.toSeq.flatMap { c =>
-            Seq(col(c).as(s"old_$c"),
-              lit(null).cast(meta.schema(c).dataType).as(s"new_$c"))
-          }
-          val changes = raw.filter(where)
-            .select(meta.pk.map(col) ++ (lit("delete").as("op") +: images): _*)
-          clCommit = Some(stageChangelogBatch(spark, dir, changes))
-        }
-        val staging = s"$dir/.staging-delete-${UUID.randomUUID()}"
-        try {
-          try {
-            if (mor) {
-              // merge-on-read: stage ONLY the matched rows' physical
-              // positions — one DV parquet per touched bucket, sorted
-              // by (file, pos) so the sidecar compresses and scans
-              // well. The scan re-applies existing DVs (readRawPos),
-              // so positions are never tombstoned twice.
-              inParallel(spark)({ stageCl() },
-                readRawPos(spark, warehouse, tableName, meta,
-                    base, withPos = true)
-                  .filter(coalesce(where, lit(false)))
-                  .select(col(BucketCol), col(FileCol).as("file"),
-                    col(PosCol).as("pos"))
-                  .transform(clusterByBucket(_, touched, Seq("file", "pos")))
-                  .write.partitionBy(BucketCol).parquet(staging))
-              commitStagedDvs(spark, f, dir, data, staging, touched, base)
-            } else {
-              // copy-on-write: NULL predicate rows are NOT matches —
-              // keep them (a bare !where would silently drop them)
-              inParallel(spark)({ stageCl() },
-                toPhys(raw.filter(col(BucketCol).isin(touched: _*))
-                  .filter(!coalesce(where, lit(false)))
-                  .transform(clusterByBucket(_, touched, meta.pk)),
-                  meta)
-                  .write.partitionBy(BucketCol).parquet(staging))
-              // removeMissing: a bucket whose rows ALL matched has no
-              // staged replacement — it leaves the new snapshot entirely
-              commitStaged(spark, f, dir, data, staging, touched, "delete",
-                base, base.buckets, meta, removeMissing = true)
-            }
-          } finally f.delete(new Path(staging), true)
-          clCommit.foreach { case (src, dst) =>
-            commitChangelogBatch(f, "delete", src, dst)
-          }
-        } finally clCommit.foreach { case (src, _) => f.delete(src, true) }
-      }
-      if (cdc && !meta.changelog)
-        TableMeta.write(spark, dir, meta.copy(changelog = true))
-      deleted
+    val wh = schemaDir(warehouse0, schema)
+    WriteLock.withLock(spark, tableDir(wh, tableName), "delete") {
+      deleteWith(Locked, spark, wh, tableName, where, changelog, mode)
     }
   }
 
-  /** #11w predicate update: set value columns to new expressions on every
-    * row matching `where`, rewriting ONLY the buckets that contain a
-    * match (the delete commit pattern: staging + one manifest flip under
-    * the write lock — readers of the previous snapshot are undisturbed).
-    * `set` maps existing NON-PK column names to expressions over the
-    * row's CURRENT values (`col("v") * 2` works); each is cast to the
-    * column's stored type, so the schema never drifts. PK columns are
-    * rejected — moving a key is a delete + insert (see [[merge]]).
-    * CDC (explicit flag or the table property) logs one
-    * `update`/`unchanged` row per MATCHED row with exact before/after
-    * images. Returns the number of matched rows.
-    *
-    * The ops story at 100 TB: a backfill or correction pinned by a PK
-    * range (or any predicate with a narrow bucket footprint) rewrites
-    * only its share of buckets — never the table — and the touched-
-    * bucket probe is one aggregation bounded by the bucket count.
-    * Reference concept: `df.loc[mask, col] = expr` applied to the
-    * stored table (pandabase's pandas-side mutation idiom made a store
-    * commit). */
-  /** `mode` ([[DeleteMode]], shared decision arithmetic with
-    * [[delete]]): merge-on-read UPDATE decomposes into a positional
-    * delete of the matched rows' OLD images plus an appended file of
-    * their POST-images — write cost ∝ |matches|, not touched-bucket
-    * bytes (the Iceberg-v2 model; Auto picks it while matches stay
-    * under [[MorMaxFraction]] of the touched buckets' live rows). */
+  /** #11w predicate update: set value columns to new expressions on
+    * every row matching `where` (a NULL predicate is no match), in one
+    * manifest flip under the write lock. `set` maps existing NON-PK
+    * columns to expressions over the row's CURRENT values (`col("v") *
+    * 2` works), each cast to the stored type so the schema never
+    * drifts; PK columns are rejected — a key move is a delete + insert
+    * (see [[merge]]). `mode` picks copy-on-write or merge-on-read
+    * ([[DeleteMode]]; see [[updateWith]]). CDC logs one `update` /
+    * `unchanged` row per matched row with exact before/after images.
+    * Returns the matched-row count. Reference concept: pandas'
+    * `df.loc[mask, col] = expr` applied to the stored table. */
   def update(spark: SparkSession, warehouse0: String, tableName: String,
              where: Column, set: Map[String, Column],
              schema: Option[String] = None,
              changelog: Boolean = false,
              mode: DeleteMode = DeleteMode.Auto): Long = {
     require(set.nonEmpty, "update needs at least one SET column")
-    val warehouse = schemaDir(warehouse0, schema)
-    val dir = tableDir(warehouse, tableName)
-    WriteLock.withLock(spark, dir, "update") {
-      val meta = TableMeta.read(spark, dir)
-      set.keys.foreach { c =>
-        if (!meta.schema.fieldNames.contains(c))
-          throw new StoreException(
-            s"update SET column $c not in table schema ${meta.schema.fieldNames.toSeq}")
-        if (meta.pk.contains(c))
-          throw new StoreException(
-            s"update cannot SET primary-key column $c (a key move is a " +
-            "delete + insert; use merge or delete/append)")
-      }
-      val cdc = changelog || meta.changelog
-      val base = Manifest.current(spark, dir)
-      val raw = readRawWith(spark, warehouse, tableName, meta, base)
-      // NULL predicate rows are NOT matches (kept unchanged)
-      val matched = coalesce(where, lit(false))
-      // one job: matching-row count per touched bucket (≤ buckets rows)
-      val probe = raw.filter(matched).groupBy(col(BucketCol))
-        .agg(count(lit(1)).as("n")).collect()
-      val touched = probe.map(_.getInt(0)).toSeq
-      val nMatched = probe.map(_.getLong(1)).sum
-      if (touched.nonEmpty) {
-        val data = dataDir(warehouse, tableName)
-        val f = fs(spark, dir)
-        // the typed post-image of column c on a matched row
-        def newVal(c: String): Column =
-          set.get(c).map(_.cast(meta.schema(c).dataType)).getOrElse(col(c))
-        // the changelog batch reads the same live pre-image the staging
-        // writes do — independent jobs, overlapped below (§2.6)
-        var clCommit: Option[(Path, Path)] = None
-        def stageCl(): Unit = if (cdc) {
-          val nonPk = meta.schema.fieldNames.filterNot(meta.pk.contains).toSeq
-          val changedCond = set.keys.toSeq.sorted
-            .map(c => !(newVal(c) <=> col(c)))
-            .reduceOption(_ || _).getOrElse(lit(false))
-          val images = nonPk.flatMap { c =>
-            Seq(col(c).as(s"old_$c"), newVal(c).as(s"new_$c"))
-          }
-          val changes = raw.filter(matched)
-            .select(meta.pk.map(col) ++ (
-              when(changedCond, lit("update"))
-                .otherwise(lit("unchanged")).as("op") +: images): _*)
-          clCommit = Some(stageChangelogBatch(spark, dir, changes))
-        }
-        // the check sees the POST-image of every matched row (one agg
-        // job bounded by the matched set), before anything stages
-        enforceChecks(
-          raw.filter(matched).select(meta.schema.fieldNames.toSeq
-            .map(c => newVal(c).as(c)): _*),
-          meta.checks, "update")
-        val mor = morDecision(base, mode, touched, nMatched)
-        try {
-          if (mor) {
-            // merge-on-read: tombstone the matched rows' positions and
-            // append their post-images — moves |matches| rows, never
-            // the buckets. One read of the matched set feeds both
-            // staged writes (persisted: the filter job runs once).
-            val posFrame = readRawPos(spark, warehouse, tableName, meta,
-                base, withPos = true)
-              .filter(matched)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            val dvStaging = s"$dir/.staging-update-dv-${UUID.randomUUID()}"
-            val dataStaging = s"$dir/.staging-update-${UUID.randomUUID()}"
-            try {
-              inParallel(spark)({ stageCl() }, {
-                posFrame
-                  .select(col(BucketCol), col(FileCol).as("file"),
-                    col(PosCol).as("pos"))
-                  .transform(clusterByBucket(_, touched, Seq("file", "pos")))
-                  .write.partitionBy(BucketCol).parquet(dvStaging)
-                toPhys(posFrame
-                  .select(meta.schema.fieldNames.toSeq
-                    .map(c => newVal(c).as(c)) :+ col(BucketCol): _*)
-                  .transform(clusterByBucket(_, touched, meta.pk)),
-                  meta)
-                  .write.partitionBy(BucketCol).parquet(dataStaging)
-              })
-              commitStagedMorMut(spark, f, dir, data, dataStaging,
-                dvStaging, touched, "update", base, meta)
-            } finally {
-              posFrame.unpersist()
-              f.delete(new Path(dvStaging), true)
-              f.delete(new Path(dataStaging), true)
-            }
-          } else {
-            val staging = s"$dir/.staging-update-${UUID.randomUUID()}"
-            try {
-              val rewritten = meta.schema.fieldNames.toSeq.map { c =>
-                (if (set.contains(c)) when(matched, newVal(c)).otherwise(col(c))
-                 else col(c)).as(c)
-              } :+ col(BucketCol)
-              inParallel(spark)({ stageCl() },
-                toPhys(raw.filter(col(BucketCol).isin(touched: _*))
-                  .select(rewritten: _*)
-                  .transform(clusterByBucket(_, touched, meta.pk)),
-                  meta)
-                  .write.partitionBy(BucketCol).parquet(staging))
-              commitStaged(spark, f, dir, data, staging, touched, "update",
-                base, base.buckets, meta)
-            } finally f.delete(new Path(staging), true)
-          }
-          clCommit.foreach { case (src, dst) =>
-            commitChangelogBatch(f, "update", src, dst)
-          }
-        } finally clCommit.foreach { case (src, _) => f.delete(src, true) }
-      }
-      if (cdc && !meta.changelog)
-        TableMeta.write(spark, dir, meta.copy(changelog = true))
-      nMatched
+    val wh = schemaDir(warehouse0, schema)
+    WriteLock.withLock(spark, tableDir(wh, tableName), "update") {
+      updateWith(Locked, spark, wh, tableName, where, set, changelog, mode)
     }
   }
 
@@ -4164,57 +3521,26 @@ object KeyedTable {
     }
   }
 
-  /** #11x MERGE: apply a change feed to the table in ONE commit — the
-    * `MERGE INTO t USING delta ON pk` triple. Per delta row, keyed by
-    * the table's PK:
-    *  - `deleteWhen` TRUE and the key exists  → the stored row is DELETED
-    *  - `deleteWhen` TRUE and the key is absent → no-op (idempotent
-    *    tombstone — replaying a delete feed is safe)
-    *  - `deleteWhen` FALSE, key exists  → UPDATE (present-column
-    *    overwrite, exactly the upsert contract)
-    *  - `deleteWhen` FALSE, key absent → INSERT
-    * `deleteWhen` is evaluated over the DELTA's columns BEFORE alignment,
-    * and may reference columns that are not (and never become) part of
-    * the table schema — the tombstone flag is computed first and its
-    * source columns are then dropped unless they belong to the table. A
-    * CDC-style feed therefore applies directly:
-    * `merge(feed, wh, "t", deleteWhen = col("op") === "delete")` with
-    * `op` existing only in the feed.
+  /** #11x MERGE: apply a change feed in ONE commit under the write lock
+    * — the `MERGE INTO t USING delta ON pk` triple. Per delta row, keyed
+    * by the table's PK:
+    *  - `deleteWhen` TRUE, key exists → the stored row is DELETED;
+    *  - `deleteWhen` TRUE, key absent → no-op (replaying a delete feed
+    *    is safe), or an insert under `deleteOnlyMatched` (SQL MERGE
+    *    clause semantics);
+    *  - otherwise → upsert (present-column overwrite).
+    * `deleteWhen` is evaluated over the DELTA's columns before
+    * alignment and may name feed-only columns (`col("op") ===
+    * "delete"`), which never reach the table. NULL tombstone predicates
+    * mean FALSE; duplicate delta keys are rejected (`validate`). One
+    * flip, one changelog batch (insert / update / unchanged / delete
+    * images — the shape [[graft.operators.CdcConsumer]] folds).
+    * `expectedVersion` aborts with [[ConcurrentWriteException]] (table
+    * unchanged; retry) when the table is no longer at the snapshot the
+    * caller's routing read used. `mode` picks copy-on-write or
+    * merge-on-read ([[DeleteMode]]; see [[upsertWith]]).
     *
-    * Everything lands atomically: one staged write, one manifest flip,
-    * one changelog batch (insert/update/unchanged/delete images — the
-    * exact shape [[graft.operators.CdcConsumer]] folds), under the write
-    * lock. Duplicate keys in the delta are rejected (validate), NULL
-    * tombstone predicates mean FALSE.
-    *
-    * At 100 TB: applying a day's CDC feed touches only the delta's
-    * buckets — one delta-sized classification join, never a table scan —
-    * and downstream consumers see exactly one new snapshot and one new
-    * changelog batch per applied feed.
-    *
-    * @return (inserted, updated, deleted) row counts
-    *
-    * Reference concept: sql.py:299's upsert generalized with tombstones
-    * (the reference cannot delete through its upsert; its users issue
-    * separate SQL DELETEs — merge is the one-commit form). */
-  /** `deleteOnlyMatched`: SQL MERGE clause semantics — tombstones act
-    * only on MATCHED keys; an unmatched tombstone row inserts (see
-    * [[upsert]]). Default false = change-feed semantics (unmatched
-    * tombstone is a no-op).
-    *
-    * `expectedVersion`: optimistic snapshot pin — the commit aborts
-    * with [[ConcurrentWriteException]] (table unchanged; retry) if the
-    * table's current manifest version moved past it. The SQL MERGE
-    * lowering pins its pre-filter routing read here, so a commit
-    * landing between routing and merge can never silently mis-route
-    * rows (drop a concurrently-inserted key in an update-only MERGE,
-    * or double-handle it in a BY SOURCE clause). */
-  /** `mode` ([[DeleteMode]], the shared Auto arithmetic of [[delete]]/
-    * [[update]]): merge-on-read MERGE tombstones matched rows'
-    * positions and appends the delta's surviving images as new files —
-    * one commit whose write cost is ∝ |delta|, never touched-bucket
-    * bytes. Auto picks it while |updates + deletes| stay under
-    * [[MorMaxFraction]] of the touched buckets' live rows. */
+    * @return (inserted, updated, deleted) row counts */
   def merge(df: DataFrame, warehouse0: String, tableName: String,
             deleteWhen: Column, schema: Option[String] = None,
             addNewColumns: Boolean = false, validate: Boolean = true,
@@ -4225,43 +3551,15 @@ object KeyedTable {
             mode: DeleteMode = DeleteMode.Auto): (Long, Long, Long) = {
     val wh = schemaDir(warehouse0, schema)
     val spark = df.sparkSession
-    if (strictUtc) {
-      val naive = df.schema.fields.filter(_.dataType == TimestampNTZType)
-      if (naive.nonEmpty)
-        throw new StoreException(
-          s"Column(s) ${naive.map(_.name).mkString(", ")} timezone must be set " +
-          "(naive TimestampNTZ rejected; convert to a UTC instant, or pass " +
-          "strictUtc=false to pin the wall-clock to UTC) (reference: sql.py:133)")
-    }
-    // tombstone flag FIRST (over the raw delta columns), then the same
-    // identifier cleaning as toSql; columns not in the table schema are
-    // fine inside `deleteWhen` but are not carried into the table
-    val flagged = df.withColumn(MergeDelCol, coalesce(deleteWhen, lit(false)))
-    val cleaned = df.columns.foldLeft(flagged) { (d, c) =>
-      val cc = Names.cleanName(c)
-      if (cc == c) d else d.withColumnRenamed(c, cc)
-    }
-    // drop delta columns that are neither table columns nor survivable
-    // via addNewColumns — they existed only to feed the tombstone flag
+    if (strictUtc) rejectNaive(df, StrictUtcHint)
+    val feed = mergeFeed(df, deleteWhen)
     val dir = tableDir(wh, tableName)
     WriteLock.withLock(spark, dir, "merge") {
-      if (!TableMeta.exists(spark, dir))
-        throw new StoreException(
-          s"merge target $tableName does not exist (create it with toSql first)")
-      expectedVersion.foreach { v =>
-        val cur = Manifest.current(spark, dir).version
-        if (cur != v)
-          throw new ConcurrentWriteException(
-            s"merge into $tableName planned against snapshot $v but the " +
-            s"table is now at $cur (concurrent commit since the routing " +
-            "read); table unchanged — retry the merge")
-      }
-      val meta = TableMeta.read(spark, dir)
-      val keep = cleaned.columns.filter(c =>
-        c == MergeDelCol || addNewColumns || meta.schema.fieldNames.contains(c))
-      upsert(cleaned.select(keep.map(col).toIndexedSeq: _*), wh, tableName,
-        addNewColumns, validate, changelog, tombstoned = true,
-        deleteOnlyMatched = deleteOnlyMatched, mode = mode)
+      requireTable(spark, dir,
+        s"merge target $tableName does not exist (create it with toSql first)")
+      upsertWith(Locked, feed, wh, tableName, addNewColumns, validate,
+        changelog, tombstoned = true, deleteOnlyMatched, mode,
+        expectedVersion, strictVersion = false)
     }
   }
 
@@ -4340,7 +3638,7 @@ object KeyedTable {
             commitStaged(spark, f, dir, data, staging,
               0 until math.max(base0.buckets, newBuckets), "rebucket",
               baseLatest, newBuckets, metaLatest, removeMissing = true,
-              preStats = Some(preStats))
+              preStats = preStats)
             // a full rewrite: every live file now carries the current
             // schema, so dropped names may be re-added safely
             if (metaLatest.dropped.nonEmpty)

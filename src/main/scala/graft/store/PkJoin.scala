@@ -1,7 +1,6 @@
 package graft.store
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 /** Shuffle-free inner PK join of two keyed tables that share a bucket
   * count (and PK column types): rows of bucket `i` on both sides are

@@ -173,8 +173,11 @@ object WriteLock {
   }
 
   /** Daemon thread bumping the lock's mtime every TTL/3 while the
-    * mutation runs; stops itself if the lock no longer carries our
-    * token (we were broken as stale — don't fight the new holder). */
+    * mutation runs; stops itself once the lock is gone or carries a
+    * foreign token (we were broken as stale — don't fight the new
+    * holder). A read that FAILS proves neither: the beat goes ahead and
+    * the next one re-reads, or one transient IO error would leave an
+    * hours-long mutation's lock to be broken as stale. */
   private def heartbeat(fs: FileSystem, p: Path, token: String,
                         staleMs: Long): Thread = {
     val t = new Thread(() => {
@@ -183,7 +186,12 @@ object WriteLock {
       try {
         while (ours && !Thread.currentThread().isInterrupted) {
           Thread.sleep(interval)
-          ours = readHolder(fs, p).exists(_.token == token)
+          ours =
+            try parse(SmallFile.readUtf8(fs, p)).forall(_.token == token)
+            catch {
+              case _: java.io.FileNotFoundException => false
+              case scala.util.control.NonFatal(_) => true
+            }
           if (ours) {
             try fs.setTimes(p, System.currentTimeMillis(), -1)
             catch { case _: Exception => () } // next beat retries
@@ -203,14 +211,13 @@ object WriteLock {
 
   /** The current holder, or None when absent/unreadable. */
   def readHolder(fs: FileSystem, p: Path): Option[Holder] =
+    try parse(SmallFile.readUtf8(fs, p))
+    catch { case _: Exception => None }
+
+  /** A lock body's holder, or None when it does not parse. */
+  private def parse(body: String): Option[Holder] =
     try {
-      val in = fs.open(p)
-      val s = try {
-        val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        new String(bytes, "UTF-8")
-      } finally in.close()
-      val j = JsonMethods.parse(s)
+      val j = JsonMethods.parse(body)
       (j \ "token", j \ "op", j \ "acquiredAtMs") match {
         case (JString(t), JString(o), JInt(a)) => Some(Holder(t, o, a.toLong))
         case _ => None

@@ -96,7 +96,33 @@ class WriteLockSpec extends SparkSpec {
     WriteLock.withLock(spark, dir, "slow-writer", staleMs = 3000) {
       Thread.sleep(5000)
       val e = intercept[StoreException] {
-        WriteLock.withLock(spark, dir, "impatient") { fail("must not enter") }
+        WriteLock.withLock(spark, dir, "impatient", staleMs = 3000) {
+          fail("must not enter")
+        }
+      }
+      assert(e.getMessage.contains("write-locked"), e.getMessage)
+    }
+  }
+
+  test("one failed heartbeat read does not end the heartbeat") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.faulty.impl", classOf[FaultyFileSystem].getName)
+    val dir = s"${freshWarehouse()}/t"
+    // TTL 3s, mutation 5s, beats at 1s, 2s, ...: the first beat's read
+    // fails. A heartbeat that stopped there would leave the lock's
+    // mtime at the acquire, 5s old — past the TTL — when the second
+    // writer tries, and it would break the lock of a live mutation.
+    // The holder reaches the lock through `faulty://` (its reads fail
+    // on demand); the second writer through the plain local path,
+    // whose create-if-absent is the atomic one
+    WriteLock.withLock(spark, s"faulty://$dir", "slow-writer", staleMs = 3000) {
+      FaultyFileSystem.failingOpens(WriteLock.FileName, times = 1) {
+        Thread.sleep(5000)
+      }
+      val e = intercept[StoreException] {
+        WriteLock.withLock(spark, dir, "impatient", staleMs = 3000) {
+          fail("must not enter")
+        }
       }
       assert(e.getMessage.contains("write-locked"), e.getMessage)
     }
