@@ -596,26 +596,17 @@ object KeyedTable {
           .write.partitionBy(BucketCol).parquet(data.toString)
       }
       // version-0 snapshot: every table is manifest-native from birth,
-      // row counts and leading-PK stats included (O(buckets) pooled
-      // footer opens over files this create just wrote)
-      val conf = spark.sparkContext.hadoopConfiguration
-      val listed = listLiveFiles(f, data)
-      val footer = pkFileStatsAll(conf,
-        listed.toSeq.flatMap { case (b, fls) =>
-          fls.map(mfF => new Path(data, s"$BucketCol=$b/${mfF.name}"))
-        }, Seq(pkCols.head -> schema(pkCols.head).dataType))
-      val v0Files = listed.map { case (b, fls) =>
-        b -> fls.map { mfF =>
-          val fstat = footer(new Path(data, s"$BucketCol=$b/${mfF.name}"))
-          mfF.copy(rows = fstat.rows, stats = fstat.cols.get(pkCols.head))
-        }
-      }
+      // row counts and leading-PK stats included (a fresh table's stat
+      // columns are the PK head alone)
+      val meta = TableMeta(pkCols, autoIndex, schema, maxIdx)
+      val v0Files = stageFiles(spark, f, data.toString, statColsTypedOf(meta))
+        .map { case (b, fls) => b -> fls.map(_.entry) }
       Manifest.commit(spark, dir,
         // a creating how=Append with a txn token records it on v0, so
         // a retry of a create-if-missing ingest job no-ops too
         Manifest(0L, buckets, v0Files, op = Some("create"),
           streams = txn.toList.toMap))
-      TableMeta.write(spark, dir, TableMeta(pkCols, autoIndex, schema, maxIdx))
+      TableMeta.write(spark, dir, meta)
     } finally f.delete(new Path(staging), true)
   }
 
@@ -734,20 +725,6 @@ object KeyedTable {
     (from == TimestampNTZType && to == TimestampType)
   }
 
-  /** Live-file map of create's fresh output, from a directory listing
-    * (one listing per bucket dir) — what version 0 records. */
-  private def listLiveFiles(f: FileSystem, data: Path): Map[Int, Seq[ManifestFile]] =
-    if (!f.exists(data)) Map.empty
-    else f.listStatus(data)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$BucketCol="))
-      .map { d =>
-        val b = d.getPath.getName.stripPrefix(s"$BucketCol=").toInt
-        b -> f.listStatus(d.getPath).toSeq
-          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-          .sortBy(_.getPath.getName)
-          .map(st => ManifestFile(st.getPath.getName, st.getLen))
-      }.filter(_._2.nonEmpty).toMap
-
   /** Driver-side pool for commit-time footer reads: a create/commit
     * touching B buckets would otherwise pay B SERIAL footer opens
     * (~10-30 ms each — at thousands of buckets, minutes of driver
@@ -793,40 +770,57 @@ object KeyedTable {
       .filter(meta.schema.fieldNames.contains)
       .map(c => meta.physName(c) -> meta.schema(c).dataType)
 
-  /** Footer stats of every staged parquet file under `staging`,
-    * collected before the flip (outside the lock, except under a row
-    * verb's locked policy) — the rename into the live bucket dirs
-    * preserves content, so [[commitStaged]] applies these verbatim via
-    * its `preStats` hook instead of re-opening O(staged files) footers
-    * inside the flip. Keyed by (bucket, staged file name). The
-    * optimistic maintenance paths (compact / zorder / rebucket) stage
-    * the WHOLE table at worst, which is exactly where in-lock footer
-    * IO would re-create the writer outage this round removed; the
-    * row verbs' flips shrink by their delta's footer IO too. Stats
-    * columns are pinned at STAGE time: a stat column registered
-    * mid-window simply has no bounds on this commit's files (the
-    * standard files-before-the-column-joined contract — they are
-    * never pruned on it). */
-  private def stageFileStats(spark: SparkSession, f: FileSystem,
-                             staging: String,
-                             cols: Seq[(String, DataType)])
-      : Map[(Int, String), FileFooter] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(staging)
-    if (!f.exists(root)) Map.empty
-    else {
-      val byPath: Seq[((Int, String), Path)] = f.listStatus(root).toSeq
+  /** One staged parquet file: where it sits and the manifest entry it
+    * commits as — built once by [[stageFiles]] from its footer (row
+    * count, leading-PK bounds, the extra stat columns' bounds, their
+    * NULL counts) under its staged name, which [[flip]] swaps for the
+    * final one. A rename never changes content, so the entry holds. */
+  private final case class Staged(path: Path, entry: ManifestFile)
+
+  /** THE STAGER — the only place a commit lists files or opens a
+    * footer. Lists the `.parquet` files of every `pb_bucket=<b>` dir
+    * under `dir` once and reads every footer on [[statsPool]] through
+    * [[pkFileStats]] for `cols` ([[statColsTypedOf]]'s order: the head
+    * is the leading PK; `Nil` for delete-vector sidecars, whose entry
+    * needs only the position count). Returns per bucket, by file name,
+    * every bucket holding at least one file; nothing when `dir` is
+    * absent.
+    *
+    * Callers stage before their flip — create's fresh `data/`, a
+    * verb's data and DV staging dirs — and, on every optimistic path,
+    * before taking the lock, so the flip stays renames plus manifest
+    * arithmetic however many files a rewrite staged. The one exception
+    * is the upsert-mode stream sink re-deriving its DVs inside the lock
+    * after a window conflict. Stat columns are pinned at stage time: a
+    * column registered mid-window has no bounds on this commit's
+    * files, so they are never pruned on it. */
+  private def stageFiles(spark: SparkSession, f: FileSystem, dir: String,
+                         cols: Seq[(String, DataType)])
+      : Map[Int, Seq[Staged]] = {
+    val root = new Path(dir)
+    val listed: Seq[(Int, Seq[org.apache.hadoop.fs.FileStatus])] =
+      if (!f.exists(root)) Nil
+      else f.listStatus(root).toSeq
         .filter(st => st.isDirectory &&
           st.getPath.getName.startsWith(s"$BucketCol="))
-        .flatMap { d =>
-          val b = d.getPath.getName.stripPrefix(s"$BucketCol=").toInt
-          f.listStatus(d.getPath).toSeq
-            .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-            .map(st => ((b, st.getPath.getName), st.getPath))
+        .map { d =>
+          d.getPath.getName.stripPrefix(s"$BucketCol=").toInt ->
+            f.listStatus(d.getPath).toSeq
+              .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+              .sortBy(_.getPath.getName)
         }
-      val stats = pkFileStatsAll(conf, byPath.map(_._2), cols)
-      byPath.map { case (k, p) => k -> stats(p) }.toMap
-    }
+        .filter(_._2.nonEmpty)
+    val footers = pkFileStatsAll(spark.sparkContext.hadoopConfiguration,
+      listed.flatMap(_._2.map(_.getPath)), cols)
+    val lead = cols.headOption.map(_._1)
+    listed.map { case (b, sts) =>
+      b -> sts.map { st =>
+        val ft = footers(st.getPath)
+        Staged(st.getPath, ManifestFile(st.getPath.getName, st.getLen,
+          ft.rows, lead.flatMap(ft.cols.get),
+          lead.fold(ft.cols)(ft.cols - _), ft.nulls))
+      }
+    }.toMap
   }
 
   /** A column type whose min/max the manifest can store and compare
@@ -986,184 +980,77 @@ object KeyedTable {
         s"$op: data committed but changelog rename $src -> $dst failed")
   }
 
-  /** Commit a mutation's staged output as manifest version N+1 (see
-    * [[Manifest]] for the isolation argument). Staged files are renamed
-    * INTO their live bucket dirs under commit-unique names — additive
-    * and invisible, since no manifest references them — then the new
-    * manifest (untouched buckets carried over; touched buckets replaced
-    * by, or with `add` extended by, their staged files) is published in
-    * one atomic file rename, which IS the commit. Every rename is
-    * checked; any failure deletes the unreferenced moved-in files and
-    * aborts with the current snapshot — and every live file — untouched.
-    * Superseded files are left for [[vacuum]], so concurrent readers of
-    * the previous snapshot are never disturbed.
+  /** THE FLIP — every mutation commits its staged files as manifest
+    * version N+1 here (see [[Manifest]] for the isolation argument).
     *
-    * `removeMissing`: when true (predicate delete, rebucket), a touched
-    * bucket with no staged output is REMOVED from the new snapshot;
-    * when false, it is carried over unchanged.
+    *  - MOVE-IN: exactly the files [[stageFiles]] listed — `files`
+    *    first, then the delete-vector sidecars `dvs` — are renamed INTO
+    *    their live bucket dirs under commit-unique names
+    *    (`<commit>-<name>`, DVs `<commit>-dv-<name>`): additive and
+    *    invisible, since no manifest references them yet.
+    *  - ROLLBACK: a failed mkdir or rename deletes the files already
+    *    moved and aborts with a [[StoreException]]; a throwing
+    *    [[Manifest.commit]] deletes them too and rethrows. Either way
+    *    the current snapshot, and every live file, is untouched.
+    *  - FILES: untouched buckets carry over. `extend` appends a
+    *    bucket's staged files to its list (append, stream, merge-on-read
+    *    post-images); otherwise they REPLACE it (the rewrites). A bucket
+    *    of `removeMissing` that staged no file leaves the snapshot (CoW
+    *    delete, a tombstoning merge, rebucket's old layout).
+    *  - DVS: a replaced bucket drops its DVs — the rewrite read through
+    *    them, so dropping them IS the materialization; elsewhere they
+    *    ride along, extended by `dvs`.
     *
-    * `preStats`: footer stats PRE-COLLECTED from the staging files
-    * OUTSIDE the lock, keyed by (bucket, staged file name) — see
-    * [[stageFileStats]]. Rename never changes content, so they apply
-    * verbatim to the moved files. A zorder/rebucket stages the WHOLE
-    * table, and paying O(table) footer opens inside the flip would turn
-    * the "brief" lock hold back into a writer outage. Any file the map
-    * misses (raced staging edits — never happens from this code) is
-    * read at commit.
-    *
-    * GUARD RAIL for new mutation verbs: commitStaged runs INSIDE the
-    * locked flip — keep it metadata arithmetic plus renames. Collect
-    * footer stats before the lock via [[stageFileStats]]/`preStats`
-    * hooks; never re-open parquet footers in here. */
-  private def commitStaged(spark: SparkSession, f: FileSystem, dir: String,
-                           data: String, staging: String, touched: Seq[Int],
-                           op: String, base: Manifest, newBuckets: Int,
-                           meta: TableMeta,
-                           add: Boolean = false,
-                           removeMissing: Boolean = false,
-                           streamEpoch: Option[(String, Long)] = None,
-                           preStats: Map[(Int, String), FileFooter])
-      : Manifest = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val statCol = meta.pk.headOption
-    // leading PK first, then the configured extra stat columns — ONE
-    // footer block walk collects them all
-    val statColsTyped: Seq[(String, DataType)] = statColsTypedOf(meta)
+    * Superseded files stay for [[vacuum]], so readers of the previous
+    * snapshot are never disturbed. GUARD RAIL: this runs inside the
+    * write lock — keep it renames plus manifest arithmetic; listing
+    * and footer IO belong in [[stageFiles]], before the lock. */
+  private def flip(spark: SparkSession, f: FileSystem, dir: String,
+                   data: String, op: String, base: Manifest,
+                   files: Map[Int, Seq[Staged]],
+                   dvs: Map[Int, Seq[Staged]] = Map.empty,
+                   extend: Boolean = false,
+                   removeMissing: Seq[Int] = Nil,
+                   newBuckets: Option[Int] = None,
+                   streamEpoch: Option[(String, Long)] = None): Manifest = {
     val commitId = UUID.randomUUID().toString.take(8)
+    val tag = if (dvs.isEmpty) op else s"$op(mor)"
     val moved = scala.collection.mutable.ArrayBuffer.empty[Path]
     def abort(msg: String): Nothing = {
       moved.foreach(p => f.delete(p, false))
-      throw new StoreException(msg)
+      throw new StoreException(
+        s"$tag: $msg; commit aborted, current snapshot unchanged")
     }
-    val movedByBucket: Map[Int, Seq[(Path, Long)]] = touched.flatMap { b =>
-      val sdir = new Path(staging, s"$BucketCol=$b")
-      if (!f.exists(sdir)) None
-      else {
-        val files = f.listStatus(sdir)
-          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-          .sortBy(_.getPath.getName)
+    def moveIn(staged: Map[Int, Seq[Staged]], pfx: String, noun: String)
+        : Map[Int, Seq[ManifestFile]] =
+      staged.map { case (b, fls) =>
         val tdir = new Path(data, s"$BucketCol=$b")
-        if (!f.mkdirs(tdir))
-          abort(s"$op: could not create bucket dir $tdir; " +
-            "commit aborted, current snapshot unchanged")
-        Some(b -> files.toSeq.map { st =>
-          val dst = new Path(tdir, s"$commitId-${st.getPath.getName}")
-          if (!f.rename(st.getPath, dst))
-            abort(s"$op: could not move staged file ${st.getPath} -> $dst; " +
-              "commit aborted, current snapshot unchanged")
+        if (!f.mkdirs(tdir)) abort(s"could not create bucket dir $tdir")
+        b -> fls.map { s =>
+          val dst = new Path(tdir, s"$commitId-$pfx${s.path.getName}")
+          if (!f.rename(s.path, dst))
+            abort(s"could not move staged $noun ${s.path} -> $dst")
           moved += dst
-          (dst, st.getLen)
-        })
-      }
-    }.toMap
-    // ONE footer open per new file per commit — pooled, not serial —
-    // buys both the row count (COUNT(*)/row estimates become driver
-    // arithmetic) and the file-skipping stats range reads plan against.
-    // `preStats` entries (collected unlocked from the staging paths —
-    // renames preserve content) skip the in-lock read entirely.
-    def stagedNameOf(dst: Path): String =
-      dst.getName.stripPrefix(s"$commitId-")
-    val pre: Map[Path, FileFooter] =
-      movedByBucket.iterator.flatMap { case (b, fls) =>
-        fls.flatMap { case (dst, _) =>
-          preStats.get((b, stagedNameOf(dst))).map(dst -> _)
+          s.entry.copy(name = dst.getName)
         }
-      }.toMap
-    val footer = pre ++ pkFileStatsAll(conf,
-      movedByBucket.valuesIterator.flatten.map(_._1)
-        .filterNot(pre.contains).toSeq, statColsTyped)
-    val staged: Map[Int, Seq[ManifestFile]] = movedByBucket.map {
-      case (b, fls) => b -> fls.map { case (dst, len) =>
-        val fstat = footer(dst)
-        ManifestFile(dst.getName, len, fstat.rows,
-          statCol.flatMap(fstat.cols.get),
-          statCol.fold(fstat.cols)(fstat.cols - _),
-          fstat.nulls)
       }
+    val newData = moveIn(files, "", "file")
+    val newDv = moveIn(dvs, "dv-", if (files.isEmpty) "DV" else "file")
+    val newFiles = base.files -- removeMissing ++ newData.map {
+      case (b, fls) =>
+        b -> (if (extend) base.files.getOrElse(b, Nil) ++ fls else fls)
     }
-    val newFiles: Map[Int, Seq[ManifestFile]] =
-      (base.files -- touched) ++ touched.flatMap { b =>
-        staged.get(b) match {
-          case Some(fls) =>
-            Some(b -> (if (add) base.files.getOrElse(b, Nil) ++ fls else fls))
-          case None =>
-            if (removeMissing) None else base.files.get(b).map(b -> _)
-        }
-      }.toMap
-    // Delete vectors ride along per bucket — EXCEPT where this commit
-    // REPLACED the bucket's files (non-additive staging: upsert /
-    // update / CoW delete / compact / zorder / rebucket). Those
-    // rewrites read through the DV mask, so their output already
-    // excludes the tombstoned rows — dropping the DVs here IS the
-    // materialization step. Additive commits (append) keep them: the
-    // old files, and the tombstones against them, are still live.
-    val newDvs: Map[Int, Seq[ManifestFile]] =
-      base.dvs.filter { case (b, _) =>
-        val replaced = staged.contains(b) && !add
-        !replaced && newFiles.contains(b)
-      }
-    val mf = Manifest(base.version + 1, newBuckets, newFiles,
-      op = Some(op), dvs = newDvs,
-      // the streaming sink's epoch ledger rides in the SAME atomic
-      // flip as its data — exactly-once by construction
+    val keptDvs = base.dvs.filter { case (b, _) =>
+      newFiles.contains(b) && (extend || !newData.contains(b))
+    }
+    val mf = Manifest(base.version + 1, newBuckets.getOrElse(base.buckets),
+      newFiles, op = Some(op),
+      dvs = keptDvs ++ newDv.map { case (b, fls) =>
+        b -> (keptDvs.getOrElse(b, Nil) ++ fls)
+      },
+      // the streaming sink's epoch ledger (and an append's txn token)
+      // rides in the SAME atomic flip as its data — exactly-once
       streams = base.streams ++ streamEpoch)
-    try Manifest.commit(spark, dir, mf)
-    catch { case e: Throwable => moved.foreach(p => f.delete(p, false)); throw e }
-  }
-
-  /** Commit a MoR delete's staged DELETE-VECTOR files as manifest
-    * version N+1: the dual of [[commitStaged]] for tombstone sidecars.
-    * Staged DV parquet (rows `(file, pos)`, partitioned by bucket) is
-    * renamed INTO the live bucket dirs under commit-unique `-dv-`
-    * names — additive and invisible until the manifest flip, exactly
-    * the data-file protocol — and the new snapshot carries the SAME
-    * data files with the bucket's DV list extended. One footer open
-    * per DV file records its position count, keeping live-row
-    * arithmetic (COUNT(*), statistics, history) pure driver math.
-    * Any rename failure deletes the moved-in files and aborts with the
-    * current snapshot untouched (CommitFaultSpec contract). */
-  private def commitStagedDvs(spark: SparkSession, f: FileSystem, dir: String,
-                              data: String, staging: String,
-                              touched: Seq[Int], base: Manifest,
-                              op: String): Manifest = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val commitId = UUID.randomUUID().toString.take(8)
-    val moved = scala.collection.mutable.ArrayBuffer.empty[Path]
-    def abort(msg: String): Nothing = {
-      moved.foreach(p => f.delete(p, false))
-      throw new StoreException(msg)
-    }
-    val movedByBucket: Map[Int, Seq[(Path, Long)]] = touched.flatMap { b =>
-      val sdir = new Path(staging, s"$BucketCol=$b")
-      if (!f.exists(sdir)) None
-      else {
-        val files = f.listStatus(sdir)
-          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-          .sortBy(_.getPath.getName)
-        val tdir = new Path(data, s"$BucketCol=$b")
-        if (!f.exists(tdir))
-          abort(s"$op(mor): bucket dir $tdir vanished mid-commit; " +
-            "commit aborted, current snapshot unchanged")
-        Some(b -> files.toSeq.map { st =>
-          val dst = new Path(tdir, s"$commitId-dv-${st.getPath.getName}")
-          if (!f.rename(st.getPath, dst))
-            abort(s"$op(mor): could not move staged DV ${st.getPath} -> " +
-              s"$dst; commit aborted, current snapshot unchanged")
-          moved += dst
-          (dst, st.getLen)
-        })
-      }
-    }.toMap
-    val footer = pkFileStatsAll(conf,
-      movedByBucket.valuesIterator.flatten.map(_._1).toSeq, Nil)
-    val newDvs: Map[Int, Seq[ManifestFile]] =
-      base.dvs ++ movedByBucket.map { case (b, fls) =>
-        b -> (base.dvs.getOrElse(b, Nil) ++ fls.map { case (dst, len) =>
-          ManifestFile(dst.getName, len, footer(dst).rows)
-        })
-      }
-    val mf = Manifest(base.version + 1, base.buckets, base.files,
-      op = Some(op), dvs = newDvs, streams = base.streams)
     try Manifest.commit(spark, dir, mf)
     catch { case e: Throwable => moved.foreach(p => f.delete(p, false)); throw e }
   }
@@ -1182,8 +1069,9 @@ object KeyedTable {
     * the data, and is MONOTONIC, so the unlocked fast-exit is sound);
     * zombie-task leftovers are dropped (only files named by successful
     * commit messages move in); the staged files commit with
-    * `streams(queryId) = epochId`. */
-  /** `upsertMode` (sink option `sink_mode=upsert`): instead of the
+    * `streams(queryId) = epochId`.
+    *
+    * `upsertMode` (sink option `sink_mode=upsert`): instead of the
     * append contract, the epoch UPSERTS by PK — matched stored rows'
     * positions tombstone via delete vectors and the staged files land
     * as their post-images (the merge-on-read decomposition, so every
@@ -1203,7 +1091,8 @@ object KeyedTable {
                                        commitWaitMs: Long = 60000L): Unit = {
     val f = fs(spark, tblDir)
     val stagingPath = new Path(staging)
-    val cleanups = scala.collection.mutable.ArrayBuffer.empty[Path]
+    val dvRoots = scala.collection.mutable.ArrayBuffer.empty[Path]
+    val changes = new StagedChanges(spark, tblDir)
     def rebucketError(buckets: Int): Nothing =
       throw new ConcurrentWriteException(
         s"stream sink epoch $epochId of $tblDir: table rebucketed " +
@@ -1216,22 +1105,20 @@ object KeyedTable {
       val base0 = Manifest.current(spark, tblDir)
       if (base0.streams.get(queryId).exists(_ >= epochId)) return
       if (base0.buckets != writerBuckets) rebucketError(base0.buckets)
-      // sweep staging: keep only successful tasks' files; collect the
-      // touched buckets from what actually staged (the staging dir is
-      // private to this query, so no lock is needed)
-      val touched: Seq[Int] =
-        if (!f.exists(stagingPath)) Nil
-        else f.listStatus(stagingPath).filter(_.isDirectory).toSeq.flatMap { d =>
-          val bName = d.getPath.getName
-          var live = 0
+      // sweep staging: keep only successful tasks' files (the staging
+      // dir is private to this query, so no lock is needed); what is
+      // left is the epoch, its footers read here — the sink is the
+      // highest-frequency committer, its flip must stay a flip
+      if (f.exists(stagingPath))
+        f.listStatus(stagingPath).filter(_.isDirectory).foreach { d =>
           f.listStatus(d.getPath).foreach { st =>
-            val rel = s"$bName/${st.getPath.getName}"
-            if (st.isFile && st.getPath.getName.endsWith(".parquet") &&
-                allowedFiles.contains(rel)) live += 1
-            else f.delete(st.getPath, false)
+            val rel = s"${d.getPath.getName}/${st.getPath.getName}"
+            if (!(st.isFile && st.getPath.getName.endsWith(".parquet") &&
+                  allowedFiles.contains(rel))) f.delete(st.getPath, false)
           }
-          bName.stripPrefix(s"$BucketCol=").toIntOption.filter(_ => live > 0)
         }
+      val epochFiles = stageFiles(spark, f, staging, statColsTypedOf(meta0))
+      val touched = epochFiles.keys.toSeq.sorted
       // empty epoch: nothing to commit — a replay re-stages the same
       // rows and exits at the ledger check again harmlessly
       if (touched.isEmpty) return
@@ -1254,84 +1141,71 @@ object KeyedTable {
       enforceChecks(staged, meta0.checks, "stream-sink")
       val nonPk = meta0.schema.fieldNames.filterNot(meta0.pk.contains).toSeq
 
-      def stageImages(changes: DataFrame): Path = {
-        val p = new Path(tblDir, s".staging-changelog-${UUID.randomUUID()}")
-        changes.write.parquet(p.toString)
-        cleanups += p
-        p
-      }
       // append mode: the epoch's rows as ONE insert-image batch (no
       // pre-image join — base-independent, so never re-derived)
-      def stageInsertImages(): Path = {
+      def insertImages: DataFrame = {
         val images = nonPk.flatMap { c =>
           Seq(lit(null).cast(meta0.schema(c).dataType).as(s"old_$c"),
             col(c).as(s"new_$c"))
         }
-        stageImages(staged.select(
-          meta0.pk.map(col) ++ (lit("insert").as("op") +: images): _*))
+        staged.select(
+          meta0.pk.map(col) ++ (lit("insert").as("op") +: images): _*)
       }
       // upsert mode: the merge-on-read decomposition against a given
       // base — pre-image join classifies CDC images and collects the
-      // matched rows' (bucket, file, pos) tombstones. A function of the
-      // base manifest: derived against base0 here, re-derived inside
-      // the lock only if its window changed a touched bucket.
+      // matched rows' (bucket, file, pos) tombstones, returned staged.
+      // A function of the base manifest: derived against base0 here,
+      // re-derived inside the lock only if its window changed a
+      // touched bucket.
       def deriveUpsert(baseM: Manifest, metaM: TableMeta)
-          : (Option[Path], String) = {
+          : Map[Int, Seq[Staged]] = {
         val oldPos = readRawPos(spark, wh, ref, metaM,
             baseM, withPos = true)
           .filter(col(BucketCol).isin(touched: _*))
         val j = staged.as("n")
           .join(oldPos.as("o"), metaM.pk.toIndexedSeq, "left")
         val presentOld = col(s"o.$BucketCol").isNotNull
-        val clSrc: Option[Path] = if (metaM.changelog) {
+        if (metaM.changelog) {
           val changedCond = nonPk
             .map(c => !(col(s"n.$c") <=> col(s"o.$c")))
             .foldLeft(lit(false))(_ || _)
           val images = nonPk.flatMap { c =>
             Seq(col(s"o.$c").as(s"old_$c"), col(s"n.$c").as(s"new_$c"))
           }
-          Some(stageImages(j.select(
+          changes.stage(j.select(
             metaM.pk.map(col) ++ (
               when(!presentOld, lit("insert"))
                 .when(changedCond, lit("update"))
-                .otherwise(lit("unchanged")).as("op") +: images): _*)))
-        } else None
+                .otherwise(lit("unchanged")).as("op") +: images): _*))
+        }
         val dvStaging = s"$tblDir/.staging-stream-dv-${UUID.randomUUID()}"
-        cleanups += new Path(dvStaging)
+        dvRoots += new Path(dvStaging)
         j.filter(presentOld)
           .select(col(s"o.$BucketCol").as(BucketCol),
             col(s"o.$FileCol").as("file"), col(s"o.$PosCol").as("pos"))
           .transform(clusterByBucket(_, touched, Seq("file", "pos")))
           .write.partitionBy(BucketCol).parquet(dvStaging)
-        (clSrc, dvStaging)
+        stageFiles(spark, f, dvStaging, Nil)
       }
-      var clSrc0: Option[Path] = None
-      var dvStaging0: String = null
-      if (!upsertMode) {
-        // overlap pre-check vs the snapshot-at-start (the locked
-        // re-check below covers files added since, so together they
-        // cover the commit-time snapshot exactly)
-        val old = readRawWith(spark, wh, ref, meta0, base0)
-          .filter(col(BucketCol).isin(touched: _*))
-        val overlap = staged.join(old, meta0.pk.toIndexedSeq, "left_semi")
-          .limit(5).select(meta0.pk.map(col): _*).collect()
-        if (overlap.nonEmpty)
-          throw new StoreException(
-            s"stream sink epoch $epochId would overwrite existing PKs, " +
-            s"e.g. ${overlap.mkString(", ")} (the sink appends; " +
-            "replays are handled by the epoch ledger, not upserts — " +
-            "for update-by-key semantics set option sink_mode=upsert)")
-        if (meta0.changelog) clSrc0 = Some(stageInsertImages())
-      } else {
-        val (c, d) = deriveUpsert(base0, meta0)
-        clSrc0 = c; dvStaging0 = d
-      }
-
-      // the epoch's footer stats, collected OUTSIDE the lock (the
-      // sink is the highest-frequency committer — its flip must stay
-      // a flip however large the epoch)
-      val preStats = stageFileStats(spark, f, staging,
-        statColsTypedOf(meta0))
+      val dvs0: Map[Int, Seq[Staged]] =
+        if (upsertMode) deriveUpsert(base0, meta0)
+        else {
+          // overlap pre-check vs the snapshot-at-start (the locked
+          // re-check below covers files added since, so together they
+          // cover the commit-time snapshot exactly)
+          val old = readRawWith(spark, wh, ref, meta0, base0)
+            .filter(col(BucketCol).isin(touched: _*))
+          val overlap = staged.join(old, meta0.pk.toIndexedSeq, "left_semi")
+            .limit(5).select(meta0.pk.map(col): _*).collect()
+          if (overlap.nonEmpty)
+            throw new StoreException(
+              s"stream sink epoch $epochId would overwrite existing PKs, " +
+              s"e.g. ${overlap.mkString(", ")} (the sink appends; " +
+              "replays are handled by the epoch ledger, not upserts — " +
+              "for update-by-key semantics set option sink_mode=upsert)")
+          if (meta0.changelog) changes.stage(insertImages)
+          Map.empty
+        }
 
       StreamEpochHooks.betweenPhases()
 
@@ -1354,73 +1228,41 @@ object KeyedTable {
           // snapshot excluding our rows — enforce only the new ones
           enforceChecks(staged, metaL.checks -- meta0.checks.keySet,
             "stream-sink(commit)")
-          val windowMoved = baseL.version != base0.version
-          if (!upsertMode) {
-            if (windowMoved) {
-              // re-check overlap against only the files ADDED since our
-              // snapshot in the buckets we touch — usually none ⇒ no IO
-              val addedByBucket = touched.flatMap { b =>
-                val before = base0.files.getOrElse(b, Nil).map(_.name).toSet
-                val now = baseL.files.getOrElse(b, Nil)
-                  .filterNot(x => before.contains(x.name))
-                if (now.isEmpty) None else Some(b -> now)
-              }.toMap
-              if (addedByBucket.nonEmpty) {
-                val addedDf = readRawWith(spark, wh, ref, metaL,
-                  baseL.copy(files = addedByBucket))
-                val clash = staged.join(addedDf, meta0.pk.toIndexedSeq,
-                    "left_semi")
-                  .limit(5).select(meta0.pk.map(col): _*).collect()
-                if (clash.nonEmpty)
-                  throw new StoreException(
-                    s"stream sink epoch $epochId would overwrite PK(s) " +
-                    s"${clash.mkString(", ")} written by a concurrent " +
-                    "mutation while the epoch staged (the sink appends — " +
-                    "for update-by-key semantics set option " +
-                    "sink_mode=upsert)")
-              }
-            }
-            // changelog enabled mid-window: this epoch must still land
-            // its batch (readChangelog's every-mutation invariant)
-            val clSrc =
-              clSrc0 orElse (if (metaL.changelog) Some(stageInsertImages())
-                             else None)
-            commitStaged(spark, f, tblDir, data, staging, touched,
-              "stream", baseL, baseL.buckets, metaL, add = true,
-              streamEpoch = Some(queryId -> epochId),
-              preStats = preStats)
-            clSrc.foreach(src =>
-              commitChangelogBatch(f, "stream", src,
-                nextChangelogDst(f, tblDir)))
-          } else {
-            // the DVs must tombstone COMMIT-TIME positions: re-derive
-            // iff the lock window changed a touched bucket's live set
-            // (files added/removed or DVs added — e.g. a concurrent
-            // batch upsert of the same keys), or CDC flipped on since
-            // we staged without images
-            val liveSetMoved = windowMoved && touched.exists { b =>
-              base0.files.getOrElse(b, Nil).map(_.name).toSet !=
-                baseL.files.getOrElse(b, Nil).map(_.name).toSet ||
-              base0.dvs.getOrElse(b, Nil).map(_.name).toSet !=
-                baseL.dvs.getOrElse(b, Nil).map(_.name).toSet
-            }
-            val (clSrc, dvStaging) =
-              if (liveSetMoved || (metaL.changelog && clSrc0.isEmpty))
-                deriveUpsert(baseL, metaL)
-              else (clSrc0, dvStaging0)
-            commitStagedMorMut(spark, f, tblDir, data, staging, dvStaging,
-              touched, "stream-upsert", baseL, metaL,
-              streamEpoch = Some(queryId -> epochId),
-              preStats = preStats)
-            clSrc.foreach(src =>
-              commitChangelogBatch(f, "stream-upsert", src,
-                nextChangelogDst(f, tblDir)))
-          }
+          val op = if (upsertMode) "stream-upsert" else "stream"
+          val dvs =
+            if (!upsertMode) {
+              val clash = addedKeys(spark, wh, ref, metaL, base0, baseL,
+                touched, staged)
+              if (clash.nonEmpty)
+                throw new StoreException(
+                  s"stream sink epoch $epochId would overwrite PK(s) " +
+                  s"${clash.mkString(", ")} written by a concurrent " +
+                  "mutation while the epoch staged (the sink appends — " +
+                  "for update-by-key semantics set option " +
+                  "sink_mode=upsert)")
+              // changelog enabled mid-window: this epoch must still land
+              // its batch (readChangelog's every-mutation invariant)
+              changes.stageLate(metaL.changelog, insertImages)
+              dvs0
+            } else if (movedBuckets(base0, baseL, touched).nonEmpty ||
+                       (metaL.changelog && !meta0.changelog)) {
+              // the DVs must tombstone COMMIT-TIME positions: re-derive
+              // when the window changed a touched bucket's live set
+              // (e.g. a concurrent batch upsert of the same keys), or
+              // CDC flipped on since we staged without images — the one
+              // commit that stages, footers included, inside the lock
+              changes.discard(f)
+              deriveUpsert(baseL, metaL)
+            } else dvs0
+          flip(spark, f, tblDir, data, op, baseL, epochFiles, dvs,
+            extend = true, streamEpoch = Some(queryId -> epochId))
+          changes.publish(f, op)
         }
       }
     } finally {
       f.delete(stagingPath, true)
-      cleanups.foreach(p => f.delete(p, true))
+      dvRoots.foreach(p => f.delete(p, true))
+      changes.discard(f)
     }
   }
 
@@ -1485,99 +1327,6 @@ object KeyedTable {
           matched <= (live * MorMaxFraction).toLong
         }
     }
-
-  /** Commit a merge-on-read UPDATE/MERGE: the staged POST-IMAGE data
-    * files EXTEND the touched buckets' file lists (additive, the
-    * append protocol) while the staged DELETE-VECTOR sidecars
-    * tombstone the matched rows' old positions — both in ONE manifest
-    * flip, so a reader sees either the full old state or the full new
-    * state. This is the Iceberg-v2 decomposition of UPDATE/MERGE:
-    * write cost ∝ |matched + inserted| rows, never the touched
-    * buckets' bytes — the slope that makes a daily CDC feed over a
-    * 100 TB table affordable. Any rename failure deletes the moved-in
-    * files and aborts with the current snapshot untouched. */
-  private def commitStagedMorMut(spark: SparkSession, f: FileSystem,
-                                 dir: String, data: String,
-                                 dataStaging: String, dvStaging: String,
-                                 touched: Seq[Int], op: String,
-                                 base: Manifest, meta: TableMeta,
-                                 streamEpoch: Option[(String, Long)],
-                                 preStats: Map[(Int, String), FileFooter])
-      : Manifest = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val statCol = meta.pk.headOption
-    val statColsTyped: Seq[(String, DataType)] = statColsTypedOf(meta)
-    val commitId = UUID.randomUUID().toString.take(8)
-    val moved = scala.collection.mutable.ArrayBuffer.empty[Path]
-    def abort(msg: String): Nothing = {
-      moved.foreach(p => f.delete(p, false))
-      throw new StoreException(msg)
-    }
-    def moveIn(staging: String, pfx: String): Map[Int, Seq[(Path, Long)]] =
-      touched.flatMap { b =>
-        val sdir = new Path(staging, s"$BucketCol=$b")
-        if (!f.exists(sdir)) None
-        else {
-          val files = f.listStatus(sdir)
-            .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-            .sortBy(_.getPath.getName)
-          if (files.isEmpty) None
-          else {
-            val tdir = new Path(data, s"$BucketCol=$b")
-            if (!f.mkdirs(tdir))
-              abort(s"$op(mor): could not create bucket dir $tdir; " +
-                "commit aborted, current snapshot unchanged")
-            Some(b -> files.toSeq.map { st =>
-              val dst = new Path(tdir, s"$commitId-$pfx${st.getPath.getName}")
-              if (!f.rename(st.getPath, dst))
-                abort(s"$op(mor): could not move staged file " +
-                  s"${st.getPath} -> $dst; commit aborted, current " +
-                  "snapshot unchanged")
-              moved += dst
-              (dst, st.getLen)
-            })
-          }
-        }
-      }.toMap
-    val dataMoved = moveIn(dataStaging, "")
-    val dvMoved = moveIn(dvStaging, "dv-")
-    // post-image footer stats pre-collected OUTSIDE the lock (see
-    // [[stageFileStats]]); DV position files stay in-lock — delta-sized,
-    // and the upsert-mode sink RE-DERIVES them inside the lock on a
-    // window conflict
-    val pre: Map[Path, FileFooter] =
-      dataMoved.iterator.flatMap { case (b, fls) =>
-        fls.flatMap { case (dst, _) =>
-          preStats.get((b, dst.getName.stripPrefix(s"$commitId-")))
-            .map(dst -> _)
-        }
-      }.toMap
-    val footer = pre ++ pkFileStatsAll(conf,
-      dataMoved.valuesIterator.flatten.map(_._1)
-        .filterNot(pre.contains).toSeq, statColsTyped)
-    val dvFooter = pkFileStatsAll(conf,
-      dvMoved.valuesIterator.flatten.map(_._1).toSeq, Nil)
-    val newFiles: Map[Int, Seq[ManifestFile]] =
-      base.files ++ dataMoved.map { case (b, fls) =>
-        b -> (base.files.getOrElse(b, Nil) ++ fls.map { case (dst, len) =>
-          val fstat = footer(dst)
-          ManifestFile(dst.getName, len, fstat.rows,
-            statCol.flatMap(fstat.cols.get),
-            statCol.fold(fstat.cols)(fstat.cols - _),
-            fstat.nulls)
-        })
-      }
-    val newDvs: Map[Int, Seq[ManifestFile]] =
-      base.dvs ++ dvMoved.map { case (b, fls) =>
-        b -> (base.dvs.getOrElse(b, Nil) ++ fls.map { case (dst, len) =>
-          ManifestFile(dst.getName, len, dvFooter(dst).rows)
-        })
-      }
-    val mf = Manifest(base.version + 1, base.buckets, newFiles,
-      op = Some(op), dvs = newDvs, streams = base.streams ++ streamEpoch)
-    try Manifest.commit(spark, dir, mf)
-    catch { case e: Throwable => moved.foreach(p => f.delete(p, false)); throw e }
-  }
 
   /** Raw bucket-partitioned read with the evolved logical schema (old
     * files lacking evolved columns yield NULLs). Resolves the file set
@@ -1789,6 +1538,27 @@ object KeyedTable {
       touched.filter(b => window(base0, b) != window(latest, b))
     }
 
+  /** Up to five PKs of `rows` that files ADDED to the `touched` buckets
+    * between `base0` and `latest` already hold: the flip-time half of
+    * an append's overlap probe (the staging half read `base0`), so
+    * together they cover the commit-time snapshot. No added file — the
+    * usual case, and always when nothing committed since — means no
+    * IO. Callers word their own conflict. */
+  private def addedKeys(spark: SparkSession, wh: String, table: String,
+                        meta: TableMeta, base0: Manifest, latest: Manifest,
+                        touched: Seq[Int], rows: DataFrame): Array[Row] = {
+    val added = touched.flatMap { b =>
+      val before = base0.files.getOrElse(b, Nil).map(_.name).toSet
+      val now = latest.files.getOrElse(b, Nil)
+        .filterNot(x => before.contains(x.name))
+      if (now.isEmpty) None else Some(b -> now)
+    }.toMap
+    if (added.isEmpty) Array.empty
+    else rows.join(readRawWith(spark, wh, table, meta,
+        latest.copy(files = added)), meta.pk, "left_semi")
+      .limit(5).select(meta.pk.map(col): _*).collect()
+  }
+
   /** The bucket-level conflict window of the replace-shaped verbs
     * (upsert, merge, update, delete): two writers into DISJOINT bucket
     * sets both commit; a same-bucket commit since the pin aborts this
@@ -1823,7 +1593,10 @@ object KeyedTable {
       if (cdcNow && src.isEmpty) stage(changes)
     def publish(f: FileSystem, op: String): Unit =
       src.foreach(s => commitChangelogBatch(f, op, s, nextChangelogDst(f, dir)))
-    def discard(f: FileSystem): Unit = src.foreach(f.delete(_, true))
+    def discard(f: FileSystem): Unit = {
+      src.foreach(f.delete(_, true))
+      src = None
+    }
   }
 
   /** The append body behind [[toSql]]'s `how = Append` (under
@@ -1932,8 +1705,7 @@ object KeyedTable {
         },
         toPhys(clusterByBucket(newB, touched, metaUsed.pk), metaUsed)
           .write.partitionBy(BucketCol).parquet(staging))
-      val preStats = stageFileStats(spark, f, staging,
-        statColsTypedOf(metaUsed))
+      val staged = stageFiles(spark, f, staging, statColsTypedOf(metaUsed))
 
       policy.exclusive(spark, dir, s"$label(commit)") {
         val metaLatest = TableMeta.read(spark, dir)
@@ -1944,30 +1716,18 @@ object KeyedTable {
           s"$label(commit)")
         checkBucketCount(base0, baseLatest, "append")
         val mergedSchema = mergeEvolved(evolved, metaUsed, metaLatest)
-        if (!metaUsed.autoIndex && baseLatest.version != base0.version) {
-          val addedByBucket = touched.flatMap { b =>
-            val before = base0.files.getOrElse(b, Nil).map(_.name).toSet
-            val now = baseLatest.files.getOrElse(b, Nil)
-              .filterNot(x => before.contains(x.name))
-            if (now.isEmpty) None else Some(b -> now)
-          }.toMap
-          if (addedByBucket.nonEmpty) {
-            val addedDf = readRawWith(spark, wh, tableName, metaLatest,
-              baseLatest.copy(files = addedByBucket))
-            val clash = newB.join(addedDf, metaUsed.pk, "left_semi")
-              .limit(5).select(metaUsed.pk.map(col): _*).collect()
-            if (clash.nonEmpty)
-              throw new ConcurrentWriteException(
-                s"PK(s) ${clash.mkString(", ")} were written by a " +
-                "concurrent mutation after this append staged; retry " +
-                "(or use upsert semantics if overwrite is intended)")
-          }
+        if (!metaUsed.autoIndex) {
+          val clash = addedKeys(spark, wh, tableName, metaLatest, base0,
+            baseLatest, touched, newB)
+          if (clash.nonEmpty)
+            throw new ConcurrentWriteException(
+              s"PK(s) ${clash.mkString(", ")} were written by a " +
+              "concurrent mutation after this append staged; retry " +
+              "(or use upsert semantics if overwrite is intended)")
         }
         changes.stageLate(metaLatest.changelog, inserts)
-        commitStaged(spark, f, dir, data, staging, touched, label,
-          baseLatest, baseLatest.buckets,
-          metaLatest.copy(schema = mergedSchema), add = true,
-          streamEpoch = txn, preStats = preStats)
+        flip(spark, f, dir, data, label, baseLatest, staged, extend = true,
+          streamEpoch = txn)
         changes.publish(f, label)
         val metaFinal = metaLatest.copy(schema = mergedSchema,
           changelog = wantChangelog || metaLatest.changelog)
@@ -2270,7 +2030,8 @@ object KeyedTable {
           toPhys(clusterByBucket(out, touched, meta0.pk), meta0)
             .write.partitionBy(BucketCol).parquet(staging))
       }
-      val preStats = stageFileStats(spark, f, staging, statColsTypedOf(meta0))
+      val staged = stageFiles(spark, f, staging, statColsTypedOf(meta0))
+      val stagedDvs = stageFiles(spark, f, dvStaging, Nil)
       policy.betweenPhases(
         if (tombstoned) MergeConcurrentHooks.betweenPhases
         else UpsertConcurrentHooks.betweenPhases)
@@ -2301,19 +2062,14 @@ object KeyedTable {
               verb)
         }
         changes.stageLate(metaLatest.changelog, images)
-        val metaCommit = metaLatest.copy(schema = mergedSchema)
-        if (mor)
-          commitStagedMorMut(spark, f, dir, data, staging, dvStaging,
-            touched, commitOp, baseLatest, metaCommit, streamEpoch = None,
-            preStats = preStats)
-        else
-          // removeMissing on a merge: a touched bucket whose rows ALL
-          // tombstoned has no staged replacement and leaves the snapshot
-          commitStaged(spark, f, dir, data, staging, touched, commitOp,
-            baseLatest, baseLatest.buckets, metaCommit,
-            removeMissing = tombstoned, preStats = preStats)
+        // merge-on-read extends with post-images and DVs; a CoW merge's
+        // touched bucket whose rows ALL tombstoned staged no file and
+        // leaves the snapshot
+        flip(spark, f, dir, data, commitOp, baseLatest, staged, stagedDvs,
+          extend = mor,
+          removeMissing = if (tombstoned && !mor) touched else Nil)
         changes.publish(f, commitOp)
-        val metaFinal = metaCommit.copy(
+        val metaFinal = metaLatest.copy(schema = mergedSchema,
           changelog = wantChangelog || metaLatest.changelog)
         if (metaFinal != metaLatest) TableMeta.write(spark, dir, metaFinal)
       }
@@ -2504,8 +2260,8 @@ object KeyedTable {
             .write.partitionBy(BucketCol).parquet(staging))
       }
       // post-image staging has the same bucket layout in BOTH modes
-      val preStats = stageFileStats(spark, f, staging,
-        statColsTypedOf(meta0))
+      val staged = stageFiles(spark, f, staging, statColsTypedOf(meta0))
+      val stagedDvs = stageFiles(spark, f, dvStaging, Nil)
       policy.betweenPhases(UpdateConcurrentHooks.betweenPhases)
 
       policy.exclusive(spark, dir, s"$label(commit)") {
@@ -2524,14 +2280,8 @@ object KeyedTable {
         enforceChecks(postImages, metaLatest.checks -- meta0.checks.keySet,
           s"$label(commit)")
         changes.stageLate(metaLatest.changelog, images)
-        if (mor)
-          commitStagedMorMut(spark, f, dir, data, staging, dvStaging,
-            touched, label, baseLatest, metaLatest, streamEpoch = None,
-            preStats = preStats)
-        else
-          commitStaged(spark, f, dir, data, staging, touched, label,
-            baseLatest, baseLatest.buckets, metaLatest,
-            preStats = preStats)
+        flip(spark, f, dir, data, label, baseLatest, staged, stagedDvs,
+          extend = mor)
         changes.publish(f, label)
         if (cdc && !metaLatest.changelog)
           TableMeta.write(spark, dir, metaLatest.copy(changelog = true))
@@ -2578,7 +2328,7 @@ object KeyedTable {
     *     snapshot) or — [[DeleteMode]] MergeOnRead, or Auto below
     *     [[MorMaxFraction]] — only the matched rows' positions are
     *     staged as per-bucket delete-vector sidecars
-    *     ([[commitStagedDvs]]), moving kilobytes, not buckets. The
+    *     ([[flip]] extends the DV lists), moving kilobytes, not buckets. The
     *     delete images (pre-image in `old_*`, `new_*` NULL) stage
     *     alongside.
     *  3. FLIP, re-validating: a rebucket, ANY schema change or a moved
@@ -2643,9 +2393,9 @@ object KeyedTable {
             meta0)
             .write.partitionBy(BucketCol).parquet(staging))
       }
-      val preStats =
-        if (mor) Map.empty[(Int, String), FileFooter]
-        else stageFileStats(spark, f, staging, statColsTypedOf(meta0))
+      // merge-on-read staged DV sidecars, copy-on-write the survivors
+      val staged = stageFiles(spark, f, staging,
+        if (mor) Nil else statColsTypedOf(meta0))
       policy.betweenPhases(DeleteConcurrentHooks.betweenPhases)
 
       policy.exclusive(spark, dir, s"$label(commit)") {
@@ -2660,12 +2410,11 @@ object KeyedTable {
         checkWindow(base0, baseLatest, touched, "delete", "rewrite")
         changes.stageLate(metaLatest.changelog, images)
         if (mor)
-          commitStagedDvs(spark, f, dir, data, staging, touched, baseLatest,
-            label)
+          flip(spark, f, dir, data, label, baseLatest, Map.empty, staged,
+            extend = true)
         else
-          commitStaged(spark, f, dir, data, staging, touched, label,
-            baseLatest, baseLatest.buckets, metaLatest,
-            removeMissing = true, preStats = preStats)
+          flip(spark, f, dir, data, label, baseLatest, staged,
+            removeMissing = touched)
         changes.publish(f, label)
         if (cdc && !metaLatest.changelog)
           TableMeta.write(spark, dir, metaLatest.copy(changelog = true))
@@ -2936,8 +2685,7 @@ object KeyedTable {
           .write.partitionBy(BucketCol).parquet(staging)
         // footer stats of the staged files too — the flip must stay a
         // flip even when every bucket was crowded
-        val preStats = stageFileStats(spark, f, staging,
-          statColsTypedOf(meta0))
+        val staged = stageFiles(spark, f, staging, statColsTypedOf(meta0))
         MaintenanceHooks.betweenPhases()
         // ---------------- LOCKED: re-validate, commit ----------------
         WriteLock.withLockWait(spark, dir, "compact(commit)", commitWaitMs) {
@@ -2945,9 +2693,7 @@ object KeyedTable {
           val baseLatest = Manifest.current(spark, dir)
           maintenanceWindowCheck(base0, baseLatest, meta0, metaLatest,
             crowded, "compact")
-          commitStaged(spark, f, dir, data, staging, crowded, "compact",
-            baseLatest, baseLatest.buckets, metaLatest,
-            preStats = preStats)
+          flip(spark, f, dir, data, "compact", baseLatest, staged)
         }
       } finally f.delete(new Path(staging), true)
       crowded.size
@@ -3160,7 +2906,7 @@ object KeyedTable {
           val zStats = (meta0.statsCols ++
             zCols.filter(c => statStorable(meta0.schema(c).dataType))
               .filterNot(meta0.pk.headOption.contains)).distinct
-          val preStats = stageFileStats(spark, f, staging,
+          val staged = stageFiles(spark, f, staging,
             statColsTypedOf(meta0.copy(statsCols = zStats)))
           MaintenanceHooks.betweenPhases()
           // -------------- LOCKED: re-validate, commit --------------
@@ -3172,10 +2918,11 @@ object KeyedTable {
               touched, "zorderCompact")
             // Z-ordering makes per-file bounds on the clustered columns
             // tight — exactly when per-column manifest stats pay off.
-            // Register them BEFORE the commit records footer stats, so
-            // this commit's files carry the stats. (Crash between this
-            // meta write and the flip: registered stats with the old
-            // layout — harmless, future commits just record extras.)
+            // This commit's files carry them (staged with zStats above);
+            // registering them makes every later commit record them
+            // too. (Crash between this meta write and the flip:
+            // registered stats with the old layout — harmless, future
+            // commits just record extras.)
             val newStats = (metaLatest.statsCols ++
               zCols.filter(c => statStorable(metaLatest.schema(c).dataType))
                 .filterNot(metaLatest.pk.headOption.contains)).distinct
@@ -3186,9 +2933,7 @@ object KeyedTable {
                 TableMeta.write(spark, dir, m)
                 m
               }
-            commitStaged(spark, f, dir, data, staging, touched,
-              "zorder", baseLatest, baseLatest.buckets, metaStat,
-              preStats = preStats)
+            flip(spark, f, dir, data, "zorder", baseLatest, staged)
             // full rewrite of every base0 bucket — and any bucket born
             // AFTER the drop was already written post-drop — so dropped
             // names are re-addable again (see dropColumns)
@@ -3608,9 +3353,8 @@ object KeyedTable {
             meta0)
             .write.partitionBy(BucketCol).parquet(staging)
           // a rebucket stages EVERY row — its footer stats must not be
-          // paid inside the flip (see stageFileStats)
-          val preStats = stageFileStats(spark, f, staging,
-            statColsTypedOf(meta0))
+          // paid inside the flip (see stageFiles)
+          val staged = stageFiles(spark, f, staging, statColsTypedOf(meta0))
           MaintenanceHooks.betweenPhases()
           // -------------- LOCKED: re-validate, commit --------------
           WriteLock.withLockWait(spark, dir, "rebucket(commit)",
@@ -3635,10 +3379,9 @@ object KeyedTable {
             // (newBuckets < old) leave the snapshot via removeMissing;
             // the old files stay for readers of previous snapshots
             // until vacuum.
-            commitStaged(spark, f, dir, data, staging,
-              0 until math.max(base0.buckets, newBuckets), "rebucket",
-              baseLatest, newBuckets, metaLatest, removeMissing = true,
-              preStats = preStats)
+            flip(spark, f, dir, data, "rebucket", baseLatest, staged,
+              removeMissing = 0 until math.max(base0.buckets, newBuckets),
+              newBuckets = Some(newBuckets))
             // a full rewrite: every live file now carries the current
             // schema, so dropped names may be re-added safely
             if (metaLatest.dropped.nonEmpty)
@@ -3713,7 +3456,7 @@ object KeyedTable {
     // predicted-expired but actually protected by a tag/branch added
     // meanwhile) re-protects its references; the candidate set only
     // ever SHRINKS inside the lock. Data files move into bucket dirs
-    // only under the lock (commitStaged), so no candidate can become
+    // only under the lock (the flip), so no candidate can become
     // live invisibly between the walk and the flip.
     val preCutoff = System.currentTimeMillis() - olderThanMs
     val preWalk: Option[(Set[(String, Long)], Seq[(String, Path)], Seq[Path])] =
@@ -3833,28 +3576,33 @@ object KeyedTable {
           stale
         }
       }.sum
-      // Manifest-commit temp files (`_manifests/.tmp-<uuid>`): by
-      // construction never referenced once Manifest.commit returns —
-      // a crash between create and rename is the only way one survives.
-      // Reaped UNCONDITIONALLY (even when no manifest was ever
-      // committed, e.g. a failed FIRST commit on a fresh table — the
-      // expiry loop below never runs for those).
-      val mdir = Manifest.dir(dir)
-      if (f.exists(mdir)) {
-        f.listStatus(mdir).foreach { st =>
-          if (st.isFile && st.getPath.getName.startsWith(".tmp-") &&
-              st.getModificationTime < cutoff && reap(st.getPath, false))
-            removed += 1
+      // Publish temp FILES (`.tmp-*`), never referenced once their
+      // publish returns — only a crash between create and publish
+      // leaves one. Every ref (the base and each branch) has them in
+      // its root (meta, tags, fork record, and the lock file's arbiter
+      // temps), its `_manifests/` (version and segment flips) and its
+      // `_changelog/` (the floor marker). All but the lock temps
+      // publish under a write lock this pass holds, so they take the
+      // plain age bound; a lock temp belongs to a writer still
+      // CONTENDING for the lock, so the roots take the unlocked floor
+      // (the locked root temps lose only reaps younger than the
+      // stale-lock TTL). Reaped even when no manifest was ever
+      // committed (a failed FIRST commit on a fresh table — the expiry
+      // loop below never runs for those).
+      (dir +: branches.map(_._2)).foreach { ref =>
+        Seq(new Path(ref) -> unlockedCutoff, Manifest.dir(ref) -> cutoff,
+            new Path(ref, ChangelogDir) -> cutoff).foreach {
+          case (d, before) =>
+            if (f.exists(d))
+              f.listStatus(d).foreach { st =>
+                if (st.isFile && st.getPath.getName.startsWith(".tmp-") &&
+                    st.getModificationTime < before &&
+                    reap(st.getPath, false))
+                  removed += 1
+              }
         }
       }
-      // Table-root temp FILES (`.tmp-*`: tag temps, and the commit
-      // arbiter's lock-file temps): only a crash between create and
-      // publish leaves one behind — same reap rule as manifest temps.
-      f.listStatus(p).foreach { st =>
-        if (st.isFile && st.getPath.getName.startsWith(".tmp-") &&
-            st.getModificationTime < cutoff && reap(st.getPath, false))
-          removed += 1
-      }
+      val mdir = Manifest.dir(dir)
       Manifest.latest(spark, dir).foreach { m =>
         // Order matters: FIRST expire old manifests past the age bound
         // (never the current one, never a TAGGED one — a tag is a

@@ -552,15 +552,6 @@ object Manifest {
           s"no manifest version $version (available: ${vs.mkString(", ")})")
     }
 
-  private def readFileUtf8(f: FileSystem, p: Path): String = {
-    val in = f.open(p)
-    try {
-      val bytes = new Array[Byte](f.getFileStatus(p).getLen.toInt)
-      in.readFully(bytes)
-      new String(bytes, "UTF-8")
-    } finally in.close()
-  }
-
   private def read(spark: SparkSession, tableDir: String,
                    version: Long): Manifest = {
     val p = new Path(dir(tableDir), nameOf(version))
@@ -568,7 +559,7 @@ object Manifest {
     val hit = cache.get(key)
     if (hit != null) return hit
     val f = fsOf(spark, tableDir)
-    val m = parse(readFileUtf8(f, p), loadSegment(f, tableDir, _))
+    val m = parse(SmallFile.readUtf8(f, p), loadSegment(f, tableDir, _))
     cachePut(key, m)
     m
   }
@@ -581,7 +572,7 @@ object Manifest {
     val key = p.toString
     val hit = segCache.get(key)
     if (hit != null) return hit
-    val v = segmentFromJson(readFileUtf8(f, p))
+    val v = segmentFromJson(SmallFile.readUtf8(f, p))
     segCachePut(key, v)
     v
   }
@@ -682,10 +673,12 @@ object Manifest {
     * or version flip MUST route through `CommitArbiter.putIfAbsent` —
     * never a raw create/rename (CommitArbiterSpec's racy-filesystem
     * races are the template; a raw primitive silently reintroduces the
-    * lost-commit hazard on object stores); and (b) footer stats MUST be
-    * pre-collected OUTSIDE the lock (`KeyedTable.stageFileStats` /
-    * `preStats`) — in-lock footer IO turns the brief flip into a writer
-    * outage proportional to the staged file count. */
+    * lost-commit hazard on object stores); and (b) a mutation's staged
+    * files — data and delete-vector sidecars alike — are listed and
+    * their footers read OUTSIDE the lock (`KeyedTable.stageFiles`);
+    * inside it `KeyedTable.flip` only renames them in and builds the
+    * manifest — in-lock listing or footer IO turns the brief flip into
+    * a writer outage proportional to the staged file count. */
   def commit(spark: SparkSession, tableDir: String, m0: Manifest): Manifest = {
     // stamp the commit wall-clock once, here (the mtime-independent
     // timestamp history/$history surface; atTimestamp keeps using the

@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
 import graft.SparkSpec
 
 /** The crash-safety contract of the manifest commit protocol
-  * (KeyedTable.commitStaged + Manifest.commit): Hadoop renames report
+  * (KeyedTable.flip + Manifest.commit): Hadoop renames report
   * failure by RETURNING FALSE, and a false return at any point — moving
   * a staged file in, or flipping the manifest — must never lose a row:
   * the current snapshot stays live and complete, the mutation aborts
@@ -169,6 +169,105 @@ class CommitFaultSpec extends SparkSpec {
     // the retry publishes cleanly (fork record untouched by the abort)
     assert(Branches.fastForward(spark, wh, t, "stage") == fork + 1)
     assert(rowsOf(t).map(_._1) == (1L to 7L))
+  }
+
+  /** Everything a failed flip must leave as it was: the manifest
+    * (version, files, delete vectors), every file in the bucket dirs
+    * (no moved-in leftover) and the rows. */
+  private def commitState(table: String)
+      : (Long, Map[Int, Seq[ManifestFile]], Map[Int, Seq[ManifestFile]],
+         Set[String], Seq[(Long, String, Double)]) = {
+    import org.apache.hadoop.fs.Path
+    val m = Manifest.current(spark, s"$wh/$table")
+    val data = new Path(s"$wh/$table/data")
+    val f = data.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val onDisk = f.listStatus(data).filter(_.isDirectory).flatMap { d =>
+      f.listStatus(d.getPath).map(st => s"${d.getPath.getName}/${st.getPath.getName}")
+    }.toSet
+    (m.version, m.files, m.dvs, onDisk, rowsOf(table))
+  }
+
+  /** A merge-on-read commit moves its post-image files in first, then
+    * its delete-vector sidecars: fail the first sidecar rename (staged
+    * `part-*` -> live `<commit>-dv-part-*`; the staging dir names
+    * contain `-dv-` too, so the pattern pins the sidecar's live name). */
+  private def dvMoveFails(table: String)(mutation: => Any): Unit = {
+    val before = commitState(table)
+    val e = intercept[StoreException] {
+      FaultyFileSystem.armed(".staging-", "-dv-part-")(mutation)
+    }
+    assert(e.getMessage.contains("could not move staged file"), e.getMessage)
+    assert(e.getMessage.contains("commit aborted, current snapshot unchanged"))
+    assert(commitState(table) == before)
+  }
+
+  test("MoR update: DV move fails after the post-images moved -> " +
+       "snapshot, files and rows unchanged, retry lands") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val t = freshTable("t_mor_update_fail")
+    def run() = KeyedTable.update(spark, wh, t, col("id") <= 2L,
+      Map("v" -> lit(0.5)), mode = DeleteMode.MergeOnRead)
+    dvMoveFails(t)(run())
+    assert(run() == 2L)
+    assert(Manifest.current(spark, s"$wh/$t").dvs.nonEmpty)
+    assert(rowsOf(t) == Seq((1L, "a", 0.5), (2L, "b", 0.5)) ++ base.drop(2))
+  }
+
+  test("MoR merge: DV move fails after the post-images moved -> " +
+       "snapshot, files and rows unchanged, retry lands") {
+    import org.apache.spark.sql.functions.col
+    val t = freshTable("t_mor_merge_fail")
+    def run() = KeyedTable.merge(df((2L, "B", 20.0), (3L, "x", 0.0),
+        (7L, "g", 7.0)), wh, t, col("id") === 3L,
+      mode = DeleteMode.MergeOnRead)
+    dvMoveFails(t)(run())
+    assert(run() == ((1L, 1L, 1L)))
+    assert(Manifest.current(spark, s"$wh/$t").dvs.nonEmpty)
+    assert(rowsOf(t) == Seq((1L, "a", 1.0), (2L, "B", 20.0), (4L, "d", 4.0),
+      (5L, "e", 5.0), (6L, "f", 6.0), (7L, "g", 7.0)))
+  }
+
+  test("stream epoch: data move fails -> ledger and table unchanged, " +
+       "the replay commits the epoch exactly once") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    val t = freshTable("t_stream_fail")
+    val tblDir = KeyedTable.tableDir(wh, t)
+    val epoch = df((7L, "g", 7.0), (8L, "h", 8.0))
+    // the sink's executors stage per bucket under the query's root;
+    // each attempt (and each replay) stages the epoch afresh
+    def commitEpoch(): Unit = {
+      val staging = s"$tblDir/.staging-stream-q/epoch=0"
+      epoch.withColumn("pb_bucket",
+          pmod(xxhash64(col("id")), lit(4L)).cast("int"))
+        .repartition(1).write.partitionBy("pb_bucket").parquet(staging)
+      val p = new Path(staging)
+      val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val files = f.listStatus(p).filter(_.isDirectory).flatMap { d =>
+        f.listStatus(d.getPath)
+          .filter(_.getPath.getName.endsWith(".parquet"))
+          .map(st => s"${d.getPath.getName}/${st.getPath.getName}")
+      }.toSet
+      KeyedTable.commitStreamEpoch(spark, tblDir, KeyedTable.dataDir(wh, t),
+        "q", 0L, staging, 4, files)
+    }
+    val before = commitState(t)
+    val e = intercept[StoreException] {
+      FaultyFileSystem.armed(".staging-stream-", "/data/pb_bucket=") {
+        commitEpoch()
+      }
+    }
+    assert(e.getMessage.contains("could not move staged file"), e.getMessage)
+    assert(commitState(t) == before)
+    assert(!Manifest.current(spark, tblDir).streams.contains("q"))
+    commitEpoch()
+    val landed = Manifest.current(spark, tblDir)
+    assert(landed.version == before._1 + 1 && landed.streams("q") == 0L)
+    assert(rowsOf(t) == base ++ Seq((7L, "g", 7.0), (8L, "h", 8.0)))
+    // a second replay of the committed epoch is a no-op
+    commitEpoch()
+    assert(Manifest.current(spark, tblDir).version == landed.version)
+    assert(rowsOf(t) == base ++ Seq((7L, "g", 7.0), (8L, "h", 8.0)))
   }
 
   test("failed commits leave only vacuumable leftovers, never live-data gaps") {

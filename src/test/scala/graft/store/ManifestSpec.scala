@@ -131,6 +131,35 @@ class ManifestSpec extends SparkSpec {
       olderThanMs = 0L) >= 1)
     assert(!f.exists(orphan2),
       "vacuum skipped the temp file of a never-committed first manifest")
+    // publish temps of every ref, not only the base `_manifests/`: the
+    // changelog floor's, a branch's fork record's, manifests' and
+    // changelog floor's, and a table-root meta temp
+    Branches.create(spark, wh, t, "b")
+    val brDir = new Path(s"$wh/$t/${Branches.DirName}/b")
+    val crashed = Seq(
+      new Path(s"$wh/$t/${KeyedTable.ChangelogDir}", ".tmp-floor-dead"),
+      new Path(brDir, ".tmp-fork-dead"),
+      new Path(Manifest.dir(brDir.toString), ".tmp-beef"),
+      new Path(brDir, s"${KeyedTable.ChangelogDir}/.tmp-floor-beef"),
+      new Path(s"$wh/$t", ".tmp-meta-dead"))
+    val hourMs = 3600L * 1000
+    val twoHoursAgo = System.currentTimeMillis() - 2 * hourMs
+    crashed.foreach { tmp =>
+      f.create(tmp, false).close()
+      f.setTimes(tmp, twoHoursAgo, twoHoursAgo)
+    }
+    // one publish in flight: younger than the age bound
+    val fresh = new Path(brDir, ".tmp-fork-live")
+    f.create(fresh, false).close()
+    assert(KeyedTable.vacuum(spark, wh, t, olderThanMs = hourMs,
+      dryRun = true) == crashed.size)
+    assert(crashed.forall(f.exists), "a dry run deleted a temp")
+    assert(KeyedTable.vacuum(spark, wh, t, olderThanMs = hourMs) ==
+      crashed.size)
+    crashed.foreach(tmp => assert(!f.exists(tmp), s"vacuum left $tmp"))
+    assert(f.exists(fresh), "vacuum reaped a temp younger than the bound")
+    assert(ids(KeyedTable.readSql(spark, wh, s"$t@b")) ==
+      Seq(1L, 2L, 3L, 4L, 5L, 6L))
   }
 
   test("vacuum keeps files referenced by ANY surviving manifest, not just the current") {
