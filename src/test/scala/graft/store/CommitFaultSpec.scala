@@ -229,28 +229,11 @@ class CommitFaultSpec extends SparkSpec {
 
   test("stream epoch: data move fails -> ledger and table unchanged, " +
        "the replay commits the epoch exactly once") {
-    import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
     val t = freshTable("t_stream_fail")
     val tblDir = KeyedTable.tableDir(wh, t)
-    val epoch = df((7L, "g", 7.0), (8L, "h", 8.0))
-    // the sink's executors stage per bucket under the query's root;
     // each attempt (and each replay) stages the epoch afresh
-    def commitEpoch(): Unit = {
-      val staging = s"$tblDir/.staging-stream-q/epoch=0"
-      epoch.withColumn("pb_bucket",
-          pmod(xxhash64(col("id")), lit(4L)).cast("int"))
-        .repartition(1).write.partitionBy("pb_bucket").parquet(staging)
-      val p = new Path(staging)
-      val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val files = f.listStatus(p).filter(_.isDirectory).flatMap { d =>
-        f.listStatus(d.getPath)
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .map(st => s"${d.getPath.getName}/${st.getPath.getName}")
-      }.toSet
-      KeyedTable.commitStreamEpoch(spark, tblDir, KeyedTable.dataDir(wh, t),
-        "q", 0L, staging, 4, files)
-    }
+    def commitEpoch(): Unit = SinkEpoch.commit(spark, wh, t,
+      df((7L, "g", 7.0), (8L, "h", 8.0)), 4, "q", 0L)
     val before = commitState(t)
     val e = intercept[StoreException] {
       FaultyFileSystem.armed(".staging-stream-", "/data/pb_bucket=") {

@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+import org.apache.spark.sql.functions.{col, lit}
 
 import graft.SparkSpec
 import graft.TempDirs
@@ -105,26 +105,6 @@ class ManifestEntryFooterSpec extends SparkSpec {
     }
   }
 
-  /** Stages one sink epoch the way the sink's executors do and commits
-    * it through the sink's commit. */
-  private def streamEpoch(t: String, in: DataFrame, buckets: Int,
-                          epochId: Long, upsert: Boolean): Unit = {
-    val tblDir = KeyedTable.tableDir(wh, t)
-    val staging = s"$tblDir/.staging-stream-q/epoch=$epochId"
-    in.withColumn("pb_bucket",
-        pmod(xxhash64(col("id")), lit(buckets.toLong)).cast("int"))
-      .repartition(1).write.partitionBy("pb_bucket").parquet(staging)
-    val p = new Path(staging)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = f.listStatus(p).filter(_.isDirectory).flatMap { d =>
-      f.listStatus(d.getPath)
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .map(st => s"${d.getPath.getName}/${st.getPath.getName}")
-    }.toSet
-    KeyedTable.commitStreamEpoch(spark, tblDir, KeyedTable.dataDir(wh, t),
-      "q", epochId, staging, buckets, files, upsertMode = upsert)
-  }
-
   test("every verb's manifest entries equal their files' footers") {
     val t = "t_entries"
     val mor = DeleteMode.MergeOnRead
@@ -155,10 +135,10 @@ class ManifestEntryFooterSpec extends SparkSpec {
       "zorder" -> (() => KeyedTable.zorderCompact(spark, wh, t,
         Seq("id", "v"))),
       "rebucket" -> (() => KeyedTable.rebucket(spark, wh, t, 8)),
-      "stream append" -> (() => streamEpoch(t, rows(100, 110, "s"), 8, 0L,
-        upsert = false)),
-      "stream upsert" -> (() => streamEpoch(t, rows(105, 115, "t"), 8, 1L,
-        upsert = true)))
+      "stream append" -> (() => SinkEpoch.commit(spark, wh, t,
+        rows(100, 110, "s"), 8, "q", 0L)),
+      "stream upsert" -> (() => SinkEpoch.commit(spark, wh, t,
+        rows(105, 115, "t"), 8, "q", 1L, upsert = true)))
     steps.foreach { case (step, run) =>
       run()
       entriesMatchFooters(t, createFiles, step)
