@@ -25,25 +25,30 @@ import org.apache.spark.util.SerializableConfiguration
   * inside serialized tasks. */
 private[store] object DeleteVectors {
 
-  /** file name → ascending row ordinals to drop, from the given DV
-    * sidecar files (absolute paths) of ONE bucket. Runs on the EXECUTOR
-    * that reads the bucket — a few footer+page reads over files whose
-    * total size the compaction policy bounds per bucket. Keyed by bare
-    * file name because a sidecar's entries reference data files of its
-    * own bucket directory (names are only unique within a bucket). */
-  def bucketMasks(conf: Configuration,
-                  dvPaths: Seq[String]): Map[String, Array[Long]] = {
+  /** The key a data file's mask is filed under: its bucket directory
+    * and name (`pb_bucket=<b>/<file>`) — names are only unique within a
+    * bucket, and one partition of a packed scan reads several buckets. */
+  def maskKey(file: Path): String = s"${file.getParent.getName}/${file.getName}"
+
+  /** [[maskKey]] → ascending row ordinals to drop, from the given DV
+    * sidecar files (absolute paths). Runs on the EXECUTOR that reads the
+    * files — a few footer+page reads over sidecars whose total size the
+    * compaction policy bounds per bucket. A sidecar's entries name data
+    * files of its own bucket directory. */
+  def masks(conf: Configuration,
+            dvPaths: Seq[String]): Map[String, Array[Long]] = {
     import org.apache.parquet.hadoop.ParquetReader
     import org.apache.parquet.hadoop.example.GroupReadSupport
     val acc = scala.collection.mutable.Map
       .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
     dvPaths.foreach { p =>
+      val path = new Path(p)
       val reader = ParquetReader
-        .builder(new GroupReadSupport(), new Path(p)).withConf(conf).build()
+        .builder(new GroupReadSupport(), path).withConf(conf).build()
       try {
         var g = reader.read()
         while (g != null) {
-          val f = g.getString("file", 0)
+          val f = maskKey(new Path(path.getParent, g.getString("file", 0)))
           val pos = g.getLong("pos", 0)
           acc.getOrElseUpdate(f,
             scala.collection.mutable.ArrayBuffer.empty) += pos
@@ -60,8 +65,8 @@ private[store] object DeleteVectors {
   * partitions delegate untouched (columnar included — the no-DV case
   * costs nothing). Masked files read through the NO-FILTER delegate:
   * pushed predicates could row-group-skip and the emitted-row counter
-  * below must equal the true file ordinal (`_metadata.row_index`
-  * semantics, which is what the DV writer recorded). Spark re-applies
+  * below must equal the true file ordinal (parquet's row index,
+  * which is what the DV writer recorded). Spark re-applies
   * every predicate above the scan — filters here are an IO reduction,
   * never a correctness surface. `conf` ships the session Hadoop
   * configuration (broadcast once per scan) so executors can open their
@@ -91,8 +96,8 @@ private[store] class DvMaskReaderFactory(
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] = partition match {
     case k: KeyedFilePartition if k.dvPaths.nonEmpty =>
-      // executor-side: THIS task resolves THIS bucket's tombstones
-      val masks = DeleteVectors.bucketMasks(conf.value.value, k.dvPaths.toSeq)
+      // executor-side: THIS task resolves its own buckets' tombstones
+      val masks = DeleteVectors.masks(conf.value.value, k.dvPaths.toSeq)
       new DvChainedReader(k.files, k.index, masks, withFilters, noFilters)
     case p => withFilters.createReader(p)
   }
@@ -112,9 +117,8 @@ private[store] class DvChainedReader(
   private var cur: PartitionReader[InternalRow] = _
 
   private def open(f: PartitionedFile): PartitionReader[InternalRow] = {
-    val name = f.filePath.toPath.getName
     val sub = FilePartition(index, Array(f))
-    masks.get(name) match {
+    masks.get(DeleteVectors.maskKey(f.filePath.toPath)) match {
       case Some(mask) => new DvMaskedReader(noFilters.createReader(sub), mask)
       case None => withFilters.createReader(sub)
     }

@@ -32,7 +32,7 @@ object DeleteMode {
     * pre-r14 behavior): write cost ∝ touched-bucket bytes. */
   case object CopyOnWrite extends DeleteMode
   /** Commit positional delete-vector sidecars in the manifest; reads
-    * anti-join them and rewriting commits materialize them. Write
+    * skip their positions and rewriting commits materialize them. Write
     * cost ∝ |matches| — the Iceberg-v2 position-delete slope a daily
     * CDC purge on a 100 TB table needs. */
   case object MergeOnRead extends DeleteMode
@@ -227,33 +227,21 @@ object KeyedTable {
 
   /** The bytes a staging write reads, estimated on the driver from the
     * optimized plan without running a job: the sum over the plan's
-    * leaves. A scan of a store snapshot counts only the files its
-    * `pb_bucket` filter keeps (a delta write reads just its touched
-    * buckets), a persisted frame its cached size (before its first
-    * action, the plan it caches), and any other leaf counts Spark's own
-    * estimate — unknown sizes (an RDD) are
+    * leaves. A scan of a store snapshot counts only the files of the
+    * buckets its pushed filters keep ([[KeyedScan]]'s statistics — a
+    * delta write reads just its touched buckets), a persisted frame its
+    * cached size (before its first action, the plan it caches, optimized
+    * so its scans see their pushed filters), and any other leaf Spark's
+    * own estimate — unknown sizes (an RDD) are
     * huge, so such a write is never small. Leaves are summed rather than
     * taking the root's estimate, which multiplies the sides of a join. */
   private[store] def writeBytes(df: DataFrame): BigInt = {
-    import org.apache.spark.sql.catalyst.expressions.AttributeSet
-    import org.apache.spark.sql.catalyst.planning.PhysicalOperation
     import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan}
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val state = df.sparkSession.sessionState
     def bytes(p: LogicalPlan): BigInt = p match {
       case m: InMemoryRelation if !m.cacheBuilder.isCachedColumnBuffersLoaded =>
-        bytes(m.cacheBuilder.logicalPlan)
-      case PhysicalOperation(_, filters, l: LogicalRelation) if (l.relation match {
-          case r: HadoopFsRelation => r.location.isInstanceOf[ManifestFileIndex]
-          case _ => false
-        }) =>
-        val r = l.relation.asInstanceOf[HadoopFsRelation]
-        val partCols = AttributeSet(
-          l.output.filter(a => r.partitionSchema.fieldNames.contains(a.name)))
-        val partFilters = filters.filter(f =>
-          f.references.nonEmpty && f.references.subsetOf(partCols))
-        r.location.listFiles(partFilters, Nil)
-          .map(_.files.map(f => BigInt(f.getLen)).sum).sum
+        bytes(state.optimizer.execute(state.analyzer.execute(m.cacheBuilder.logicalPlan)))
       case l: LeafNode => l.stats.sizeInBytes
       case other => other.children.map(bytes).sum
     }
@@ -1123,13 +1111,13 @@ object KeyedTable {
       // rows and exits at the ledger check again harmlessly
       if (touched.isEmpty) return
       val (wh, ref) = refOf(tblDir)
-      // executors staged under PHYSICAL names (KeyedStreamingWrite's
-      // fileSchema); alias back to the logical schema for the driver-
-      // side joins and checks
-      val withBucketField = StructType(meta0.physSchema.fields :+
-        StructField(BucketCol, IntegerType, nullable = true))
-      val staged = toLogical(spark.read.option("basePath", staging)
-        .schema(withBucketField).parquet(staging), meta0)
+      // the epoch's staged files through the store's reader, as a
+      // snapshot of its own (executors staged under PHYSICAL names —
+      // KeyedStreamingWrite's fileSchema — which the scan maps back to
+      // the logical schema for the driver-side joins and checks)
+      val staged = KeyedTableSource.frame(spark, meta0, staging,
+        base0.copy(files = epochFiles.map { case (b, fls) => b -> fls.map(_.entry) },
+          dvs = Map.empty), tblDir)
       val dups = staged.groupBy(meta0.pk.map(col): _*)
         .agg(count(lit(1)).as("n")).filter(col("n") > 1)
         .limit(5).select(meta0.pk.map(col): _*).collect()
@@ -1159,8 +1147,7 @@ object KeyedTable {
       // touched bucket.
       def deriveUpsert(baseM: Manifest, metaM: TableMeta)
           : Map[Int, Seq[Staged]] = {
-        val oldPos = readRawPos(spark, wh, ref, metaM,
-            baseM, withPos = true)
+        val oldPos = withPositions(scanAt(spark, wh, ref, metaM, baseM))
           .filter(col(BucketCol).isin(touched: _*))
         val j = staged.as("n")
           .join(oldPos.as("o"), metaM.pk.toIndexedSeq, "left")
@@ -1193,7 +1180,7 @@ object KeyedTable {
           // overlap pre-check vs the snapshot-at-start (the locked
           // re-check below covers files added since, so together they
           // cover the commit-time snapshot exactly)
-          val old = readRawWith(spark, wh, ref, meta0, base0)
+          val old = scanAt(spark, wh, ref, meta0, base0)
             .filter(col(BucketCol).isin(touched: _*))
           val overlap = staged.join(old, meta0.pk.toIndexedSeq, "left_semi")
             .limit(5).select(meta0.pk.map(col): _*).collect()
@@ -1328,39 +1315,33 @@ object KeyedTable {
         }
     }
 
-  /** Raw bucket-partitioned read with the evolved logical schema (old
-    * files lacking evolved columns yield NULLs). Resolves the file set
-    * through the current manifest snapshot — never a directory walk,
-    * and immune to in-flight commits. */
-  private def readRaw(spark: SparkSession, warehouse: String, table: String,
-                      meta: TableMeta): DataFrame =
-    readRawWith(spark, warehouse, table, meta,
-      Manifest.current(spark, tableDir(warehouse, table)))
+  /** Snapshot `mf` of `table` through the store's one reader
+    * ([[KeyedTableSource.frame]]): `meta`'s logical columns (old files
+    * lacking evolved columns yield NULLs) plus `pb_bucket`, with the
+    * snapshot's delete vectors applied — every verb (mutation
+    * pre-images, probes, diff, restore) and readSql sees live rows
+    * only. Resolves the file set through the manifest — never a
+    * directory walk, and immune to in-flight commits. */
+  private def scanAt(spark: SparkSession, warehouse: String, table: String,
+                     meta: TableMeta, mf: Manifest): DataFrame =
+    KeyedTableSource.frame(spark, meta, dataDir(warehouse, table), mf,
+      tableDir(warehouse, table))
 
   /** Internal (file, position) identity columns a position-exposing
     * read carries — what a MoR delete writes into its DV sidecars. */
   private[store] val FileCol = "_graft_file"
   private[store] val PosCol = "_graft_pos"
 
-  /** DV mask join strategy: broadcast the tombstone set when its total
-    * position count (recorded in the manifest — zero IO to decide) is
-    * small enough that shipping it beats shuffling the DATA side.
-    * Beyond the bound the mask joins sort-merge; the auto-compaction
-    * policy exists precisely to keep tables out of that regime (a
-    * bucket past `maxDeleteFraction` rewrites and its DVs drop). The
-    * DSv2 scan path never shuffles at all — masks apply inside the
-    * per-file readers. */
-  private val DvBroadcastMaxRows = 1000000L
+  /** `df` (a [[scanAt]] frame) with each row's physical identity:
+    * [[FileCol]] (its parquet file's name) and [[PosCol]] (its row
+    * ordinal in that file), the scan's metadata columns. */
+  private def withPositions(df: DataFrame): DataFrame =
+    df.select(col("*"), col(FileCol), col(PosCol))
 
   /** Auto delete-mode threshold: MoR while matches ≤ this fraction of
     * the touched buckets' live rows; past it, most of the touched data
     * is dying and the CoW rewrite (which also SHRINKS the table) wins. */
   private val MorMaxFraction = 0.2
-
-  private def readRawWith(spark: SparkSession, warehouse: String,
-                          table: String, meta: TableMeta,
-                          mf: Manifest): DataFrame =
-    readRawPos(spark, warehouse, table, meta, mf, withPos = false)
 
   /** RENAME COLUMN boundary, write side: alias every renamed LOGICAL
     * column to its PHYSICAL file name just before a staged data write
@@ -1368,82 +1349,12 @@ object KeyedTable {
     * Identity (the same DataFrame, zero plan nodes) on tables without
     * renames, i.e. everywhere until the first rename. Columns outside
     * the map (pb_bucket, _graft_file/pos, changelog images) pass
-    * through untouched. */
+    * through untouched. The read side needs no inverse: the scan
+    * requests physical names from parquet and reports logical ones. */
   private def toPhys(df: DataFrame, meta: TableMeta): DataFrame =
     if (meta.renames.isEmpty) df
     else df.select(df.columns.map(c =>
       col(c).as(meta.renames.getOrElse(c, c))).toIndexedSeq: _*)
-
-  /** RENAME COLUMN boundary, read side: alias physical file names back
-    * to the logical schema — the inverse of [[toPhys]], applied once
-    * per raw read. */
-  private def toLogical(df: DataFrame, meta: TableMeta): DataFrame =
-    if (meta.renames.isEmpty) df
-    else {
-      val p2l = meta.renames.map(_.swap)
-      df.select(df.columns.map(c =>
-        col(c).as(p2l.getOrElse(c, c))).toIndexedSeq: _*)
-    }
-
-  /** The raw read, optionally exposing each row's physical identity
-    * ([[FileCol]], [[PosCol]] — parquet file name + row ordinal via
-    * `_metadata.row_index`), and ALWAYS applying the snapshot's delete
-    * vectors: rows a DV tombstones are anti-joined out here, so every
-    * v1 consumer (readSql, mutation pre-images, diff, restore, probes)
-    * sees live rows only. The no-DV case adds zero plan nodes. */
-  private def readRawPos(spark: SparkSession, warehouse: String,
-                         table: String, meta: TableMeta,
-                         m: Manifest,
-                         withPos: Boolean): DataFrame = {
-    // files carry PHYSICAL names: scan with the physical schema, then
-    // toLogical (below) aliases the frame back — renames cost one
-    // projection, and parquet row-group pruning keeps working
-    val withBucketField = StructType(
-      meta.physSchema.fields :+
-        StructField(BucketCol, IntegerType, nullable = true))
-    val data = dataDir(warehouse, table)
-    val files = m.absoluteFiles(data)
-    val dvFiles = m.dvFiles(data)
-    toLogical(if (files.isEmpty) {
-      val s =
-        if (!withPos) withBucketField
-        else StructType(withBucketField.fields :+
-          StructField(FileCol, StringType) :+ StructField(PosCol, LongType))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
-    } else {
-      // the file index comes from the manifest's (path, length)
-      // entries — no listing job, no per-file stat; basePath keeps
-      // pb_bucket recoverable from the files' dir names
-      val base = ManifestFileIndex.read(spark, data, files, withBucketField)
-      if (dvFiles.isEmpty && !withPos) base
-      else {
-        val withId = base
-          .withColumn(FileCol, col("_metadata.file_name"))
-          .withColumn(PosCol, col("_metadata.row_index"))
-        val masked =
-          if (dvFiles.isEmpty) withId
-          else {
-            // a row's identity is (bucket, file, pos): one staging
-            // TASK can write same-named part files into several
-            // bucket dirs, so the file name alone is NOT globally
-            // unique — the bucket term (recovered from the DV
-            // sidecar's own directory via basePath) disambiguates
-            val dv0 = ManifestFileIndex.read(spark, data, dvFiles,
-              StructType(Seq(StructField("file", StringType),
-                StructField("pos", LongType),
-                StructField(BucketCol, IntegerType))))
-            val dv =
-              if (m.dvRows.exists(_ <= DvBroadcastMaxRows)) broadcast(dv0)
-              else dv0
-            withId.join(dv,
-              withId(BucketCol) === dv(BucketCol) &&
-                withId(FileCol) === dv("file") && withId(PosCol) === dv("pos"),
-              "left_anti")
-          }
-        if (withPos) masked else masked.drop(FileCol, PosCol)
-      }
-    }, meta)
-  }
 
   /** Who holds the write lock through a row verb's pin → stage → flip
     * (the protocol each body — [[appendWith]], [[upsertWith]],
@@ -1554,7 +1465,7 @@ object KeyedTable {
       if (now.isEmpty) None else Some(b -> now)
     }.toMap
     if (added.isEmpty) Array.empty
-    else rows.join(readRawWith(spark, wh, table, meta,
+    else rows.join(scanAt(spark, wh, table, meta,
         latest.copy(files = added)), meta.pk, "left_semi")
       .limit(5).select(meta.pk.map(col): _*).collect()
   }
@@ -1692,7 +1603,7 @@ object KeyedTable {
       inParallel(spark)(
         {
           if (!metaUsed.autoIndex) {
-            val old = readRawWith(spark, wh, tableName, metaUsed, base0)
+            val old = scanAt(spark, wh, tableName, metaUsed, base0)
               .filter(col(BucketCol).isin(touched: _*))
             val overlap = newB.join(old, metaUsed.pk, "left_semi").limit(5)
               .select(metaUsed.pk.map(col): _*).collect()
@@ -1913,7 +1824,7 @@ object KeyedTable {
     try {
       val touched = validateAndTouched(newB, meta0.pk, validate)
       // read with the evolved schema: old files yield NULL for new columns
-      val oldTouched = readRawWith(spark, wh, tableName,
+      val oldTouched = scanAt(spark, wh, tableName,
           meta0.copy(schema = evolved), base0)
         .filter(col(BucketCol).isin(touched: _*))
       val marked = newB.withColumn("_graft_new", lit(true))
@@ -1993,8 +1904,8 @@ object KeyedTable {
         // one LEFT join of the delta against the touched buckets'
         // position-exposing read, persisted so the DV and post-image
         // writes consume ONE compute of it
-        val oldPos = readRawPos(spark, wh, tableName,
-            meta0.copy(schema = evolved), base0, withPos = true)
+        val oldPos = withPositions(scanAt(spark, wh, tableName,
+            meta0.copy(schema = evolved), base0))
           .filter(col(BucketCol).isin(touched: _*))
         val j = marked.as("n")
           .join(oldPos.as("o"), meta0.pk.toIndexedSeq, "left")
@@ -2190,7 +2101,7 @@ object KeyedTable {
     }
     val base0 = Manifest.current(spark, dir)
     val cdc = changelog || meta0.changelog
-    val raw = readRawWith(spark, wh, tableName, meta0, base0)
+    val raw = scanAt(spark, wh, tableName, meta0, base0)
     // NULL predicate rows are NOT matches (kept unchanged)
     val matched = coalesce(where, lit(false))
     val probe = raw.filter(matched).groupBy(col(BucketCol))
@@ -2229,8 +2140,7 @@ object KeyedTable {
     try {
       if (mor) {
         // one read of the matched set feeds both staged writes
-        val posFrame = readRawPos(spark, wh, tableName, meta0,
-            base0, withPos = true)
+        val posFrame = withPositions(raw)
           .filter(matched)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try inParallel(spark)(if (cdc) changes.stage(images), {
@@ -2348,7 +2258,7 @@ object KeyedTable {
     // meta.changelog (table-property CDC) covers the paths that cannot
     // express the flag — SQL `DELETE FROM graft.t`
     val cdc = changelog || meta0.changelog
-    val raw = readRawWith(spark, wh, tableName, meta0, base0)
+    val raw = scanAt(spark, wh, tableName, meta0, base0)
     val probe = raw.filter(where).groupBy(col(BucketCol))
       .agg(count(lit(1)).as("n")).collect()
     val touched = probe.map(_.getInt(0)).toSeq
@@ -2377,7 +2287,7 @@ object KeyedTable {
         // positions sorted by (file, pos) per bucket; the scan
         // re-applies existing DVs, so no position tombstones twice
         inParallel(spark)(if (cdc) changes.stage(images),
-          readRawPos(spark, wh, tableName, meta0, base0, withPos = true)
+          withPositions(raw)
             .filter(coalesce(where, lit(false)))
             .select(col(BucketCol), col(FileCol).as("file"),
               col(PosCol).as("pos"))
@@ -2678,7 +2588,7 @@ object KeyedTable {
       val staging = s"$dir/.staging-compact-${UUID.randomUUID()}"
       try {
         // the rewrite job — OUTSIDE the lock
-        toPhys(readRawWith(spark, warehouse, tableName, meta0, base0)
+        toPhys(scanAt(spark, warehouse, tableName, meta0, base0)
           .filter(col(BucketCol).isin(crowded: _*))
           .transform(clusterByBucket(_, crowded, meta0.pk)),
           meta0)
@@ -2731,7 +2641,7 @@ object KeyedTable {
       val base = Manifest.current(spark, dir)
       // delete-vector density straight from the manifest (zero IO): a
       // bucket whose tombstoned fraction breaches the bound rewrites —
-      // the read-side anti-join cost is bounded BY POLICY, and the
+      // the read-side masking cost is bounded BY POLICY, and the
       // rewrite both materializes the DVs and reclaims the dead bytes
       val dvCrowded: Seq[Int] = base.dvs.toSeq.collect {
         case (b, dvFls)
@@ -2875,7 +2785,7 @@ object KeyedTable {
       }
       val base0 = Manifest.current(spark, dir)
       val touched = base0.files.keys.toSeq.sorted
-      val raw = readRawWith(spark, warehouse, tableName, meta0, base0)
+      val raw = scanAt(spark, warehouse, tableName, meta0, base0)
       // 2 scalars per column from one aggregate — broadcast into the
       // sort key; a column whose min is NULL (all-NULL/empty) degrades
       // to a constant-0 lane in zValue
@@ -3174,7 +3084,7 @@ object KeyedTable {
           s"check constraint $name already exists " +
           s"(${meta.checks(name)}); drop it first to replace")
       val bad =
-        try readRaw(spark, warehouse, tableName, meta)
+        try scanAt(spark, warehouse, tableName, meta, Manifest.current(spark, dir))
           .filter(expr(predicateSql) <=> lit(false)).count()
         catch { case e: org.apache.spark.sql.AnalysisException =>
           throw new StoreException(
@@ -3346,7 +3256,7 @@ object KeyedTable {
         try {
           // the full shuffle + rewrite — OUTSIDE the lock
           toPhys(withBucket(
-              readRawWith(spark, warehouse, tableName, meta0, base0)
+              scanAt(spark, warehouse, tableName, meta0, base0)
                 .drop(BucketCol),
               meta0.pk, newBuckets)
             .transform(clusterByBucket(_, 0 until newBuckets, meta0.pk)),
@@ -3898,7 +3808,7 @@ object KeyedTable {
     // dvs cleared: any DV in force tombstones only PRE-window files
     // (the window is dv-stable per the guard above), and added files
     // are too new for any DV to name them
-    readRawWith(spark, warehouse, tableName, meta,
+    scanAt(spark, warehouse, tableName, meta,
       to.copy(files = added, dvs = Map.empty))
       .select(meta.schema.fieldNames.toIndexedSeq.map(col): _*)
   }
@@ -4470,56 +4380,10 @@ object KeyedTable {
       case Some(v) => Manifest.at(spark, dir, v)
       case None => Manifest.current(spark, dir)
     }
-    // Bucket pruning: a hash layout can't prune an arbitrary range, but
-    // two shapes name their buckets exactly, hashed on the driver
-    // (bucketOfKey) with the SNAPSHOT's bucket count (a rebucket
-    // changes it):
-    //  - point lookup (every dimension pinned): one bucket;
-    //  - a NARROW integral range on a single-column PK: the keys in
-    //    [lo, hi] are enumerable, so the bucket set is their hashes.
-    // A fractional bound on an integral PK compares in floating point,
-    // where one bound can equal several keys: no pruning then.
-    val buckets = mf.buckets
-    val fractionalOnIntegral = Seq(lowest, highest).exists(meta.pk.zip(_).exists {
-      case (c, _: Float | _: Double) => meta.schema(c).dataType match {
-        case ByteType | ShortType | IntegerType | LongType => true
-        case _ => false
-      }
-      case _ => false
-    })
-    val kept: Option[Seq[Int]] =
-      if (fractionalOnIntegral) None
-      else try {
-        if (lowest.nonEmpty && lowest == highest && !lowest.contains(null))
-          Some(Seq(bucketOfKey(spark, meta, buckets, lowest)))
-        else narrowRangeKeys(meta, lowest, highest)
-          .map(_.map(k => bucketOfKey(spark, meta, buckets, Seq(k))).distinct)
-      } catch { case scala.util.control.NonFatal(_) => None }
-    // The kept buckets' files are all the v1 file index sees: it stats
-    // only them (and lists nothing while they number ≤ 32). FILE
-    // skipping on the leading PK dimension as well: drop manifest files
-    // whose recorded [min,max] cannot intersect the requested bounds —
-    // on an append-accumulated table each delta's files cover only its
-    // own key range, so a narrow range read plans only its overlapping
-    // files per bucket, before any footer is opened
-    val lo0 = lowest.headOption.filter(_ != null).flatMap(Manifest.normBound)
-    val hi0 = highest.headOption.filter(_ != null).flatMap(Manifest.normBound)
-    val mfKept = kept.fold(mf) { bs =>
-      val keep = bs.toSet
-      mf.copy(files = mf.files.filter(kv => keep(kv._1)),
-        dvs = mf.dvs.filter(kv => keep(kv._1)))
-    }
-    val mfPruned =
-      if (lo0.isEmpty && hi0.isEmpty) mfKept
-      else mfKept.copy(files = mfKept.files.map { case (b, fls) =>
-        b -> fls.filter(_.mayOverlap(lo0, hi0))
-      }.filter(_._2.nonEmpty))
-    val raw = readRawWith(spark, warehouse, tableName, meta, mfPruned)
-    // the partition filter stays on the frame, so the plan names the
-    // kept buckets (PartitionFilters); the range predicates below
-    // still prune row groups within them
-    val pruned = kept.fold(raw)(bs => raw.filter(col(BucketCol).isin(bs: _*)))
-    val filtered = conds.foldLeft(pruned)(_ filter _)
+    // the bounds push down to the scan, which prunes buckets (a point
+    // read or a narrow integral range names its buckets exactly), skips
+    // files on their manifest [min, max] and row groups on their stats
+    val filtered = conds.foldLeft(scanAt(spark, warehouse, tableName, meta, mf))(_ filter _)
     filtered.select(meta.schema.fieldNames.toIndexedSeq.map(col): _*)
   }
 
@@ -4531,38 +4395,5 @@ object KeyedTable {
     tags.getOrElse(tag, throw new StoreException(
       s"no snapshot tag '$tag' (available: " +
       s"${tags.keys.toSeq.sorted.mkString(", ")})"))
-  }
-
-  /** The keys a narrow range can hold, for an integral single-column
-    * PK: [lo, hi] clamped to the PK type's domain (no stored key lies
-    * outside it), when that leaves at most 1024 keys. None when the
-    * shape doesn't qualify. */
-  private def narrowRangeKeys(meta: TableMeta, lowest: Seq[Any],
-                              highest: Seq[Any]): Option[Seq[Long]] = {
-    if (meta.pk.size != 1 || lowest.size != 1 || highest.size != 1) return None
-    val domain: Option[(Long, Long)] = meta.schema(meta.pk.head).dataType match {
-      case ByteType => Some((Byte.MinValue.toLong, Byte.MaxValue.toLong))
-      case ShortType => Some((Short.MinValue.toLong, Short.MaxValue.toLong))
-      case IntegerType => Some((Int.MinValue.toLong, Int.MaxValue.toLong))
-      case LongType => Some((Long.MinValue, Long.MaxValue))
-      case _ => None
-    }
-    def integral(v: Any): Option[Long] = v match {
-      case b: Byte => Some(b.toLong)
-      case s: Short => Some(s.toLong)
-      case i: Int => Some(i.toLong)
-      case l: Long => Some(l)
-      case _ => None
-    }
-    for {
-      (tmin, tmax) <- domain
-      lo0 <- integral(lowest.head)
-      hi0 <- integral(highest.head)
-      lo = math.max(lo0, tmin)
-      hi = math.min(hi0, tmax)
-      // BigInt: hi - lo overflows Long for extreme bounds (e.g. a
-      // caller passing MinValue..MaxValue as "everything")
-      if BigInt(hi) - BigInt(lo) < 1024
-    } yield if (lo > hi) Nil else lo to hi
   }
 }

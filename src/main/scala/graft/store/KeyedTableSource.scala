@@ -6,17 +6,20 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSource V2 view of a keyed table that makes the store's physical
@@ -37,10 +40,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Read behavior matches the store layout: data files are the bucket
   * dirs' parquet (vectorized reader, column pruning pushed down); the
-  * `pb_bucket` column is served from directory partition values. All
-  * `buckets` partitions are always emitted (missing dirs → empty file
-  * lists) so two tables with the same bucket count report identical
-  * partition values and always zip cleanly.
+  * `pb_bucket` column is served from directory partition values. A
+  * keyed scan (one whose output carries `pb_bucket`) always emits all
+  * `buckets` partitions (missing dirs → empty file lists) so two tables
+  * with the same bucket count report identical partition values and
+  * always zip cleanly; any other scan packs its files into at most
+  * `defaultParallelism` partitions.
   */
 class KeyedTableSource extends TableProvider {
 
@@ -90,24 +95,55 @@ object KeyedTableSource {
 
   /** DataFrame over the keyed table through the V2 source — includes
     * the `pb_bucket` column and carries KeyGroupedPartitioning. */
-  def read(spark: SparkSession, warehouse: String, table: String) =
-    spark.read.format(classOf[KeyedTableSource].getName)
-      .option("warehouse", warehouse).option("table", table).load()
+  def read(spark: SparkSession, warehouse: String, table: String): DataFrame = {
+    val dir = KeyedTable.tableDir(warehouse, table)
+    frame(spark, TableMeta.read(spark, dir), KeyedTable.dataDir(warehouse, table),
+      Manifest.current(spark, dir), dir)
+  }
 
   /** Same, pinned to a specific snapshot version (time travel with the
     * full scan machinery: that snapshot's files, stats, and delete
     * vectors; SPJ partitioning intact). */
   def readAt(spark: SparkSession, warehouse: String, table: String,
-             version: Long) =
-    spark.read.format(classOf[KeyedTableSource].getName)
-      .option("warehouse", warehouse).option("table", table)
-      .option("version", version.toString).load()
+             version: Long): DataFrame = {
+    val dir = KeyedTable.tableDir(warehouse, table)
+    frame(spark, TableMeta.read(spark, dir), KeyedTable.dataDir(warehouse, table),
+      Manifest.at(spark, dir, version), dir)
+  }
+
+  /** The store's one reader: snapshot `mf` of the table whose files live
+    * under `dataDir`, as a DataFrame over a [[KeyedBatchTable]] — the
+    * table's columns plus `pb_bucket`, the snapshot's delete vectors
+    * applied in the executor readers, and each row's
+    * [[KeyedTable.FileCol]] / [[KeyedTable.PosCol]] on request. Every
+    * column is nullable, as in any file read: a column a create
+    * declared non-null can still hold NULLs a later write stored. */
+  private[store] def frame(spark: SparkSession, meta: TableMeta,
+                           dataDir: String, mf: Manifest,
+                           tableDir: String): DataFrame =
+    GraftBridge.ofRows(spark, DataSourceV2Relation.create(
+      new KeyedBatchTable(meta.copy(schema = GraftBridge.asNullable(meta.schema)),
+        dataDir, mf, tableDir),
+      None, None, CaseInsensitiveStringMap.empty()))
+
+  /** Each row's physical identity, read on request as metadata columns:
+    * its data file's name (a per-file constant, like `pb_bucket`) and
+    * its ordinal in that file (parquet's row index) — what a
+    * merge-on-read verb writes into delete-vector sidecars. */
+  private[store] val identityFields: Seq[StructField] = Seq(
+    StructField(KeyedTable.FileCol, StringType, nullable = false),
+    StructField(KeyedTable.PosCol, LongType, nullable = false))
 
   /** `s` with fields under their PHYSICAL names ([[TableMeta.renames]])
-    * — what parquet readers must request from live files. */
+    * — what parquet readers must request from live files. The row
+    * position is requested as parquet's row-index column, which the
+    * reader fills in; like any column a file lacks, it must be
+    * requested nullable. */
   private[store] def physStruct(s: StructType, meta: TableMeta): StructType =
-    if (meta.renames.isEmpty) s
-    else StructType(s.fields.map(f => f.copy(name = meta.physName(f.name))))
+    StructType(s.fields.map(f =>
+      if (f.name == KeyedTable.PosCol)
+        f.copy(name = ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, nullable = true)
+      else f.copy(name = meta.physName(f.name))))
 
   /** Rewrite a pushed source Filter's column references
     * logical→physical. None = an unrecognized shape referencing a
@@ -163,7 +199,7 @@ private[store] class KeyedBatchTable(val meta: TableMeta, dataDir: String,
                                      mf: Manifest,
                                      tableDir0: String = null,
                                      writeShape: StructType = null)
-    extends Table with SupportsRead
+    extends Table with SupportsRead with SupportsMetadataColumns
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete {
 
@@ -267,6 +303,13 @@ private[store] class KeyedBatchTable(val meta: TableMeta, dataDir: String,
       if (meta.autoIndex && f.name == Names.AutoIndex) f.copy(nullable = true)
       else f
     } :+ KeyedTableSource.bucketField)
+
+  override def metadataColumns(): Array[MetadataColumn] =
+    KeyedTableSource.identityFields.map(f => new MetadataColumn {
+      override def name(): String = f.name
+      override def dataType(): DataType = f.dataType
+      override def isNullable(): Boolean = f.nullable
+    }).toArray
 
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE,
@@ -510,10 +553,17 @@ private[store] class KeyedScan(meta: TableMeta, dataDir: String,
     * rebuckets). */
   private val numBuckets: Int = mf.buckets
 
-  private val readDataSchema =
-    StructType(required.fields.filterNot(_.name == KeyedTable.BucketCol))
-  private val readPartitionSchema =
-    StructType(required.fields.filter(_.name == KeyedTable.BucketCol))
+  /** Columns served per file instead of read from it: the bucket (its
+    * directory) and the file's name. */
+  private def perFile(f: StructField): Boolean =
+    f.name == KeyedTable.BucketCol || f.name == KeyedTable.FileCol
+  private val readDataSchema = StructType(required.fields.filterNot(perFile))
+  private val readPartitionSchema = StructType(required.fields.filter(perFile))
+
+  /** A keyed scan reports `KeyGroupedPartitioning` and plans one input
+    * partition per bucket; only a scan whose output carries `pb_bucket`
+    * can (the partitioning expression must resolve against it). */
+  private val keyed = readPartitionSchema.fieldNames.contains(KeyedTable.BucketCol)
 
   /** Filters the parquet reader can use for row-group pruning — the
     * bucket column is served from directory values, not file contents,
@@ -548,36 +598,85 @@ private[store] class KeyedScan(meta: TableMeta, dataDir: String,
     * the column survives pruning (the partitioning expression must
     * resolve against the scan output). */
   override def outputPartitioning(): Partitioning =
-    if (readPartitionSchema.fields.nonEmpty)
+    if (keyed)
       new KeyGroupedPartitioning(
         Array(Expressions.identity(KeyedTable.BucketCol)), numBuckets)
     else new UnknownPartitioning(numBuckets)
 
-  /** Buckets that can possibly hold matching rows (None = all).
-    * Two pushdown shapes prune at the DIRECTORY level:
+  /** Buckets that can possibly hold matching rows (None = all),
+    * hashed on the driver with the snapshot's bucket count. Three
+    * pushdown shapes name their buckets exactly:
     *  - explicit `pb_bucket` equality / IN;
-    *  - a PK fully pinned by equality — the bucket is then a
-    *    deterministic hash of the pinned values (the same point-lookup
-    *    pruning readSql performs, reached through Catalyst pushdown:
-    *    e.g. the probe side of a filtered storage-partitioned join).
-    * All `numBuckets` partitions are still EMITTED (pruned ones with
-    * empty file lists) so partition values stay identical across
-    * co-bucketed tables and the SPJ zip is never disturbed. */
+    *  - a PK fully pinned — each column by equality or by equal
+    *    inclusive bounds (readSql's point read): one bucket;
+    *  - a NARROW integral range on a single-column PK: its keys, [lo,
+    *    hi] clamped to the PK type's domain, number at most 1024, so
+    *    the bucket set is their hashes (readSql's range read).
+    * Only integral bound values count towards an integral PK: a
+    * fractional bound compares in floating point, where one bound can
+    * equal several keys in different buckets. Pruned buckets of a keyed
+    * scan are still EMITTED (with empty file lists) so partition values
+    * stay identical across co-bucketed tables and the SPJ zip is never
+    * disturbed. */
   private lazy val keptBuckets: Option[Set[Int]] = {
-    import org.apache.spark.sql.sources.{EqualTo, In}
+    import org.apache.spark.sql.sources._
+    import org.apache.spark.sql.types.{ByteType, ShortType}
     val explicit: Seq[Set[Int]] = pushed.toSeq.collect {
       case EqualTo(c, v: Int) if c == KeyedTable.BucketCol => Set(v)
       case In(c, vs) if c == KeyedTable.BucketCol =>
         vs.collect { case i: Int => i }.toSet
     }
-    val eqByCol: Map[String, Any] = pushed.collect {
-      case EqualTo(c, v) if c != KeyedTable.BucketCol && v != null => c -> v
+    def integral(v: Any): Option[BigInt] = v match {
+      case b: Byte => Some(BigInt(b))
+      case s: Short => Some(BigInt(s))
+      case i: Int => Some(BigInt(i))
+      case l: Long => Some(BigInt(l))
+      case _ => None
+    }
+    val domain: Map[String, (BigInt, BigInt)] = meta.pk.flatMap { c =>
+      (meta.schema(c).dataType match {
+        case ByteType => Some((BigInt(Byte.MinValue), BigInt(Byte.MaxValue)))
+        case ShortType => Some((BigInt(Short.MinValue), BigInt(Short.MaxValue)))
+        case IntegerType => Some((BigInt(Int.MinValue), BigInt(Int.MaxValue)))
+        case LongType => Some((BigInt(Long.MinValue), BigInt(Long.MaxValue)))
+        case _ => None
+      }).map(c -> _)
     }.toMap
-    val pinnedPk: Seq[Set[Int]] =
-      if (meta.pk.forall(eqByCol.contains))
-        bucketOfPinned(meta.pk.map(eqByCol)).map(Set(_)).toSeq
-      else Nil
-    val all = explicit ++ pinnedPk
+    // a value an integral PK column can be pinned to: integral only
+    def pinnable(c: String, v: Any): Boolean =
+      v != null && (!domain.contains(c) || integral(v).isDefined)
+    def values(pick: PartialFunction[Filter, (String, Any)]): Map[String, Set[Any]] =
+      pushed.toSeq.collect(pick).filter { case (c, v) => pinnable(c, v) }
+        .groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
+    val eqs = values { case EqualTo(c, v) => c -> v }
+    val los = values { case GreaterThanOrEqual(c, v) => c -> v }
+    val his = values { case LessThanOrEqual(c, v) => c -> v }
+    val pinned: Seq[Option[Any]] = meta.pk.map { c =>
+      eqs.getOrElse(c, Set.empty).headOption.orElse(
+        (los.getOrElse(c, Set.empty) intersect his.getOrElse(c, Set.empty)).headOption)
+    }
+    val byKey: Option[Set[Int]] =
+      if (pinned.forall(_.isDefined)) bucketOfPinned(pinned.flatten).map(Set(_))
+      else meta.pk match {
+        case Seq(c) if domain.contains(c) =>
+          val (tmin, tmax) = domain(c)
+          val lo = pushed.toSeq.collect {
+            case GreaterThanOrEqual(`c`, v) => integral(v)
+            case GreaterThan(`c`, v) => integral(v).map(_ + 1)
+          }.flatten
+          val hi = pushed.toSeq.collect {
+            case LessThanOrEqual(`c`, v) => integral(v)
+            case LessThan(`c`, v) => integral(v).map(_ - 1)
+          }.flatten
+          val (l, h) = ((tmin +: lo).max, (tmax +: hi).min)
+          if ((lo.isEmpty && hi.isEmpty) || h - l >= 1024) None
+          else {
+            val bs = (l to h).map(k => bucketOfPinned(Seq(k.toLong)))
+            if (bs.forall(_.isDefined)) Some(bs.flatten.toSet) else None
+          }
+        case _ => None
+      }
+    val all = explicit ++ byKey
     if (all.isEmpty) None else Some(all.reduce(_ intersect _))
   }
 
@@ -593,8 +692,11 @@ private[store] class KeyedScan(meta: TableMeta, dataDir: String,
     * dimension of a composite key cannot determine the bucket). */
   @volatile private var runtimeBuckets: Option[Set[Int]] = None
 
+  /** Runtime filters must name columns of the scan's output (Spark
+    * resolves them against it): the PK only when it was not pruned. */
   override def filterAttributes(): Array[NamedReference] =
-    if (meta.pk.size == 1) Array(Expressions.column(meta.pk.head))
+    if (meta.pk.size == 1 && required.fieldNames.contains(meta.pk.head))
+      Array(Expressions.column(meta.pk.head))
     else Array.empty
 
   override def filter(filters: Array[Filter]): Unit = {
@@ -715,36 +817,62 @@ private[store] class KeyedScan(meta: TableMeta, dataDir: String,
         s"$dataDir/${KeyedTable.BucketCol}=$b/${f.name}").toArray
     }
 
+  /** The manifest IS the file index (names + lengths + per-file
+    * stats): planning a scan costs ZERO filesystem calls — at thousands
+    * of buckets on an object store, listings are the planning latency
+    * floor this removes — reads one immutable snapshot regardless of
+    * concurrent commits, and FILE-SKIPS on the pushed stats bounds
+    * before any footer is opened.
+    *  - A keyed scan plans one partition per bucket, all `numBuckets`
+    *    of them, for the SPJ zip.
+    *  - Any other scan skips empty buckets and packs the kept files into
+    *    at most `defaultParallelism` partitions, balanced by bytes: a
+    *    point read runs one task, not one per bucket.
+    * Each partition carries its files' buckets' delete-vector paths, and
+    * the whole scan reads row-based when any planned partition has one
+    * (Spark refuses to mix columnar and row partitions). */
   override def planInputPartitions(): Array[InputPartition] = {
     // static (pushdown) ∩ runtime (dynamic pruning) bucket sets; the
     // runtime set can arrive between the two planInputPartitions calls
     // BatchScanExec makes (original + filtered partitions)
     val kept: Option[Set[Int]] =
       Seq(keptBuckets, runtimeBuckets).flatten.reduceOption(_ intersect _)
-    // the manifest IS the file index (names + lengths + leading-PK
-    // stats): planning a scan costs ZERO filesystem calls — at
-    // thousands of buckets on an object store, listings are the
-    // planning latency floor this removes — reads one immutable
-    // snapshot regardless of concurrent commits, and FILE-SKIPS on
-    // the pushed leading-PK bounds before any footer is opened
-    (0 until numBuckets).map { b =>
-      val key = new GenericInternalRow(Array[Any](b))
-      val files: Array[PartitionedFile] =
-        if (!kept.forall(_.contains(b))) Array.empty
-        else mf.files.getOrElse(b, Nil)
-          .filter(fileMayMatch)
-          .map { mfF =>
-            val p = new Path(dataDir, s"${KeyedTable.BucketCol}=$b/${mfF.name}")
-            new PartitionedFile(key, SparkPath.fromPath(p),
-              0L, mfF.len, Array.empty[String], 0L, mfF.len,
-              Map.empty[String, Any])
-          }.toArray
-      // each task carries only ITS bucket's tombstone file names
-      // (an empty/pruned bucket loads nothing)
-      new KeyedFilePartition(b, files, key,
-        if (files.isEmpty) Array.empty[String]
-        else dvPathsByBucket.getOrElse(b, Array.empty[String]),
-        rowOnly = dvPathsByBucket.nonEmpty): InputPartition
+    def filesOf(b: Int): Seq[PartitionedFile] =
+      if (!kept.forall(_.contains(b))) Nil
+      else mf.files.getOrElse(b, Nil).filter(fileMayMatch).map { mfF =>
+        val values = new GenericInternalRow(readPartitionSchema.fieldNames.map {
+          case KeyedTable.BucketCol => b: Any
+          case _ => UTF8String.fromString(mfF.name)
+        })
+        new PartitionedFile(values,
+          SparkPath.fromPath(new Path(dataDir, s"${KeyedTable.BucketCol}=$b/${mfF.name}")),
+          0L, mfF.len, Array.empty[String], 0L, mfF.len, Map.empty[String, Any])
+      }
+    def dvPaths(buckets: Iterable[Int]): Array[String] =
+      buckets.toArray.distinct.flatMap(dvPathsByBucket.getOrElse(_, Array.empty[String]))
+    // (index, partition key, files, their buckets' DV paths)
+    val planned: Seq[(Int, InternalRow, Seq[PartitionedFile], Array[String])] =
+      if (keyed) (0 until numBuckets).map { b =>
+        val files = filesOf(b)
+        (b, new GenericInternalRow(Array[Any](b)), files,
+          if (files.isEmpty) Array.empty[String] else dvPaths(Seq(b)))
+      } else {
+        val live = (0 until numBuckets).flatMap(b => filesOf(b).map(b -> _))
+        val n = math.min(live.size, SparkSession.active.sparkContext.defaultParallelism)
+        val bins = Array.fill(n)(Seq.newBuilder[(Int, PartitionedFile)])
+        val loads = Array.fill(n)(0L)
+        live.sortBy(-_._2.length).foreach { bf =>
+          val i = loads.indices.minBy(loads)
+          bins(i) += bf
+          loads(i) += bf._2.length
+        }
+        bins.toSeq.map(_.result()).zipWithIndex.map { case (bin, i) =>
+          (i, InternalRow.empty, bin.map(_._2), dvPaths(bin.map(_._1)))
+        }
+      }
+    val rowOnly = planned.exists(_._4.nonEmpty)
+    planned.map { case (i, key, files, dvs) =>
+      new KeyedFilePartition(i, files.toArray, key, dvs, rowOnly): InputPartition
     }.toArray
   }
 
@@ -947,17 +1075,19 @@ private[store] object FooterAgg {
 }
 
 /** A FilePartition that also exposes its bucket id as the partition
-  * key, which is what lets BatchScanExec group partitions into a
-  * catalyst KeyGroupedPartitioning. `dvPaths` names THIS bucket's
-  * delete-vector sidecar files (absolute paths — the manifest already
-  * knows them, so planning does zero IO); [[DvMaskReaderFactory]] loads
-  * and applies them inside the per-file readers ON THE EXECUTOR, so the
+  * key, which is what lets BatchScanExec group a keyed scan's
+  * partitions into a catalyst KeyGroupedPartitioning (a packed scan's
+  * partitions span buckets; their key is empty and never read).
+  * `dvPaths` names the delete-vector sidecar files of the buckets its
+  * files belong to (absolute paths — the manifest already knows them,
+  * so planning does zero IO); [[DvMaskReaderFactory]] loads and applies
+  * them inside the per-file readers ON THE EXECUTOR, so the
   * partitioning report — and every SPJ built on it — is untouched by
   * merge-on-read deletes, and the task descriptor stays O(file names)
-  * however many positions are tombstoned. */
-/** `rowOnly` is set on EVERY partition of a scan/micro-batch that has
-  * any mask anywhere: Spark refuses to mix columnar and row partitions
-  * within one scan, so the whole batch reads row-based together. */
+  * however many positions are tombstoned. `rowOnly` is set on EVERY
+  * partition of a scan/micro-batch when any planned partition carries a
+  * mask: Spark refuses to mix columnar and row partitions within one
+  * scan, so the whole batch reads row-based together. */
 private[store] class KeyedFilePartition(
     override val index: Int,
     override val files: Array[PartitionedFile],

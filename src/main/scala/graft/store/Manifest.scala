@@ -95,9 +95,9 @@ final case class ManifestFile(name: String, len: Long,
   * the bucket (the Iceberg-v2 position-delete model on this manifest
   * protocol). Each DV file is ordinary parquet in the bucket dir with
   * rows `(file STRING, pos BIGINT)` — the NAME of a live data file of
-  * that bucket and a row ordinal within it (Spark's
-  * `_metadata.row_index`). Readers anti-join the union of a bucket's
-  * DVs; rewriting commits (upsert/update/compact/zorder/rebucket/CoW
+  * that bucket and a row ordinal within it (parquet's row index).
+  * Readers skip those ordinals inside the per-file readers
+  * ([[DvMaskReaderFactory]]); rewriting commits (upsert/update/compact/zorder/rebucket/CoW
   * delete) read through the mask and DROP the bucket's DVs — the
   * rewrite materializes them. Because data file names are
   * commit-unique, a DV entry can never resurrect against a
@@ -138,17 +138,6 @@ final case class Manifest(version: Long, buckets: Int,
   def formatVersion: Int =
     if (segs.nonEmpty) 4
     else if (streams.nonEmpty) 3 else if (dvs.nonEmpty) 2 else 1
-
-  /** (absolute path, length) of every live file (order: bucket, then
-    * name) — all a v1 file index needs, so reads never list. */
-  def absoluteFiles(dataDir: String): Seq[(String, Long)] =
-    Manifest.withPaths(files, dataDir)
-
-  /** (absolute path, length) of every delete-vector file, restricted to
-    * buckets that still hold live data files (a DV without data is
-    * dead). */
-  def dvFiles(dataDir: String): Seq[(String, Long)] =
-    Manifest.withPaths(dvs.filter(kv => files.contains(kv._1)), dataDir)
 
   /** Total deleted-position count of the live buckets' DVs; None when
     * some DV entry lacks a recorded row count (never written by this
@@ -197,12 +186,6 @@ final case class Manifest(version: Long, buckets: Int,
 
 object Manifest {
   val DirName = "_manifests"
-
-  private def withPaths(byBucket: Map[Int, Seq[ManifestFile]],
-                        dataDir: String): Seq[(String, Long)] =
-    byBucket.toSeq.sortBy(_._1).flatMap { case (b, fs) =>
-      fs.map(mf => s"$dataDir/${KeyedTable.BucketCol}=$b/${mf.name}" -> mf.len)
-    }
 
   /** One file entry's JSON. Arity encodes presence: [name, len] |
     * [name, len, rows] | [name, len, rows, min, max] (stats imply

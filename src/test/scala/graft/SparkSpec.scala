@@ -19,6 +19,11 @@ object SparkSpec {
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the `faulty://` test scheme: its FileSystem and FileContext
+      .config("spark.hadoop.fs.faulty.impl",
+        classOf[graft.store.FaultyFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.faulty.impl",
+        classOf[graft.store.FaultyAbstractFileSystem].getName)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -428,28 +428,33 @@ class KeyedTableSpec extends SparkSpec {
     }
   }
 
+  /** The bucket of every file the frame's store scan planned (its one
+    * BatchScanExec's input partitions), from the files' directories. */
+  private def plannedBuckets(df: DataFrame): Seq[Int] = {
+    val scans = df.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }
+    assert(scans.size == 1, df.queryExecution.executedPlan)
+    scans.head.inputPartitions.toSeq.flatMap {
+      case p: KeyedFilePartition => p.files.toSeq
+      case p => fail(s"not a store partition: $p")
+    }.map(_.toPath.getParent.getName.stripPrefix("pb_bucket=").toInt)
+  }
+
   test("point lookup prunes to one bucket directory") {
+    import org.apache.spark.JobCounter.jobsRunBy
     val w = wh()
     KeyedTable.toSql(sample(500), w, "t", pk = Seq("id"))
     val point = KeyedTable.readSql(spark, w, "t", lowest = Seq(7L), highest = Seq(7L))
     assert(point.collect().map(_.getLong(0)).toSeq == Seq(7L))
-    // the partition filter on pb_bucket reaches the scan: exactly one
-    // of the 32 bucket dirs is listed/read
-    val scan = point.queryExecution.executedPlan.collectLeaves()
-      .collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-      }.get
-    assert(scan.relation.partitionSchema.fieldNames.contains("pb_bucket"))
-    assert(scan.metadata("PartitionFilters").contains("pb_bucket"))
+    // the pinned bounds reach the scan: it plans the files of exactly
+    // one of the 32 bucket dirs
+    assert(plannedBuckets(point).nonEmpty && plannedBuckets(point).distinct.size == 1)
     // a NARROW integral range enumerates its keys: ≤5 of the 32 bucket
-    // dirs are listed, and the partition filter reaches the scan
+    // dirs are planned
     val range = KeyedTable.readSql(spark, w, "t", lowest = Seq(5L), highest = Seq(9L))
     assert(range.collect().map(_.getLong(0)).sorted.toSeq == Seq(5L, 6L, 7L, 8L, 9L))
-    val rScan = range.queryExecution.executedPlan.collectLeaves()
-      .collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-      }.get
-    assert(rScan.metadata("PartitionFilters").contains("pb_bucket"))
+    assert(plannedBuckets(range).distinct.size <= 5, plannedBuckets(range))
     // a WIDE range (not enumerable) keeps the full scan + stats pruning
     val wide = KeyedTable.readSql(spark, w, "t", lowest = Seq(1L), highest = Seq(5000L))
     assert(wide.count() == 500)
@@ -464,39 +469,38 @@ class KeyedTableSpec extends SparkSpec {
     KeyedTable.toSql(multi, w, "m", pk = Seq("k1", "k2"))
     val mp = KeyedTable.readSql(spark, w, "m", lowest = Seq(17L, 2), highest = Seq(17L, 2))
     assert(mp.collect().map(r => (r.getLong(0), r.getInt(1))).toSeq == Seq((17L, 2)))
-    val mScan = mp.queryExecution.executedPlan.collectLeaves()
-      .collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-      }.get
-    assert(mScan.metadata("PartitionFilters").contains("pb_bucket"))
+    assert(plannedBuckets(mp).nonEmpty && plannedBuckets(mp).distinct.size == 1)
 
     // Every pruned read returns exactly what an unbounded read filtered
-    // by the same bounds returns; a point read also resolves without a
-    // Spark job, reads files of its own bucket only, and runs one job.
+    // by the same bounds returns, at head or at a past snapshot; a point
+    // read also resolves without a Spark job, plans files of its own
+    // bucket only, and runs one job of one task.
     import org.apache.spark.JobCounter.jobsOf
-    def sameAsFiltered(t: String, lo: Seq[Any], hi: Seq[Any]): DataFrame = {
-      val pk = KeyedTable.readSql(spark, w, t).columns.take(lo.size)
-      val (got, resolveJobs) = jobsOf(spark.sparkContext)(
-        KeyedTable.readSql(spark, w, t, lowest = lo, highest = hi))
+    def sameAsFiltered(t: String, lo: Seq[Any], hi: Seq[Any],
+                       asOf: Option[Long] = None, tag: Option[String] = None): DataFrame = {
+      def read(lo: Seq[Any], hi: Seq[Any]) = KeyedTable.readSql(spark, w, t,
+        lowest = lo, highest = hi, asOfVersion = asOf, asOfTag = tag)
+      val pk = TableMeta.read(spark, KeyedTable.tableDir(w, t)).pk
+      val (got, resolveJobs) = jobsOf(spark.sparkContext)(read(lo, hi))
       val bounds = pk.indices.flatMap(i =>
         Option(lo(i)).map(col(pk(i)) >= lit(_)) ++ Option(hi(i)).map(col(pk(i)) <= lit(_)))
-      val want = KeyedTable.readSql(spark, w, t).filter(bounds.reduce(_ && _))
-      assert(got.collect().toSet == want.collect().toSet, s"$t [$lo, $hi]")
+      val want = read(Nil, Nil).filter(bounds.reduce(_ && _))
+      assert(got.collect().toSet == want.collect().toSet, s"$t [$lo, $hi] $asOf $tag")
       assert(resolveJobs == 0, s"$t [$lo, $hi]: readSql ran $resolveJobs jobs")
       got
     }
     def pointRead(t: String, key: Seq[Any]): Unit = {
       val got = sameAsFiltered(t, key, key)
-      val (rows, jobs) = jobsOf(spark.sparkContext)(got.collect())
+      val (rows, jobs) = jobsRunBy(spark.sparkContext)(got.collect())
       assert(rows.length == 1, s"$t $key")
-      assert(jobs == 1, s"$t $key: collect ran $jobs jobs")
+      assert(jobs.size == 1 && jobs.head.tasks == 1, s"$t $key: collect ran $jobs")
       // the row's bucket as the partition-discovered data dir records it
       val pk = got.columns.take(key.size)
       val b = spark.read.parquet(KeyedTable.dataDir(w, t))
         .filter(pk.zip(key).map { case (c, v) => col(c) === lit(v) }.reduce(_ && _))
         .select("pb_bucket").head().getInt(0)
-      assert(got.inputFiles.nonEmpty &&
-        got.inputFiles.forall(_.contains(s"/pb_bucket=$b/")), got.inputFiles.toSeq)
+      assert(plannedBuckets(got).nonEmpty && plannedBuckets(got).forall(_ == b),
+        s"$t $key: planned buckets ${plannedBuckets(got)}, row in $b")
     }
     val keys = (1 to 200).map(_.toLong)
     val epoch = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
@@ -534,6 +538,53 @@ class KeyedTableSpec extends SparkSpec {
       pmod(xxhash64(col("id")), lit(32L)).cast("int").as("b")).collect()
     val lonely = bucketOf.collectFirst { case row if !used(row.getInt(1)) => row.getLong(0) }.get
     assert(sameAsFiltered("sparse", Seq(lonely), Seq(lonely)).isEmpty)
+
+    // delete vectors: masked keys read back absent, live ones present
+    val dvTable = keys.map(k => (k, s"v$k", k * 1.5)).toDF("k", "name", "score")
+    KeyedTable.toSql(dvTable, w, "dv", pk = Seq("k"))
+    val beforeDelete = Manifest.current(spark, KeyedTable.tableDir(w, "dv")).version
+    KeyedTable.tagSnapshot(spark, w, "dv", "before"): Unit
+    assert(KeyedTable.delete(spark, w, "dv", col("k") % 10 === 3L,
+      mode = DeleteMode.MergeOnRead) == 20L)
+    assert(Manifest.current(spark, KeyedTable.tableDir(w, "dv")).dvs.nonEmpty)
+    pointRead("dv", Seq(77L))
+    assert(sameAsFiltered("dv", Seq(73L), Seq(73L)).isEmpty)
+    assert(sameAsFiltered("dv", Seq(60L), Seq(90L)).count() == 28)
+    // time travel: the version and the tag before the delete
+    assert(sameAsFiltered("dv", Seq(73L), Seq(73L), asOf = Some(beforeDelete)).count() == 1)
+    assert(sameAsFiltered("dv", Seq(60L), Seq(90L), tag = Some("before")).count() == 31)
+    // a renamed value column and an evolved one read under their
+    // logical names; old rows read NULL for the evolved column
+    KeyedTable.renameColumn(spark, w, "dv", "name", "label")
+    KeyedTable.toSql(Seq((201L, "v201", 1.0, "new")).toDF("k", "label", "score", "extra"),
+      w, "dv", pk = Seq("k"), how = WriteMode.Append, addNewColumns = true)
+    val evolved = sameAsFiltered("dv", Seq(77L), Seq(77L)).collect()
+    assert(evolved.map(r => (r.getAs[String]("label"), r.isNullAt(r.fieldIndex("extra"))))
+      .toSeq == Seq(("v77", true)))
+    assert(sameAsFiltered("dv", Seq(201L), Seq(201L)).head().getAs[String]("extra") == "new")
+    assert(sameAsFiltered("dv", Seq(190L), Seq(210L)).count() == 11)
+    // an empty table: every bucket holds no files
+    KeyedTable.toSql(keys.take(5).toDF("k"), w, "empty", pk = Seq("k"))
+    KeyedTable.delete(spark, w, "empty", lit(true), mode = DeleteMode.CopyOnWrite): Unit
+    assert(Manifest.current(spark, KeyedTable.tableDir(w, "empty")).files.values.forall(_.isEmpty))
+    assert(sameAsFiltered("empty", Seq(3L), Seq(3L)).isEmpty)
+    assert(sameAsFiltered("empty", Seq(1L), Seq(100L)).isEmpty)
+  }
+
+  test("point and 256-key range reads of a table with DV sidecars each run one job") {
+    import org.apache.spark.JobCounter.jobsRunBy
+    import spark.implicits._
+    val w = wh()
+    KeyedTable.toSql((1L to 3000L).map(k => (k, s"v$k")).toDF("k", "v"), w, "t",
+      pk = Seq("k"))
+    KeyedTable.delete(spark, w, "t", col("k") % 7 === 0L, mode = DeleteMode.MergeOnRead): Unit
+    assert(Manifest.current(spark, KeyedTable.tableDir(w, "t")).dvs.nonEmpty)
+    for ((lo, hi, n) <- Seq((100L, 100L, 1), (14L, 14L, 0), (1001L, 1256L, 256 - 37))) {
+      val (rows, jobs) = jobsRunBy(spark.sparkContext)(
+        KeyedTable.readSql(spark, w, "t", lowest = Seq(lo), highest = Seq(hi)).collect())
+      assert(rows.length == n, s"[$lo, $hi]")
+      assert(jobs.size == 1, s"[$lo, $hi]: collect ran $jobs")
+    }
   }
 
   test("pkJoin: mismatched bucket counts or PK types are rejected up front") {

@@ -58,9 +58,11 @@ class PushdownSpec extends SparkSpec {
     val w = wh()
     val df = (1 to 500).map(i => (i.toLong, i * 2.0)).toDF("k", "x")
     KeyedTable.toSql(df, w, "t", pk = Seq("k"))
+    // a WIDE range (more than 1024 keys: not enumerable; a narrow one
+    // prunes to its keys' buckets, see below)
     val q = KeyedTableSource.read(spark, w, "t")
-      .filter(col("k") >= 100L && col("k") <= 110L)
-    assert(q.collect().map(_.getLong(0)).sorted.toSeq === (100L to 110L))
+      .filter(col("k") >= 100L && col("k") <= 2000L)
+    assert(q.collect().map(_.getLong(0)).sorted.toSeq === (100L to 500L))
     val scan = keyedScans(q).head
     // the range is not a pinned PK, so no BUCKET pruning applies — but
     // manifest FILE stats may still legitimately skip a bucket whose
@@ -71,6 +73,24 @@ class PushdownSpec extends SparkSpec {
     // …but the predicates still reached the scan for row-group stats
     assert(scan.description().contains("GreaterThanOrEqual"), scan.description())
     assert(scan.description().contains("LessThanOrEqual"), scan.description())
+  }
+
+  test("a narrow integral PK range prunes to the buckets its keys hash into") {
+    import spark.implicits._
+    val w = wh()
+    val df = (1 to 500).map(i => (i.toLong, i * 2.0)).toDF("k", "x")
+    KeyedTable.toSql(df, w, "t", pk = Seq("k"))
+    val meta = TableMeta.read(spark, KeyedTable.tableDir(w, "t"))
+    val want = (100L to 110L).map(k => KeyedTable.bucketOfKey(spark, meta, 32, Seq(k))).toSet
+    for (q <- Seq(
+        KeyedTableSource.read(spark, w, "t").filter(col("k").between(100L, 110L)),
+        KeyedTableSource.read(spark, w, "t").filter(col("k") > 99L && col("k") < 111L))) {
+      assert(q.collect().map(_.getLong(0)).sorted.toSeq === (100L to 110L))
+      val kept = keyedScans(q).head.toBatch.planInputPartitions().collect {
+        case p: KeyedFilePartition if p.files.nonEmpty => p.index
+      }.toSet
+      assert(kept.nonEmpty && kept.subsetOf(want), s"$kept vs $want")
+    }
   }
 
   test("filtered storage-partitioned join keeps zero Exchange and pushes to both sides") {

@@ -105,17 +105,14 @@ class WriteLockSpec extends SparkSpec {
   }
 
   test("one failed heartbeat read does not end the heartbeat") {
-    spark.sparkContext.hadoopConfiguration
-      .set("fs.faulty.impl", classOf[FaultyFileSystem].getName)
-    val dir = s"${freshWarehouse()}/t"
+    val dir = s"faulty://${freshWarehouse()}/t"
     // TTL 3s, mutation 5s, beats at 1s, 2s, ...: the first beat's read
     // fails. A heartbeat that stopped there would leave the lock's
     // mtime at the acquire, 5s old — past the TTL — when the second
     // writer tries, and it would break the lock of a live mutation.
-    // The holder reaches the lock through `faulty://` (its reads fail
-    // on demand); the second writer through the plain local path,
-    // whose create-if-absent is the atomic one
-    WriteLock.withLock(spark, s"faulty://$dir", "slow-writer", staleMs = 3000) {
+    // Both reach the lock through `faulty://` (the holder's reads fail
+    // on demand; its rename-publish refuses an existing lock as HDFS's)
+    WriteLock.withLock(spark, dir, "slow-writer", staleMs = 3000) {
       FaultyFileSystem.failingOpens(WriteLock.FileName, times = 1) {
         Thread.sleep(5000)
       }
@@ -126,6 +123,57 @@ class WriteLockSpec extends SparkSpec {
       }
       assert(e.getMessage.contains("write-locked"), e.getMessage)
     }
+  }
+
+  test("two writers through faulty:// never hold the lock at once") {
+    val dir = s"faulty://${freshWarehouse()}/t"
+    val inside = new java.util.concurrent.atomic.AtomicInteger(0)
+    val overlaps = new java.util.concurrent.atomic.AtomicInteger(0)
+    val entered = new java.util.concurrent.atomic.AtomicInteger(0)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val writers = (1 to 2).map { i =>
+      val t = new Thread(() => {
+        start.await()
+        (1 to 10).foreach { _ =>
+          try WriteLock.withLockWait(spark, dir, s"writer-$i", waitMs = 10000) {
+            if (inside.incrementAndGet() > 1) overlaps.incrementAndGet()
+            entered.incrementAndGet()
+            Thread.sleep(20)
+            inside.decrementAndGet(): Unit
+          } catch { case _: StoreException => () }
+        }
+      })
+      t.start()
+      t
+    }
+    start.countDown()
+    writers.foreach(_.join())
+    assert(overlaps.get == 0, s"${overlaps.get} overlapping entries")
+    assert(entered.get == 20, s"${entered.get} of 20 entries")
+    // the publish temps were cleaned and the lock released
+    val root = new java.io.File(new Path(dir).toUri.getPath)
+    assert(Option(root.list()).forall(_.forall(n =>
+      !n.startsWith(".tmp-") && n != WriteLock.FileName)), root.list().toSeq)
+  }
+
+  test("a small file replaced through faulty:// takes the FileContext overwrite rename") {
+    val p = new Path(s"faulty://${freshWarehouse()}/t/_graft_meta.json")
+    val conf = spark.sparkContext.hadoopConfiguration
+    def read() = SmallFile.readUtf8(hadoopFs(p), p)
+    SmallFile.replace(conf, p, "v1".getBytes("UTF-8"), "meta", "table meta")
+    // the plain rename refuses the existing target; the replace
+    // still lands, and atomically
+    SmallFile.replace(conf, p, "v2".getBytes("UTF-8"), "meta", "table meta")
+    assert(read() == "v2")
+    // an armed overwrite-rename fails loudly with the previous file intact
+    val e = FaultyFileSystem.armed(".tmp-meta-", "_graft_meta.json") {
+      intercept[StoreException](
+        SmallFile.replace(conf, p, "v3".getBytes("UTF-8"), "meta", "table meta"))
+    }
+    assert(e.getMessage.contains("cannot atomically replace"), e.getMessage)
+    assert(read() == "v2")
+    assert(new java.io.File(p.getParent.toUri.getPath).list().toSeq.sorted ==
+      Seq("_graft_meta.json"))
   }
 
   test("release never deletes a lock it lost to a takeover") {

@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{JobFailed, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{JobFailed, SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 
 /** Counts the Spark jobs a block schedules on the calling thread (and on
   * threads it starts, which inherit the job group): the block runs under
@@ -14,20 +14,29 @@ import org.apache.spark.scheduler.{JobFailed, SparkListener, SparkListenerJobEnd
   * needed. */
 object JobCounter {
   /** One job of a counted block: its description (Spark's own jobs, such
-    * as file listing, set one) and, if it failed, the failure message. */
-  final case class JobRecord(description: String, failure: Option[String])
+    * as file listing, set one), if it failed, the failure message, and
+    * how many tasks its stages ran. */
+  final case class JobRecord(description: String, failure: Option[String],
+                             tasks: Int)
 
   /** The block's jobs in start order. */
   def jobsRunBy[T](sc: SparkContext)(body: => T): (T, Seq[JobRecord]) = {
     val group = s"job-counter-${UUID.randomUUID()}"
     val started = new ConcurrentHashMap[Int, String]
     val failed = new ConcurrentHashMap[Int, String]
+    val jobOfStage = new ConcurrentHashMap[Int, Int]
+    val tasks = new ConcurrentHashMap[Int, Int]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null &&
-            e.properties.getProperty(SparkContext.SPARK_JOB_GROUP_ID) == group)
+            e.properties.getProperty(SparkContext.SPARK_JOB_GROUP_ID) == group) {
           started.put(e.jobId, Option(e.properties.getProperty(
             SparkContext.SPARK_JOB_DESCRIPTION)).getOrElse(""))
+          e.stageIds.foreach(jobOfStage.put(_, e.jobId))
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (jobOfStage.containsKey(e.stageId))
+          tasks.merge(jobOfStage.get(e.stageId), 1, (a: Int, b: Int) => a + b)
       override def onJobEnd(e: SparkListenerJobEnd): Unit = e.jobResult match {
         case JobFailed(ex) => failed.put(e.jobId, String.valueOf(ex.getMessage))
         case _ =>
@@ -39,7 +48,7 @@ object JobCounter {
       val r = body
       sc.listenerBus.waitUntilEmpty()
       (r, started.asScala.toSeq.sortBy(_._1).map { case (id, d) =>
-        JobRecord(d, Option(failed.get(id)))
+        JobRecord(d, Option(failed.get(id)), tasks.getOrDefault(id, 0))
       })
     } finally {
       sc.clearJobGroup()
