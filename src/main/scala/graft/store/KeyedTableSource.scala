@@ -116,8 +116,9 @@ object KeyedTableSource {
     * table's columns plus `pb_bucket`, the snapshot's delete vectors
     * applied in the executor readers, and each row's
     * [[KeyedTable.FileCol]] / [[KeyedTable.PosCol]] on request. Every
-    * column is nullable, as in any file read: a column a create
-    * declared non-null can still hold NULLs a later write stored. */
+    * column is typed nullable, as a plain parquet read of the files
+    * types it: the schema of readSql's frames is unchanged from the
+    * reader this one replaced. */
   private[store] def frame(spark: SparkSession, meta: TableMeta,
                            dataDir: String, mf: Manifest,
                            tableDir: String): DataFrame =
@@ -176,6 +177,30 @@ object KeyedTableSource {
       case Not(c) => physFilter(c, phys).map(Not)
       case _ => None
     }
+  }
+
+  /** The parquet reader factory of a scan or micro-batch. The FILES
+    * carry physical names: request physical columns from parquet
+    * (schemas are name-swapped, field order identical, so the positional
+    * rows bind to the scan's logical readSchema untouched). `masked`
+    * wraps it in a [[DvMaskReaderFactory]]: masked files read through
+    * the no-filter delegate (the ordinal counter must see every row);
+    * clean files keep row-group pruning. One broadcast configuration
+    * serves both delegates and lets executors open their buckets'
+    * sidecars — the driver never reads DV content. */
+  private[store] def readerFactory(spark: SparkSession, meta: TableMeta,
+                                   readDataSchema: StructType,
+                                   readPartitionSchema: StructType,
+                                   dataFilters: Array[Filter],
+                                   masked: Boolean): PartitionReaderFactory = {
+    import org.apache.spark.sql.execution.datasources.parquet.GraftParquetSupport
+    val phys = physStruct(readDataSchema, meta)
+    val conf = GraftParquetSupport.readConf(spark, phys)
+    def mk(filters: Array[Filter]) =
+      GraftParquetSupport.readerFactory(spark, conf, meta.physSchema, phys,
+        readPartitionSchema, filters.flatMap(physFilter(_, meta.physName)))
+    if (!masked) mk(dataFilters)
+    else new DvMaskReaderFactory(mk(dataFilters), mk(Array.empty), conf)
   }
 
   /** (warehouse, tableName, pk) when `t` is a keyed-table DSv2 handle —
@@ -876,26 +901,13 @@ private[store] class KeyedScan(meta: TableMeta, dataDir: String,
     }.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // the FILES carry physical names: request physical columns from
-    // parquet (schemas are name-swapped, field order identical, so the
-    // positional rows bind to the scan's logical readSchema untouched)
-    def mk(filters: Array[Filter]) =
-      org.apache.spark.sql.execution.datasources.parquet.GraftParquetSupport
-        .readerFactory(SparkSession.active, meta.physSchema,
-          KeyedTableSource.physStruct(readDataSchema, meta),
-          readPartitionSchema, filters.flatMap(
-            KeyedTableSource.physFilter(_, meta.physName)))
-    if (mf.dvs.isEmpty) mk(dataFilters)
-    // masked files read through the no-filter delegate (the ordinal
-    // counter must see every row); clean files keep row-group pruning.
-    // The broadcast conf lets executors open their bucket's sidecars —
-    // the driver never reads DV content.
-    else new DvMaskReaderFactory(mk(dataFilters), mk(Array.empty),
-      org.apache.spark.sql.GraftBridge.broadcastConf(
-        SparkSession.active.sparkContext,
-        SparkSession.active.sparkContext.hadoopConfiguration))
-  }
+  /** One factory per scan: Spark may ask each copy of the planned scan
+    * node for it, and each build broadcasts a configuration. */
+  private lazy val readerFactory: PartitionReaderFactory =
+    KeyedTableSource.readerFactory(SparkSession.active, meta, readDataSchema,
+      readPartitionSchema, dataFilters, masked = mf.dvs.nonEmpty)
+
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
   /** Size statistics from the snapshot's file lengths over the
     * (statically pruned) buckets — zero filesystem calls, no footer

@@ -261,22 +261,11 @@ private[store] class KeyedMicroBatchStream(
     }.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // files carry PHYSICAL names (TableMeta.renames): request physical
-    // columns from parquet; the positional rows bind to the scan's
-    // logical readSchema untouched (same field order)
-    def mk(filters: Array[Filter]) =
-      org.apache.spark.sql.execution.datasources.parquet.GraftParquetSupport
-        .readerFactory(spark, meta.physSchema,
-          KeyedTableSource.physStruct(readDataSchema, meta),
-          readPartitionSchema, filters.flatMap(
-            KeyedTableSource.physFilter(_, meta.physName)))
-    // the masked initial batch needs the DV-aware factory; incremental
-    // windows carry no masks and pass through it untouched
-    new DvMaskReaderFactory(mk(dataFilters), mk(Array.empty),
-      org.apache.spark.sql.GraftBridge.broadcastConf(
-        spark.sparkContext, spark.sparkContext.hadoopConfiguration))
-  }
+  // the masked initial batch needs the DV-aware factory; incremental
+  // windows carry no masks and pass through it untouched
+  override def createReaderFactory(): PartitionReaderFactory =
+    KeyedTableSource.readerFactory(spark, meta, readDataSchema,
+      readPartitionSchema, dataFilters, masked = true)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

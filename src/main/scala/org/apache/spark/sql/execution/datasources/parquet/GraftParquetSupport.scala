@@ -2,6 +2,7 @@ package org.apache.spark.sql.execution.datasources.parquet
 
 import org.apache.parquet.hadoop.ParquetInputFormat
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.PartitionReaderFactory
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
@@ -19,17 +20,12 @@ import org.apache.spark.util.SerializableConfiguration
   */
 object GraftParquetSupport {
 
-  /** @param filters data-column predicates the caller pushed down;
-    *   forwarded to [[ParquetPartitionReaderFactory]], which turns them
-    *   into parquet FilterPredicates for ROW-GROUP pruning (gated by
-    *   the session's parquetFilterPushDown conf, like Spark's own
-    *   scans). Advisory only — the engine re-evaluates them post-scan. */
-  def readerFactory(spark: SparkSession,
-                    dataSchema: StructType,
-                    readDataSchema: StructType,
-                    readPartitionSchema: StructType,
-                    filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
-      : PartitionReaderFactory = {
+  /** The session Hadoop configuration set up to read `readDataSchema`
+    * from parquet, broadcast once per scan: both reader factories of a
+    * scan share it, and so do its executor-side delete-vector reads
+    * (opening a bucket's sidecar needs nothing else). */
+  def readConf(spark: SparkSession, readDataSchema: StructType)
+      : Broadcast[SerializableConfiguration] = {
     val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val sqlConf = session.sessionState.conf
     val hadoopConf = session.sessionState.newHadoopConf()
@@ -53,9 +49,26 @@ object GraftParquetSupport {
     hadoopConf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
       sqlConf.parquetInferTimestampNTZEnabled)
 
-    val broadcasted = session.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
+    session.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
+  }
+
+  /** @param conf [[readConf]] of the same `readDataSchema`.
+    * @param filters data-column predicates the caller pushed down;
+    *   forwarded to [[ParquetPartitionReaderFactory]], which turns them
+    *   into parquet FilterPredicates for ROW-GROUP pruning (gated by
+    *   the session's parquetFilterPushDown conf, like Spark's own
+    *   scans). Advisory only — the engine re-evaluates them post-scan. */
+  def readerFactory(spark: SparkSession,
+                    conf: Broadcast[SerializableConfiguration],
+                    dataSchema: StructType,
+                    readDataSchema: StructType,
+                    readPartitionSchema: StructType,
+                    filters: Array[org.apache.spark.sql.sources.Filter])
+      : PartitionReaderFactory = {
+    val sqlConf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf
     ParquetPartitionReaderFactory(
-      sqlConf, broadcasted, dataSchema, readDataSchema, readPartitionSchema,
+      sqlConf, conf, dataSchema, readDataSchema, readPartitionSchema,
       filters, None, new ParquetOptions(Map.empty[String, String], sqlConf))
   }
 
