@@ -1566,9 +1566,9 @@ object PbQueries {
     * through [[KeyedTable.upsertConcurrent]] WHILE a maintenance
     * thread Z-orders and then policy-compacts the same table. The
     * maintenance rewrite stages outside the write lock and re-stages
-    * on a touched-bucket window conflict ([[KeyedTable]]
-    * retryMaintenance); the writers never wait behind it and never
-    * abort FOR it (they retry only their own inter-writer conflicts).
+    * on a touched-bucket window conflict ([[KeyedTable.retrying]]);
+    * the writers never wait behind it and never abort FOR it (they
+    * retry only their own inter-writer conflicts).
     * The final state must equal the oracle's replay regardless of how
     * the four jobs interleaved — maintenance is content-neutral. The
     * 100 TB story: the nightly Z-order is no longer a writer outage;
@@ -1606,7 +1606,7 @@ object PbQueries {
       })
     }
     val maintenance = Future {
-      // retryMaintenance re-stages internally on window conflicts; the
+      // KeyedTable.retrying re-stages internally on window conflicts; the
       // three writers commit at most once each, so it converges
       KeyedTable.zorderCompact(spark, wh, "customer",
         Seq("c_acctbal", "c_nationkey"), commitWaitMs = 120000L)

@@ -319,7 +319,8 @@ case class GraftUpdateCommand(warehouse: String, table: String,
     // fresh snapshot, so the statement semantics stay one-shot.
     if (TableMeta.read(spark,
         KeyedTable.tableDir(warehouse, table)).optimisticDml)
-      KeyedTable.retryOptimisticSql(spark, s"UPDATE $table") {
+      KeyedTable.retrying(s"UPDATE $table", KeyedTable.sqlRetries(spark),
+          KeyedTable.SqlMaxRetriesConf) {
         KeyedTable.updateConcurrent(spark, warehouse, table, cond, setMap)
       }: Unit
     else
@@ -377,7 +378,8 @@ case class GraftMergeCommand(warehouse: String, table: String,
   // between the routing read and the lock) aborts with the same
   // ConcurrentWriteException and is equally safe to re-plan.
   override def run(spark: SparkSession): Seq[Row] =
-    KeyedTable.retryOptimisticSql(spark, s"MERGE INTO $table")(runOnce(spark))
+    KeyedTable.retrying(s"MERGE INTO $table", KeyedTable.sqlRetries(spark),
+      KeyedTable.SqlMaxRetriesConf)(runOnce(spark))
 
   private def runOnce(spark: SparkSession): Seq[Row] = {
     val df: DataFrame = GraftBridge.ofRows(spark, feed)

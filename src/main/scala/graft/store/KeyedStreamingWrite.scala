@@ -34,8 +34,8 @@ import org.apache.spark.util.SerializableConfiguration
   *    failed epoch aborts by deleting its staging directory — the
   *    table never sees a half batch.
   *
-  * Validation matches the batch append contract: intra-epoch duplicate
-  * PKs and overlap with stored keys fail the epoch (delta-bounded
+  * Validation matches the batch append contract: intra-epoch NULL or
+  * duplicate PKs and overlap with stored keys fail the epoch (delta-bounded
   * jobs), CHECK constraints are enforced, and a changelog-enabled
   * table logs the epoch's rows as one `insert` image batch. */
 /** `upsertMode` (write option `sink_mode=upsert`): each epoch UPSERTS
@@ -44,7 +44,10 @@ import org.apache.spark.util.SerializableConfiguration
   * — which is what `outputMode(Update)` windowed aggregates and CDC
   * folds need from a native sink (the builder's
   * SupportsStreamingUpdateAsAppend marker admits Update mode; changed
-  * rows then arrive as appends and upsert into place).
+  * rows then arrive as appends and upsert into place). The query must
+  * carry every table column: a staged post-image replaces its row
+  * whole, so a query lacking a column is refused at start rather than
+  * overwriting that column with NULL.
   *
   * `autoCompact` (write option `auto_compact=true|false`): whether the
   * auto-compaction policy runs after each committed epoch (manifest
@@ -102,6 +105,18 @@ private[store] class KeyedStreamingWrite(meta: TableMeta, tableDir: String,
         s"streaming write is missing primary-key column $c " +
         s"(input: ${inputSchema.fieldNames.mkString(", ")})")
   }
+  // an upsert epoch's staged files REPLACE the matched rows whole, so a
+  // column the query does not carry would be overwritten with NULL —
+  // not the batch upsert's keep-absent-columns contract
+  if (upsertMode) {
+    val absent = meta.schema.fieldNames.filterNot(inputSchema.fieldNames.contains)
+    if (absent.nonEmpty)
+      throw new StoreException(
+        s"sink_mode=upsert needs every table column; the query lacks " +
+        s"${absent.mkString(", ")} (an epoch replaces matched rows whole, " +
+        "so they would be overwritten with NULL) — select them, or " +
+        "upsert partial columns with foreachBatch + toSql")
+  }
 
   /** Data schema the staged files carry: the table's columns, in table
     * order (the synthetic bucket rides as the staging DIRECTORY, like
@@ -111,9 +126,11 @@ private[store] class KeyedStreamingWrite(meta: TableMeta, tableDir: String,
 
   /** Same fields under their PHYSICAL names — what the staged parquet
     * must carry (see [[TableMeta.renames]]); row binding stays on the
-    * logical [[dataSchema]], and field order is identical. */
-  private val fileSchema = StructType(
-    dataSchema.fields.map(f => f.copy(name = meta.physName(f.name))))
+    * logical [[dataSchema]], and field order is identical. All nullable:
+    * a NULL primary key must stage readably so the commit refuses it by
+    * name (parquet cannot hold a NULL in a required column). */
+  private val fileSchema = StructType(dataSchema.fields.map(f =>
+    f.copy(name = meta.physName(f.name), nullable = true)))
 
   // bucket count pinned at query start; a rebucket racing the stream
   // is detected at every commit and fails the epoch loudly

@@ -256,8 +256,8 @@ object KeyedTable {
     * PK, `addNewColumns` schema evolution (metadata-only here), and
     * coercion of incoming types toward the table schema
     * ("database is the source of truth", sql.py:213-254).
-    */
-  /** @param strictUtc reference fail-fast contract (default): any naive
+    *
+    * @param strictUtc reference fail-fast contract (default): any naive
     *   (TimestampNTZ) datetime column — PK or value — is rejected, like
     *   the reference's ValueError on naive / non-UTC datetimes
     *   (sql.py:100, 133-136; tests/test_sql.py:273, 807). Spark's
@@ -929,8 +929,8 @@ object KeyedTable {
                                   changes: DataFrame): (Path, Path) =
     (stageChanges(spark, dir, changes), nextChangelogDst(fs(spark, dir), dir))
 
-  /** [[stageChangelogBatch]] without the batch number: the row verbs
-    * take it inside their flip ([[StagedChanges]]). */
+  /** [[stageChangelogBatch]] without the batch number: [[commit]]
+    * takes it after its flip ([[Txn]]). */
   private def stageChanges(spark: SparkSession, dir: String,
                            changes: DataFrame): Path = {
     val clStaging = new Path(dir, s".staging-changelog-${UUID.randomUUID()}")
@@ -968,8 +968,9 @@ object KeyedTable {
         s"$op: data committed but changelog rename $src -> $dst failed")
   }
 
-  /** THE FLIP — every mutation commits its staged files as manifest
-    * version N+1 here (see [[Manifest]] for the isolation argument).
+  /** THE FLIP — [[commit]]'s last step: every mutation's staged files
+    * `st` become manifest version N+1 here (see [[Manifest]] for the
+    * isolation argument).
     *
     *  - MOVE-IN: exactly the files [[stageFiles]] listed — `files`
     *    first, then the delete-vector sidecars `dvs` — are renamed INTO
@@ -994,13 +995,9 @@ object KeyedTable {
     * write lock — keep it renames plus manifest arithmetic; listing
     * and footer IO belong in [[stageFiles]], before the lock. */
   private def flip(spark: SparkSession, f: FileSystem, dir: String,
-                   data: String, op: String, base: Manifest,
-                   files: Map[Int, Seq[Staged]],
-                   dvs: Map[Int, Seq[Staged]] = Map.empty,
-                   extend: Boolean = false,
-                   removeMissing: Seq[Int] = Nil,
-                   newBuckets: Option[Int] = None,
-                   streamEpoch: Option[(String, Long)] = None): Manifest = {
+                   data: String, op: String, base: Manifest, st: Flip[_],
+                   dvs: Map[Int, Seq[Staged]],
+                   streamEpoch: Option[(String, Long)]): Manifest = {
     val commitId = UUID.randomUUID().toString.take(8)
     val tag = if (dvs.isEmpty) op else s"$op(mor)"
     val moved = scala.collection.mutable.ArrayBuffer.empty[Path]
@@ -1022,16 +1019,16 @@ object KeyedTable {
           s.entry.copy(name = dst.getName)
         }
       }
-    val newData = moveIn(files, "", "file")
-    val newDv = moveIn(dvs, "dv-", if (files.isEmpty) "DV" else "file")
-    val newFiles = base.files -- removeMissing ++ newData.map {
+    val newData = moveIn(st.files, "", "file")
+    val newDv = moveIn(dvs, "dv-", if (st.files.isEmpty) "DV" else "file")
+    val newFiles = base.files -- st.removeMissing ++ newData.map {
       case (b, fls) =>
-        b -> (if (extend) base.files.getOrElse(b, Nil) ++ fls else fls)
+        b -> (if (st.extend) base.files.getOrElse(b, Nil) ++ fls else fls)
     }
     val keptDvs = base.dvs.filter { case (b, _) =>
-      newFiles.contains(b) && (extend || !newData.contains(b))
+      newFiles.contains(b) && (st.extend || !newData.contains(b))
     }
-    val mf = Manifest(base.version + 1, newBuckets.getOrElse(base.buckets),
+    val mf = Manifest(base.version + 1, st.newBuckets.getOrElse(base.buckets),
       newFiles, op = Some(op),
       dvs = keptDvs ++ newDv.map { case (b, fls) =>
         b -> (keptDvs.getOrElse(b, Nil) ++ fls)
@@ -1043,12 +1040,13 @@ object KeyedTable {
     catch { case e: Throwable => moved.foreach(p => f.delete(p, false)); throw e }
   }
 
-  /** Commit ONE streaming-sink epoch (see [[KeyedStreamingWrite]]) —
-    * OPTIMISTICALLY, the [[appendConcurrent]] protocol: every
-    * delta-bounded validation job (intra-epoch PK dups, overlap vs
-    * stored keys, CHECK constraints, the upsert decomposition's
-    * pre-image join) runs against the epoch-START snapshot OUTSIDE the
-    * write lock, so a table fed by a sink and concurrent batch writers
+  /** Commit ONE streaming-sink epoch (see [[KeyedStreamingWrite]])
+    * through [[commit]] — OPTIMISTICALLY, the [[appendConcurrent]]
+    * protocol: every delta-bounded validation job (intra-epoch PK NULLs
+    * and dups, overlap vs stored keys, CHECK constraints, the upsert
+    * decomposition's pre-image join) runs against the epoch-START
+    * snapshot OUTSIDE the write lock, so a table fed by a sink and
+    * concurrent batch writers
     * never serializes behind an epoch's validation; the LOCKED section
     * re-validates only what its window ADDED (usually nothing ⇒ zero
     * IO) and holds for the manifest flip. An epoch at or below the
@@ -1078,25 +1076,22 @@ object KeyedTable {
                                        upsertMode: Boolean = false,
                                        commitWaitMs: Long = 60000L): Unit = {
     val f = fs(spark, tblDir)
-    val stagingPath = new Path(staging)
-    val dvRoots = scala.collection.mutable.ArrayBuffer.empty[Path]
-    val changes = new StagedChanges(spark, tblDir)
-    def rebucketError(buckets: Int): Nothing =
-      throw new ConcurrentWriteException(
-        s"stream sink epoch $epochId of $tblDir: table rebucketed " +
-        s"$writerBuckets -> $buckets mid-stream; epoch " +
-        "aborted (table unchanged) — restart the streaming query " +
-        "so its writers pick up the new layout")
-    try {
-      // ------- UNLOCKED: sweep, validate, derive (vs snapshot-at-start)
-      val meta0 = TableMeta.read(spark, tblDir)
-      val base0 = Manifest.current(spark, tblDir)
-      if (base0.streams.get(queryId).exists(_ >= epochId)) return
-      if (base0.buckets != writerBuckets) rebucketError(base0.buckets)
+    val (wh, ref) = refOf(tblDir)
+    try commit(Optimistic(commitWaitMs), spark, tblDir, data, "stream",
+        if (upsertMode) "stream-upsert" else "stream", (),
+        ledger = Some(queryId -> epochId)) { tx =>
+      val meta0 = tx.meta
+      if (tx.base.buckets != writerBuckets)
+        throw new ConcurrentWriteException(
+          s"stream sink epoch $epochId of $tblDir: table rebucketed " +
+          s"$writerBuckets -> ${tx.base.buckets} mid-stream; epoch " +
+          "aborted (table unchanged) — restart the streaming query " +
+          "so its writers pick up the new layout")
       // sweep staging: keep only successful tasks' files (the staging
       // dir is private to this query, so no lock is needed); what is
       // left is the epoch, its footers read here — the sink is the
       // highest-frequency committer, its flip must stay a flip
+      val stagingPath = new Path(staging)
       if (f.exists(stagingPath))
         f.listStatus(stagingPath).filter(_.isDirectory).foreach { d =>
           f.listStatus(d.getPath).foreach { st =>
@@ -1109,78 +1104,81 @@ object KeyedTable {
       val touched = epochFiles.keys.toSeq.sorted
       // empty epoch: nothing to commit — a replay re-stages the same
       // rows and exits at the ledger check again harmlessly
-      if (touched.isEmpty) return
-      val (wh, ref) = refOf(tblDir)
-      // the epoch's staged files through the store's reader, as a
-      // snapshot of its own (executors staged under PHYSICAL names —
-      // KeyedStreamingWrite's fileSchema — which the scan maps back to
-      // the logical schema for the driver-side joins and checks)
-      val staged = KeyedTableSource.frame(spark, meta0, staging,
-        base0.copy(files = epochFiles.map { case (b, fls) => b -> fls.map(_.entry) },
-          dvs = Map.empty), tblDir)
-      val dups = staged.groupBy(meta0.pk.map(col): _*)
-        .agg(count(lit(1)).as("n")).filter(col("n") > 1)
-        .limit(5).select(meta0.pk.map(col): _*).collect()
-      if (dups.nonEmpty)
-        throw new StoreException(
-          s"stream sink epoch $epochId: duplicate PKs within the " +
-          s"batch, e.g. ${dups.mkString(", ")} — deduplicate the " +
-          "stream (dropDuplicates on the PK) before the sink")
-      enforceChecks(staged, meta0.checks, "stream-sink")
-      val nonPk = meta0.schema.fieldNames.filterNot(meta0.pk.contains).toSeq
-
-      // append mode: the epoch's rows as ONE insert-image batch (no
-      // pre-image join — base-independent, so never re-derived)
-      def insertImages: DataFrame = {
-        val images = nonPk.flatMap { c =>
-          Seq(lit(null).cast(meta0.schema(c).dataType).as(s"old_$c"),
-            col(c).as(s"new_$c"))
-        }
-        staged.select(
-          meta0.pk.map(col) ++ (lit("insert").as("op") +: images): _*)
-      }
-      // upsert mode: the merge-on-read decomposition against a given
-      // base — pre-image join classifies CDC images and collects the
-      // matched rows' (bucket, file, pos) tombstones, returned staged.
-      // A function of the base manifest: derived against base0 here,
-      // re-derived inside the lock only if its window changed a
-      // touched bucket.
-      def deriveUpsert(baseM: Manifest, metaM: TableMeta)
-          : Map[Int, Seq[Staged]] = {
-        val oldPos = withPositions(scanAt(spark, wh, ref, metaM, baseM))
-          .filter(col(BucketCol).isin(touched: _*))
-        val j = staged.as("n")
-          .join(oldPos.as("o"), metaM.pk.toIndexedSeq, "left")
-        val presentOld = col(s"o.$BucketCol").isNotNull
-        if (metaM.changelog) {
-          val changedCond = nonPk
-            .map(c => !(col(s"n.$c") <=> col(s"o.$c")))
-            .foldLeft(lit(false))(_ || _)
+      if (touched.isEmpty) None
+      else {
+        // the epoch's staged files through the store's reader, as a
+        // snapshot of its own (executors staged under PHYSICAL names —
+        // KeyedStreamingWrite's fileSchema — which the scan maps back to
+        // the logical schema for the driver-side joins and checks)
+        val staged = KeyedTableSource.frame(spark, meta0, staging,
+          tx.base.copy(files = epochFiles.map { case (b, fls) => b -> fls.map(_.entry) },
+            dvs = Map.empty), tblDir)
+        // the same NULL and uniqueness contract as a batch append, in
+        // the one job a duplicate check alone would cost
+        validateAndTouched(staged, meta0.pk, wantPk = true)
+        enforceChecks(staged, meta0.checks, "stream-sink")
+        val nonPk = meta0.schema.fieldNames.filterNot(meta0.pk.contains).toSeq
+        // append mode: the epoch's rows as ONE insert-image batch (no
+        // pre-image join — base-independent, so never re-derived)
+        def insertImages: DataFrame = {
           val images = nonPk.flatMap { c =>
-            Seq(col(s"o.$c").as(s"old_$c"), col(s"n.$c").as(s"new_$c"))
+            Seq(lit(null).cast(meta0.schema(c).dataType).as(s"old_$c"),
+              col(c).as(s"new_$c"))
           }
-          changes.stage(j.select(
-            metaM.pk.map(col) ++ (
-              when(!presentOld, lit("insert"))
-                .when(changedCond, lit("update"))
-                .otherwise(lit("unchanged")).as("op") +: images): _*))
+          staged.select(
+            meta0.pk.map(col) ++ (lit("insert").as("op") +: images): _*)
         }
-        val dvStaging = s"$tblDir/.staging-stream-dv-${UUID.randomUUID()}"
-        dvRoots += new Path(dvStaging)
-        j.filter(presentOld)
-          .select(col(s"o.$BucketCol").as(BucketCol),
-            col(s"o.$FileCol").as("file"), col(s"o.$PosCol").as("pos"))
-          .transform(clusterByBucket(_, touched, Seq("file", "pos")))
-          .write.partitionBy(BucketCol).parquet(dvStaging)
-        stageFiles(spark, f, dvStaging, Nil)
-      }
-      val dvs0: Map[Int, Seq[Staged]] =
-        if (upsertMode) deriveUpsert(base0, meta0)
+        // upsert mode: the merge-on-read decomposition against a given
+        // base — pre-image join classifies CDC images and collects the
+        // matched rows' (bucket, file, pos) tombstones, returned staged
+        def deriveUpsert(baseM: Manifest, metaM: TableMeta)
+            : Map[Int, Seq[Staged]] = {
+          val oldPos = withPositions(scanAt(spark, wh, ref, metaM, baseM))
+            .filter(col(BucketCol).isin(touched: _*))
+          val j = staged.as("n")
+            .join(oldPos.as("o"), metaM.pk.toIndexedSeq, "left")
+          val presentOld = col(s"o.$BucketCol").isNotNull
+          if (metaM.changelog) {
+            val changedCond = nonPk
+              .map(c => !(col(s"n.$c") <=> col(s"o.$c")))
+              .foldLeft(lit(false))(_ || _)
+            val images = nonPk.flatMap { c =>
+              Seq(col(s"o.$c").as(s"old_$c"), col(s"n.$c").as(s"new_$c"))
+            }
+            tx.log(j.select(
+              metaM.pk.map(col) ++ (
+                when(!presentOld, lit("insert"))
+                  .when(changedCond, lit("update"))
+                  .otherwise(lit("unchanged")).as("op") +: images): _*))
+          }
+          val dvStaging = tx.staging("stream-dv")
+          j.filter(presentOld)
+            .select(col(s"o.$BucketCol").as(BucketCol),
+              col(s"o.$FileCol").as("file"), col(s"o.$PosCol").as("pos"))
+            .transform(clusterByBucket(_, touched, Seq("file", "pos")))
+            .write.partitionBy(BucketCol).parquet(dvStaging)
+          stageFiles(spark, f, dvStaging, Nil)
+        }
+        if (upsertMode)
+          // the DVs must tombstone COMMIT-TIME positions: re-derived in
+          // the lock when the window changed a touched bucket's live set
+          // (e.g. a concurrent batch upsert of the same keys), or CDC
+          // flipped on since the pin without images — the one commit
+          // that stages, footers included, inside the lock
+          Some(Flip((), epochFiles, deriveUpsert(tx.base, meta0),
+            extend = true, rows = Some(() => staged),
+            recheck = (metaL, baseL) =>
+              if (movedBuckets(tx.base, baseL, touched).isEmpty &&
+                  (meta0.changelog || !metaL.changelog)) None
+              else {
+                tx.unlog()
+                Some(deriveUpsert(baseL, metaL))
+              }))
         else {
-          // overlap pre-check vs the snapshot-at-start (the locked
-          // re-check below covers files added since, so together they
-          // cover the commit-time snapshot exactly)
-          val old = scanAt(spark, wh, ref, meta0, base0)
+          // overlap pre-check vs the pin (the locked re-check covers
+          // files added since, so together they cover the commit-time
+          // snapshot exactly)
+          val old = scanAt(spark, wh, ref, meta0, tx.base)
             .filter(col(BucketCol).isin(touched: _*))
           val overlap = staged.join(old, meta0.pk.toIndexedSeq, "left_semi")
             .limit(5).select(meta0.pk.map(col): _*).collect()
@@ -1190,35 +1188,11 @@ object KeyedTable {
               s"e.g. ${overlap.mkString(", ")} (the sink appends; " +
               "replays are handled by the epoch ledger, not upserts — " +
               "for update-by-key semantics set option sink_mode=upsert)")
-          if (meta0.changelog) changes.stage(insertImages)
-          Map.empty
-        }
-
-      StreamEpochHooks.betweenPhases()
-
-      // ------- LOCKED (briefly — queue behind other committers rather
-      // than fail the query; the section is a flip plus rare re-checks)
-      WriteLock.withLockWait(spark, tblDir, "stream-sink", commitWaitMs) {
-        val metaL = TableMeta.read(spark, tblDir)
-        val baseL = Manifest.current(spark, tblDir)
-        // authoritative replay re-check (another instance of the same
-        // query may have committed this epoch while we staged)
-        if (!baseL.streams.get(queryId).exists(_ >= epochId)) {
-          if (baseL.buckets != writerBuckets) rebucketError(baseL.buckets)
-          if (metaL.schema.json != meta0.schema.json)
-            throw new ConcurrentWriteException(
-              s"stream sink epoch $epochId of $tblDir: table schema " +
-              "changed while the epoch staged; epoch aborted (table " +
-              "unchanged) — restart the streaming query so its writers " +
-              "pick up the new schema")
-          // a CHECK registered since we staged was validated against a
-          // snapshot excluding our rows — enforce only the new ones
-          enforceChecks(staged, metaL.checks -- meta0.checks.keySet,
-            "stream-sink(commit)")
-          val op = if (upsertMode) "stream-upsert" else "stream"
-          val dvs =
-            if (!upsertMode) {
-              val clash = addedKeys(spark, wh, ref, metaL, base0, baseL,
+          if (meta0.changelog) tx.log(insertImages)
+          Some(Flip((), epochFiles, extend = true, rows = Some(() => staged),
+            images = Some(() => insertImages),
+            recheck = (metaL, baseL) => {
+              val clash = addedKeys(spark, wh, ref, metaL, tx.base, baseL,
                 touched, staged)
               if (clash.nonEmpty)
                 throw new StoreException(
@@ -1227,39 +1201,11 @@ object KeyedTable {
                   "mutation while the epoch staged (the sink appends — " +
                   "for update-by-key semantics set option " +
                   "sink_mode=upsert)")
-              // changelog enabled mid-window: this epoch must still land
-              // its batch (readChangelog's every-mutation invariant)
-              changes.stageLate(metaL.changelog, insertImages)
-              dvs0
-            } else if (movedBuckets(base0, baseL, touched).nonEmpty ||
-                       (metaL.changelog && !meta0.changelog)) {
-              // the DVs must tombstone COMMIT-TIME positions: re-derive
-              // when the window changed a touched bucket's live set
-              // (e.g. a concurrent batch upsert of the same keys), or
-              // CDC flipped on since we staged without images — the one
-              // commit that stages, footers included, inside the lock
-              changes.discard(f)
-              deriveUpsert(baseL, metaL)
-            } else dvs0
-          flip(spark, f, tblDir, data, op, baseL, epochFiles, dvs,
-            extend = true, streamEpoch = Some(queryId -> epochId))
-          changes.publish(f, op)
+              None
+            }))
         }
       }
-    } finally {
-      f.delete(stagingPath, true)
-      dvRoots.foreach(p => f.delete(p, true))
-      changes.discard(f)
-    }
-  }
-
-  /** Test-only interleave seam: invoked between [[commitStreamEpoch]]'s
-    * unlocked validation phase and its locked commit, so a spec can
-    * land an interfering mutation deterministically inside the window
-    * the optimistic protocol must re-validate. A no-op in production
-    * (same-JVM static, like the spec gates it mirrors). */
-  private[store] object StreamEpochHooks {
-    @volatile var betweenPhases: () => Unit = () => ()
+    } finally f.delete(new Path(staging), true)
   }
 
   /** Drop a RETIRED streaming query's epoch-ledger entry — one metadata
@@ -1356,12 +1302,11 @@ object KeyedTable {
     else df.select(df.columns.map(c =>
       col(c).as(meta.renames.getOrElse(c, c))).toIndexedSeq: _*)
 
-  /** Who holds the write lock through a row verb's pin → stage → flip
-    * (the protocol each body — [[appendWith]], [[upsertWith]],
-    * [[updateWith]], [[deleteWith]] — states for itself). Not an option:
-    * the locked entry points ([[toSql]], [[delete]], [[update]],
-    * [[merge]]) run their body under [[Locked]] inside their own
-    * `WriteLock.withLock`, the `*Concurrent` twins under [[Optimistic]]. */
+  /** Who holds the write lock from a committer's pin to its flip (see
+    * [[commit]]). Not an option: the locked row-verb entry points
+    * ([[toSql]], [[delete]], [[update]], [[merge]]) run their body under
+    * [[Locked]] inside their own `WriteLock.withLock`; the `*Concurrent`
+    * twins, layout maintenance and stream epochs under [[Optimistic]]. */
   private sealed trait CommitPolicy {
     /** The verb's name in manifests, changelog errors, CHECK errors and
       * lock holders: `verb` locked, `<verb>Concurrent` optimistic. */
@@ -1378,13 +1323,6 @@ object KeyedTable {
       case Locked => body
       case Optimistic(waitMs) =>
         WriteLock.withLockWait(spark, dir, op, waitMs)(body)
-    }
-
-    /** The test seam between stage and flip: only the optimistic policy
-      * leaves a window there for another writer to land in. */
-    def betweenPhases(hook: () => Unit): Unit = this match {
-      case Locked => ()
-      case Optimistic(_) => hook()
     }
   }
 
@@ -1425,16 +1363,6 @@ object KeyedTable {
                            missing: => String): Unit =
     if (!TableMeta.exists(spark, dir)) throw new StoreException(missing)
 
-  /** Flip-time layout check: staged files are bucketed for the pinned
-    * bucket count, which a concurrent rebucket may have changed. */
-  private def checkBucketCount(base0: Manifest, latest: Manifest,
-                               verb: String): Unit =
-    if (latest.buckets != base0.buckets)
-      throw new ConcurrentWriteException(
-        s"bucket count changed ${base0.buckets} -> ${latest.buckets} " +
-        "(concurrent rebucket); staged files use the old layout — " +
-        s"retry the $verb")
-
   /** The touched buckets whose live file or delete-vector set moved
     * between two snapshots: a rewrite staged against the first read a
     * pre-image that is no longer the truth (and MoR positions index
@@ -1470,70 +1398,260 @@ object KeyedTable {
       .limit(5).select(meta.pk.map(col): _*).collect()
   }
 
-  /** The bucket-level conflict window of the replace-shaped verbs
-    * (upsert, merge, update, delete): two writers into DISJOINT bucket
-    * sets both commit; a same-bucket commit since the pin aborts this
-    * one. Per bucket, not per key — the commit replaces whole buckets,
-    * so a same-bucket write invalidates the staged output even when the
-    * keys are disjoint. */
-  private def checkWindow(base0: Manifest, latest: Manifest,
-                          touched: Seq[Int], verb: String,
-                          staged: String): Unit = {
-    val dirty = movedBuckets(base0, latest, touched)
-    if (dirty.nonEmpty)
-      throw new ConcurrentWriteException(
-        s"bucket(s) ${dirty.sorted.take(5).mkString(", ")} changed " +
-        s"since this $verb staged (concurrent mutation with an " +
-        s"overlapping touched-bucket set); the staged $staged read a " +
-        s"stale pre-image — retry the $verb")
+  /** Test-only seam of [[commit]], keyed by verb (`append`, `upsert`,
+    * `merge`, `update`, `delete`, `stream`, `compact`, `zorder`,
+    * `rebucket`): an OPTIMISTIC commit runs its verb's hook between its
+    * stage phase and taking the lock (a locked one has no window
+    * there), so a spec can land an interfering mutation
+    * deterministically inside the window the re-validation must catch
+    * (or, for a disjoint-bucket writer, must NOT catch). A hook fires on
+    * every entry — one that runs its own verb optimistically recurses,
+    * so guard it. A no-op in production. */
+  private[store] object CommitSeam {
+    private val hooks =
+      new java.util.concurrent.ConcurrentHashMap[String, () => Unit]()
+    def apply(verb: String): () => Unit = hooks.getOrDefault(verb, () => ())
+    def update(verb: String, hook: () => Unit): Unit = hooks.put(verb, hook): Unit
   }
 
-  /** A row verb's changelog batch (see [[readChangelog]]). Staged from
-    * the pinned pre-image alongside the data write; staged LATE, inside
-    * the flip, when a concurrent writer switched the table's CDC on
-    * since the pin (every mutation of a CDC table must land a batch);
-    * renamed into the next batch number only after the data flip, so a
-    * failed mutation leaves no batch claiming changes that never
-    * landed. [[discard]] removes the staging in a `finally` (a no-op
-    * once published). */
-  private final class StagedChanges(spark: SparkSession, dir: String) {
-    @volatile private var src: Option[Path] = None
-    def stage(changes: DataFrame): Unit =
-      src = Some(stageChanges(spark, dir, changes))
-    def stageLate(cdcNow: Boolean, changes: => DataFrame): Unit =
-      if (cdcNow && src.isEmpty) stage(changes)
-    def publish(f: FileSystem, op: String): Unit =
-      src.foreach(s => commitChangelogBatch(f, op, s, nextChangelogDst(f, dir)))
-    def discard(f: FileSystem): Unit = {
-      src.foreach(f.delete(_, true))
-      src = None
+  /** One commit's pin and scratch, handed to a committer's stage phase
+    * by [[commit]]: the meta and manifest it stages against, the
+    * staging dirs and cached frames it creates, and its changelog batch
+    * (see [[readChangelog]]) — staged from the pinned pre-image beside
+    * the data write, renamed to the next batch number only after the
+    * flip, so a failed mutation leaves no batch claiming changes that
+    * never landed. [[discard]] deletes and unpersists all of it (an
+    * already-published batch is gone from staging). */
+  private final class Txn(spark: SparkSession, dir: String) {
+    val meta: TableMeta = TableMeta.read(spark, dir)
+    val base: Manifest = Manifest.current(spark, dir)
+    val f: FileSystem = fs(spark, dir)
+    private val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
+    private val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    @volatile private var images: Option[Path] = None
+
+    /** A fresh `.staging-<kind>-<uuid>` dir under the table. */
+    def staging(kind: String): String = synchronized {
+      dirs += s"$dir/.staging-$kind-${UUID.randomUUID()}"
+      dirs.last
+    }
+    def persist(df: DataFrame): DataFrame = synchronized {
+      cached += df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      df
+    }
+    def log(changes: DataFrame): Unit =
+      images = Some(stageChanges(spark, dir, changes))
+    def logged: Boolean = images.nonEmpty
+    def unlog(): Unit = {
+      images.foreach(f.delete(_, true))
+      images = None
+    }
+    def publish(op: String): Unit =
+      images.foreach(s => commitChangelogBatch(f, op, s, nextChangelogDst(f, dir)))
+    def discard(): Unit = {
+      dirs.foreach(d => f.delete(new Path(d), true))
+      unlog()
+      cached.foreach(_.unpersist())
     }
   }
 
+  /** A committer's staged commit, handed back to [[commit]]: its
+    * `result`, the files and delete vectors it staged and how they flip
+    * (`extend`, `removeMissing`, `newBuckets` — see [[flip]]), and what
+    * the commit re-validates under the lock:
+    *  - `touched`: the buckets whose pre-image it read — a commit into
+    *    any of them since the pin aborts it;
+    *  - `evolved`: the schema it staged (append, upsert, merge), merged
+    *    into the latest; without it the schema must be unchanged;
+    *  - `rows`: the rows it writes, CHECKed against constraints
+    *    registered since the pin;
+    *  - `images`: its changelog images, staged late when CDC was turned
+    *    on since the pin (every mutation of a CDC table lands a batch);
+    *  - `recheck`: its own checks against the latest meta and manifest;
+    *    `Some(dvs)` replaces the staged delete vectors.
+    * `cdc` arms table-property CDC; `metaEdit` edits the final meta. */
+  private final case class Flip[A](
+      result: A,
+      files: Map[Int, Seq[Staged]],
+      dvs: Map[Int, Seq[Staged]] = Map.empty,
+      extend: Boolean = false,
+      removeMissing: Seq[Int] = Nil,
+      newBuckets: Option[Int] = None,
+      touched: Seq[Int] = Nil,
+      evolved: Option[StructType] = None,
+      rows: Option[() => DataFrame] = None,
+      images: Option[() => DataFrame] = None,
+      cdc: Boolean = false,
+      recheck: (TableMeta, Manifest) => Option[Map[Int, Seq[Staged]]] =
+        (_: TableMeta, _: Manifest) => None,
+      metaEdit: TableMeta => TableMeta = identity[TableMeta])
+
+  /** THE COMMIT — every staged mutation (the four row verbs, stream
+    * epochs, compact, zorder, rebucket) runs this one sequence:
+    *  1. PIN one meta and one manifest ([[Txn]]). A `ledger` token (an
+    *     append's `txn`, a stream epoch) at or below the one recorded
+    *     makes the commit a no-op here, before any job.
+    *  2. STAGE: `stage` writes the committer's files against the pin and
+    *     returns its [[Flip]], or None when there is nothing to commit.
+    *  3. SEAM: an optimistic commit runs its verb's [[CommitSeam]] hook.
+    *  4. LOCK under `policy`, re-read the meta and the manifest and
+    *     re-validate, in order: the ledger (a replay that landed
+    *     meanwhile makes this a no-op), the bucket count, the schema, the
+    *     touched-bucket window, CHECKs registered since the pin, the
+    *     committer's `recheck`. A failure throws
+    *     [[ConcurrentWriteException]] with the table unchanged. Under
+    *     [[Locked]] the pin IS the latest, so every check passes.
+    *  5. FLIP ([[flip]]), then publish the changelog batch (staged late
+    *     if CDC was switched on since the pin), then write the meta if
+    *     it changed.
+    * Staging dirs, cached frames and an unpublished batch go in every
+    * case. Returns the Flip's result, or `idle` when nothing committed.
+    * GUARD RAIL: the locked section is manifest arithmetic, renames and
+    * small-file writes; a committer's `recheck` reads data only for what
+    * the window added (usually nothing). */
+  private def commit[A](policy: CommitPolicy, spark: SparkSession,
+                        dir: String, data: String, verb: String, op: String,
+                        idle: A, ledger: Option[(String, Long)] = None)
+                       (stage: Txn => Option[Flip[A]]): A = {
+    val tx = new Txn(spark, dir)
+    def replayed(m: Manifest): Boolean =
+      ledger.exists { case (id, v) => m.streams.get(id).exists(_ >= v) }
+    val retry = verb match {
+      case "stream" =>
+        "epoch aborted (table unchanged) — restart the streaming query"
+      case "compact" | "zorder" | "rebucket" => "re-staging"
+      case v => s"retry the $v"
+    }
+    def conflict(msg: String): Nothing =
+      throw new ConcurrentWriteException(s"$msg; $retry")
+    if (replayed(tx.base)) return idle
+    try stage(tx).fold(idle) { st =>
+      if (policy != Locked) CommitSeam(verb)()
+      policy.exclusive(spark, dir, s"$op(commit)") {
+        val meta = TableMeta.read(spark, dir)
+        val latest = Manifest.current(spark, dir)
+        if (replayed(latest)) idle
+        else {
+          if (latest.buckets != tx.base.buckets)
+            conflict(s"bucket count changed ${tx.base.buckets} -> " +
+              s"${latest.buckets} (concurrent rebucket); the staged files " +
+              "use the old layout")
+          val now = meta.schema.fields.map(x => x.name -> x.dataType).toMap
+          val schema = st.evolved match {
+            case ev if meta.schema == tx.meta.schema => ev.getOrElse(meta.schema)
+            case None =>
+              conflict(s"table schema changed while this $verb staged (the " +
+                "staged files use the old schema)")
+            case Some(ev) =>
+              // columns added meanwhile are kept (our files read NULL for
+              // them); a re-typed or since-dropped staged column aborts
+              ev.fields.foreach { x =>
+                now.get(x.name).filter(_ != x.dataType).foreach { t =>
+                  conflict(s"column ${x.name} is now ${t.catalogString} but " +
+                    s"this $verb staged ${x.dataType.catalogString} " +
+                    "(concurrent schema change)")
+                }
+                if (meta.dropped.contains(x.name) && !now.contains(x.name))
+                  conflict(s"column ${x.name} was dropped by a concurrent " +
+                    "mutation; its staged values would be silently discarded")
+              }
+              StructType(meta.schema.fields ++
+                ev.fields.filterNot(x => now.contains(x.name)))
+          }
+          val dirty = movedBuckets(tx.base, latest, st.touched)
+          if (dirty.nonEmpty)
+            conflict(s"bucket(s) ${dirty.sorted.take(5).mkString(", ")} " +
+              s"changed since this $verb staged (a concurrent commit into a " +
+              "bucket it read); the staged files read a stale pre-image")
+          val added = meta.checks -- tx.meta.checks.keySet
+          if (added.nonEmpty) st.rows.foreach { rows =>
+            // a CHECK added meanwhile may reference a column these rows
+            // do not carry — a clean conflict, never a raw analysis error
+            try enforceChecks(rows(), added, s"$op(commit)")
+            catch {
+              case e: org.apache.spark.sql.AnalysisException =>
+                conflict(s"a CHECK constraint added while this $verb staged " +
+                  "references column(s) its rows do not carry (concurrent " +
+                  s"schema change): ${e.getMessage}")
+            }
+          }
+          val dvs = st.recheck(meta, latest).getOrElse(st.dvs)
+          if (meta.changelog && !tx.logged) st.images.foreach(im => tx.log(im()))
+          flip(spark, tx.f, dir, data, op, latest, st, dvs, ledger)
+          tx.publish(op)
+          val edited = st.metaEdit(meta.copy(schema = schema,
+            changelog = st.cdc || meta.changelog))
+          if (edited != meta) TableMeta.write(spark, dir, edited)
+          st.result
+        }
+      }
+    } finally tx.discard()
+  }
+
+  /** How many attempts layout maintenance makes before giving up. */
+  private val MaintenanceAttempts = 5
+
+  /** Bounded statement-level AUTO-RETRY for SQL DML lowered onto the
+    * optimistic verbs (`commit_mode=optimistic`) — see [[retrying]];
+    * read by [[sqlRetries]]. */
+  val SqlMaxRetriesConf = "spark.graft.sql.maxRetries"
+  val SqlMaxRetriesDefault = 5
+
+  /** [[SqlMaxRetriesConf]]'s value; a non-positive or non-integer value
+    * refuses loudly. */
+  private[graft] def sqlRetries(spark: SparkSession): Int = {
+    val raw = spark.conf.get(SqlMaxRetriesConf, SqlMaxRetriesDefault.toString)
+    raw.trim.toIntOption.filter(_ >= 1).getOrElse(
+      throw new StoreException(
+        s"$SqlMaxRetriesConf must be a positive integer, got '$raw'"))
+  }
+
+  /** THE RETRY LOOP around whole optimistic attempts, each re-pinning
+    * and re-staging against the fresh snapshot, so retrying is always
+    * correct: an aborted attempt committed nothing. Two callers:
+    *  - layout maintenance ([[MaintenanceAttempts]]): a rewrite with no
+    *    logical change is always the side that re-stages, so ingest
+    *    writers never wait behind it and never abort for it;
+    *  - SQL DML lowered onto the optimistic verbs ([[sqlRetries]],
+    *    naming [[SqlMaxRetriesConf]] as the `dial`): a Spark-SQL-only
+    *    orchestrator sees one statement, not a retry loop of its own
+    *    (MERGE re-pins its routing snapshot on each attempt).
+    * Bounded: a table too hot to ever win surfaces loudly. */
+  private[graft] def retrying[A](op: String, attempts: Int, dial: String = "")
+                                (body: => A): A = {
+    var attempt = 1
+    while (true) {
+      try return body
+      catch {
+        case _: ConcurrentWriteException if attempt < attempts => attempt += 1
+        case e: ConcurrentWriteException =>
+          throw new ConcurrentWriteException(
+            s"$op: gave up after $attempts attempts, each aborted by a " +
+            s"concurrent writer (last: ${e.getMessage}); the table is " +
+            s"unchanged — ${if (dial.isEmpty) "" else s"raise $dial or "}" +
+            "rerun when write traffic quiets")
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
   /** The append body behind [[toSql]]'s `how = Append` (under
-    * [[Locked]]) and [[appendConcurrent]] (under [[Optimistic]]).
-    * Appends add uniquely named files, so two appends to the same
-    * buckets never physically conflict; only the flip serializes.
+    * [[Locked]]) and [[appendConcurrent]] (under [[Optimistic]]),
+    * committed by [[commit]] with `txn` as its ledger token. Appends add
+    * uniquely named files, so two appends to the same buckets never
+    * physically conflict; only the flip serializes.
     *
-    *  1. PIN the meta and the manifest. A `txn` token at or below the
-    *     recorded version exits here, before any id or job.
-    *  2. STAGE: auto-index tables reserve their id range in a short
-    *     exclusive section (the mark commits before the data: a crash
-    *     leaves an id gap, never a duplicate); the delta is bucketed,
-    *     CHECKed and PK-validated off one cache; the PK-overlap probe
-    *     against the pinned snapshot and the insert images run
-    *     alongside the staging write; the staged footers' stats are
-    *     collected.
-    *  3. FLIP, re-validating against the latest snapshot: a `txn` that
-    *     landed meanwhile makes this a no-op; CHECKs registered since
-    *     the pin are enforced; a rebucket, a re-typed or dropped staged
-    *     column abort; the overlap probe re-runs on only the files
-    *     ADDED since the pin (usually none — no IO), so with the pinned
-    *     probe it covers the commit-time snapshot exactly. The staged
-    *     files extend their buckets; the batch lands after the flip.
-    *
-    * Under [[Locked]] the pinned snapshot is the latest, so step 3's
-    * checks pass by construction and the labels are `append`. */
+    * STAGE against the pin: auto-index tables reserve their id range in
+    * a short exclusive section (the mark commits before the data: a
+    * crash leaves an id gap, never a duplicate); the delta is bucketed,
+    * CHECKed and PK-validated off one cache; the PK-overlap probe
+    * against the pinned snapshot and the insert images run alongside
+    * the staging write. The commit merges the staged schema into the
+    * latest one and, as this verb's own check, re-runs the overlap
+    * probe on only the files ADDED since the pin (usually none — no
+    * IO), so with the pinned probe it covers the commit-time snapshot
+    * exactly. The staged files extend their buckets. Under [[Locked]]
+    * the labels are `append`. */
   private def appendWith(policy: CommitPolicy, df: DataFrame, wh: String,
                          tableName: String, addNewColumns: Boolean,
                          validate: Boolean, changelog: Boolean,
@@ -1541,61 +1659,52 @@ object KeyedTable {
     val spark = df.sparkSession
     val label = policy.label("append")
     val dir = tableDir(wh, tableName)
-    val data = dataDir(wh, tableName)
-    val meta0 = TableMeta.read(spark, dir)
-    val base0 = Manifest.current(spark, dir)
-    def replayed(m: Manifest): Boolean =
-      txn.exists { case (id, v) => m.streams.get(id).exists(_ >= v) }
-    if (replayed(base0)) return
-    // table-property CDC (see TableMeta.changelog): an append logs its
-    // rows as `insert` ops — every row is new by the overlap contract
-    val wantChangelog = changelog || meta0.changelog
-
-    val (aligned0, evolved, metaUsed) =
-      if (meta0.autoIndex) {
-        // continue the synthetic PK from the stored high-water mark —
-        // no table scan; pre-field tables recover via footer stats
-        val n = df.count()
-        val (start, m) = policy.exclusive(spark, dir, s"$label(reserve-ids)") {
-          val m0 = TableMeta.read(spark, dir)
-          val cur = m0.maxAutoIndex
-            .getOrElse(footerMaxAutoIndex(spark, wh, tableName, m0))
-          val m1 = m0.copy(maxAutoIndex = Some(cur + n))
-          TableMeta.write(spark, dir, m1)
-          (cur + 1L, m1)
+    commit(policy, spark, dir, dataDir(wh, tableName), "append", label, (),
+        ledger = txn) { tx =>
+      // table-property CDC (see TableMeta.changelog): an append logs its
+      // rows as `insert` ops — every row is new by the overlap contract
+      val wantChangelog = changelog || tx.meta.changelog
+      val (aligned0, evolved, metaUsed) =
+        if (tx.meta.autoIndex) {
+          // continue the synthetic PK from the stored high-water mark —
+          // no table scan; pre-field tables recover via footer stats
+          val n = df.count()
+          val (start, m) = policy.exclusive(spark, dir, s"$label(reserve-ids)") {
+            val m0 = TableMeta.read(spark, dir)
+            val cur = m0.maxAutoIndex
+              .getOrElse(footerMaxAutoIndex(spark, wh, tableName, m0))
+            val m1 = m0.copy(maxAutoIndex = Some(cur + n))
+            TableMeta.write(spark, dir, m1)
+            (cur + 1L, m1)
+          }
+          val (withIds, n2) = assignAutoIndex(df, start)
+          if (n2 != n)
+            throw new StoreException(
+              s"$label: incoming frame is non-deterministic " +
+              s"($n rows at reservation, $n2 at assignment); ids would " +
+              "escape the reserved range — materialize the input first")
+          val (a, e) = align(withIds, m, addNewColumns)
+          (a, e, m)
+        } else {
+          val (a, e) = align(df, tx.meta, addNewColumns)
+          (a, e, tx.meta)
         }
-        val (withIds, n2) = assignAutoIndex(df, start)
-        if (n2 != n)
-          throw new StoreException(
-            s"$label: incoming frame is non-deterministic " +
-            s"($n rows at reservation, $n2 at assignment); ids would " +
-            "escape the reserved range — materialize the input first")
-        val (a, e) = align(withIds, m, addNewColumns)
-        (a, e, m)
-      } else {
-        val (a, e) = align(df, meta0, addNewColumns)
-        (a, e, meta0)
+      val newB = tx.persist(withBucket(aligned0, metaUsed.pk, tx.base.buckets))
+      def inserts: DataFrame = {
+        val nonPk = evolved.fieldNames.filterNot(metaUsed.pk.contains).toSeq
+        val images = nonPk.flatMap { c =>
+          Seq(lit(null).cast(evolved(c).dataType).as(s"old_$c"),
+            col(c).as(s"new_$c"))
+        }
+        newB.select(metaUsed.pk.map(col) ++ (lit("insert").as("op") +: images): _*)
       }
-    val newB = withBucket(aligned0, metaUsed.pk, base0.buckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val f = fs(spark, dir)
-    val staging = s"$dir/.staging-append-${UUID.randomUUID()}"
-    val changes = new StagedChanges(spark, dir)
-    def inserts: DataFrame = {
-      val nonPk = evolved.fieldNames.filterNot(metaUsed.pk.contains).toSeq
-      val images = nonPk.flatMap { c =>
-        Seq(lit(null).cast(evolved(c).dataType).as(s"old_$c"),
-          col(c).as(s"new_$c"))
-      }
-      newB.select(metaUsed.pk.map(col) ++ (lit("insert").as("op") +: images): _*)
-    }
-    try {
       enforceChecks(newB, metaUsed.checks, label)
       // validate AFTER persist so the (possibly expensive) incoming
       // pipeline is computed once; one fused job answers the PK check
       // and the touched-bucket set off the cache
       val touched = validateAndTouched(newB, metaUsed.pk,
         validate && !metaUsed.autoIndex)
+      val staging = tx.staging("append")
       // the overlap probe and the insert images read only the pinned
       // snapshot and the cached delta — independent of the staging
       // write, so the jobs overlap (guide §2.6); the first failure
@@ -1603,7 +1712,7 @@ object KeyedTable {
       inParallel(spark)(
         {
           if (!metaUsed.autoIndex) {
-            val old = scanAt(spark, wh, tableName, metaUsed, base0)
+            val old = scanAt(spark, wh, tableName, metaUsed, tx.base)
               .filter(col(BucketCol).isin(touched: _*))
             val overlap = newB.join(old, metaUsed.pk, "left_semi").limit(5)
               .select(metaUsed.pk.map(col): _*).collect()
@@ -1612,42 +1721,25 @@ object KeyedTable {
                 s"Append would overwrite existing PKs, e.g. ${overlap.mkString(", ")} " +
                 "(reference: sql.py:264 append raises on repeated index)")
           }
-          if (wantChangelog) changes.stage(inserts)
+          if (wantChangelog) tx.log(inserts)
         },
         toPhys(clusterByBucket(newB, touched, metaUsed.pk), metaUsed)
           .write.partitionBy(BucketCol).parquet(staging))
-      val staged = stageFiles(spark, f, staging, statColsTypedOf(metaUsed))
-
-      policy.exclusive(spark, dir, s"$label(commit)") {
-        val metaLatest = TableMeta.read(spark, dir)
-        val baseLatest = Manifest.current(spark, dir)
-        // checked FIRST so a replay never trips the conflict guards
-        if (replayed(baseLatest)) return
-        enforceChecks(newB, metaLatest.checks -- metaUsed.checks.keySet,
-          s"$label(commit)")
-        checkBucketCount(base0, baseLatest, "append")
-        val mergedSchema = mergeEvolved(evolved, metaUsed, metaLatest)
-        if (!metaUsed.autoIndex) {
-          val clash = addedKeys(spark, wh, tableName, metaLatest, base0,
-            baseLatest, touched, newB)
-          if (clash.nonEmpty)
-            throw new ConcurrentWriteException(
-              s"PK(s) ${clash.mkString(", ")} were written by a " +
-              "concurrent mutation after this append staged; retry " +
-              "(or use upsert semantics if overwrite is intended)")
-        }
-        changes.stageLate(metaLatest.changelog, inserts)
-        flip(spark, f, dir, data, label, baseLatest, staged, extend = true,
-          streamEpoch = txn)
-        changes.publish(f, label)
-        val metaFinal = metaLatest.copy(schema = mergedSchema,
-          changelog = wantChangelog || metaLatest.changelog)
-        if (metaFinal != metaLatest) TableMeta.write(spark, dir, metaFinal)
-      }
-    } finally {
-      f.delete(new Path(staging), true)
-      changes.discard(f)
-      newB.unpersist()
+      Some(Flip((), stageFiles(spark, tx.f, staging, statColsTypedOf(metaUsed)),
+        extend = true, evolved = Some(evolved), rows = Some(() => newB),
+        images = Some(() => inserts), cdc = wantChangelog,
+        recheck = (meta, latest) => {
+          if (!metaUsed.autoIndex) {
+            val clash = addedKeys(spark, wh, tableName, meta, tx.base,
+              latest, touched, newB)
+            if (clash.nonEmpty)
+              throw new ConcurrentWriteException(
+                s"PK(s) ${clash.mkString(", ")} were written by a " +
+                "concurrent mutation after this append staged; retry " +
+                "(or use upsert semantics if overwrite is intended)")
+          }
+          None
+        }))
     }
   }
 
@@ -1675,59 +1767,6 @@ object KeyedTable {
       addNewColumns, validate, changelog, txn)
   }
 
-  /** Merge this append's (possibly evolved) schema into the table's
-    * COMMIT-TIME schema, detecting concurrent-evolution conflicts:
-    * columns another writer added meanwhile are kept (our files read
-    * NULL for them); columns we add are appended; a type mismatch or a
-    * since-dropped column aborts ([[ConcurrentWriteException]]). */
-  private def mergeEvolved(evolved: StructType, metaUsed: TableMeta,
-                           metaLatest: TableMeta): StructType = {
-    if (metaLatest.schema == metaUsed.schema) return evolved
-    val latestTypes = metaLatest.schema.fields.map(x => x.name -> x.dataType).toMap
-    evolved.fields.foreach { fld =>
-      latestTypes.get(fld.name).foreach { t =>
-        if (t != fld.dataType)
-          throw new ConcurrentWriteException(
-            s"column ${fld.name} is now ${t.catalogString} but this " +
-            s"append staged ${fld.dataType.catalogString} " +
-            "(concurrent schema change); retry the append")
-      }
-      if (metaLatest.dropped.contains(fld.name) &&
-          !latestTypes.contains(fld.name))
-        throw new ConcurrentWriteException(
-          s"column ${fld.name} was dropped by a concurrent mutation; " +
-          "its staged values would be silently discarded — retry the " +
-          "append against the current schema")
-    }
-    val extra = evolved.fields.filterNot(x => latestTypes.contains(x.name))
-    StructType(metaLatest.schema.fields ++ extra)
-  }
-
-  /** Test-only interleave seam: invoked between [[upsertConcurrent]]'s
-    * stage phase and its flip, so a spec can land an interfering
-    * mutation deterministically inside the window the bucket-level
-    * conflict check must catch (or, for a disjoint-bucket writer, must
-    * NOT catch). A no-op in production. */
-  private[store] object UpsertConcurrentHooks {
-    @volatile var betweenPhases: () => Unit = () => ()
-  }
-
-  /** [[UpsertConcurrentHooks]]'s twin for [[deleteConcurrent]] (its own
-    * object, so concurrently-running suites never share a seam). */
-  private[store] object DeleteConcurrentHooks {
-    @volatile var betweenPhases: () => Unit = () => ()
-  }
-
-  /** [[UpsertConcurrentHooks]]'s twin for [[mergeConcurrent]]. */
-  private[store] object MergeConcurrentHooks {
-    @volatile var betweenPhases: () => Unit = () => ()
-  }
-
-  /** [[UpsertConcurrentHooks]]'s twin for [[updateConcurrent]]. */
-  private[store] object UpdateConcurrentHooks {
-    @volatile var betweenPhases: () => Unit = () => ()
-  }
-
   /** Marker column carried through a merge's delta: TRUE = this key's
     * stored row is tombstoned (deleted if present, ignored if absent). */
   private val MergeDelCol = "_graft_merge_del"
@@ -1740,7 +1779,7 @@ object KeyedTable {
 
   /** The upsert and merge body behind [[toSql]]'s `how = Upsert` and
     * [[merge]] (under [[Locked]]) and [[upsertConcurrent]] and
-    * [[mergeConcurrent]] (under [[Optimistic]]).
+    * [[mergeConcurrent]] (under [[Optimistic]]), committed by [[commit]].
     *
     * Upsert overwrites ONLY the columns present in the incoming frame
     * (NULLs included); absent columns keep their stored values
@@ -1751,30 +1790,24 @@ object KeyedTable {
     * insert candidate. Returns (inserted, updated, deleted) for a
     * merge, (0, 0, 0) for an upsert.
     *
-    *  1. PIN the meta and the manifest; a merge's `expectedVersion`
-    *     (the SQL MERGE routing read's snapshot) must be the pinned one.
-    *  2. STAGE against the pinned snapshot: validate the cached delta
-    *     (one fused job also yields the touched buckets — only those
-    *     are read or rewritten), CHECK the rows it writes, then either
-    *     rewrite the touched buckets by one full-outer merge
-    *     (copy-on-write) or — a merge under [[DeleteMode]] MergeOnRead,
-    *     or Auto below [[MorMaxFraction]] — tombstone the matched rows'
-    *     positions and append the delta's surviving images. The
-    *     changelog images (insert / update / unchanged / delete,
-    *     classified by one delta-sized join) stage alongside; the
-    *     staged footers' stats are collected.
-    *  3. FLIP, re-validating: a `strictVersion` merge aborts on ANY
-    *     movement (a full-snapshot sync must not miss an insert into an
-    *     untouched bucket); a rebucket, a re-typed or dropped staged
-    *     column, or a moved touched bucket ([[checkWindow]]) abort;
-    *     CHECKs registered since the pin are enforced.
+    * STAGE against the pin — a merge's `expectedVersion` (the SQL MERGE
+    * routing read's snapshot) must be the pinned one: validate the
+    * cached delta (one fused job also yields the touched buckets — only
+    * those are read or rewritten), CHECK the rows it writes, then either
+    * rewrite the touched buckets by one full-outer merge (copy-on-write)
+    * or — a merge under [[DeleteMode]] MergeOnRead, or Auto below
+    * [[MorMaxFraction]] — tombstone the matched rows' positions and
+    * append the delta's surviving images. The changelog images (insert
+    * / update / unchanged / delete, classified by one delta-sized join)
+    * stage alongside. The commit's window is the touched buckets — every
+    * bucket for a `strictVersion` merge, since a full-snapshot sync must
+    * not miss an insert into an untouched one.
     *
     * The merge counts cost a dedicated delta-sized join only under
     * Auto, which needs the matched count before choosing the write
     * path; under an explicit mode they ride the staging write as
-    * observe() metrics. Under [[Locked]] step 3's checks pass by
-    * construction; the labels are `upsert` / `merge`, and a merge's
-    * commit is recorded as `upsert`. */
+    * observe() metrics. Under [[Locked]] the labels are `upsert` /
+    * `merge`, and a merge's commit is recorded as `upsert`. */
   private def upsertWith(policy: CommitPolicy, df0: DataFrame, wh: String,
                          tableName: String, addNewColumns: Boolean,
                          validate: Boolean, changelog: Boolean,
@@ -1784,44 +1817,38 @@ object KeyedTable {
     val spark = df0.sparkSession
     val verb = if (tombstoned) "merge" else "upsert"
     val label = policy.label(verb)
-    val commitOp = if (policy == Locked) "upsert" else label
-    val dir = tableDir(wh, tableName)
-    val data = dataDir(wh, tableName)
-    val meta0 = TableMeta.read(spark, dir)
-    if (meta0.autoIndex)
-      throw new StoreException(
-        "Cannot upsert into a table with an automatically generated index (reference: sql.py:177)")
-    val base0 = Manifest.current(spark, dir)
-    // SQL MERGE routing guard: a partial clause shape pre-filters the
-    // feed against a PINNED snapshot's key set; once that is this
-    // call's snapshot, the window check at the flip covers every later
-    // movement (feed rows route by their own PK, whose bucket is by
-    // construction in the touched set)
-    expectedVersion.foreach { v =>
-      if (base0.version != v)
-        throw new ConcurrentWriteException(
-          s"$label into $tableName planned against snapshot $v " +
-          s"but the table is now at ${base0.version} (concurrent commit " +
-          "since the routing read); table unchanged — retry the merge")
-    }
-    val df =
-      if (!tombstoned) df0
-      else df0.select(df0.columns.filter(c => c == MergeDelCol ||
-        addNewColumns || meta0.schema.fieldNames.contains(c))
-        .map(col).toIndexedSeq: _*)
-    // table-property semantics: once ANY mutation has captured CDC the
-    // meta flag is set and every later mutation captures it too
-    val wantChangelog = changelog || meta0.changelog
-    val incomingCols = df.columns.toSet - MergeDelCol
-    val (aligned, evolved) = align(df, meta0, addNewColumns,
-      passthrough = if (tombstoned) Set(MergeDelCol) else Set.empty)
-    val newB = withBucket(aligned, meta0.pk, base0.buckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val f = fs(spark, dir)
-    val staging = s"$dir/.staging-$verb-${UUID.randomUUID()}"
-    val dvStaging = s"$dir/.staging-$verb-dv-${UUID.randomUUID()}"
-    val changes = new StagedChanges(spark, dir)
-    try {
+    commit(policy, spark, tableDir(wh, tableName), dataDir(wh, tableName),
+        verb, if (policy == Locked) "upsert" else label, (0L, 0L, 0L)) { tx =>
+      val (meta0, base0) = (tx.meta, tx.base)
+      if (meta0.autoIndex)
+        throw new StoreException(
+          "Cannot upsert into a table with an automatically generated index (reference: sql.py:177)")
+      // SQL MERGE routing guard: a partial clause shape pre-filters the
+      // feed against a PINNED snapshot's key set; once that is this
+      // call's snapshot, the window check at the flip covers every later
+      // movement (feed rows route by their own PK, whose bucket is by
+      // construction in the touched set)
+      expectedVersion.foreach { v =>
+        if (base0.version != v)
+          throw new ConcurrentWriteException(
+            s"$label into $tableName planned against snapshot $v " +
+            s"but the table is now at ${base0.version} (concurrent commit " +
+            "since the routing read); table unchanged — retry the merge")
+      }
+      val df =
+        if (!tombstoned) df0
+        else df0.select(df0.columns.filter(c => c == MergeDelCol ||
+          addNewColumns || meta0.schema.fieldNames.contains(c))
+          .map(col).toIndexedSeq: _*)
+      // table-property semantics: once ANY mutation has captured CDC the
+      // meta flag is set and every later mutation captures it too
+      val wantChangelog = changelog || meta0.changelog
+      val incomingCols = df.columns.toSet - MergeDelCol
+      val (aligned, evolved) = align(df, meta0, addNewColumns,
+        passthrough = if (tombstoned) Set(MergeDelCol) else Set.empty)
+      val newB = tx.persist(withBucket(aligned, meta0.pk, base0.buckets))
+      val staging = tx.staging(verb)
+      val dvStaging = tx.staging(s"$verb-dv")
       val touched = validateAndTouched(newB, meta0.pk, validate)
       // read with the evolved schema: old files yield NULL for new columns
       val oldTouched = scanAt(spark, wh, tableName,
@@ -1839,7 +1866,7 @@ object KeyedTable {
       }
       // the rows this verb WRITES: tombstones remove rows and are
       // exempt — except an unmatched one under deleteOnlyMatched, an
-      // insert candidate. The flip re-enforces new CHECKs over this
+      // insert candidate. The commit re-enforces new CHECKs over this
       // same construction.
       def checkRows: DataFrame =
         if (!tombstoned) newB
@@ -1911,7 +1938,7 @@ object KeyedTable {
           .join(oldPos.as("o"), meta0.pk.toIndexedSeq, "left")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try inParallel(spark)(
-          if (wantChangelog) changes.stage(images),
+          if (wantChangelog) tx.log(images),
           {
             observeStats(j).filter(presentOld)
               .select(col(s"o.$BucketCol").as(BucketCol),
@@ -1937,64 +1964,26 @@ object KeyedTable {
           .select(meta0.pk.map(col) ++ nonPk.map(c => post(c).as(c)) :+
             coalesce(col(s"n.$BucketCol"), col(s"o.$BucketCol")).as(BucketCol): _*)
         inParallel(spark)(
-          if (wantChangelog) changes.stage(images),
+          if (wantChangelog) tx.log(images),
           toPhys(clusterByBucket(out, touched, meta0.pk), meta0)
             .write.partitionBy(BucketCol).parquet(staging))
       }
-      val staged = stageFiles(spark, f, staging, statColsTypedOf(meta0))
-      val stagedDvs = stageFiles(spark, f, dvStaging, Nil)
-      policy.betweenPhases(
-        if (tombstoned) MergeConcurrentHooks.betweenPhases
-        else UpsertConcurrentHooks.betweenPhases)
-
-      policy.exclusive(spark, dir, s"$label(commit)") {
-        val metaLatest = TableMeta.read(spark, dir)
-        val baseLatest = Manifest.current(spark, dir)
-        if (strictVersion && baseLatest.version != base0.version)
-          throw new ConcurrentWriteException(
-            s"table moved ${base0.version} -> ${baseLatest.version} " +
-            "while this merge staged and strict version enforcement is " +
-            "on (full-snapshot-sync merge); retry the merge")
-        checkBucketCount(base0, baseLatest, verb)
-        val mergedSchema = mergeEvolved(evolved, meta0, metaLatest)
-        checkWindow(base0, baseLatest, touched, verb, "merge")
-        // AFTER the window validation: a CHECK added meanwhile may
-        // reference a column this frame does not carry — a clean
-        // conflict (the retry re-stages against the evolved schema),
-        // never a raw AnalysisException
-        try enforceChecks(checkRows,
-          metaLatest.checks -- meta0.checks.keySet, s"$label(commit)")
-        catch {
-          case e: org.apache.spark.sql.AnalysisException =>
-            throw new ConcurrentWriteException(
-              s"a CHECK constraint added while this $verb staged " +
-              s"references column(s) this $verb's frame does not carry " +
-              s"(concurrent schema change): ${e.getMessage}; retry the " +
-              verb)
+      val counts =
+        if (!tombstoned) (0L, 0L, 0L)
+        else statsEarly.getOrElse {
+          val m = statsObs.get.get
+          (m("ins").asInstanceOf[Long], m("upd").asInstanceOf[Long],
+            m("del").asInstanceOf[Long])
         }
-        changes.stageLate(metaLatest.changelog, images)
-        // merge-on-read extends with post-images and DVs; a CoW merge's
-        // touched bucket whose rows ALL tombstoned staged no file and
-        // leaves the snapshot
-        flip(spark, f, dir, data, commitOp, baseLatest, staged, stagedDvs,
-          extend = mor,
-          removeMissing = if (tombstoned && !mor) touched else Nil)
-        changes.publish(f, commitOp)
-        val metaFinal = metaLatest.copy(schema = mergedSchema,
-          changelog = wantChangelog || metaLatest.changelog)
-        if (metaFinal != metaLatest) TableMeta.write(spark, dir, metaFinal)
-      }
-      if (!tombstoned) (0L, 0L, 0L)
-      else statsEarly.getOrElse {
-        val m = statsObs.get.get
-        (m("ins").asInstanceOf[Long], m("upd").asInstanceOf[Long],
-          m("del").asInstanceOf[Long])
-      }
-    } finally {
-      f.delete(new Path(staging), true)
-      f.delete(new Path(dvStaging), true)
-      changes.discard(f)
-      newB.unpersist()
+      // merge-on-read extends with post-images and DVs; a CoW merge's
+      // touched bucket whose rows ALL tombstoned staged no file and
+      // leaves the snapshot
+      Some(Flip(counts, stageFiles(spark, tx.f, staging, statColsTypedOf(meta0)),
+        stageFiles(spark, tx.f, dvStaging, Nil), extend = mor,
+        removeMissing = if (tombstoned && !mor) touched else Nil,
+        touched = if (strictVersion) 0 until base0.buckets else touched,
+        evolved = Some(evolved), rows = Some(() => checkRows),
+        images = Some(() => images), cdc = wantChangelog))
     }
   }
 
@@ -2063,144 +2052,109 @@ object KeyedTable {
     }
 
   /** The predicate-update body behind [[update]] (under [[Locked]]) and
-    * [[updateConcurrent]] (under [[Optimistic]]).
+    * [[updateConcurrent]] (under [[Optimistic]]), committed by
+    * [[commit]].
     *
-    *  1. PIN the meta and the manifest.
-    *  2. STAGE against the pinned snapshot: one probe job counts the
-    *     matches per bucket (≤ buckets rows); CHECKs see every matched
-    *     row's post-image; then either the touched buckets are
-    *     rewritten (copy-on-write) or — [[DeleteMode]] MergeOnRead, or
-    *     Auto below [[MorMaxFraction]] — the matched rows' positions
-    *     are tombstoned and their post-images appended, moving
-    *     |matches| rows, never the buckets. The update / unchanged
-    *     images stage alongside; the staged footers' stats are
-    *     collected.
-    *  3. FLIP, re-validating: a rebucket, ANY schema change (the
-    *     staged bucket images use the old schema) or a moved touched
-    *     bucket ([[checkWindow]]) abort; CHECKs registered since the
-    *     pin are enforced over the post-images.
-    *
-    * Under [[Locked]] step 3's checks pass by construction and the
-    * labels are `update`. Returns the matched-row count. */
+    * STAGE against the pin: one probe job counts the matches per bucket
+    * (≤ buckets rows); CHECKs see every matched row's post-image; then
+    * either the touched buckets are rewritten (copy-on-write) or —
+    * [[DeleteMode]] MergeOnRead, or Auto below [[MorMaxFraction]] — the
+    * matched rows' positions are tombstoned and their post-images
+    * appended, moving |matches| rows, never the buckets. The update /
+    * unchanged images stage alongside. The commit's window is the
+    * touched buckets, the schema must be unchanged (the staged bucket
+    * images use it), and CHECKs registered since the pin see the
+    * post-images. Under [[Locked]] the labels are `update`. Returns the
+    * matched-row count. */
   private def updateWith(policy: CommitPolicy, spark: SparkSession,
                          wh: String, tableName: String, where: Column,
                          set: Map[String, Column], changelog: Boolean,
                          mode: DeleteMode): Long = {
     val label = policy.label("update")
     val dir = tableDir(wh, tableName)
-    val data = dataDir(wh, tableName)
-    val meta0 = TableMeta.read(spark, dir)
-    set.keys.foreach { c =>
-      if (!meta0.schema.fieldNames.contains(c))
-        throw new StoreException(
-          s"update SET column $c not in table schema ${meta0.schema.fieldNames.toSeq}")
-      if (meta0.pk.contains(c))
-        throw new StoreException(
-          s"update cannot SET primary-key column $c (a key move is a " +
-          "delete + insert; use merge or delete/append)")
-    }
-    val base0 = Manifest.current(spark, dir)
-    val cdc = changelog || meta0.changelog
-    val raw = scanAt(spark, wh, tableName, meta0, base0)
-    // NULL predicate rows are NOT matches (kept unchanged)
-    val matched = coalesce(where, lit(false))
-    val probe = raw.filter(matched).groupBy(col(BucketCol))
-      .agg(count(lit(1)).as("n")).collect()
-    val touched = probe.map(_.getInt(0)).toSeq
-    val nMatched = probe.map(_.getLong(1)).sum
-    if (touched.isEmpty) {
-      if (cdc && !meta0.changelog)
-        armChangelog(policy, spark, dir, s"$label(cdc-flag)")
-      return 0L
-    }
-    val f = fs(spark, dir)
-    // the typed post-image of column c on a matched row
-    def newVal(c: String): Column =
-      set.get(c).map(_.cast(meta0.schema(c).dataType)).getOrElse(col(c))
-    def postImages: DataFrame = raw.filter(matched)
-      .select(meta0.schema.fieldNames.toSeq.map(c => newVal(c).as(c)): _*)
-    enforceChecks(postImages, meta0.checks, label)
-    val changes = new StagedChanges(spark, dir)
-    def images: DataFrame = {
-      val nonPk = meta0.schema.fieldNames.filterNot(meta0.pk.contains).toSeq
-      val changedCond = set.keys.toSeq.sorted
-        .map(c => !(newVal(c) <=> col(c)))
-        .reduceOption(_ || _).getOrElse(lit(false))
-      val cols = nonPk.flatMap { c =>
-        Seq(col(c).as(s"old_$c"), newVal(c).as(s"new_$c"))
+    commit(policy, spark, dir, dataDir(wh, tableName), "update", label, 0L) { tx =>
+      val meta0 = tx.meta
+      set.keys.foreach { c =>
+        if (!meta0.schema.fieldNames.contains(c))
+          throw new StoreException(
+            s"update SET column $c not in table schema ${meta0.schema.fieldNames.toSeq}")
+        if (meta0.pk.contains(c))
+          throw new StoreException(
+            s"update cannot SET primary-key column $c (a key move is a " +
+            "delete + insert; use merge or delete/append)")
       }
-      raw.filter(matched)
-        .select(meta0.pk.map(col) ++ (
-          when(changedCond, lit("update"))
-            .otherwise(lit("unchanged")).as("op") +: cols): _*)
-    }
-    val mor = morDecision(base0, mode, touched, nMatched)
-    val staging = s"$dir/.staging-update-${UUID.randomUUID()}"
-    val dvStaging = s"$dir/.staging-update-dv-${UUID.randomUUID()}"
-    try {
-      if (mor) {
-        // one read of the matched set feeds both staged writes
-        val posFrame = withPositions(raw)
-          .filter(matched)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try inParallel(spark)(if (cdc) changes.stage(images), {
-          posFrame
-            .select(col(BucketCol), col(FileCol).as("file"),
-              col(PosCol).as("pos"))
-            .transform(clusterByBucket(_, touched, Seq("file", "pos")))
-            .write.partitionBy(BucketCol).parquet(dvStaging)
-          toPhys(posFrame
-            .select(meta0.schema.fieldNames.toSeq
-              .map(c => newVal(c).as(c)) :+ col(BucketCol): _*)
-            .transform(clusterByBucket(_, touched, meta0.pk)),
-            meta0)
-            .write.partitionBy(BucketCol).parquet(staging)
-        })
-        finally posFrame.unpersist()
+      val cdc = changelog || meta0.changelog
+      val raw = scanAt(spark, wh, tableName, meta0, tx.base)
+      // NULL predicate rows are NOT matches (kept unchanged)
+      val matched = coalesce(where, lit(false))
+      val probe = raw.filter(matched).groupBy(col(BucketCol))
+        .agg(count(lit(1)).as("n")).collect()
+      val touched = probe.map(_.getInt(0)).toSeq
+      val nMatched = probe.map(_.getLong(1)).sum
+      if (touched.isEmpty) {
+        if (cdc && !meta0.changelog)
+          armChangelog(policy, spark, dir, s"$label(cdc-flag)")
+        None
       } else {
-        val rewritten = meta0.schema.fieldNames.toSeq.map { c =>
-          (if (set.contains(c)) when(matched, newVal(c)).otherwise(col(c))
-           else col(c)).as(c)
-        } :+ col(BucketCol)
-        inParallel(spark)(if (cdc) changes.stage(images),
-          toPhys(raw.filter(col(BucketCol).isin(touched: _*))
-            .select(rewritten: _*)
-            .transform(clusterByBucket(_, touched, meta0.pk)),
-            meta0)
-            .write.partitionBy(BucketCol).parquet(staging))
+        // the typed post-image of column c on a matched row
+        def newVal(c: String): Column =
+          set.get(c).map(_.cast(meta0.schema(c).dataType)).getOrElse(col(c))
+        def postImages: DataFrame = raw.filter(matched)
+          .select(meta0.schema.fieldNames.toSeq.map(c => newVal(c).as(c)): _*)
+        enforceChecks(postImages, meta0.checks, label)
+        def images: DataFrame = {
+          val nonPk = meta0.schema.fieldNames.filterNot(meta0.pk.contains).toSeq
+          val changedCond = set.keys.toSeq.sorted
+            .map(c => !(newVal(c) <=> col(c)))
+            .reduceOption(_ || _).getOrElse(lit(false))
+          val cols = nonPk.flatMap { c =>
+            Seq(col(c).as(s"old_$c"), newVal(c).as(s"new_$c"))
+          }
+          raw.filter(matched)
+            .select(meta0.pk.map(col) ++ (
+              when(changedCond, lit("update"))
+                .otherwise(lit("unchanged")).as("op") +: cols): _*)
+        }
+        val mor = morDecision(tx.base, mode, touched, nMatched)
+        val staging = tx.staging("update")
+        val dvStaging = tx.staging("update-dv")
+        if (mor) {
+          // one read of the matched set feeds both staged writes
+          val posFrame = withPositions(raw)
+            .filter(matched)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          try inParallel(spark)(if (cdc) tx.log(images), {
+            posFrame
+              .select(col(BucketCol), col(FileCol).as("file"),
+                col(PosCol).as("pos"))
+              .transform(clusterByBucket(_, touched, Seq("file", "pos")))
+              .write.partitionBy(BucketCol).parquet(dvStaging)
+            toPhys(posFrame
+              .select(meta0.schema.fieldNames.toSeq
+                .map(c => newVal(c).as(c)) :+ col(BucketCol): _*)
+              .transform(clusterByBucket(_, touched, meta0.pk)),
+              meta0)
+              .write.partitionBy(BucketCol).parquet(staging)
+          })
+          finally posFrame.unpersist()
+        } else {
+          val rewritten = meta0.schema.fieldNames.toSeq.map { c =>
+            (if (set.contains(c)) when(matched, newVal(c)).otherwise(col(c))
+             else col(c)).as(c)
+          } :+ col(BucketCol)
+          inParallel(spark)(if (cdc) tx.log(images),
+            toPhys(raw.filter(col(BucketCol).isin(touched: _*))
+              .select(rewritten: _*)
+              .transform(clusterByBucket(_, touched, meta0.pk)),
+              meta0)
+              .write.partitionBy(BucketCol).parquet(staging))
+        }
+        // post-image staging has the same bucket layout in BOTH modes
+        Some(Flip(nMatched, stageFiles(spark, tx.f, staging, statColsTypedOf(meta0)),
+          stageFiles(spark, tx.f, dvStaging, Nil), extend = mor,
+          touched = touched, rows = Some(() => postImages),
+          images = Some(() => images), cdc = cdc))
       }
-      // post-image staging has the same bucket layout in BOTH modes
-      val staged = stageFiles(spark, f, staging, statColsTypedOf(meta0))
-      val stagedDvs = stageFiles(spark, f, dvStaging, Nil)
-      policy.betweenPhases(UpdateConcurrentHooks.betweenPhases)
-
-      policy.exclusive(spark, dir, s"$label(commit)") {
-        val metaLatest = TableMeta.read(spark, dir)
-        val baseLatest = Manifest.current(spark, dir)
-        checkBucketCount(base0, baseLatest, "update")
-        if (metaLatest.schema != meta0.schema)
-          throw new ConcurrentWriteException(
-            "table schema changed while this update staged (the rewrite " +
-            "republished bucket images under the old schema); retry the " +
-            "update")
-        checkWindow(base0, baseLatest, touched, "update", "rewrite")
-        // a CHECK registered meanwhile lives in TableMeta, which neither
-        // check above sees; with the schema proven unchanged it can only
-        // reference columns the post-images carry
-        enforceChecks(postImages, metaLatest.checks -- meta0.checks.keySet,
-          s"$label(commit)")
-        changes.stageLate(metaLatest.changelog, images)
-        flip(spark, f, dir, data, label, baseLatest, staged, stagedDvs,
-          extend = mor)
-        changes.publish(f, label)
-        if (cdc && !metaLatest.changelog)
-          TableMeta.write(spark, dir, metaLatest.copy(changelog = true))
-      }
-      nMatched
-    } finally {
-      f.delete(new Path(staging), true)
-      f.delete(new Path(dvStaging), true)
-      changes.discard(f)
     }
   }
 
@@ -2227,112 +2181,81 @@ object KeyedTable {
   }
 
   /** The predicate-delete body behind [[delete]] (under [[Locked]]) and
-    * [[deleteConcurrent]] (under [[Optimistic]]).
+    * [[deleteConcurrent]] (under [[Optimistic]]), committed by
+    * [[commit]].
     *
-    *  1. PIN the meta and the manifest.
-    *  2. STAGE against the pinned snapshot: one probe job counts the
-    *     matches per bucket (≤ buckets rows; a PK-pinning `where`
-    *     prunes its scan like a range read); then either the touched
-    *     buckets are rewritten without the matched rows
-    *     (copy-on-write — a bucket whose rows ALL match leaves the
-    *     snapshot) or — [[DeleteMode]] MergeOnRead, or Auto below
-    *     [[MorMaxFraction]] — only the matched rows' positions are
-    *     staged as per-bucket delete-vector sidecars
-    *     ([[flip]] extends the DV lists), moving kilobytes, not buckets. The
-    *     delete images (pre-image in `old_*`, `new_*` NULL) stage
-    *     alongside.
-    *  3. FLIP, re-validating: a rebucket, ANY schema change or a moved
-    *     touched bucket ([[checkWindow]]) abort — the staged survivors,
-    *     or positions, read a pre-image that is no longer the truth.
-    *
-    * Under [[Locked]] step 3's checks pass by construction and the
-    * labels are `delete`. Returns the number of deleted rows. */
+    * STAGE against the pin: one probe job counts the matches per bucket
+    * (≤ buckets rows; a PK-pinning `where` prunes its scan like a range
+    * read); then either the touched buckets are rewritten without the
+    * matched rows (copy-on-write — a bucket whose rows ALL match leaves
+    * the snapshot) or — [[DeleteMode]] MergeOnRead, or Auto below
+    * [[MorMaxFraction]] — only the matched rows' positions are staged
+    * as per-bucket delete-vector sidecars ([[flip]] extends the DV
+    * lists), moving kilobytes, not buckets. The delete images
+    * (pre-image in `old_*`, `new_*` NULL) stage alongside. The commit's
+    * window is the touched buckets and the schema must be unchanged:
+    * the staged survivors, or positions, read a pre-image that must
+    * still be the truth. Under [[Locked]] the labels are `delete`.
+    * Returns the number of deleted rows. */
   private def deleteWith(policy: CommitPolicy, spark: SparkSession,
                          wh: String, tableName: String, where: Column,
                          changelog: Boolean, mode: DeleteMode): Long = {
     val label = policy.label("delete")
     val dir = tableDir(wh, tableName)
-    val data = dataDir(wh, tableName)
-    val meta0 = TableMeta.read(spark, dir)
-    val base0 = Manifest.current(spark, dir)
-    // meta.changelog (table-property CDC) covers the paths that cannot
-    // express the flag — SQL `DELETE FROM graft.t`
-    val cdc = changelog || meta0.changelog
-    val raw = scanAt(spark, wh, tableName, meta0, base0)
-    val probe = raw.filter(where).groupBy(col(BucketCol))
-      .agg(count(lit(1)).as("n")).collect()
-    val touched = probe.map(_.getInt(0)).toSeq
-    val deleted = probe.map(_.getLong(1)).sum
-    if (touched.isEmpty) {
-      if (cdc && !meta0.changelog)
-        armChangelog(policy, spark, dir, s"$label(cdc-flag)")
-      return 0L
-    }
-    val f = fs(spark, dir)
-    // strategy decision from manifest arithmetic alone (zero IO)
-    val mor = morDecision(base0, mode, touched, deleted)
-    val changes = new StagedChanges(spark, dir)
-    def images: DataFrame = {
-      val nonPk = meta0.schema.fieldNames.filterNot(meta0.pk.contains)
-      val cols = nonPk.toSeq.flatMap { c =>
-        Seq(col(c).as(s"old_$c"),
-          lit(null).cast(meta0.schema(c).dataType).as(s"new_$c"))
-      }
-      raw.filter(where)
-        .select(meta0.pk.map(col) ++ (lit("delete").as("op") +: cols): _*)
-    }
-    val staging = s"$dir/.staging-delete-${UUID.randomUUID()}"
-    try {
-      if (mor) {
-        // positions sorted by (file, pos) per bucket; the scan
-        // re-applies existing DVs, so no position tombstones twice
-        inParallel(spark)(if (cdc) changes.stage(images),
-          withPositions(raw)
-            .filter(coalesce(where, lit(false)))
-            .select(col(BucketCol), col(FileCol).as("file"),
-              col(PosCol).as("pos"))
-            .transform(clusterByBucket(_, touched, Seq("file", "pos")))
-            .write.partitionBy(BucketCol).parquet(staging))
+    commit(policy, spark, dir, dataDir(wh, tableName), "delete", label, 0L) { tx =>
+      val meta0 = tx.meta
+      // meta.changelog (table-property CDC) covers the paths that cannot
+      // express the flag — SQL `DELETE FROM graft.t`
+      val cdc = changelog || meta0.changelog
+      val raw = scanAt(spark, wh, tableName, meta0, tx.base)
+      val probe = raw.filter(where).groupBy(col(BucketCol))
+        .agg(count(lit(1)).as("n")).collect()
+      val touched = probe.map(_.getInt(0)).toSeq
+      val deleted = probe.map(_.getLong(1)).sum
+      if (touched.isEmpty) {
+        if (cdc && !meta0.changelog)
+          armChangelog(policy, spark, dir, s"$label(cdc-flag)")
+        None
       } else {
-        // NULL predicate rows are NOT matches — keep them (a bare
-        // !where would silently drop them)
-        inParallel(spark)(if (cdc) changes.stage(images),
-          toPhys(raw.filter(col(BucketCol).isin(touched: _*))
-            .filter(!coalesce(where, lit(false)))
-            .transform(clusterByBucket(_, touched, meta0.pk)),
-            meta0)
-            .write.partitionBy(BucketCol).parquet(staging))
-      }
-      // merge-on-read staged DV sidecars, copy-on-write the survivors
-      val staged = stageFiles(spark, f, staging,
-        if (mor) Nil else statColsTypedOf(meta0))
-      policy.betweenPhases(DeleteConcurrentHooks.betweenPhases)
-
-      policy.exclusive(spark, dir, s"$label(commit)") {
-        val metaLatest = TableMeta.read(spark, dir)
-        val baseLatest = Manifest.current(spark, dir)
-        checkBucketCount(base0, baseLatest, "delete")
-        if (metaLatest.schema != meta0.schema)
-          throw new ConcurrentWriteException(
-            "table schema changed while this delete staged (the CoW " +
-            "rewrite republished whole buckets under the old schema); " +
-            "retry the delete")
-        checkWindow(base0, baseLatest, touched, "delete", "rewrite")
-        changes.stageLate(metaLatest.changelog, images)
+        // strategy decision from manifest arithmetic alone (zero IO)
+        val mor = morDecision(tx.base, mode, touched, deleted)
+        def images: DataFrame = {
+          val nonPk = meta0.schema.fieldNames.filterNot(meta0.pk.contains)
+          val cols = nonPk.toSeq.flatMap { c =>
+            Seq(col(c).as(s"old_$c"),
+              lit(null).cast(meta0.schema(c).dataType).as(s"new_$c"))
+          }
+          raw.filter(where)
+            .select(meta0.pk.map(col) ++ (lit("delete").as("op") +: cols): _*)
+        }
+        val staging = tx.staging("delete")
         if (mor)
-          flip(spark, f, dir, data, label, baseLatest, Map.empty, staged,
-            extend = true)
+          // positions sorted by (file, pos) per bucket; the scan
+          // re-applies existing DVs, so no position tombstones twice
+          inParallel(spark)(if (cdc) tx.log(images),
+            withPositions(raw)
+              .filter(coalesce(where, lit(false)))
+              .select(col(BucketCol), col(FileCol).as("file"),
+                col(PosCol).as("pos"))
+              .transform(clusterByBucket(_, touched, Seq("file", "pos")))
+              .write.partitionBy(BucketCol).parquet(staging))
         else
-          flip(spark, f, dir, data, label, baseLatest, staged,
-            removeMissing = touched)
-        changes.publish(f, label)
-        if (cdc && !metaLatest.changelog)
-          TableMeta.write(spark, dir, metaLatest.copy(changelog = true))
+          // NULL predicate rows are NOT matches — keep them (a bare
+          // !where would silently drop them)
+          inParallel(spark)(if (cdc) tx.log(images),
+            toPhys(raw.filter(col(BucketCol).isin(touched: _*))
+              .filter(!coalesce(where, lit(false)))
+              .transform(clusterByBucket(_, touched, meta0.pk)),
+              meta0)
+              .write.partitionBy(BucketCol).parquet(staging))
+        // merge-on-read staged DV sidecars, copy-on-write the survivors
+        val staged = stageFiles(spark, tx.f, staging,
+          if (mor) Nil else statColsTypedOf(meta0))
+        Some(Flip(deleted, if (mor) Map.empty else staged,
+          if (mor) staged else Map.empty, extend = mor,
+          removeMissing = if (mor) Nil else touched, touched = touched,
+          images = Some(() => images), cdc = cdc))
       }
-      deleted
-    } finally {
-      f.delete(new Path(staging), true)
-      changes.discard(f)
     }
   }
 
@@ -2433,115 +2356,6 @@ object KeyedTable {
     @volatile var betweenPhases: () => Unit = () => ()
   }
 
-  /** Test-only interleave seam for the OPTIMISTIC maintenance paths
-    * (compact / compactIfNeeded / zorderCompact / rebucket), invoked
-    * between the unlocked rewrite and the locked flip — a spec lands an
-    * interfering mutation deterministically inside the window the
-    * conflict check must catch (or, for a disjoint-bucket writer, must
-    * NOT catch). A no-op in production. */
-  private[store] object MaintenanceHooks {
-    @volatile var betweenPhases: () => Unit = () => ()
-  }
-
-  /** Retry driver for optimistic LAYOUT MAINTENANCE: a layout rewrite
-    * has no logical change, so on a window conflict it is always the
-    * MAINTENANCE job that re-stages against the fresh snapshot —
-    * ingest writers never wait behind it and never abort for it (the
-    * inversion of the old full-lock design, where a nightly Z-order
-    * was an hours-long writer outage at 100 TB). Bounded attempts: a
-    * table too hot for maintenance to ever win surfaces loudly
-    * instead of spinning. */
-  private def retryMaintenance[A](op: String, maxAttempts: Int = 5)
-                                 (body: => A): A = {
-    var attempt = 1
-    while (true) {
-      try return body
-      catch {
-        case e: ConcurrentWriteException =>
-          if (attempt >= maxAttempts)
-            throw new ConcurrentWriteException(
-              s"$op: gave up after $maxAttempts attempts, each aborted " +
-              s"by a concurrent writer (last: ${e.getMessage}); the " +
-              "table is unchanged — rerun when write traffic quiets")
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** Bounded statement-level AUTO-RETRY for SQL DML lowered onto the
-    * optimistic verbs (`commit_mode=optimistic`): a window conflict
-    * aborts an attempt with [[ConcurrentWriteException]], which a
-    * programmatic caller handles in its own loop — but a
-    * Spark-SQL-only orchestrator would see a statement failure Delta
-    * would have absorbed, converting the multi-writer win back into
-    * orchestrator-side retry boilerplate. Each attempt re-runs the
-    * WHOLE lowering body (MERGE re-pins its routing snapshot, the
-    * rewrite re-stages against the fresh table), so retrying is always
-    * correct: the failed attempt committed nothing. Bounded by
-    * [[SqlMaxRetriesConf]] — a statement that cannot win against
-    * sustained write traffic surfaces loudly, naming the dial. */
-  val SqlMaxRetriesConf = "spark.graft.sql.maxRetries"
-  val SqlMaxRetriesDefault = 5
-
-  private[graft] def retryOptimisticSql[A](spark: SparkSession,
-                                           op: String)(body: => A): A = {
-    val raw = spark.conf.get(SqlMaxRetriesConf,
-      SqlMaxRetriesDefault.toString)
-    val max = raw.trim.toIntOption.filter(_ >= 1).getOrElse(
-      throw new StoreException(
-        s"$SqlMaxRetriesConf must be a positive integer, got '$raw'"))
-    var attempt = 1
-    while (true) {
-      try return body
-      catch {
-        case e: ConcurrentWriteException =>
-          if (attempt >= max)
-            throw new ConcurrentWriteException(
-              s"$op: gave up after $max attempts, each aborted by a " +
-              s"concurrent writer (last: ${e.getMessage}); the statement " +
-              s"committed nothing — raise $SqlMaxRetriesConf or rerun " +
-              "when write traffic quiets")
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** The locked-flip conflict rules every optimistic maintenance
-    * rewrite shares ([[ConcurrentWriteException]] → the RETRY loop in
-    * [[retryMaintenance]] re-stages; the table is never corrupted and
-    * ingest never aborts):
-    *  - bucket count changed (a rebucket won the race — staged files
-    *    use the old layout);
-    *  - ANY schema change (the rewrite republished whole buckets under
-    *    the old schema);
-    *  - a TOUCHED bucket whose live file or delete-vector set moved
-    *    since the start snapshot (the staged rewrite read — and its
-    *    commit would drop the DVs of — a pre-image that is no longer
-    *    the truth). Buckets OUTSIDE the touched set carry over
-    *    untouched, so disjoint-bucket ingest and maintenance both
-    *    commit. */
-  private def maintenanceWindowCheck(base0: Manifest, baseLatest: Manifest,
-                                     meta0: TableMeta, metaLatest: TableMeta,
-                                     touched: Seq[Int], op: String): Unit = {
-    if (baseLatest.buckets != base0.buckets)
-      throw new ConcurrentWriteException(
-        s"bucket count changed ${base0.buckets} -> ${baseLatest.buckets} " +
-        s"(concurrent rebucket); $op staged files under the old layout — " +
-        "re-staging")
-    if (metaLatest.schema != meta0.schema)
-      throw new ConcurrentWriteException(
-        s"table schema changed while $op staged (the rewrite republished " +
-        "whole buckets under the old schema) — re-staging")
-    val dirty = movedBuckets(base0, baseLatest, touched)
-    if (dirty.nonEmpty)
-      throw new ConcurrentWriteException(
-        s"bucket(s) ${dirty.sorted.take(5).mkString(", ")} changed " +
-        s"since $op staged (concurrent mutation with an overlapping " +
-        "touched-bucket set) — re-staging")
-  }
-
   /** Compact buckets that have accumulated many small files (each
     * append adds one file per touched bucket — the small-files problem
     * at 100 TB). Buckets with at least `minFiles` parquet files are
@@ -2551,64 +2365,43 @@ object KeyedTable {
     * compacted. */
   def compact(spark: SparkSession, warehouse0: String, tableName: String,
               minFiles: Int = 4, schema: Option[String] = None,
-              commitWaitMs: Long = 60000L): Int = {
-    val warehouse = schemaDir(warehouse0, schema)
-    val dir = tableDir(warehouse, tableName)
-    retryMaintenance("compact") {
-      val meta0 = TableMeta.read(spark, dir)
-      val base0 = Manifest.current(spark, dir)
-      val crowded = (0 until base0.buckets).filter(b =>
-        base0.files.getOrElse(b, Nil).size >= minFiles)
-      compactBucketsConcurrent(spark, warehouse, tableName, dir, meta0,
-        base0, crowded, commitWaitMs)
-    }
-  }
+              commitWaitMs: Long = 60000L): Int =
+    compactBuckets(spark, schemaDir(warehouse0, schema), tableName,
+        "compact", commitWaitMs) { base =>
+      (0 until base.buckets).filter(b =>
+        base.files.getOrElse(b, Nil).size >= minFiles)
+    }.size
 
-  /** Rewrite exactly `crowded` buckets to one file each WITHOUT
-    * holding the write lock for the rewrite — the [[upsertConcurrent]]
-    * bucket-window protocol applied to layout maintenance (its easiest
-    * client: no logical change, so the only conflict is a touched
-    * bucket's file/DV window moving). The crowded-bucket rewrite
-    * (reading THROUGH the buckets' delete
-    * vectors — the commit drops them, materializing the tombstones)
-    * stages against the snapshot-at-start outside the lock; a brief
-    * locked flip re-validates [[maintenanceWindowCheck]] and commits.
-    * Ingest writers racing this compact serialize only on the flip;
-    * on conflict the MAINTENANCE re-stages ([[retryMaintenance]]),
-    * never the ingest. Returns #rewritten. */
-  private def compactBucketsConcurrent(spark: SparkSession, warehouse: String,
-                                       tableName: String, dir: String,
-                                       meta0: TableMeta, base0: Manifest,
-                                       crowded: Seq[Int],
-                                       commitWaitMs: Long): Int = {
-    if (crowded.isEmpty) 0
-    else {
-      val data = dataDir(warehouse, tableName)
-      val f = fs(spark, dir)
-      val staging = s"$dir/.staging-compact-${UUID.randomUUID()}"
-      try {
-        // the rewrite job — OUTSIDE the lock
-        toPhys(scanAt(spark, warehouse, tableName, meta0, base0)
-          .filter(col(BucketCol).isin(crowded: _*))
-          .transform(clusterByBucket(_, crowded, meta0.pk)),
-          meta0)
-          .write.partitionBy(BucketCol).parquet(staging)
-        // footer stats of the staged files too — the flip must stay a
-        // flip even when every bucket was crowded
-        val staged = stageFiles(spark, f, staging, statColsTypedOf(meta0))
-        MaintenanceHooks.betweenPhases()
-        // ---------------- LOCKED: re-validate, commit ----------------
-        WriteLock.withLockWait(spark, dir, "compact(commit)", commitWaitMs) {
-          val metaLatest = TableMeta.read(spark, dir)
-          val baseLatest = Manifest.current(spark, dir)
-          maintenanceWindowCheck(base0, baseLatest, meta0, metaLatest,
-            crowded, "compact")
-          flip(spark, f, dir, data, "compact", baseLatest, staged)
+  /** Rewrite the buckets `crowded` picks from the pinned manifest to one
+    * file each WITHOUT holding the write lock for the rewrite — an
+    * optimistic [[commit]] whose window is the rewritten buckets (a
+    * layout rewrite has no logical change, so that window moving is its
+    * only conflict). The rewrite reads THROUGH the buckets' delete
+    * vectors, and the flip drops them, materializing the tombstones.
+    * Ingest writers racing it serialize only on the flip; on conflict
+    * the MAINTENANCE re-stages ([[retrying]]), never the ingest.
+    * Returns the rewritten buckets. */
+  private def compactBuckets(spark: SparkSession, warehouse: String,
+                             tableName: String, op: String,
+                             commitWaitMs: Long)
+                            (crowded: Manifest => Seq[Int]): Seq[Int] =
+    retrying(op, MaintenanceAttempts) {
+      commit(Optimistic(commitWaitMs), spark, tableDir(warehouse, tableName),
+          dataDir(warehouse, tableName), "compact", "compact", Seq.empty[Int]) { tx =>
+        val bs = crowded(tx.base)
+        if (bs.isEmpty) None
+        else {
+          val staging = tx.staging("compact")
+          toPhys(scanAt(spark, warehouse, tableName, tx.meta, tx.base)
+            .filter(col(BucketCol).isin(bs: _*))
+            .transform(clusterByBucket(_, bs, tx.meta.pk)),
+            tx.meta)
+            .write.partitionBy(BucketCol).parquet(staging)
+          Some(Flip(bs, stageFiles(spark, tx.f, staging,
+            statColsTypedOf(tx.meta)), touched = bs))
         }
-      } finally f.delete(new Path(staging), true)
-      crowded.size
+      }
     }
-  }
 
   /** #11p auto-compaction policy: the consumer of [[bucketStats]]'s
     * footer-only layout report. Decides per bucket, from metadata alone
@@ -2628,17 +2421,14 @@ object KeyedTable {
                       minAvgRowsPerFile: Long = 0,
                       schema: Option[String] = None,
                       maxDeleteFraction: Double = 0.2,
-                      commitWaitMs: Long = 60000L): Seq[Int] = {
-    val warehouse = schemaDir(warehouse0, schema)
-    val dir = tableDir(warehouse, tableName)
+                      commitWaitMs: Long = 60000L): Seq[Int] =
     // OPTIMISTIC policy pass: the breach decision AND the rewrite both
     // run against the current snapshot outside the lock — the healthy
     // steady state (nothing crowded) now costs one manifest read and
     // ZERO lock traffic, which is what lets this ride every streaming
     // sink epoch without contending with the sink's own committers.
-    retryMaintenance("compactIfNeeded") {
-      val meta = TableMeta.read(spark, dir)
-      val base = Manifest.current(spark, dir)
+    compactBuckets(spark, schemaDir(warehouse0, schema), tableName,
+        "compactIfNeeded", commitWaitMs) { base =>
       // delete-vector density straight from the manifest (zero IO): a
       // bucket whose tombstoned fraction breaches the bound rewrites —
       // the read-side masking cost is bounded BY POLICY, and the
@@ -2676,12 +2466,8 @@ object KeyedTable {
               (nf > 1 && minAvgRowsPerFile > 0 && nr / nf < minAvgRowsPerFile)
           }
           .map(_.getInt(0))
-      val all = (crowded ++ dvCrowded).distinct.sorted
-      compactBucketsConcurrent(spark, warehouse, tableName, dir, meta,
-        base, all, commitWaitMs)
-      all
+      (crowded ++ dvCrowded).distinct.sorted
     }
-  }
 
   /** Morton (Z-order) value of 2–4 numeric columns: values scale
     * affinely onto [0, 2^bits) against broadcast min/max scalars, then
@@ -2768,89 +2554,58 @@ object KeyedTable {
     require(zCols.size >= 2 && zCols.size <= 4,
       s"zorderCompact interleaves 2 to 4 columns, got ${zCols.size}")
     val warehouse = schemaDir(warehouse0, schema)
-    val dir = tableDir(warehouse, tableName)
-    val data = dataDir(warehouse, tableName)
-    // OPTIMISTIC rewrite ([[maintenanceWindowCheck]] + retry): the
-    // min/max aggregate, the Morton sort, and the full bucket rewrite
-    // all run against the snapshot-at-start OUTSIDE the lock — a
-    // multi-hour Z-order of a 100 TB table is no longer a writer
-    // outage. The touched set is every bucket holding live files;
-    // ingest into a NEW bucket (keys hashing where no file lived yet)
-    // is disjoint and commits right through the rewrite window.
-    retryMaintenance("zorderCompact") {
-      val meta0 = TableMeta.read(spark, dir)
-      zCols.foreach { c =>
-        if (!meta0.schema.fieldNames.contains(c))
-          throw new StoreException(s"zorder column $c not in table schema")
-      }
-      val base0 = Manifest.current(spark, dir)
-      val touched = base0.files.keys.toSeq.sorted
-      val raw = scanAt(spark, warehouse, tableName, meta0, base0)
-      // 2 scalars per column from one aggregate — broadcast into the
-      // sort key; a column whose min is NULL (all-NULL/empty) degrades
-      // to a constant-0 lane in zValue
-      val mmExprs = zCols.flatMap(c => Seq(
-        min(col(c).cast("double")), max(col(c).cast("double"))))
-      val mm = raw.agg(mmExprs.head, mmExprs.tail: _*).head()
-      def at(i: Int): Option[Double] =
-        if (mm.isNullAt(i)) None else Some(mm.getDouble(i))
-      val mins = zCols.indices.map(i => at(2 * i))
-      val maxs = zCols.indices.map(i => at(2 * i + 1))
-      if (mins.exists(_.isDefined)) { // fully NULL/empty table: no-op
-        val z = zValue(zCols.map(col), mins, maxs)
-        val f = fs(spark, dir)
-        val staging = s"$dir/.staging-zorder-${UUID.randomUUID()}"
-        try {
+    // OPTIMISTIC rewrite ([[commit]] + [[retrying]]): the min/max
+    // aggregate, the Morton sort, and the full bucket rewrite all run
+    // against the pin OUTSIDE the lock — a multi-hour Z-order of a 100 TB
+    // table is no longer a writer outage. The window is every bucket
+    // holding live files; ingest into a NEW bucket (keys hashing where
+    // no file lived yet) is disjoint and commits right through it.
+    retrying("zorderCompact", MaintenanceAttempts) {
+      commit(Optimistic(commitWaitMs), spark, tableDir(warehouse, tableName),
+          dataDir(warehouse, tableName), "zorder", "zorder", ()) { tx =>
+        val meta0 = tx.meta
+        zCols.foreach { c =>
+          if (!meta0.schema.fieldNames.contains(c))
+            throw new StoreException(s"zorder column $c not in table schema")
+        }
+        val touched = tx.base.files.keys.toSeq.sorted
+        val raw = scanAt(spark, warehouse, tableName, meta0, tx.base)
+        // 2 scalars per column from one aggregate — broadcast into the
+        // sort key; a column whose min is NULL (all-NULL/empty) degrades
+        // to a constant-0 lane in zValue
+        val mmExprs = zCols.flatMap(c => Seq(
+          min(col(c).cast("double")), max(col(c).cast("double"))))
+        val mm = raw.agg(mmExprs.head, mmExprs.tail: _*).head()
+        def at(i: Int): Option[Double] =
+          if (mm.isNullAt(i)) None else Some(mm.getDouble(i))
+        val mins = zCols.indices.map(i => at(2 * i))
+        val maxs = zCols.indices.map(i => at(2 * i + 1))
+        if (mins.forall(_.isEmpty)) None // fully NULL/empty table: no-op
+        else {
+          val staging = tx.staging("zorder")
           // the sort + rewrite job — OUTSIDE the lock
-          val writer = toPhys(raw.withColumn("_z", z)
+          val writer = toPhys(raw.withColumn("_z", zValue(zCols.map(col), mins, maxs))
             .transform(clusterByBucket(_, touched, Seq("_z")))
             .drop("_z"), meta0)
             .write.partitionBy(BucketCol)
           parquetBlockBytes.fold(writer)(n =>
             writer.option("parquet.block.size", n.toString))
             .parquet(staging)
-          // footer stats collected UNLOCKED, with the z columns already
-          // in the tracked set (the flip registers them as statsCols,
-          // so this commit's files must carry their bounds — that
-          // tight-bounds payoff is the point of the Z-order)
-          val zStats = (meta0.statsCols ++
-            zCols.filter(c => statStorable(meta0.schema(c).dataType))
-              .filterNot(meta0.pk.headOption.contains)).distinct
-          val staged = stageFiles(spark, f, staging,
-            statColsTypedOf(meta0.copy(statsCols = zStats)))
-          MaintenanceHooks.betweenPhases()
-          // -------------- LOCKED: re-validate, commit --------------
-          WriteLock.withLockWait(spark, dir, "zorder(commit)",
-              commitWaitMs) {
-            val metaLatest = TableMeta.read(spark, dir)
-            val baseLatest = Manifest.current(spark, dir)
-            maintenanceWindowCheck(base0, baseLatest, meta0, metaLatest,
-              touched, "zorderCompact")
-            // Z-ordering makes per-file bounds on the clustered columns
-            // tight — exactly when per-column manifest stats pay off.
-            // This commit's files carry them (staged with zStats above);
-            // registering them makes every later commit record them
-            // too. (Crash between this meta write and the flip:
-            // registered stats with the old layout — harmless, future
-            // commits just record extras.)
-            val newStats = (metaLatest.statsCols ++
-              zCols.filter(c => statStorable(metaLatest.schema(c).dataType))
-                .filterNot(metaLatest.pk.headOption.contains)).distinct
-            val metaStat =
-              if (newStats == metaLatest.statsCols) metaLatest
-              else {
-                val m = metaLatest.copy(statsCols = newStats)
-                TableMeta.write(spark, dir, m)
-                m
-              }
-            flip(spark, f, dir, data, "zorder", baseLatest, staged)
-            // full rewrite of every base0 bucket — and any bucket born
-            // AFTER the drop was already written post-drop — so dropped
-            // names are re-addable again (see dropColumns)
-            if (metaStat.dropped.nonEmpty)
-              TableMeta.write(spark, dir, metaStat.copy(dropped = Nil))
-          }
-        } finally f.delete(new Path(staging), true)
+          // Z-ordering makes per-file bounds on the clustered columns
+          // tight — exactly when per-column manifest stats pay off. This
+          // commit's files carry them (staged with the z columns already
+          // tracked), and the commit registers them so every later
+          // commit records them too. A full rewrite of every pinned
+          // bucket — and any bucket born AFTER a drop was already written
+          // post-drop — so dropped names are re-addable again (see
+          // dropColumns).
+          def withZ(m: TableMeta): TableMeta = m.copy(statsCols =
+            (m.statsCols ++ zCols.filter(c => statStorable(m.schema(c).dataType))
+              .filterNot(m.pk.headOption.contains)).distinct)
+          Some(Flip((), stageFiles(spark, tx.f, staging,
+            statColsTypedOf(withZ(meta0))), touched = touched,
+            metaEdit = m => withZ(m).copy(dropped = Nil)))
+        }
       }
     }
   }
@@ -3232,72 +2987,44 @@ object KeyedTable {
                commitWaitMs: Long = 60000L): Unit = {
     require(newBuckets > 0, s"bucket count must be positive, got $newBuckets")
     val warehouse = schemaDir(warehouse0, schema)
-    val dir = tableDir(warehouse, tableName)
-    // OPTIMISTIC rebucket: rehashing moves every row, so the conflict
-    // window is necessarily COARSE — any manifest flip between the
-    // start snapshot and the commit invalidates the staged layout (the
-    // staged buckets were derived from every old bucket at once). But
-    // the expensive part — the full shuffle + rewrite — still stages
-    // OUTSIDE the lock: writers keep committing while the rebucket
-    // runs, and it is the REBUCKET that re-stages on conflict
-    // ([[retryMaintenance]]), never the ingest. On a table too hot for
-    // the shuffle to ever land, the bounded retries surface the
-    // contention loudly — quiesce writers (or schedule the rebucket
-    // into a low-traffic window) rather than silently stalling them
-    // for the job's duration, which is what the old full-lock design
-    // did by default.
-    retryMaintenance("rebucket") {
-      val meta0 = TableMeta.read(spark, dir)
-      val data = dataDir(warehouse, tableName)
-      val base0 = Manifest.current(spark, dir)
-      if (base0.buckets != newBuckets) {
-        val f = fs(spark, dir)
-        val staging = s"$dir/.staging-rebucket-${UUID.randomUUID()}"
-        try {
+    // OPTIMISTIC rebucket: rehashing moves every row, so the window is
+    // necessarily EVERY bucket — any commit into the table between the
+    // pin and the flip invalidates the staged layout. But the expensive
+    // part — the full shuffle + rewrite — still stages OUTSIDE the
+    // lock: writers keep committing while the rebucket runs, and it is
+    // the REBUCKET that re-stages on conflict ([[retrying]]), never the
+    // ingest. On a table too hot for the shuffle to ever land, the
+    // bounded retries surface the contention loudly — quiesce writers
+    // (or schedule the rebucket into a low-traffic window) rather than
+    // silently stalling them for the job's duration, which is what the
+    // old full-lock design did by default.
+    retrying("rebucket", MaintenanceAttempts) {
+      commit(Optimistic(commitWaitMs), spark, tableDir(warehouse, tableName),
+          dataDir(warehouse, tableName), "rebucket", "rebucket", ()) { tx =>
+        if (tx.base.buckets == newBuckets) None
+        else {
+          val staging = tx.staging("rebucket")
           // the full shuffle + rewrite — OUTSIDE the lock
           toPhys(withBucket(
-              scanAt(spark, warehouse, tableName, meta0, base0)
+              scanAt(spark, warehouse, tableName, tx.meta, tx.base)
                 .drop(BucketCol),
-              meta0.pk, newBuckets)
-            .transform(clusterByBucket(_, 0 until newBuckets, meta0.pk)),
-            meta0)
+              tx.meta.pk, newBuckets)
+            .transform(clusterByBucket(_, 0 until newBuckets, tx.meta.pk)),
+            tx.meta)
             .write.partitionBy(BucketCol).parquet(staging)
-          // a rebucket stages EVERY row — its footer stats must not be
-          // paid inside the flip (see stageFiles)
-          val staged = stageFiles(spark, f, staging, statColsTypedOf(meta0))
-          MaintenanceHooks.betweenPhases()
-          // -------------- LOCKED: re-validate, commit --------------
-          WriteLock.withLockWait(spark, dir, "rebucket(commit)",
-              commitWaitMs) {
-            val metaLatest = TableMeta.read(spark, dir)
-            val baseLatest = Manifest.current(spark, dir)
-            if (baseLatest.version != base0.version)
-              throw new ConcurrentWriteException(
-                s"table advanced v${base0.version} -> v${baseLatest.version} " +
-                "while the rebucket staged (a rebucket touches every " +
-                "bucket, so ANY concurrent commit invalidates it) — " +
-                "re-staging")
-            if (metaLatest.schema != meta0.schema)
-              throw new ConcurrentWriteException(
-                "table schema changed while the rebucket staged (the " +
-                "rewrite republished every bucket under the old schema) " +
-                "— re-staging")
-            // ONE snapshot flip switches both the file set and the
-            // bucket count (the manifest carries `buckets`), so no
-            // reader can ever pair the old count with the new layout.
-            // Old-layout buckets with no staged replacement
-            // (newBuckets < old) leave the snapshot via removeMissing;
-            // the old files stay for readers of previous snapshots
-            // until vacuum.
-            flip(spark, f, dir, data, "rebucket", baseLatest, staged,
-              removeMissing = 0 until math.max(base0.buckets, newBuckets),
-              newBuckets = Some(newBuckets))
-            // a full rewrite: every live file now carries the current
-            // schema, so dropped names may be re-added safely
-            if (metaLatest.dropped.nonEmpty)
-              TableMeta.write(spark, dir, metaLatest.copy(dropped = Nil))
-          }
-        } finally f.delete(new Path(staging), true)
+          // ONE snapshot flip switches both the file set and the bucket
+          // count (the manifest carries `buckets`), so no reader can
+          // ever pair the old count with the new layout. Old-layout
+          // buckets with no staged replacement (newBuckets < old) leave
+          // the snapshot via removeMissing; the old files stay for
+          // readers of previous snapshots until vacuum. A full rewrite:
+          // every live file now carries the current schema, so dropped
+          // names may be re-added safely.
+          Some(Flip((), stageFiles(spark, tx.f, staging, statColsTypedOf(tx.meta)),
+            removeMissing = 0 until math.max(tx.base.buckets, newBuckets),
+            newBuckets = Some(newBuckets), touched = 0 until tx.base.buckets,
+            metaEdit = _.copy(dropped = Nil)))
+        }
       }
     }
   }
@@ -3888,15 +3615,6 @@ object KeyedTable {
     }
   }
 
-  /** Read the change-data-capture log written by changelog-enabled
-    * upserts: one row per incoming row per batch — (pk…, op,
-    * old_<c>…, new_<c>…, batch), op ∈ insert/update/unchanged with
-    * before/after images per non-PK column, `batch` monotonically
-    * increasing per upsert. `sinceBatch` restricts to batches ≥ it
-    * (partition pruning on the batch directory — an incremental
-    * consumer reads only the new batches, never the history). Throws
-    * [[StoreException]] if the table has no changelog yet (no
-    * changelog-enabled upsert has run). */
   /** #11ao snapshot DIFF: classify every PK as insert / update / delete
     * between two snapshot versions — the audit report a write-audit-
     * publish reviewer reads (diff a branch head against its fork
@@ -3910,7 +3628,8 @@ object KeyedTable {
     * touched. The two pruned sides then full-outer join on the PK
     * (same bucket layout both sides — one co-partitioned shuffle
     * pair), and per-column null-safe comparison classifies the rest.
-    * Unchanged rows never leave the join.
+    * Unchanged rows never leave the join: this is [[diffImages]]
+    * projected to the PK columns and `op`.
     *
     * Note: enables the two storage-partitioned-join session confs
     * (`spark.sql.sources.v2.bucketing.enabled`,
@@ -3927,29 +3646,13 @@ object KeyedTable {
     val mFrom = Manifest.at(spark, dir, fromVersion)
     val mTo = toVersion.map(Manifest.at(spark, dir, _))
       .getOrElse(Manifest.current(spark, dir))
-    val aPresent = col(s"a.${meta.pk.head}").isNotNull
-    val bPresent = col(s"b.${meta.pk.head}").isNotNull
-    val nonPk = meta.schema.fieldNames.filterNot(meta.pk.contains).toSeq
-    val differs = nonPk.map(c => !(col(s"a.$c") <=> col(s"b.$c")))
-      .reduceOption(_ || _).getOrElse(lit(false))
-    snapshotDiffJoined(spark, wh, tableName, meta, mFrom, mTo) match {
-      case None => // nothing changed between the two snapshots
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(
-          meta.pk.map(c => meta.schema(c)) :+
-            StructField("op", StringType, nullable = false)))
-      case Some(joined) =>
-        joined.select(
-          meta.pk.map(c => coalesce(col(s"b.$c"), col(s"a.$c")).as(c)) :+
-          when(!aPresent, lit("insert")).when(!bPresent, lit("delete"))
-            .when(differs, lit("update")).otherwise(lit("unchanged")).as("op")
-            : _*)
-          .filter(col("op") =!= "unchanged")
-    }
+    diffImages(spark, wh, tableName, meta, mFrom, mTo)
+      .select((meta.pk :+ "op").map(col): _*)
   }
 
   /** The full-outer diff join of two snapshots, aliased `a` (from) and
-    * `b` (to) — the shared core of [[snapshotDiff]] (pk + op) and, via
-    * [[diffImages]], of the two CDC image synthesizers (the WAP
+    * `b` (to) — the core of [[diffImages]], and so of [[snapshotDiff]]
+    * (pk + op) and the two CDC image synthesizers (the WAP
     * publish's [[stageWapImages]] and [[restoreSnapshot]]'s row-level
     * diff — both need the full before/after images). None when manifest
     * arithmetic alone proves the snapshots hold identical rows (no
@@ -4093,10 +3796,6 @@ object KeyedTable {
     }
   }
 
-  /** Table-property routing of SQL DML onto the OPTIMISTIC twins —
-    * `ALTER TABLE t SET TBLPROPERTIES('commit_mode'='optimistic')`
-    * (see [[TableMeta.optimisticDml]]). `mode` is `optimistic` or
-    * `locked`; anything else fails loudly. */
   /** Parses/validates a `commit_mode` property value; true =
     * optimistic. Shared by [[setCommitMode]] and CREATE TABLE's
     * pre-creation validation (all-or-nothing: a bogus value must fail
@@ -4108,6 +3807,10 @@ object KeyedTable {
       s"commit_mode must be 'optimistic' or 'locked', got '$v'")
   }
 
+  /** Table-property routing of SQL DML onto the OPTIMISTIC twins —
+    * `ALTER TABLE t SET TBLPROPERTIES('commit_mode'='optimistic')`
+    * (see [[TableMeta.optimisticDml]]). `mode` is `optimistic` or
+    * `locked`; anything else fails loudly. */
   def setCommitMode(spark: SparkSession, warehouse0: String,
                     tableName: String, mode: String,
                     schema: Option[String] = None): Unit = {
@@ -4300,6 +4003,15 @@ object KeyedTable {
     }
   }
 
+  /** Read the change-data-capture log written by changelog-enabled
+    * upserts: one row per incoming row per batch — (pk…, op,
+    * old_<c>…, new_<c>…, batch), op ∈ insert/update/unchanged with
+    * before/after images per non-PK column, `batch` monotonically
+    * increasing per upsert. `sinceBatch` restricts to batches ≥ it
+    * (partition pruning on the batch directory — an incremental
+    * consumer reads only the new batches, never the history). Throws
+    * [[StoreException]] if the table has no changelog yet (no
+    * changelog-enabled upsert has run). */
   def readChangelog(spark: SparkSession, warehouse0: String,
                     tableName: String, sinceBatch: Long = 0L,
                     schema: Option[String] = None): DataFrame = {

@@ -311,7 +311,8 @@ private[store] class KeyedBatchTable(val meta: TableMeta, dataDir: String,
     // twin — the survivor rewrite / DV staging runs outside the lock;
     // a window conflict auto-retries (bounded, re-staged fresh)
     if (TableMeta.read(spark, tableDir).optimisticDml)
-      KeyedTable.retryOptimisticSql(spark, s"DELETE FROM $ref") {
+      KeyedTable.retrying(s"DELETE FROM $ref", KeyedTable.sqlRetries(spark),
+          KeyedTable.SqlMaxRetriesConf) {
         KeyedTable.deleteConcurrent(spark, wh, ref, cond)
       }: Unit
     else
@@ -466,8 +467,9 @@ private[store] class KeyedBatchTable(val meta: TableMeta, dataDir: String,
               def doAppend(): Unit =
                 if (!meta.autoIndex &&
                     TableMeta.read(SparkSession.active, tableDir).optimisticDml)
-                  KeyedTable.retryOptimisticSql(SparkSession.active,
-                      s"INSERT INTO $tbl") {
+                  KeyedTable.retrying(s"INSERT INTO $tbl",
+                      KeyedTable.sqlRetries(SparkSession.active),
+                      KeyedTable.SqlMaxRetriesConf) {
                     KeyedTable.appendConcurrent(cleaned, wh, tbl)
                   }
                 else

@@ -11,7 +11,7 @@ import graft.{SparkSpec, TempDirs}
   * old-schema bucket rewrite must not publish) abort with
   * [[ConcurrentWriteException]] leaving the table unchanged. The
   * interleave is deterministic via
-  * [[KeyedTable.DeleteConcurrentHooks]]. */
+  * [[KeyedTable.CommitSeam]]. */
 class DeleteConcurrentSpec extends SparkSpec {
 
   private lazy val wh: String = TempDirs.tempDir("graft-delc")
@@ -40,13 +40,13 @@ class DeleteConcurrentSpec extends SparkSpec {
       "still commits, and both effects survive") {
     val t = "t_delc_disjoint"
     val (keysA, keysB) = fixture(t)
-    KeyedTable.DeleteConcurrentHooks.betweenPhases = () =>
+    KeyedTable.CommitSeam("delete") = () =>
       KeyedTable.toSql(df(keysB.map(k => (k, s"B$k", 2000.0)): _*),
         wh, t, how = WriteMode.Upsert)
     val n =
       try KeyedTable.deleteConcurrent(spark, wh, t,
         col("id").isin(keysA: _*))
-      finally KeyedTable.DeleteConcurrentHooks.betweenPhases = () => ()
+      finally KeyedTable.CommitSeam("delete") = () => ()
     assert(n == keysA.size)
     val got = KeyedTable.readSql(spark, wh, t).collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[String]("name")).toMap
@@ -59,13 +59,13 @@ class DeleteConcurrentSpec extends SparkSpec {
       "nothing is deleted; the retry succeeds") {
     val t = "t_delc_overlap"
     val (keysA, _) = fixture(t)
-    KeyedTable.DeleteConcurrentHooks.betweenPhases = () =>
+    KeyedTable.CommitSeam("delete") = () =>
       KeyedTable.toSql(df((keysA.head, "WIN", 9.0)), wh, t,
         how = WriteMode.Upsert)
     val e =
       try intercept[ConcurrentWriteException] {
         KeyedTable.deleteConcurrent(spark, wh, t, col("id").isin(keysA: _*))
-      } finally KeyedTable.DeleteConcurrentHooks.betweenPhases = () => ()
+      } finally KeyedTable.CommitSeam("delete") = () => ()
     assert(e.getMessage.contains("retry the delete"), e.getMessage)
     val ids = KeyedTable.readSql(spark, wh, t).collect()
       .map(_.getAs[Long]("id")).toSet
@@ -81,39 +81,39 @@ class DeleteConcurrentSpec extends SparkSpec {
     val (keysA, keysB) = fixture(t)
     // tiny delete, explicit MoR: positions staged unlocked; a disjoint
     // writer lands mid-window; the DV commit still publishes
-    KeyedTable.DeleteConcurrentHooks.betweenPhases = () =>
+    KeyedTable.CommitSeam("delete") = () =>
       KeyedTable.toSql(df(keysB.map(k => (k, s"B$k", 7.0)): _*),
         wh, t, how = WriteMode.Upsert)
     val n =
       try KeyedTable.deleteConcurrent(spark, wh, t,
         col("id") === keysA.head, mode = DeleteMode.MergeOnRead)
-      finally KeyedTable.DeleteConcurrentHooks.betweenPhases = () => ()
+      finally KeyedTable.CommitSeam("delete") = () => ()
     assert(n == 1)
     val back = KeyedTable.readSql(spark, wh, t).collect()
     assert(!back.map(_.getAs[Long]("id")).contains(keysA.head))
     assert(back.length == 39)
     // and a SAME-bucket interferer aborts the MoR positions (ordinals
     // are only valid against the exact files they indexed)
-    KeyedTable.DeleteConcurrentHooks.betweenPhases = () =>
+    KeyedTable.CommitSeam("delete") = () =>
       KeyedTable.toSql(df((keysA(1), "WIN", 1.0)), wh, t,
         how = WriteMode.Upsert)
     try intercept[ConcurrentWriteException] {
       KeyedTable.deleteConcurrent(spark, wh, t,
         col("id") === keysA(2), mode = DeleteMode.MergeOnRead)
-    } finally KeyedTable.DeleteConcurrentHooks.betweenPhases = () => ()
+    } finally KeyedTable.CommitSeam("delete") = () => ()
   }
 
   test("a schema change mid-window aborts the old-schema bucket rewrite") {
     val t = "t_delc_schema"
     val (keysA, _) = fixture(t)
-    KeyedTable.DeleteConcurrentHooks.betweenPhases = () =>
+    KeyedTable.CommitSeam("delete") = () =>
       KeyedTable.addColumns(spark, wh, t,
         Seq(org.apache.spark.sql.types.StructField("extra",
           org.apache.spark.sql.types.StringType)))
     val e =
       try intercept[ConcurrentWriteException] {
         KeyedTable.deleteConcurrent(spark, wh, t, col("id").isin(keysA: _*))
-      } finally KeyedTable.DeleteConcurrentHooks.betweenPhases = () => ()
+      } finally KeyedTable.CommitSeam("delete") = () => ()
     assert(e.getMessage.contains("schema changed"), e.getMessage)
   }
 

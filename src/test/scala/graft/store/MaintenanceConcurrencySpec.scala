@@ -9,9 +9,9 @@ import graft.{SparkSpec, TempDirs}
   * zorderCompact / rebucket): the rewrite job stages OUTSIDE the write
   * lock against the snapshot-at-start; a brief locked flip re-validates
   * the touched buckets' file/DV window and commits. On conflict the
-  * MAINTENANCE re-stages ([[KeyedTable.retryMaintenance]]) — ingest
+  * MAINTENANCE re-stages ([[KeyedTable.retrying]]) — ingest
   * writers never wait behind a maintenance job and never abort for it.
-  * Interleaves are deterministic via [[KeyedTable.MaintenanceHooks]]:
+  * Interleaves are deterministic via [[KeyedTable.CommitSeam]]:
   * the hook lands the interfering (or provably disjoint) mutation
   * between the unlocked stage and the locked flip. */
 class MaintenanceConcurrencySpec extends SparkSpec {
@@ -40,16 +40,20 @@ class MaintenanceConcurrencySpec extends SparkSpec {
     m
   }
 
+  /** Install `hook` as the commit seam of every maintenance verb. */
+  private def seam(hook: () => Unit): Unit =
+    Seq("compact", "zorder", "rebucket").foreach(KeyedTable.CommitSeam(_) = hook)
+
   /** Install a hook that fires `body` only on the FIRST interleave and
     * run `job`; returns how many times the window was entered (1 = no
     * retry, 2 = one conflict-driven re-stage). */
   private def withHook(body: => Unit)(job: => Unit): Int = {
     var fired = 0
-    KeyedTable.MaintenanceHooks.betweenPhases = () => {
+    seam { () =>
       fired += 1
       if (fired == 1) body
     }
-    try job finally KeyedTable.MaintenanceHooks.betweenPhases = () => ()
+    try job finally seam(() => ())
     fired
   }
 
@@ -175,7 +179,7 @@ class MaintenanceConcurrencySpec extends SparkSpec {
     val hot = byBucket(byBucket.keys.min)
     var n = 0
     // EVERY window entry lands a conflicting commit: retries exhaust
-    KeyedTable.MaintenanceHooks.betweenPhases = () => {
+    seam { () =>
       n += 1
       KeyedTable.toSql(df(hot.map(k => (k, n * 1.0, k % 7)): _*),
         wh, t, how = WriteMode.Upsert)
@@ -183,7 +187,7 @@ class MaintenanceConcurrencySpec extends SparkSpec {
     val e =
       try intercept[ConcurrentWriteException] {
         KeyedTable.rebucket(spark, wh, t, 8)
-      } finally KeyedTable.MaintenanceHooks.betweenPhases = () => ()
+      } finally seam(() => ())
     assert(e.getMessage.contains("gave up after"), e.getMessage)
     // every INGEST commit stands; the table layout is simply unchanged
     val dir = KeyedTable.tableDir(wh, t)

@@ -47,12 +47,12 @@ class MergeConcurrentSpec extends SparkSpec {
       (keysA(0), "x", 0.0, true),
       (keysA(1), "UPD", 5.0, false),
       (1000L, "NEW", 1.0, false))
-    KeyedTable.MergeConcurrentHooks.betweenPhases = () =>
+    KeyedTable.CommitSeam("merge") = () =>
       KeyedTable.toSql(df(keysB.map(k => (k, s"B$k", 2.0)): _*),
         wh, t, how = WriteMode.Upsert)
     val stats =
       try KeyedTable.mergeConcurrent(theFeed, wh, t, deleteWhen = col("is_del"))
-      finally KeyedTable.MergeConcurrentHooks.betweenPhases = () => ()
+      finally KeyedTable.CommitSeam("merge") = () => ()
     assert(stats == ((1L, 1L, 1L)), s"got $stats")
     val got = KeyedTable.readSql(spark, wh, t).collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[String]("name")).toMap
@@ -69,7 +69,7 @@ class MergeConcurrentSpec extends SparkSpec {
   test("overlapping touched buckets abort; nothing from the feed lands") {
     val t = "t_mrgc_overlap"
     val (keysA, _) = fixture(t)
-    KeyedTable.MergeConcurrentHooks.betweenPhases = () =>
+    KeyedTable.CommitSeam("merge") = () =>
       KeyedTable.toSql(df((keysA(1), "WIN", 9.0)), wh, t,
         how = WriteMode.Upsert)
     val e =
@@ -77,7 +77,7 @@ class MergeConcurrentSpec extends SparkSpec {
         KeyedTable.mergeConcurrent(
           feed((keysA(0), "x", 0.0, true), (keysA(2), "LOSE", 1.0, false)),
           wh, t, deleteWhen = col("is_del"))
-      } finally KeyedTable.MergeConcurrentHooks.betweenPhases = () => ()
+      } finally KeyedTable.CommitSeam("merge") = () => ()
     assert(e.getMessage.contains("retry the merge"), e.getMessage)
     val got = KeyedTable.readSql(spark, wh, t).collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[String]("name")).toMap
@@ -111,13 +111,13 @@ class MergeConcurrentSpec extends SparkSpec {
     // INSERT candidate (SQL MERGE semantics) — the commit-time check
     // sweep must include it, not filter all tombstones out
     val theFeed = feed((5000L, "BAD", -50.0, true))
-    KeyedTable.MergeConcurrentHooks.betweenPhases = () =>
+    KeyedTable.CommitSeam("merge") = () =>
       KeyedTable.addCheckConstraint(spark, wh, t, "bal_pos", "bal >= 0")
     val e =
       try intercept[StoreException] {
         KeyedTable.mergeConcurrent(theFeed, wh, t,
           deleteWhen = col("is_del"), deleteOnlyMatched = true): Unit
-      } finally KeyedTable.MergeConcurrentHooks.betweenPhases = () => ()
+      } finally KeyedTable.CommitSeam("merge") = () => ()
     assert(e.getMessage.contains("check constraint"), e.getMessage)
     assert(KeyedTable.readSql(spark, wh, t)
       .filter(col("id") === 5000L).count() == 0,

@@ -96,7 +96,7 @@ class SqlOptimisticSpec extends SparkSpec {
       // (fire-once guard: B's statement re-enters updateConcurrent and
       // would otherwise re-trigger this same global hook forever)
       var fired = false
-      KeyedTable.UpdateConcurrentHooks.betweenPhases = () =>
+      KeyedTable.CommitSeam("update") = () =>
         if (!fired) {
           fired = true
           spark.sql(s"UPDATE $cat.$t SET bal = -2.0 " +
@@ -104,7 +104,7 @@ class SqlOptimisticSpec extends SparkSpec {
         }
       try spark.sql(s"UPDATE $cat.$t SET bal = -1.0 " +
         s"WHERE id IN (${keysA.mkString(",")})")
-      finally KeyedTable.UpdateConcurrentHooks.betweenPhases = () => ()
+      finally KeyedTable.CommitSeam("update") = () => ()
       val got = KeyedTable.readSql(spark, wh, t).collect()
         .map(r => r.getAs[Long]("id") -> r.getAs[Double]("bal")).toMap
       keysA.foreach(k => assert(got(k) == -1.0, s"A's update on $k"))
@@ -125,7 +125,7 @@ class SqlOptimisticSpec extends SparkSpec {
         s"ALTER TABLE $cat.$t SET TBLPROPERTIES('commit_mode'='optimistic')")
       val entries = new java.util.concurrent.atomic.AtomicInteger(0)
       var fired = false
-      KeyedTable.UpdateConcurrentHooks.betweenPhases = () => {
+      KeyedTable.CommitSeam("update") = () => {
         entries.incrementAndGet()
         if (!fired) {
           fired = true
@@ -135,7 +135,7 @@ class SqlOptimisticSpec extends SparkSpec {
         }
       }
       try spark.sql(s"UPDATE $cat.$t SET bal = bal + 1 WHERE id <= 40")
-      finally KeyedTable.UpdateConcurrentHooks.betweenPhases = () => ()
+      finally KeyedTable.CommitSeam("update") = () => ()
       // attempt 1 + the interferer + attempt 2 — the retry happened
       // inside the statement, and attempt 2 re-read the fresh state
       assert(entries.get() == 3, s"verb entries: ${entries.get()}")
@@ -157,7 +157,7 @@ class SqlOptimisticSpec extends SparkSpec {
       // interfere on EVERY attempt of the statement under test (the
       // guard keeps the interferer's own verb entry from recursing)
       val inHook = new java.util.concurrent.atomic.AtomicBoolean(false)
-      KeyedTable.UpdateConcurrentHooks.betweenPhases = () =>
+      KeyedTable.CommitSeam("update") = () =>
         if (inHook.compareAndSet(false, true))
           try spark.sql(
             s"UPDATE $cat.$t SET bal = bal + 1000 WHERE id <= 40"): Unit
@@ -170,7 +170,7 @@ class SqlOptimisticSpec extends SparkSpec {
           x.isInstanceOf[ConcurrentWriteException] &&
           x.getMessage.contains(KeyedTable.SqlMaxRetriesConf)), e.toString)
       } finally {
-        KeyedTable.UpdateConcurrentHooks.betweenPhases = () => ()
+        KeyedTable.CommitSeam("update") = () => ()
         spark.conf.unset(KeyedTable.SqlMaxRetriesConf)
       }
       spark.conf.set(KeyedTable.SqlMaxRetriesConf, "many")
@@ -211,7 +211,7 @@ class SqlOptimisticSpec extends SparkSpec {
         if (strict)
           spark.conf.set(graft.plans.GraftSqlDml.BySourceStrictConf, "true")
         var fired = false
-        KeyedTable.MergeConcurrentHooks.betweenPhases = () =>
+        KeyedTable.CommitSeam("merge") = () =>
           if (!fired) {
             fired = true
             // lands in bucket 3 — untouched by the staged merge
@@ -224,7 +224,7 @@ class SqlOptimisticSpec extends SparkSpec {
           WHEN NOT MATCHED BY SOURCE THEN DELETE
         """)
         finally {
-          KeyedTable.MergeConcurrentHooks.betweenPhases = () => ()
+          KeyedTable.CommitSeam("merge") = () => ()
           if (strict)
             spark.conf.unset(graft.plans.GraftSqlDml.BySourceStrictConf)
         }

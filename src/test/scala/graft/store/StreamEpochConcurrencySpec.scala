@@ -19,7 +19,7 @@ import graft.TempDirs
   * against the epoch-start snapshot outside the write lock, the locked
   * section re-validates only what its window added and holds for the
   * flip. Interleavings are made deterministic with
-  * [[KeyedTable.StreamEpochHooks.betweenPhases]], which fires exactly
+  * [[KeyedTable.CommitSeam]], which fires exactly
   * between the two phases. */
 class StreamEpochConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
 
@@ -83,7 +83,7 @@ class StreamEpochConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
   }
 
   override def afterEach(): Unit = {
-    KeyedTable.StreamEpochHooks.betweenPhases = () => ()
+    KeyedTable.CommitSeam("stream") = () => ()
     super.afterEach()
   }
 
@@ -124,7 +124,7 @@ class StreamEpochConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
     val t = "t_ep_clash"
     KeyedTable.toSql(df((1L, "a"), (2L, "b")), wh, t, pk = Seq("id"),
       buckets = 4)
-    KeyedTable.StreamEpochHooks.betweenPhases = () =>
+    KeyedTable.CommitSeam("stream") = () =>
       KeyedTable.toSql(df((50L, "theirs")), wh, t, pk = Seq("id"),
         how = WriteMode.Append)
     val (staging, files) = stageEpoch(t, df((50L, "mine")), 4, "q_clash", 0L)
@@ -140,7 +140,7 @@ class StreamEpochConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
   test("disjoint rows landing inside the window pass the re-check") {
     val t = "t_ep_disjoint"
     KeyedTable.toSql(df((1L, "a")), wh, t, pk = Seq("id"), buckets = 4)
-    KeyedTable.StreamEpochHooks.betweenPhases = () =>
+    KeyedTable.CommitSeam("stream") = () =>
       KeyedTable.appendConcurrent(df((60L, "batch")), wh, t)
     val (staging, files) = stageEpoch(t, df((70L, "sink")), 4, "q_disj", 0L)
     commitEpoch(t, staging, files, "q_disj", 0L, 4)
@@ -159,7 +159,7 @@ class StreamEpochConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
     // epoch derived its DVs against the start snapshot — without the
     // in-lock re-derivation the epoch's post-image would duplicate the
     // interferer's live row
-    KeyedTable.StreamEpochHooks.betweenPhases = () =>
+    KeyedTable.CommitSeam("stream") = () =>
       KeyedTable.toSql(df((1L, "mid")), wh, t, pk = Seq("id"),
         how = WriteMode.Upsert)
     val (staging, files) = stageEpoch(t, df((1L, "sink")), 4, "q_redo", 0L)
@@ -174,7 +174,7 @@ class StreamEpochConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
   test("changelog enabled inside the window still lands the epoch's batch") {
     val t = "t_ep_cl"
     KeyedTable.toSql(df((1L, "a")), wh, t, pk = Seq("id"), buckets = 4)
-    KeyedTable.StreamEpochHooks.betweenPhases = () =>
+    KeyedTable.CommitSeam("stream") = () =>
       KeyedTable.setChangelog(spark, wh, t, enabled = true)
     val (staging, files) = stageEpoch(t, df((5L, "s")), 4, "q_cl", 0L)
     commitEpoch(t, staging, files, "q_cl", 0L, 4)

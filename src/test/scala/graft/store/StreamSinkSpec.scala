@@ -332,6 +332,65 @@ class StreamSinkSpec extends SparkSpec {
     assert(got == (0L to 20L).map(i => (i, i * 1.0)))
   }
 
+  /** Every message along `e`'s cause chain, concatenated. */
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .flatMap(c => Option(c.getMessage)).mkString(" | ")
+
+  test("an epoch holding a NULL primary key fails, table unchanged") {
+    val (cat, wh) = mkCatalog()
+    KeyedTable.toSql(Seq((1L, 1.0)).toDF("k", "v"), wh, "t",
+      pk = Seq("k"), buckets = 2)
+    val dir = KeyedTable.tableDir(wh, "t")
+    val v0 = Manifest.current(spark, dir).version
+    val e = intercept[Exception] {
+      drain(fileStream(Seq((Option.empty[Long], 5.0), (Some(2L), 2.0))
+        .toDF("k", "v")), cat, "t")
+    }
+    assert(messages(e).contains("NULL"), messages(e))
+    assert(Manifest.current(spark, dir).version == v0)
+    assert(KeyedTable.readSql(spark, wh, "t").collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq == Seq((1L, 1.0)))
+  }
+
+  test("a staged epoch holding a NULL primary key is refused at commit") {
+    val (_, wh) = mkCatalog()
+    KeyedTable.toSql(Seq((1L, 1.0)).toDF("id", "v"), wh, "t",
+      pk = Seq("id"), buckets = 2)
+    val dir = KeyedTable.tableDir(wh, "t")
+    val v0 = Manifest.current(spark, dir).version
+    val e = intercept[StoreException] {
+      SinkEpoch.commit(spark, wh, "t",
+        Seq((Option.empty[Long], 5.0)).toDF("id", "v"), 2, "qnull", 0L)
+    }
+    assert(e.getMessage.contains("NULL"), e.getMessage)
+    assert(Manifest.current(spark, dir).version == v0)
+    assert(KeyedTable.readSql(spark, wh, "t").count() == 1L)
+  }
+
+  test("sink_mode=upsert refuses a query lacking table columns, table " +
+      "unchanged") {
+    val (cat, wh) = mkCatalog()
+    KeyedTable.toSql(Seq((1L, 1.0, "a")).toDF("k", "v", "g"), wh, "t",
+      pk = Seq("k"), buckets = 2)
+    val dir = KeyedTable.tableDir(wh, "t")
+    val v0 = Manifest.current(spark, dir).version
+    val ck = Files.createTempDirectory("graft-sink-ck-").toString
+    val e = intercept[Exception] {
+      fileStream(Seq((1L, 10.0)).toDF("k", "v")).writeStream
+        .option("checkpointLocation", ck)
+        .option("sink_mode", "upsert")
+        .trigger(Trigger.AvailableNow())
+        .toTable(s"$cat.t")
+        .awaitTermination()
+    }
+    assert(messages(e).contains("lacks g"), messages(e))
+    assert(Manifest.current(spark, dir).version == v0)
+    assert(KeyedTable.readSql(spark, wh, "t").collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSeq ==
+      Seq((1L, 1.0, "a")))
+  }
+
   test("streaming write into an auto-index table is refused loudly") {
     val (cat, wh) = mkCatalog()
     KeyedTable.toSql(Seq(("a", 1.0)).toDF("g", "v"), wh, "t",

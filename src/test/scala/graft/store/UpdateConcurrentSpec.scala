@@ -37,14 +37,14 @@ class UpdateConcurrentSpec extends SparkSpec {
       "still commits; SET reads CURRENT values") {
     val t = "t_updc_disjoint"
     val (keysA, keysB) = fixture(t)
-    KeyedTable.UpdateConcurrentHooks.betweenPhases = () =>
+    KeyedTable.CommitSeam("update") = () =>
       KeyedTable.toSql(df(keysB.map(k => (k, s"B$k", 2000.0)): _*),
         wh, t, how = WriteMode.Upsert)
     val n =
       try KeyedTable.updateConcurrent(spark, wh, t,
         col("id").isin(keysA: _*),
         Map("bal" -> (col("bal") + 1000.0), "name" -> lit("UPD")))
-      finally KeyedTable.UpdateConcurrentHooks.betweenPhases = () => ()
+      finally KeyedTable.CommitSeam("update") = () => ()
     assert(n == keysA.size)
     val got = KeyedTable.readSql(spark, wh, t).collect()
       .map(r => (r.getAs[Long]("id"),
@@ -59,7 +59,7 @@ class UpdateConcurrentSpec extends SparkSpec {
       "the retry succeeds; MoR positions share the window") {
     val t = "t_updc_overlap"
     val (keysA, _) = fixture(t)
-    KeyedTable.UpdateConcurrentHooks.betweenPhases = () =>
+    KeyedTable.CommitSeam("update") = () =>
       KeyedTable.toSql(df((keysA(1), "WIN", 9.0)), wh, t,
         how = WriteMode.Upsert)
     val e =
@@ -67,7 +67,7 @@ class UpdateConcurrentSpec extends SparkSpec {
         KeyedTable.updateConcurrent(spark, wh, t,
           col("id") === keysA(0), Map("name" -> lit("LOSE")),
           mode = DeleteMode.MergeOnRead)
-      } finally KeyedTable.UpdateConcurrentHooks.betweenPhases = () => ()
+      } finally KeyedTable.CommitSeam("update") = () => ()
     assert(e.getMessage.contains("retry the update"), e.getMessage)
     val got = KeyedTable.readSql(spark, wh, t).collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[String]("name")).toMap
@@ -107,7 +107,7 @@ class UpdateConcurrentSpec extends SparkSpec {
     val (keysA, _) = fixture(t)
     // checks live in TableMeta — no manifest flip, no schema change —
     // so only the commit-time re-enforcement can catch this
-    KeyedTable.UpdateConcurrentHooks.betweenPhases = () =>
+    KeyedTable.CommitSeam("update") = () =>
       KeyedTable.addCheckConstraint(spark, wh, t, "bal_cap",
         "bal <= 100000")
     val e =
@@ -115,7 +115,7 @@ class UpdateConcurrentSpec extends SparkSpec {
         KeyedTable.updateConcurrent(spark, wh, t,
           col("id").isin(keysA: _*),
           Map("bal" -> (col("bal") + 1000000.0)))
-      } finally KeyedTable.UpdateConcurrentHooks.betweenPhases = () => ()
+      } finally KeyedTable.CommitSeam("update") = () => ()
     assert(e.getMessage.contains("check constraint"), e.getMessage)
     val got = KeyedTable.readSql(spark, wh, t).collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[Double]("bal")).toMap

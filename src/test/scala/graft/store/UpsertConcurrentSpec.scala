@@ -9,7 +9,7 @@ import graft.{SparkSpec, TempDirs}
   * DISJOINT touched-bucket sets both commit; an overlapping set aborts
   * with [[ConcurrentWriteException]] and leaves the table unchanged.
   * The interleave is deterministic via
-  * [[KeyedTable.UpsertConcurrentHooks]]: the hook lands the
+  * [[KeyedTable.CommitSeam]]: the hook lands the
   * interfering mutation between the optimistic upsert's unlocked
   * stage and its locked commit. */
 class UpsertConcurrentSpec extends SparkSpec {
@@ -41,12 +41,12 @@ class UpsertConcurrentSpec extends SparkSpec {
     val t = "t_upsc_disjoint"
     val (keysA, keysB) = fixture(t)
     // while A is staged-but-uncommitted, B (disjoint buckets) commits
-    KeyedTable.UpsertConcurrentHooks.betweenPhases = () =>
+    KeyedTable.CommitSeam("upsert") = () =>
       KeyedTable.toSql(df(keysB.map(k => (k, s"B$k", 2000.0)): _*),
         wh, t, how = WriteMode.Upsert)
     try KeyedTable.upsertConcurrent(
       df(keysA.map(k => (k, s"A$k", 1000.0)): _*), wh, t)
-    finally KeyedTable.UpsertConcurrentHooks.betweenPhases = () => ()
+    finally KeyedTable.CommitSeam("upsert") = () => ()
     val got = KeyedTable.readSql(spark, wh, t).collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[String]("name")).toMap
     keysA.foreach(k => assert(got(k) == s"A$k", s"A's update on $k must survive"))
@@ -60,14 +60,14 @@ class UpsertConcurrentSpec extends SparkSpec {
     val (keysA, _) = fixture(t)
     // interferer writes to the SAME bucket set (same keys): A's staged
     // merge now reads a stale pre-image and must abort
-    KeyedTable.UpsertConcurrentHooks.betweenPhases = () =>
+    KeyedTable.CommitSeam("upsert") = () =>
       KeyedTable.toSql(df(keysA.map(k => (k, s"WIN$k", 2000.0)): _*),
         wh, t, how = WriteMode.Upsert)
     val e =
       try intercept[ConcurrentWriteException] {
         KeyedTable.upsertConcurrent(
           df(keysA.map(k => (k, s"LOSE$k", 1000.0)): _*), wh, t)
-      } finally KeyedTable.UpsertConcurrentHooks.betweenPhases = () => ()
+      } finally KeyedTable.CommitSeam("upsert") = () => ()
     assert(e.getMessage.contains("retry the upsert"), e.getMessage)
     val got = KeyedTable.readSql(spark, wh, t).collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[String]("name")).toMap
@@ -84,13 +84,13 @@ class UpsertConcurrentSpec extends SparkSpec {
   test("a concurrent rebucket aborts the staged upsert") {
     val t = "t_upsc_rebucket"
     val (keysA, _) = fixture(t)
-    KeyedTable.UpsertConcurrentHooks.betweenPhases = () =>
+    KeyedTable.CommitSeam("upsert") = () =>
       KeyedTable.rebucket(spark, wh, t, 8)
     val e =
       try intercept[ConcurrentWriteException] {
         KeyedTable.upsertConcurrent(
           df(keysA.map(k => (k, s"X$k", 1.0)): _*), wh, t)
-      } finally KeyedTable.UpsertConcurrentHooks.betweenPhases = () => ()
+      } finally KeyedTable.CommitSeam("upsert") = () => ()
     assert(e.getMessage.contains("bucket count changed"), e.getMessage)
   }
 
