@@ -944,6 +944,17 @@ object KeyedTable {
     }
   }
 
+  /** `rows` as changelog `insert` images over `schema`: every row is
+    * new, so each `old_<c>` is NULL — an append's and an append-mode
+    * sink epoch's batch. */
+  private def insertImages(rows: DataFrame, pk: Seq[String],
+                           schema: StructType): DataFrame = {
+    val images = schema.fieldNames.filterNot(pk.contains).toSeq.flatMap { c =>
+      Seq(lit(null).cast(schema(c).dataType).as(s"old_$c"), col(c).as(s"new_$c"))
+    }
+    rows.select(pk.map(col) ++ (lit("insert").as("op") +: images): _*)
+  }
+
   /** Next `_changelog/batch=<n>` target. Batch numbers are monotonic
     * UNDER THE WRITE LOCK — the optimistic paths (appendConcurrent,
     * stream epochs) stage their images unlocked but must compute the
@@ -1120,14 +1131,7 @@ object KeyedTable {
         val nonPk = meta0.schema.fieldNames.filterNot(meta0.pk.contains).toSeq
         // append mode: the epoch's rows as ONE insert-image batch (no
         // pre-image join — base-independent, so never re-derived)
-        def insertImages: DataFrame = {
-          val images = nonPk.flatMap { c =>
-            Seq(lit(null).cast(meta0.schema(c).dataType).as(s"old_$c"),
-              col(c).as(s"new_$c"))
-          }
-          staged.select(
-            meta0.pk.map(col) ++ (lit("insert").as("op") +: images): _*)
-        }
+        def inserts: DataFrame = insertImages(staged, meta0.pk, meta0.schema)
         // upsert mode: the merge-on-read decomposition against a given
         // base — pre-image join classifies CDC images and collects the
         // matched rows' (bucket, file, pos) tombstones, returned staged
@@ -1188,9 +1192,9 @@ object KeyedTable {
               s"e.g. ${overlap.mkString(", ")} (the sink appends; " +
               "replays are handled by the epoch ledger, not upserts — " +
               "for update-by-key semantics set option sink_mode=upsert)")
-          if (meta0.changelog) tx.log(insertImages)
+          if (meta0.changelog) tx.log(inserts)
           Some(Flip((), epochFiles, extend = true, rows = Some(() => staged),
-            images = Some(() => insertImages),
+            images = Some(() => inserts),
             recheck = (metaL, baseL) => {
               val clash = addedKeys(spark, wh, ref, metaL, tx.base, baseL,
                 touched, staged)
@@ -1690,14 +1694,7 @@ object KeyedTable {
           (a, e, tx.meta)
         }
       val newB = tx.persist(withBucket(aligned0, metaUsed.pk, tx.base.buckets))
-      def inserts: DataFrame = {
-        val nonPk = evolved.fieldNames.filterNot(metaUsed.pk.contains).toSeq
-        val images = nonPk.flatMap { c =>
-          Seq(lit(null).cast(evolved(c).dataType).as(s"old_$c"),
-            col(c).as(s"new_$c"))
-        }
-        newB.select(metaUsed.pk.map(col) ++ (lit("insert").as("op") +: images): _*)
-      }
+      def inserts: DataFrame = insertImages(newB, metaUsed.pk, evolved)
       enforceChecks(newB, metaUsed.checks, label)
       // validate AFTER persist so the (possibly expensive) incoming
       // pipeline is computed once; one fused job answers the PK check
