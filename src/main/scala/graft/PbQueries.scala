@@ -16,6 +16,33 @@ object PbQueries {
   private def tempWarehouse(): String =
     graft.TempDirs.tempDir("graft-wh-")
 
+  private val gateCatalogN = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Run `body` with a graft catalog over `wh` registered in the session
+    * as `graft_gate_<kind><n>`, and always unregister it after. The name
+    * is fresh per call: Spark caches catalog instances by name, and a
+    * bench rep re-runs the row over a new warehouse. A result that reads
+    * through the catalog must be computed inside `body` ([[collected]]). */
+  private def withGateCatalog[T](spark: SparkSession, wh: String, kind: String)
+                                (body: String => T): T = {
+    val cat = s"graft_gate_$kind${gateCatalogN.incrementAndGet()}"
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[graft.store.GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    try body(cat)
+    finally {
+      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
+      spark.conf.unset(s"spark.sql.catalog.$cat")
+    }
+  }
+
+  /** `df`'s rows, computed now, as a local frame: it no longer reads
+    * through the catalog that produced it, and leaves no cached blocks
+    * behind in the session. */
+  private def collected(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(df.collect(): _*), df.schema)
+
   /** #1 create_only + full read roundtrip. */
   def createRead(spark: SparkSession, sfDir: String): DataFrame = {
     val wh = tempWarehouse()
@@ -337,14 +364,9 @@ object PbQueries {
     * the read-back equals the plain union. One catalog NAME per
     * invocation: Spark caches catalog instances by name, so re-pointing
     * an existing name at this run's fresh warehouse would not take. */
-  private val sqlInsertN = new java.util.concurrent.atomic.AtomicLong()
   def sqlInsert(spark: SparkSession, sfDir: String): DataFrame = {
     val wh = tempWarehouse()
-    val cat = s"graft_gate_ins${sqlInsertN.incrementAndGet()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.store.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    try {
+    withGateCatalog(spark, wh, "ins") { cat =>
       val customer = Tables.customer(spark, sfDir)
       KeyedTable.toSql(customer.filter(col("c_custkey") % 3 =!= 0),
         wh, "customer", pk = Seq("c_custkey"))
@@ -356,9 +378,6 @@ object PbQueries {
         SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment, NULL
         FROM graft_gate_ins_src""")
       KeyedTable.readSql(spark, wh, "customer")
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      spark.conf.unset(s"spark.sql.catalog.$cat")
     }
   }
 
@@ -368,14 +387,9 @@ object PbQueries {
     * path (PK validation, bucket staging, writer lock), and a CTAS
     * derives a second keyed table from it — all without one
     * programmatic call. Unknown properties refuse loudly. */
-  private val sqlCrtN = new java.util.concurrent.atomic.AtomicLong()
   def sqlCreate(spark: SparkSession, sfDir: String): DataFrame = {
     val wh = tempWarehouse()
-    val cat = s"graft_gate_crt${sqlCrtN.incrementAndGet()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.store.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    try {
+    withGateCatalog(spark, wh, "crt") { cat =>
       Tables.customer(spark, sfDir)
         .createOrReplaceTempView("graft_gate_crt_src")
       spark.sql(s"""
@@ -396,46 +410,30 @@ object PbQueries {
         AS SELECT c_custkey, c_acctbal FROM $cat.customer
            WHERE c_acctbal > 5000.0""")
       KeyedTable.readSql(spark, wh, "big_spenders")
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      spark.conf.unset(s"spark.sql.catalog.$cat")
     }
   }
 
   /** `pb_sql_update` (#11w as SQL): `UPDATE <catalog>.customer SET … WHERE …`
     * lowered by GraftSqlDmlRule onto the store's bucket-pruned predicate
     * update — the identical commit/CDC contract as the programmatic call. */
-  private val sqlUpdN = new java.util.concurrent.atomic.AtomicLong()
   def sqlUpdate(spark: SparkSession, sfDir: String): DataFrame = {
     val wh = tempWarehouse()
-    val cat = s"graft_gate_upd${sqlUpdN.incrementAndGet()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.store.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    try {
+    withGateCatalog(spark, wh, "upd") { cat =>
       KeyedTable.toSql(Tables.customer(spark, sfDir), wh, "customer",
         pk = Seq("c_custkey"))
       spark.sql(s"""UPDATE $cat.customer
         SET c_acctbal = c_acctbal * 2 + 1, c_mktsegment = 'SQLUPD'
         WHERE c_custkey % 4 = 1 AND c_acctbal > 0""")
       KeyedTable.readSql(spark, wh, "customer")
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      spark.conf.unset(s"spark.sql.catalog.$cat")
     }
   }
 
   /** `pb_sql_merge` (#11x as SQL): `MERGE INTO <catalog>.customer` in the
     * CDC-apply shape (DELETE-first, UPDATE, INSERT) lowered onto the
     * store's one-commit merge. */
-  private val sqlMrgN = new java.util.concurrent.atomic.AtomicLong()
   def sqlMerge(spark: SparkSession, sfDir: String): DataFrame = {
     val wh = tempWarehouse()
-    val cat = s"graft_gate_mrg${sqlMrgN.incrementAndGet()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.store.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    try {
+    withGateCatalog(spark, wh, "mrg") { cat =>
       val customer = Tables.customer(spark, sfDir)
       KeyedTable.toSql(customer, wh, "customer", pk = Seq("c_custkey"))
       customer
@@ -460,9 +458,6 @@ object PbQueries {
           s.c_nationkey, s.c_acctbal, s.c_mktsegment)
       """)
       KeyedTable.readSql(spark, wh, "customer")
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      spark.conf.unset(s"spark.sql.catalog.$cat")
     }
   }
 
@@ -476,11 +471,7 @@ object PbQueries {
   private def sqlMergePartial(clause: String)(
       spark: SparkSession, sfDir: String): DataFrame = {
     val wh = tempWarehouse()
-    val cat = s"graft_gate_mrg${sqlMrgN.incrementAndGet()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.store.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    try {
+    withGateCatalog(spark, wh, "mrg") { cat =>
       val customer = Tables.customer(spark, sfDir)
       KeyedTable.toSql(customer, wh, "customer", pk = Seq("c_custkey"))
       // matched rows (%6) carry CHANGED values (they must only land
@@ -502,9 +493,6 @@ object PbQueries {
         $clause
       """)
       KeyedTable.readSql(spark, wh, "customer")
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      spark.conf.unset(s"spark.sql.catalog.$cat")
     }
   }
 
@@ -532,11 +520,7 @@ object PbQueries {
     * feed ∪ target, never a per-row loop. */
   def sqlMergeSync(spark: SparkSession, sfDir: String): DataFrame = {
     val wh = tempWarehouse()
-    val cat = s"graft_gate_mrg${sqlMrgN.incrementAndGet()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.store.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    try {
+    withGateCatalog(spark, wh, "mrg") { cat =>
       val customer = Tables.customer(spark, sfDir)
       KeyedTable.toSql(customer, wh, "customer", pk = Seq("c_custkey"))
       // the snapshot: every %3 key (updated balance) + brand-new keys
@@ -560,9 +544,6 @@ object PbQueries {
         WHEN NOT MATCHED BY SOURCE AND t.c_acctbal < 5000 THEN DELETE
       """)
       KeyedTable.readSql(spark, wh, "customer")
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      spark.conf.unset(s"spark.sql.catalog.$cat")
     }
   }
 
@@ -572,11 +553,7 @@ object PbQueries {
     * are NO ACTION, exactly as SQL says. */
   def sqlMergeCond(spark: SparkSession, sfDir: String): DataFrame = {
     val wh = tempWarehouse()
-    val cat = s"graft_gate_mrg${sqlMrgN.incrementAndGet()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.store.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    try {
+    withGateCatalog(spark, wh, "mrg") { cat =>
       val customer = Tables.customer(spark, sfDir)
       KeyedTable.toSql(customer, wh, "customer", pk = Seq("c_custkey"))
       customer.filter(col("c_custkey") % 6 === 0)
@@ -600,9 +577,6 @@ object PbQueries {
           s.c_mktsegment)
       """)
       KeyedTable.readSql(spark, wh, "customer")
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      spark.conf.unset(s"spark.sql.catalog.$cat")
     }
   }
 
@@ -650,14 +624,9 @@ object PbQueries {
     * `CALL graft.system.*` procedures (Spark 4 ProcedureCatalog) drive
     * a full WAP cycle plus tag/compact/vacuum, each lowering onto the
     * identical programmatic primitive. */
-  private val sqlCallN = new java.util.concurrent.atomic.AtomicLong()
   def sqlCallQ(spark: SparkSession, sfDir: String): DataFrame = {
     val wh = tempWarehouse()
-    val cat = s"graft_gate_call${sqlCallN.incrementAndGet()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.store.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    try {
+    withGateCatalog(spark, wh, "call") { cat =>
       val customer = Tables.customer(spark, sfDir)
       KeyedTable.toSql(customer, wh, "customer", pk = Seq("c_custkey"))
       spark.sql(s"CALL $cat.system.create_tag('customer', 'pristine')")
@@ -675,9 +644,6 @@ object PbQueries {
         s"SELECT * FROM $cat.customer VERSION AS OF 'pristine'").count() ==
         customer.count(), "tagged snapshot must survive vacuum")
       KeyedTable.readSql(spark, wh, "customer")
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      spark.conf.unset(s"spark.sql.catalog.$cat")
     }
   }
 
@@ -685,14 +651,9 @@ object PbQueries {
     * ('changelog'='true')` — CDC capture enabled from pure SQL; the
     * next mutation (no per-call flag) logs classified before/after
     * images, read back through the changelog. */
-  private val tblPropsN = new java.util.concurrent.atomic.AtomicLong()
   def tblPropsQ(spark: SparkSession, sfDir: String): DataFrame = {
     val wh = tempWarehouse()
-    val cat = s"graft_gate_props${tblPropsN.incrementAndGet()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.store.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    try {
+    withGateCatalog(spark, wh, "props") { cat =>
       val customer = Tables.customer(spark, sfDir)
       KeyedTable.toSql(customer, wh, "customer", pk = Seq("c_custkey"))
       spark.sql(
@@ -706,9 +667,6 @@ object PbQueries {
       KeyedTable.readChangelog(spark, wh, "customer")
         .select(col("c_custkey"), col("op"),
           col("new_c_acctbal").cast("double").as("new_c_acctbal"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      spark.conf.unset(s"spark.sql.catalog.$cat")
     }
   }
 
@@ -859,8 +817,6 @@ object PbQueries {
     KeyedTable.readSql(spark, wh, "customer")
   }
 
-  private val sinkN = new java.util.concurrent.atomic.AtomicLong()
-
   /** #11at (`pb_stream_sink`): the keyed table as a NATIVE Structured
     * Streaming SINK — `df.writeStream.toTable("graft.t")` drains a file
     * backlog through [[graft.store.KeyedStreamingWrite]] (executors
@@ -869,10 +825,6 @@ object PbQueries {
     * over replay) and the converged table equals the batch result. */
   def streamSinkQ(spark: SparkSession, sfDir: String): DataFrame = {
     val wh = tempWarehouse()
-    val cat = s"graft_gate_sink${sinkN.incrementAndGet()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.store.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
     val customer = Tables.customer(spark, sfDir)
     // head seeds the table; the tail arrives as the streaming backlog
     KeyedTable.toSql(customer.filter(col("c_custkey") % 10 === 0),
@@ -881,20 +833,20 @@ object PbQueries {
     customer.filter(col("c_custkey") % 10 =!= 0)
       .write.mode("overwrite").parquet(src)
     val ck = graft.TempDirs.tempDir("graft-sink-ck-")
-    spark.readStream.schema(customer.schema).parquet(src)
-      .writeStream
-      .option("checkpointLocation", ck)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .toTable(s"$cat.customer")
-      .awaitTermination()
+    withGateCatalog(spark, wh, "sink") { cat =>
+      spark.readStream.schema(customer.schema).parquet(src)
+        .writeStream
+        .option("checkpointLocation", ck)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .toTable(s"$cat.customer")
+        .awaitTermination()
+    }
     val m = graft.store.Manifest.current(spark,
       graft.store.KeyedTable.tableDir(wh, "customer"))
     require(m.streams.nonEmpty && m.op.contains("stream"),
       "the sink must commit through the manifest epoch ledger")
     KeyedTable.readSql(spark, wh, "customer")
   }
-
-  private val usinkN = new java.util.concurrent.atomic.AtomicLong()
 
   /** #11av (`pb_stream_upsert_sink`): the native sink in UPSERT mode —
     * `windowedAgg(stream).writeStream.outputMode(Update)
@@ -906,10 +858,6 @@ object PbQueries {
     * overwrite; convergence to the batch aggregate is the oracle. */
   def streamUpsertSinkQ(spark: SparkSession, sfDir: String): DataFrame = {
     val wh = tempWarehouse()
-    val cat = s"graft_gate_usink${usinkN.incrementAndGet()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.store.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
     // This row's cost is TRIGGER SCHEDULING, not data volume (sf1/sf0.1
     // slope ~1.0×): the windowed aggregate emits a few hundred groups,
     // but every micro-batch commits one state-store delta + checkpoint
@@ -938,14 +886,16 @@ object PbQueries {
     val stream = Tables.normalizeEventsTs(
       spark.readStream.schema(sch).parquet(srcDir.toString))
     val ck = graft.TempDirs.tempDir("graft-usink-ck-")
-    graft.streaming.StreamingIngest.windowedAgg(stream)
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", ck)
-      .option("sink_mode", "upsert")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .toTable(s"$cat.win_agg")
-      .awaitTermination()
+    withGateCatalog(spark, wh, "usink") { cat =>
+      graft.streaming.StreamingIngest.windowedAgg(stream)
+        .writeStream
+        .outputMode("update")
+        .option("checkpointLocation", ck)
+        .option("sink_mode", "upsert")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .toTable(s"$cat.win_agg")
+        .awaitTermination()
+    }
     val m = graft.store.Manifest.current(spark,
       graft.store.KeyedTable.tableDir(wh, "win_agg"))
     require(m.streams.nonEmpty,
@@ -1329,22 +1279,14 @@ object PbQueries {
     * routes through the store's own bucket-pruned delete (writer lock,
     * manifest commit, SQL NULL semantics). Fresh catalog name per
     * invocation (instances cache by name). */
-  private val sqlDeleteN = new java.util.concurrent.atomic.AtomicLong()
   def sqlDelete(spark: SparkSession, sfDir: String): DataFrame = {
     val wh = tempWarehouse()
-    val cat = s"graft_gate_del${sqlDeleteN.incrementAndGet()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.store.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    try {
+    withGateCatalog(spark, wh, "del") { cat =>
       KeyedTable.toSql(Tables.customer(spark, sfDir), wh, "customer",
         pk = Seq("c_custkey"))
       spark.sql(s"""DELETE FROM $cat.customer
         WHERE c_custkey <= 500 AND c_mktsegment = 'BUILDING'""")
       KeyedTable.readSql(spark, wh, "customer")
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      spark.conf.unset(s"spark.sql.catalog.$cat")
     }
   }
 
@@ -1356,7 +1298,6 @@ object PbQueries {
     * both the manifest and (via union-liveness) its data files. The
     * 100 TB story: "the train-v3 corpus cut stays reproducible" no
     * matter how aggressively maintenance reclaims space. */
-  private val tagN = new java.util.concurrent.atomic.AtomicLong()
   def tagQ(spark: SparkSession, sfDir: String): DataFrame = {
     val wh = tempWarehouse()
     val customer = Tables.customer(spark, sfDir)
@@ -1368,19 +1309,10 @@ object PbQueries {
         .withColumn("c_acctbal", col("c_acctbal") + 100.0),
       wh, "customer", pk = Seq("c_custkey"), how = WriteMode.Upsert) // v1
     KeyedTable.vacuum(spark, wh, "customer", olderThanMs = 0L)
-    val cat = s"graft_gate_tag${tagN.incrementAndGet()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.store.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    try {
-      val out = spark.sql(
+    withGateCatalog(spark, wh, "tag") { cat =>
+      collected(spark.sql(
         s"SELECT * FROM $cat.customer VERSION AS OF 'baseline'")
-        .drop(KeyedTable.BucketCol)
-      out.cache().count() // materialize before the catalog conf is unset
-      out
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      spark.conf.unset(s"spark.sql.catalog.$cat")
+        .drop(KeyedTable.BucketCol))
     }
   }
 
@@ -1630,14 +1562,9 @@ object PbQueries {
     * one-pass replay regardless of commit order. The ops story: an
     * orchestrated Spark-SQL-only pipeline (the common case) gets the
     * multi-writer contract without touching the programmatic API. */
-  private val sqlOptN = new java.util.concurrent.atomic.AtomicLong()
   def sqlOptimisticQ(spark: SparkSession, sfDir: String): DataFrame = {
     val wh = tempWarehouse()
-    val cat = s"graft_gate_opt${sqlOptN.incrementAndGet()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.store.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    try {
+    withGateCatalog(spark, wh, "opt") { cat =>
       KeyedTable.toSql(Tables.customer(spark, sfDir), wh, "customer",
         pk = Seq("c_custkey"), buckets = 8)
       spark.sql(s"ALTER TABLE $cat.customer " +
@@ -1667,9 +1594,6 @@ object PbQueries {
       // translates to a V2 source Filter (modulo does not)
       spark.sql(s"DELETE FROM $cat.customer WHERE c_custkey <= 10")
       KeyedTable.readSql(spark, wh, "customer")
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      spark.conf.unset(s"spark.sql.catalog.$cat")
     }
   }
 
@@ -1682,14 +1606,9 @@ object PbQueries {
     * UPDATE through the catalog, a predicate delete OVER the renamed
     * column, and the final read — against an oracle replaying the
     * same arithmetic on the original name. */
-  private val renameN = new java.util.concurrent.atomic.AtomicLong()
   def renameColumnQ(spark: SparkSession, sfDir: String): DataFrame = {
     val wh = tempWarehouse()
-    val cat = s"graft_gate_rn${renameN.incrementAndGet()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.store.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    try {
+    withGateCatalog(spark, wh, "rn") { cat =>
       val customer = Tables.customer(spark, sfDir)
       KeyedTable.toSql(customer, wh, "customer", pk = Seq("c_custkey"),
         buckets = 8)
@@ -1707,9 +1626,6 @@ object PbQueries {
       KeyedTable.delete(spark, wh, "customer",
         col("balance") < 0.0 && col("c_custkey") % 3 === 0)
       KeyedTable.readSql(spark, wh, "customer")
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      spark.conf.unset(s"spark.sql.catalog.$cat")
     }
   }
 
@@ -1815,14 +1731,9 @@ object PbQueries {
     * then `ALTER TABLE … DROP COLUMN` (metadata-only tombstone) — all
     * through the catalog, zero data rewrites except the UPDATE's own
     * bucket-pruned one. */
-  private val sqlAltN = new java.util.concurrent.atomic.AtomicLong()
   def sqlAlter(spark: SparkSession, sfDir: String): DataFrame = {
     val wh = tempWarehouse()
-    val cat = s"graft_gate_alt${sqlAltN.incrementAndGet()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.store.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    try {
+    withGateCatalog(spark, wh, "alt") { cat =>
       KeyedTable.toSql(Tables.customer(spark, sfDir), wh, "customer",
         pk = Seq("c_custkey"))
       spark.sql(s"ALTER TABLE $cat.customer ADD COLUMNS (c_extra DOUBLE)")
@@ -1830,9 +1741,6 @@ object PbQueries {
         WHERE c_custkey % 2 = 0""")
       spark.sql(s"ALTER TABLE $cat.customer DROP COLUMN c_mktsegment")
       KeyedTable.readSql(spark, wh, "customer")
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      spark.conf.unset(s"spark.sql.catalog.$cat")
     }
   }
 
@@ -1841,7 +1749,6 @@ object PbQueries {
     * how big was each, which are pinned" entirely from manifests:
     * zero data IO, a driver-local scan with no executor tasks. The
     * observability surface retention/maintenance decisions read. */
-  private val metaTN = new java.util.concurrent.atomic.AtomicLong()
   def metaTablesQ(spark: SparkSession, sfDir: String): DataFrame = {
     val wh = tempWarehouse()
     val customer = Tables.customer(spark, sfDir)
@@ -1850,19 +1757,10 @@ object PbQueries {
     KeyedTable.tagSnapshot(spark, wh, "customer", "cut")
     KeyedTable.toSql(customer.filter(col("c_custkey") % 2 === 1),
       wh, "customer", pk = Seq("c_custkey"), how = WriteMode.Append) // v1
-    val cat = s"graft_gate_meta${metaTN.incrementAndGet()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.store.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    try {
-      val out = spark.sql(
+    withGateCatalog(spark, wh, "meta") { cat =>
+      collected(spark.sql(
         s"SELECT h.version, h.n_rows, t.tag FROM $cat.`customer" + "$history` h " +
-        s"LEFT JOIN $cat.`customer" + "$tags` t ON h.version = t.version")
-      out.cache().count() // materialize before the catalog conf is unset
-      out
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      spark.conf.unset(s"spark.sql.catalog.$cat")
+        s"LEFT JOIN $cat.`customer" + "$tags` t ON h.version = t.version"))
     }
   }
 
@@ -1872,25 +1770,15 @@ object PbQueries {
     * as a driver-local scan, zero executor tasks, zero data bytes. The
     * row pins the VALUES against DuckDB's full-scan answer (the
     * LocalScan plan shape is pinned by AggPushdownSpec). */
-  private val aggPdN = new java.util.concurrent.atomic.AtomicLong()
   def aggPushdownQ(spark: SparkSession, sfDir: String): DataFrame = {
     val wh = tempWarehouse()
     KeyedTable.toSql(Tables.orders(spark, sfDir), wh, "orders",
       pk = Seq("o_orderkey"), strictUtc = false)
-    val cat = s"graft_gate_aggpd${aggPdN.incrementAndGet()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.store.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    try {
-      val out = spark.sql(
+    withGateCatalog(spark, wh, "aggpd") { cat =>
+      collected(spark.sql(
         s"""SELECT count(*) AS n, count(o_custkey) AS n_cust,
            min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
-           FROM $cat.orders""")
-      out.cache().count() // materialize before the catalog conf is unset
-      out
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      spark.conf.unset(s"spark.sql.catalog.$cat")
+           FROM $cat.orders"""))
     }
   }
 
@@ -1898,24 +1786,14 @@ object PbQueries {
     * reference's `schema=` kwarg — end-to-end: write into schema `raw`,
     * read back through the two-level SQL identifier `cat.raw.customer`
     * after creating the namespace through SQL DDL. */
-  private val nsN = new java.util.concurrent.atomic.AtomicLong()
   def namespaceQ(spark: SparkSession, sfDir: String): DataFrame = {
     val wh = tempWarehouse()
-    val cat = s"graft_gate_ns${nsN.incrementAndGet()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.store.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    try {
+    withGateCatalog(spark, wh, "ns") { cat =>
       spark.sql(s"CREATE NAMESPACE $cat.raw")
       KeyedTable.toSql(Tables.customer(spark, sfDir), wh, "customer",
         pk = Seq("c_custkey"), schema = Some("raw"))
-      val out = spark.sql(s"SELECT * FROM $cat.raw.customer")
-        .drop(KeyedTable.BucketCol)
-      out.cache().count() // materialize before the catalog conf is unset
-      out
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      spark.conf.unset(s"spark.sql.catalog.$cat")
+      collected(spark.sql(s"SELECT * FROM $cat.raw.customer")
+        .drop(KeyedTable.BucketCol))
     }
   }
 

@@ -506,7 +506,9 @@ object KeyedTable {
     // buckets are in play), so a lag()-window duplicate flag
     // partitioned by that same column rides the very same
     // exchange+sort (no new Exchange, no new Sort) and gives
-    // distinct = total − dups exactly.
+    // distinct = total − dups exactly. These are create's own writers,
+    // not the bucket stager: no commit pin exists before the table, and
+    // the validation rides the write.
     val staging = s"$dir/.staging-create-${UUID.randomUUID()}"
     try {
       val wantPk = validate && !autoIndex
@@ -944,15 +946,50 @@ object KeyedTable {
     }
   }
 
-  /** `rows` as changelog `insert` images over `schema`: every row is
-    * new, so each `old_<c>` is NULL — an append's and an append-mode
-    * sink epoch's batch. */
-  private def insertImages(rows: DataFrame, pk: Seq[String],
-                           schema: StructType): DataFrame = {
+  /** One side of a change — its pre-image or its post-image: the rows
+    * of a classified frame that hold it (`present`) and its value of
+    * each column. */
+  private final case class Image(present: Column, value: String => Column)
+
+  /** The side every row holds, valued by the row's own columns. */
+  private val Present = Image(lit(true), col)
+
+  /** The side no row holds: an insert's pre-image, a delete's
+    * post-image. */
+  private val Absent = Image(lit(false), _ => lit(null))
+
+  /** THE CHANGELOG CLASSIFIER — the one place a batch's rows are
+    * decided: every verb's images, the stream epochs' and
+    * [[diffImages]]. Over `rows` it emits (pk…, op, old_<c>, new_<c>, …),
+    * the non-PK columns in `schema` order and typed by it:
+    *  - a row present on neither side is dropped (a tombstone for an
+    *    absent key changed nothing);
+    *  - `old_*` is NULL on an `insert`, `new_*` NULL on a `delete`;
+    *  - a row on both sides is an `update` when a `compared` column
+    *    differs (null-safe `<=>`), else `unchanged` — the incoming value
+    *    columns of a partial upsert, an update's SET keys, every non-PK
+    *    column otherwise. `unchanged` rows are kept for the verbs and
+    *    dropped for the snapshot diff (`keepUnchanged = false`).
+    * `key` reads a PK column (a USING join's merged key by default). */
+  private def changes(rows: DataFrame, schema: StructType, pk: Seq[String],
+                      pre: Image, post: Image, compared: Seq[String],
+                      keepUnchanged: Boolean = true,
+                      key: String => Column = col): DataFrame = {
+    val changed = compared.map(c => !(pre.value(c) <=> post.value(c)))
+      .reduceOption(_ || _).getOrElse(lit(false))
     val images = schema.fieldNames.filterNot(pk.contains).toSeq.flatMap { c =>
-      Seq(lit(null).cast(schema(c).dataType).as(s"old_$c"), col(c).as(s"new_$c"))
+      val t = schema(c).dataType
+      Seq(when(pre.present, pre.value(c)).cast(t).as(s"old_$c"),
+        when(post.present, post.value(c)).cast(t).as(s"new_$c"))
     }
-    rows.select(pk.map(col) ++ (lit("insert").as("op") +: images): _*)
+    val op = when(!pre.present, lit("insert"))
+      .when(!post.present, lit("delete"))
+      .when(changed, lit("update"))
+      .otherwise(lit("unchanged"))
+    val kept = pre.present || post.present
+    rows.filter(if (keepUnchanged) kept
+                else kept && (!pre.present || !post.present || changed))
+      .select(pk.map(c => key(c).as(c)) ++ (op.as("op") +: images): _*)
   }
 
   /** Next `_changelog/batch=<n>` target. Batch numbers are monotonic
@@ -1128,10 +1165,10 @@ object KeyedTable {
         // the one job a duplicate check alone would cost
         validateAndTouched(staged, meta0.pk, wantPk = true)
         enforceChecks(staged, meta0.checks, "stream-sink")
-        val nonPk = meta0.schema.fieldNames.filterNot(meta0.pk.contains).toSeq
         // append mode: the epoch's rows as ONE insert-image batch (no
         // pre-image join — base-independent, so never re-derived)
-        def inserts: DataFrame = insertImages(staged, meta0.pk, meta0.schema)
+        def inserts: DataFrame =
+          changes(staged, meta0.schema, meta0.pk, Absent, Present, Nil)
         // upsert mode: the merge-on-read decomposition against a given
         // base — pre-image join classifies CDC images and collects the
         // matched rows' (bucket, file, pos) tombstones, returned staged
@@ -1141,27 +1178,12 @@ object KeyedTable {
             .filter(col(BucketCol).isin(touched: _*))
           val j = staged.as("n")
             .join(oldPos.as("o"), metaM.pk.toIndexedSeq, "left")
-          val presentOld = col(s"o.$BucketCol").isNotNull
-          if (metaM.changelog) {
-            val changedCond = nonPk
-              .map(c => !(col(s"n.$c") <=> col(s"o.$c")))
-              .foldLeft(lit(false))(_ || _)
-            val images = nonPk.flatMap { c =>
-              Seq(col(s"o.$c").as(s"old_$c"), col(s"n.$c").as(s"new_$c"))
-            }
-            tx.log(j.select(
-              metaM.pk.map(col) ++ (
-                when(!presentOld, lit("insert"))
-                  .when(changedCond, lit("update"))
-                  .otherwise(lit("unchanged")).as("op") +: images): _*))
-          }
-          val dvStaging = tx.staging("stream-dv")
-          j.filter(presentOld)
-            .select(col(s"o.$BucketCol").as(BucketCol),
-              col(s"o.$FileCol").as("file"), col(s"o.$PosCol").as("pos"))
-            .transform(clusterByBucket(_, touched, Seq("file", "pos")))
-            .write.partitionBy(BucketCol).parquet(dvStaging)
-          stageFiles(spark, f, dvStaging, Nil)
+          val old = Image(col(s"o.$BucketCol").isNotNull, c => col(s"o.$c"))
+          if (metaM.changelog)
+            tx.log(changes(j, metaM.schema, metaM.pk, old,
+              Image(lit(true), c => col(s"n.$c")),
+              metaM.schema.fieldNames.filterNot(metaM.pk.contains).toSeq))
+          tx.stageDvs("stream-dv", j.filter(old.present), touched, old.value)
         }
         if (upsertMode)
           // the DVs must tombstone COMMIT-TIME positions: re-derived in
@@ -1419,8 +1441,9 @@ object KeyedTable {
   }
 
   /** One commit's pin and scratch, handed to a committer's stage phase
-    * by [[commit]]: the meta and manifest it stages against, the
-    * staging dirs and cached frames it creates, and its changelog batch
+    * by [[commit]]: the meta and manifest it stages against, its two
+    * stagers (data files, delete vectors), the staging dirs and cached
+    * frames it creates, and its changelog batch
     * (see [[readChangelog]]) — staged from the pinned pre-image beside
     * the data write, renamed to the next batch number only after the
     * flip, so a failed mutation leaves no batch claiming changes that
@@ -1439,6 +1462,39 @@ object KeyedTable {
       dirs += s"$dir/.staging-$kind-${UUID.randomUUID()}"
       dirs.last
     }
+
+    /** THE BUCKET STAGER — every data write a committer stages (append,
+      * upsert and merge, update, delete, compact, rebucket): `rows`
+      * (logical names, `pb_bucket` set) clustered over the buckets
+      * `inPlay` and sorted by `meta`'s PK ([[clusterByBucket]]), written
+      * under their physical names ([[toPhys]]) to a fresh
+      * `.staging-<kind>-*` dir and staged with `meta`'s stat columns
+      * ([[stageFiles]]). create and zorderCompact keep their own
+      * writers: create's fuses its validation into the write before any
+      * table exists, zorder's sorts by a transient Morton column and
+      * caps the row-group size. */
+    def stageBuckets(kind: String, rows: DataFrame, inPlay: Seq[Int],
+                     meta: TableMeta): Map[Int, Seq[Staged]] = {
+      val out = staging(kind)
+      toPhys(clusterByBucket(rows, inPlay, meta.pk), meta)
+        .write.partitionBy(BucketCol).parquet(out)
+      stageFiles(spark, f, out, statColsTypedOf(meta))
+    }
+
+    /** THE DV STAGER — a merge-on-read commit's delete vectors: the
+      * (bucket, file, pos) identities of `rows`' pre-image (`pre` reads
+      * its columns), one sidecar per touched bucket sorted by (file,
+      * pos), staged under a fresh `.staging-<kind>-*` dir. */
+    def stageDvs(kind: String, rows: DataFrame, touched: Seq[Int],
+                 pre: String => Column = col): Map[Int, Seq[Staged]] = {
+      val out = staging(kind)
+      rows.select(pre(BucketCol).as(BucketCol), pre(FileCol).as("file"),
+          pre(PosCol).as("pos"))
+        .transform(clusterByBucket(_, touched, Seq("file", "pos")))
+        .write.partitionBy(BucketCol).parquet(out)
+      stageFiles(spark, f, out, Nil)
+    }
+
     def persist(df: DataFrame): DataFrame = synchronized {
       cached += df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df
@@ -1694,19 +1750,19 @@ object KeyedTable {
           (a, e, tx.meta)
         }
       val newB = tx.persist(withBucket(aligned0, metaUsed.pk, tx.base.buckets))
-      def inserts: DataFrame = insertImages(newB, metaUsed.pk, evolved)
+      def inserts: DataFrame =
+        changes(newB, evolved, metaUsed.pk, Absent, Present, Nil)
       enforceChecks(newB, metaUsed.checks, label)
       // validate AFTER persist so the (possibly expensive) incoming
       // pipeline is computed once; one fused job answers the PK check
       // and the touched-bucket set off the cache
       val touched = validateAndTouched(newB, metaUsed.pk,
         validate && !metaUsed.autoIndex)
-      val staging = tx.staging("append")
       // the overlap probe and the insert images read only the pinned
       // snapshot and the cached delta — independent of the staging
       // write, so the jobs overlap (guide §2.6); the first failure
       // cancels the other side's jobs
-      inParallel(spark)(
+      val (_, files) = inParallel(spark)(
         {
           if (!metaUsed.autoIndex) {
             val old = scanAt(spark, wh, tableName, metaUsed, tx.base)
@@ -1720,11 +1776,9 @@ object KeyedTable {
           }
           if (wantChangelog) tx.log(inserts)
         },
-        toPhys(clusterByBucket(newB, touched, metaUsed.pk), metaUsed)
-          .write.partitionBy(BucketCol).parquet(staging))
-      Some(Flip((), stageFiles(spark, tx.f, staging, statColsTypedOf(metaUsed)),
-        extend = true, evolved = Some(evolved), rows = Some(() => newB),
-        images = Some(() => inserts), cdc = wantChangelog,
+        tx.stageBuckets("append", newB, touched, metaUsed))
+      Some(Flip((), files, extend = true, evolved = Some(evolved),
+        rows = Some(() => newB), images = Some(() => inserts), cdc = wantChangelog,
         recheck = (meta, latest) => {
           if (!metaUsed.autoIndex) {
             val clash = addedKeys(spark, wh, tableName, meta, tx.base,
@@ -1844,8 +1898,6 @@ object KeyedTable {
       val (aligned, evolved) = align(df, meta0, addNewColumns,
         passthrough = if (tombstoned) Set(MergeDelCol) else Set.empty)
       val newB = tx.persist(withBucket(aligned, meta0.pk, base0.buckets))
-      val staging = tx.staging(verb)
-      val dvStaging = tx.staging(s"$verb-dv")
       val touched = validateAndTouched(newB, meta0.pk, validate)
       // read with the evolved schema: old files yield NULL for new columns
       val oldTouched = scanAt(spark, wh, tableName,
@@ -1853,13 +1905,13 @@ object KeyedTable {
         .filter(col(BucketCol).isin(touched: _*))
       val marked = newB.withColumn("_graft_new", lit(true))
       val newRow = col("n._graft_new").isNotNull
-      // the target row exists (every join below aliases it "o")
-      val presentOld = col(s"o.$BucketCol").isNotNull
+      // the target row, where it exists (every join below aliases it "o")
+      val old = Image(col(s"o.$BucketCol").isNotNull, c => col(s"o.$c"))
       val del: Column = {
         val flag =
           if (tombstoned) coalesce(col(s"n.$MergeDelCol"), lit(false))
           else lit(false)
-        if (deleteOnlyMatched) flag && presentOld else flag
+        if (deleteOnlyMatched) flag && old.present else flag
       }
       // the rows this verb WRITES: tombstones remove rows and are
       // exempt — except an unmatched one under deleteOnlyMatched, an
@@ -1881,31 +1933,16 @@ object KeyedTable {
         if (incomingCols.contains(c))
           when(newRow, col(s"n.$c")).otherwise(col(s"o.$c"))
         else col(s"o.$c")
-      def images: DataFrame = {
-        val valueCols = incomingCols.toSeq
-          .filterNot(meta0.pk.contains).filter(nonPk.contains).sorted
-        val changedCond = valueCols
-          .map(c => !(col(s"n.$c") <=> col(s"o.$c")))
-          .reduceOption(_ || _).getOrElse(lit(false))
-        // a tombstoned match is a delete: post-image NULL
-        val cols = nonPk.flatMap { c =>
-          Seq(col(s"o.$c").as(s"old_$c"),
-            when(del, lit(null)).otherwise(post(c)).as(s"new_$c"))
-        }
-        marked.as("n")
-          .join(oldTouched.as("o"), meta0.pk.toIndexedSeq, "left")
-          // a tombstone for an ABSENT key changed nothing — no log row
-          .filter(!(del && !presentOld))
-          .select(meta0.pk.map(col) ++ (
-            when(del, lit("delete"))
-              .when(!presentOld, lit("insert"))
-              .when(changedCond, lit("update"))
-              .otherwise(lit("unchanged")).as("op") +: cols): _*)
-      }
+      // a tombstoned match is a delete; the incoming value columns
+      // decide update vs unchanged
+      def images: DataFrame = changes(
+        marked.as("n").join(oldTouched.as("o"), meta0.pk.toIndexedSeq, "left"),
+        evolved, meta0.pk, old, Image(!del, post),
+        nonPk.filter(incomingCols.contains).sorted)
       val statAggs = Seq(
-        coalesce(sum(when(newRow && !del && !presentOld, 1L).otherwise(0L)), lit(0L)).as("ins"),
-        coalesce(sum(when(newRow && !del && presentOld, 1L).otherwise(0L)), lit(0L)).as("upd"),
-        coalesce(sum(when(del && presentOld, 1L).otherwise(0L)), lit(0L)).as("del"))
+        coalesce(sum(when(newRow && !del && !old.present, 1L).otherwise(0L)), lit(0L)).as("ins"),
+        coalesce(sum(when(newRow && !del && old.present, 1L).otherwise(0L)), lit(0L)).as("upd"),
+        coalesce(sum(when(del && old.present, 1L).otherwise(0L)), lit(0L)).as("del"))
       val statsEarly: Option[(Long, Long, Long)] =
         if (tombstoned && mode == DeleteMode.Auto) {
           val r = marked.as("n")
@@ -1924,47 +1961,43 @@ object KeyedTable {
       // file; inserts are additive anyway
       val mor = tombstoned && morDecision(base0, mode, touched,
         statsEarly.map(s => s._2 + s._3).getOrElse(0L))
-      if (mor) {
-        // one LEFT join of the delta against the touched buckets'
-        // position-exposing read, persisted so the DV and post-image
-        // writes consume ONE compute of it
-        val oldPos = withPositions(scanAt(spark, wh, tableName,
-            meta0.copy(schema = evolved), base0))
-          .filter(col(BucketCol).isin(touched: _*))
-        val j = marked.as("n")
-          .join(oldPos.as("o"), meta0.pk.toIndexedSeq, "left")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try inParallel(spark)(
-          if (wantChangelog) tx.log(images),
-          {
-            observeStats(j).filter(presentOld)
-              .select(col(s"o.$BucketCol").as(BucketCol),
-                col(s"o.$FileCol").as("file"), col(s"o.$PosCol").as("pos"))
-              .transform(clusterByBucket(_, touched, Seq("file", "pos")))
-              .write.partitionBy(BucketCol).parquet(dvStaging)
-            toPhys(j.filter(!del)
-              .select(meta0.pk.map(col) ++ nonPk.map(c => post(c).as(c)) :+
-                col(s"n.$BucketCol").as(BucketCol): _*)
-              .transform(clusterByBucket(_, touched, meta0.pk)), meta0)
-              .write.partitionBy(BucketCol).parquet(staging)
-          })
-        finally j.unpersist()
-      } else {
-        // one full-outer merge per touched bucket: survivors keep old
-        // rows, matches take incoming values for incoming columns,
-        // inserts take incoming values, tombstoned matches drop out;
-        // the observe node sits before the tombstone filter so every
-        // counter sees every joined row
-        val out = observeStats(oldTouched.as("o")
-            .join(marked.as("n"), meta0.pk.toIndexedSeq, "full_outer"))
-          .filter(!del)
-          .select(meta0.pk.map(col) ++ nonPk.map(c => post(c).as(c)) :+
-            coalesce(col(s"n.$BucketCol"), col(s"o.$BucketCol")).as(BucketCol): _*)
-        inParallel(spark)(
-          if (wantChangelog) tx.log(images),
-          toPhys(clusterByBucket(out, touched, meta0.pk), meta0)
-            .write.partitionBy(BucketCol).parquet(staging))
-      }
+      val (_, (files, dvs)) =
+        if (mor) {
+          // one LEFT join of the delta against the touched buckets'
+          // position-exposing read, persisted so the DV and post-image
+          // writes consume ONE compute of it
+          val oldPos = withPositions(scanAt(spark, wh, tableName,
+              meta0.copy(schema = evolved), base0))
+            .filter(col(BucketCol).isin(touched: _*))
+          val j = marked.as("n")
+            .join(oldPos.as("o"), meta0.pk.toIndexedSeq, "left")
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          try inParallel(spark)(
+            if (wantChangelog) tx.log(images),
+            {
+              val sidecars = tx.stageDvs(s"$verb-dv",
+                observeStats(j).filter(old.present), touched, old.value)
+              (tx.stageBuckets(verb, j.filter(!del)
+                .select(meta0.pk.map(col) ++ nonPk.map(c => post(c).as(c)) :+
+                  col(s"n.$BucketCol").as(BucketCol): _*), touched, meta0),
+                sidecars)
+            })
+          finally j.unpersist()
+        } else {
+          // one full-outer merge per touched bucket: survivors keep old
+          // rows, matches take incoming values for incoming columns,
+          // inserts take incoming values, tombstoned matches drop out;
+          // the observe node sits before the tombstone filter so every
+          // counter sees every joined row
+          val out = observeStats(oldTouched.as("o")
+              .join(marked.as("n"), meta0.pk.toIndexedSeq, "full_outer"))
+            .filter(!del)
+            .select(meta0.pk.map(col) ++ nonPk.map(c => post(c).as(c)) :+
+              coalesce(col(s"n.$BucketCol"), col(s"o.$BucketCol")).as(BucketCol): _*)
+          inParallel(spark)(
+            if (wantChangelog) tx.log(images),
+            (tx.stageBuckets(verb, out, touched, meta0), Map.empty[Int, Seq[Staged]]))
+        }
       val counts =
         if (!tombstoned) (0L, 0L, 0L)
         else statsEarly.getOrElse {
@@ -1975,8 +2008,7 @@ object KeyedTable {
       // merge-on-read extends with post-images and DVs; a CoW merge's
       // touched bucket whose rows ALL tombstoned staged no file and
       // leaves the snapshot
-      Some(Flip(counts, stageFiles(spark, tx.f, staging, statColsTypedOf(meta0)),
-        stageFiles(spark, tx.f, dvStaging, Nil), extend = mor,
+      Some(Flip(counts, files, dvs, extend = mor,
         removeMissing = if (tombstoned && !mor) touched else Nil,
         touched = if (strictVersion) 0 until base0.buckets else touched,
         evolved = Some(evolved), rows = Some(() => checkRows),
@@ -2084,7 +2116,10 @@ object KeyedTable {
       val raw = scanAt(spark, wh, tableName, meta0, tx.base)
       // NULL predicate rows are NOT matches (kept unchanged)
       val matched = coalesce(where, lit(false))
-      val probe = raw.filter(matched).groupBy(col(BucketCol))
+      // the matched pre-image: the probe, the checks, the images and the
+      // merge-on-read writes all project from it
+      val hits = raw.filter(matched)
+      val probe = hits.groupBy(col(BucketCol))
         .agg(count(lit(1)).as("n")).collect()
       val touched = probe.map(_.getInt(0)).toSeq
       val nMatched = probe.map(_.getLong(1)).sum
@@ -2096,59 +2131,36 @@ object KeyedTable {
         // the typed post-image of column c on a matched row
         def newVal(c: String): Column =
           set.get(c).map(_.cast(meta0.schema(c).dataType)).getOrElse(col(c))
-        def postImages: DataFrame = raw.filter(matched)
-          .select(meta0.schema.fieldNames.toSeq.map(c => newVal(c).as(c)): _*)
+        val postCols = meta0.schema.fieldNames.toSeq.map(c => newVal(c).as(c))
+        def postImages: DataFrame = hits.select(postCols: _*)
         enforceChecks(postImages, meta0.checks, label)
-        def images: DataFrame = {
-          val nonPk = meta0.schema.fieldNames.filterNot(meta0.pk.contains).toSeq
-          val changedCond = set.keys.toSeq.sorted
-            .map(c => !(newVal(c) <=> col(c)))
-            .reduceOption(_ || _).getOrElse(lit(false))
-          val cols = nonPk.flatMap { c =>
-            Seq(col(c).as(s"old_$c"), newVal(c).as(s"new_$c"))
-          }
-          raw.filter(matched)
-            .select(meta0.pk.map(col) ++ (
-              when(changedCond, lit("update"))
-                .otherwise(lit("unchanged")).as("op") +: cols): _*)
-        }
+        def images: DataFrame = changes(hits, meta0.schema, meta0.pk,
+          Present, Image(lit(true), newVal), set.keys.toSeq.sorted)
         val mor = morDecision(tx.base, mode, touched, nMatched)
-        val staging = tx.staging("update")
-        val dvStaging = tx.staging("update-dv")
-        if (mor) {
-          // one read of the matched set feeds both staged writes
-          val posFrame = withPositions(raw)
-            .filter(matched)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try inParallel(spark)(if (cdc) tx.log(images), {
-            posFrame
-              .select(col(BucketCol), col(FileCol).as("file"),
-                col(PosCol).as("pos"))
-              .transform(clusterByBucket(_, touched, Seq("file", "pos")))
-              .write.partitionBy(BucketCol).parquet(dvStaging)
-            toPhys(posFrame
-              .select(meta0.schema.fieldNames.toSeq
-                .map(c => newVal(c).as(c)) :+ col(BucketCol): _*)
-              .transform(clusterByBucket(_, touched, meta0.pk)),
-              meta0)
-              .write.partitionBy(BucketCol).parquet(staging)
-          })
-          finally posFrame.unpersist()
-        } else {
-          val rewritten = meta0.schema.fieldNames.toSeq.map { c =>
-            (if (set.contains(c)) when(matched, newVal(c)).otherwise(col(c))
-             else col(c)).as(c)
-          } :+ col(BucketCol)
-          inParallel(spark)(if (cdc) tx.log(images),
-            toPhys(raw.filter(col(BucketCol).isin(touched: _*))
-              .select(rewritten: _*)
-              .transform(clusterByBucket(_, touched, meta0.pk)),
-              meta0)
-              .write.partitionBy(BucketCol).parquet(staging))
-        }
+        val (_, (files, dvs)) =
+          if (mor) {
+            // one read of the matched set feeds both staged writes
+            val posFrame = withPositions(hits)
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            try inParallel(spark)(if (cdc) tx.log(images), {
+              val sidecars = tx.stageDvs("update-dv", posFrame, touched)
+              (tx.stageBuckets("update",
+                posFrame.select(postCols :+ col(BucketCol): _*), touched, meta0),
+                sidecars)
+            })
+            finally posFrame.unpersist()
+          } else {
+            val rewritten = meta0.schema.fieldNames.toSeq.map { c =>
+              (if (set.contains(c)) when(matched, newVal(c)).otherwise(col(c))
+               else col(c)).as(c)
+            } :+ col(BucketCol)
+            inParallel(spark)(if (cdc) tx.log(images),
+              (tx.stageBuckets("update",
+                raw.filter(col(BucketCol).isin(touched: _*)).select(rewritten: _*),
+                touched, meta0), Map.empty[Int, Seq[Staged]]))
+          }
         // post-image staging has the same bucket layout in BOTH modes
-        Some(Flip(nMatched, stageFiles(spark, tx.f, staging, statColsTypedOf(meta0)),
-          stageFiles(spark, tx.f, dvStaging, Nil), extend = mor,
+        Some(Flip(nMatched, files, dvs, extend = mor,
           touched = touched, rows = Some(() => postImages),
           images = Some(() => images), cdc = cdc))
       }
@@ -2205,7 +2217,10 @@ object KeyedTable {
       // express the flag — SQL `DELETE FROM graft.t`
       val cdc = changelog || meta0.changelog
       val raw = scanAt(spark, wh, tableName, meta0, tx.base)
-      val probe = raw.filter(where).groupBy(col(BucketCol))
+      // the matched pre-image: the probe, the images and the
+      // merge-on-read positions all project from it
+      val hits = raw.filter(where)
+      val probe = hits.groupBy(col(BucketCol))
         .agg(count(lit(1)).as("n")).collect()
       val touched = probe.map(_.getInt(0)).toSeq
       val deleted = probe.map(_.getLong(1)).sum
@@ -2216,40 +2231,21 @@ object KeyedTable {
       } else {
         // strategy decision from manifest arithmetic alone (zero IO)
         val mor = morDecision(tx.base, mode, touched, deleted)
-        def images: DataFrame = {
-          val nonPk = meta0.schema.fieldNames.filterNot(meta0.pk.contains)
-          val cols = nonPk.toSeq.flatMap { c =>
-            Seq(col(c).as(s"old_$c"),
-              lit(null).cast(meta0.schema(c).dataType).as(s"new_$c"))
-          }
-          raw.filter(where)
-            .select(meta0.pk.map(col) ++ (lit("delete").as("op") +: cols): _*)
-        }
-        val staging = tx.staging("delete")
-        if (mor)
-          // positions sorted by (file, pos) per bucket; the scan
-          // re-applies existing DVs, so no position tombstones twice
-          inParallel(spark)(if (cdc) tx.log(images),
-            withPositions(raw)
-              .filter(coalesce(where, lit(false)))
-              .select(col(BucketCol), col(FileCol).as("file"),
-                col(PosCol).as("pos"))
-              .transform(clusterByBucket(_, touched, Seq("file", "pos")))
-              .write.partitionBy(BucketCol).parquet(staging))
-        else
-          // NULL predicate rows are NOT matches — keep them (a bare
-          // !where would silently drop them)
-          inParallel(spark)(if (cdc) tx.log(images),
-            toPhys(raw.filter(col(BucketCol).isin(touched: _*))
-              .filter(!coalesce(where, lit(false)))
-              .transform(clusterByBucket(_, touched, meta0.pk)),
-              meta0)
-              .write.partitionBy(BucketCol).parquet(staging))
-        // merge-on-read staged DV sidecars, copy-on-write the survivors
-        val staged = stageFiles(spark, tx.f, staging,
-          if (mor) Nil else statColsTypedOf(meta0))
-        Some(Flip(deleted, if (mor) Map.empty else staged,
-          if (mor) staged else Map.empty, extend = mor,
+        def images: DataFrame =
+          changes(hits, meta0.schema, meta0.pk, Present, Absent, Nil)
+        // merge-on-read stages DV sidecars (the scan re-applies existing
+        // DVs, so no position tombstones twice), copy-on-write the
+        // survivors — NULL predicate rows are NOT matches, so they stay
+        // (a bare !where would silently drop them)
+        val (_, (files, dvs)) = inParallel(spark)(if (cdc) tx.log(images),
+          if (mor)
+            (Map.empty[Int, Seq[Staged]],
+              tx.stageDvs("delete", withPositions(hits), touched))
+          else
+            (tx.stageBuckets("delete", raw.filter(col(BucketCol).isin(touched: _*))
+              .filter(!coalesce(where, lit(false))), touched, meta0),
+              Map.empty[Int, Seq[Staged]]))
+        Some(Flip(deleted, files, dvs, extend = mor,
           removeMissing = if (mor) Nil else touched, touched = touched,
           images = Some(() => images), cdc = cdc))
       }
@@ -2388,14 +2384,10 @@ object KeyedTable {
         val bs = crowded(tx.base)
         if (bs.isEmpty) None
         else {
-          val staging = tx.staging("compact")
-          toPhys(scanAt(spark, warehouse, tableName, tx.meta, tx.base)
-            .filter(col(BucketCol).isin(bs: _*))
-            .transform(clusterByBucket(_, bs, tx.meta.pk)),
-            tx.meta)
-            .write.partitionBy(BucketCol).parquet(staging)
-          Some(Flip(bs, stageFiles(spark, tx.f, staging,
-            statColsTypedOf(tx.meta)), touched = bs))
+          Some(Flip(bs, tx.stageBuckets("compact",
+            scanAt(spark, warehouse, tableName, tx.meta, tx.base)
+              .filter(col(BucketCol).isin(bs: _*)), bs, tx.meta),
+            touched = bs))
         }
       }
     }
@@ -2580,7 +2572,9 @@ object KeyedTable {
         if (mins.forall(_.isEmpty)) None // fully NULL/empty table: no-op
         else {
           val staging = tx.staging("zorder")
-          // the sort + rewrite job — OUTSIDE the lock
+          // the sort + rewrite job — OUTSIDE the lock; its own writer,
+          // not the bucket stager: it sorts by a transient Morton column
+          // dropped before the write and caps the row-group size
           val writer = toPhys(raw.withColumn("_z", zValue(zCols.map(col), mins, maxs))
             .transform(clusterByBucket(_, touched, Seq("_z")))
             .drop("_z"), meta0)
@@ -3000,15 +2994,11 @@ object KeyedTable {
           dataDir(warehouse, tableName), "rebucket", "rebucket", ()) { tx =>
         if (tx.base.buckets == newBuckets) None
         else {
-          val staging = tx.staging("rebucket")
           // the full shuffle + rewrite — OUTSIDE the lock
-          toPhys(withBucket(
+          val files = tx.stageBuckets("rebucket", withBucket(
               scanAt(spark, warehouse, tableName, tx.meta, tx.base)
                 .drop(BucketCol),
-              tx.meta.pk, newBuckets)
-            .transform(clusterByBucket(_, 0 until newBuckets, tx.meta.pk)),
-            tx.meta)
-            .write.partitionBy(BucketCol).parquet(staging)
+              tx.meta.pk, newBuckets), 0 until newBuckets, tx.meta)
           // ONE snapshot flip switches both the file set and the bucket
           // count (the manifest carries `buckets`), so no reader can
           // ever pair the old count with the new layout. Old-layout
@@ -3017,7 +3007,7 @@ object KeyedTable {
           // readers of previous snapshots until vacuum. A full rewrite:
           // every live file now carries the current schema, so dropped
           // names may be re-added safely.
-          Some(Flip((), stageFiles(spark, tx.f, staging, statColsTypedOf(tx.meta)),
+          Some(Flip((), files,
             removeMissing = 0 until math.max(tx.base.buckets, newBuckets),
             newBuckets = Some(newBuckets), touched = 0 until tx.base.buckets,
             metaEdit = _.copy(dropped = Nil)))
@@ -3651,9 +3641,9 @@ object KeyedTable {
     * `b` (to) — the core of [[diffImages]], and so of [[snapshotDiff]]
     * (pk + op) and the two CDC image synthesizers (the WAP
     * publish's [[stageWapImages]] and [[restoreSnapshot]]'s row-level
-    * diff — both need the full before/after images). None when manifest
-    * arithmetic alone proves the snapshots hold identical rows (no
-    * bucket changed).
+    * diff — both need the full before/after images). Both sides are
+    * empty when manifest arithmetic alone proves the snapshots hold
+    * identical rows (no bucket changed).
     *
     * Sets the two SPJ session confs as a side effect (they must hold at
     * physical-planning time, which for the lazy public [[snapshotDiff]]
@@ -3673,8 +3663,7 @@ object KeyedTable {
     * join over everything (the rehash moved every row anyway). */
   private def snapshotDiffJoined(spark: SparkSession, wh: String,
                                  tableName: String, meta: TableMeta,
-                                 mFrom: Manifest, mTo: Manifest)
-      : Option[DataFrame] = {
+                                 mFrom: Manifest, mTo: Manifest): DataFrame = {
     val comparable = mFrom.buckets == mTo.buckets
     // bucket pruning off the manifests alone: identical live-file sets
     // (and DV sets — same data files under different delete vectors
@@ -3687,7 +3676,6 @@ object KeyedTable {
         mFrom.dvs.getOrElse(b, Nil).map(_.name).toSet !=
           mTo.dvs.getOrElse(b, Nil).map(_.name).toSet
       })
-    if (changed.exists(_.isEmpty)) return None
     // storage-partitioned join gates (idempotent, session-scoped; the
     // second relaxes exact-match so [pb_bucket] ⊂ [bucket, pk…] still
     // co-partitions — same setup as PkJoin)
@@ -3697,7 +3685,7 @@ object KeyedTable {
     val b0 = KeyedTableSource.readAt(spark, wh, tableName, mTo.version)
     // the changed-bucket filter pushes down to DIRECTORY-level pruning
     // (keptBuckets) while every bucket partition is still emitted, so
-    // the two sides always zip
+    // the two sides always zip; no changed bucket leaves both empty
     val (a1, b1) = changed match {
       case Some(bs) =>
         (a0.filter(col(BucketCol).isin(bs: _*)),
@@ -3710,7 +3698,7 @@ object KeyedTable {
     val cond =
       if (comparable) col(s"a.$BucketCol") === col(s"b.$BucketCol") && pkCond
       else pkCond
-    Some(a.hint("merge").join(b, cond, "full_outer"))
+    a.hint("merge").join(b, cond, "full_outer")
   }
 
   /** Run `body` with the storage-partitioned-join confs
@@ -3748,32 +3736,12 @@ object KeyedTable {
   private[store] def diffImages(spark: SparkSession, wh: String,
                                 ref: String, meta: TableMeta,
                                 mFrom: Manifest, mTo: Manifest): DataFrame = {
-    val nonPk = meta.schema.fieldNames.filterNot(meta.pk.contains).toSeq
-    snapshotDiffJoined(spark, wh, ref, meta, mFrom, mTo) match {
-      case None => // manifest arithmetic proved the snapshots identical
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(
-          meta.pk.map(c => meta.schema(c)) ++
-            (StructField("op", StringType, nullable = false) +:
-              nonPk.flatMap(c => Seq(
-                meta.schema(c).copy(name = s"old_$c", nullable = true),
-                meta.schema(c).copy(name = s"new_$c", nullable = true))))))
-      case Some(joined) =>
-        val aPresent = col(s"a.${meta.pk.head}").isNotNull
-        val bPresent = col(s"b.${meta.pk.head}").isNotNull
-        val changedCond = nonPk.map(c => !(col(s"a.$c") <=> col(s"b.$c")))
-          .foldLeft(lit(false))(_ || _)
-        val images = nonPk.flatMap { c =>
-          Seq(col(s"a.$c").as(s"old_$c"), col(s"b.$c").as(s"new_$c"))
-        }
-        val op = when(!aPresent, lit("insert"))
-          .when(!bPresent, lit("delete"))
-          .otherwise(lit("update"))
-        joined
-          .filter(!aPresent || !bPresent || changedCond)
-          .select(meta.pk.map(c =>
-            coalesce(col(s"a.$c"), col(s"b.$c")).as(c)) ++
-            (op.as("op") +: images): _*)
-    }
+    def side(s: String) =
+      Image(col(s"$s.${meta.pk.head}").isNotNull, c => col(s"$s.$c"))
+    changes(snapshotDiffJoined(spark, wh, ref, meta, mFrom, mTo), meta.schema,
+      meta.pk, side("a"), side("b"),
+      meta.schema.fieldNames.filterNot(meta.pk.contains).toSeq,
+      keepUnchanged = false, key = c => coalesce(col(s"a.$c"), col(s"b.$c")))
   }
 
   /** Toggle the table-property CDC flag (#11l) — the programmatic core
