@@ -968,12 +968,10 @@ object KeyedTable {
     *  - a row on both sides is an `update` when a `compared` column
     *    differs (null-safe `<=>`), else `unchanged` — the incoming value
     *    columns of a partial upsert, an update's SET keys, every non-PK
-    *    column otherwise. `unchanged` rows are kept for the verbs and
-    *    dropped for the snapshot diff (`keepUnchanged = false`).
+    *    column otherwise.
     * `key` reads a PK column (a USING join's merged key by default). */
   private def changes(rows: DataFrame, schema: StructType, pk: Seq[String],
                       pre: Image, post: Image, compared: Seq[String],
-                      keepUnchanged: Boolean = true,
                       key: String => Column = col): DataFrame = {
     val changed = compared.map(c => !(pre.value(c) <=> post.value(c)))
       .reduceOption(_ || _).getOrElse(lit(false))
@@ -986,9 +984,7 @@ object KeyedTable {
       .when(!post.present, lit("delete"))
       .when(changed, lit("update"))
       .otherwise(lit("unchanged"))
-    val kept = pre.present || post.present
-    rows.filter(if (keepUnchanged) kept
-                else kept && (!pre.present || !post.present || changed))
+    rows.filter(pre.present || post.present)
       .select(pk.map(c => key(c).as(c)) ++ (op.as("op") +: images): _*)
   }
 
@@ -3641,9 +3637,10 @@ object KeyedTable {
     * `b` (to) — the core of [[diffImages]], and so of [[snapshotDiff]]
     * (pk + op) and the two CDC image synthesizers (the WAP
     * publish's [[stageWapImages]] and [[restoreSnapshot]]'s row-level
-    * diff — both need the full before/after images). Both sides are
-    * empty when manifest arithmetic alone proves the snapshots hold
-    * identical rows (no bucket changed).
+    * diff — both need the full before/after images). When manifest
+    * arithmetic alone proves the snapshots hold identical rows (no
+    * bucket changed), both sides are empty local relations: the diff
+    * reads nothing, not even the table's metadata.
     *
     * Sets the two SPJ session confs as a side effect (they must hold at
     * physical-planning time, which for the lazy public [[snapshotDiff]]
@@ -3679,21 +3676,23 @@ object KeyedTable {
     // storage-partitioned join gates (idempotent, session-scoped; the
     // second relaxes exact-match so [pb_bucket] ⊂ [bucket, pk…] still
     // co-partitions — same setup as PkJoin)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    val a0 = KeyedTableSource.readAt(spark, wh, tableName, mFrom.version)
-    val b0 = KeyedTableSource.readAt(spark, wh, tableName, mTo.version)
+    if (!changed.exists(_.isEmpty)) {
+      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+      spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
+    }
     // the changed-bucket filter pushes down to DIRECTORY-level pruning
     // (keptBuckets) while every bucket partition is still emitted, so
-    // the two sides always zip; no changed bucket leaves both empty
-    val (a1, b1) = changed match {
-      case Some(bs) =>
-        (a0.filter(col(BucketCol).isin(bs: _*)),
-         b0.filter(col(BucketCol).isin(bs: _*)))
-      case None => (a0, b0)
+    // the two sides always zip
+    def side(version: Long): DataFrame = changed match {
+      case Some(bs) if bs.isEmpty =>
+        spark.createDataFrame(java.util.Collections.emptyList[Row](),
+          meta.schema.add(BucketCol, IntegerType))
+      case Some(bs) => KeyedTableSource.readAt(spark, wh, tableName, version)
+        .filter(col(BucketCol).isin(bs: _*))
+      case None => KeyedTableSource.readAt(spark, wh, tableName, version)
     }
-    val a = a1.alias("a")
-    val b = b1.alias("b")
+    val a = side(mFrom.version).alias("a")
+    val b = side(mTo.version).alias("b")
     val pkCond = meta.pk.map(c => col(s"a.$c") === col(s"b.$c")).reduce(_ && _)
     val cond =
       if (comparable) col(s"a.$BucketCol") === col(s"b.$BucketCol") && pkCond
@@ -3741,7 +3740,8 @@ object KeyedTable {
     changes(snapshotDiffJoined(spark, wh, ref, meta, mFrom, mTo), meta.schema,
       meta.pk, side("a"), side("b"),
       meta.schema.fieldNames.filterNot(meta.pk.contains).toSeq,
-      keepUnchanged = false, key = c => coalesce(col(s"a.$c"), col(s"b.$c")))
+      key = c => coalesce(col(s"a.$c"), col(s"b.$c")))
+      .filter(col("op") =!= "unchanged")
   }
 
   /** Toggle the table-property CDC flag (#11l) — the programmatic core

@@ -1,6 +1,8 @@
 package graft.store
 
+import org.apache.spark.JobCounter.jobsRunBy
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
@@ -116,5 +118,27 @@ class DiffImagesSpec extends SparkSpec {
     val last = KeyedTable.readChangelog(spark, wh, t)
       .orderBy(col("batch").desc).limit(1).collect()(0)
     assert(last.getAs[String]("op") == "update")
+  }
+
+  test("a diff of identical snapshots plans no scan and runs no job") {
+    val t = "t_identical"
+    KeyedTable.toSql((1L to 50L).map(k => (k, s"g$k", k * 1.0))
+      .toDF("id", "g", "v"), wh, t, pk = Seq("id"), buckets = 4)
+    KeyedTable.toSql(Seq((1L, "x", 9.0)).toDF("id", "g", "v"), wh, t,
+      pk = Seq("id"), how = WriteMode.Upsert)
+    val dir = KeyedTable.tableDir(wh, t)
+    val meta = TableMeta.read(spark, dir)
+    val cur = Manifest.current(spark, dir)
+    val same = KeyedTable.diffImages(spark, wh, t, meta, cur, cur)
+    val leaves = same.queryExecution.optimizedPlan.collectLeaves()
+    assert(leaves.forall(_.isInstanceOf[LocalRelation]),
+      s"an identical-snapshot diff must read no snapshot:\n$leaves")
+    val (got, jobs) = jobsRunBy(spark.sparkContext)(same.collect())
+    assert(got.isEmpty && jobs.isEmpty, jobs.map(_.description))
+    // the same batch layout as a diff that found a change
+    val changed = KeyedTable.diffImages(spark, wh, t, meta,
+      Manifest.at(spark, dir, 0L), cur)
+    assert(same.schema.map(f => (f.name, f.dataType)) ==
+      changed.schema.map(f => (f.name, f.dataType)))
   }
 }
