@@ -4014,6 +4014,13 @@ object KeyedTable {
     * schema; columns added since read as NULL for files predating
     * them). Available until [[vacuum]] expires the snapshot; reading a
     * vacuumed or unknown version fails loudly naming what IS available.
+    *
+    * A small bounded read — its scan plans one partition of at most
+    * 256 KB of files, as a point read does — is served on the driver: it
+    * is read at this call (no Spark job) and returned as a local frame,
+    * so its IO errors surface from `readSql` itself. The snapshot it
+    * reads is the same. Any other read returns a lazy frame whose scan
+    * runs when an action does.
     */
   def readSql(spark: SparkSession,
               warehouse0: String,
@@ -4059,9 +4066,14 @@ object KeyedTable {
     }
     // the bounds push down to the scan, which prunes buckets (a point
     // read or a narrow integral range names its buckets exactly), skips
-    // files on their manifest [min, max] and row groups on their stats
-    val filtered = conds.foldLeft(scanAt(spark, warehouse, tableName, meta, mf))(_ filter _)
-    filtered.select(meta.schema.fieldNames.toIndexedSeq.map(col): _*)
+    // files on their manifest [min, max] and row groups on their stats.
+    // A bounded read left that small is served on the driver, at this
+    // call; an unbounded one stays lazy, so count/min/max keep their
+    // footer-aggregate answer
+    val read = conds.foldLeft(scanAt(spark, warehouse, tableName, meta, mf))(_ filter _)
+      .select(meta.schema.fieldNames.toIndexedSeq.map(col): _*)
+    if (conds.isEmpty) read
+    else KeyedTableSource.onDriver(spark, read).getOrElse(read)
   }
 
   /** Resolve a snapshot tag to its version, naming the tags that DO

@@ -127,6 +127,52 @@ object KeyedTableSource {
         dataDir, mf, tableDir),
       None, None, CaseInsensitiveStringMap.empty()))
 
+  /** `df` — a [[frame]] filtered and projected to plain columns, as
+    * readSql builds it — read at once in this JVM when its scan is
+    * small ([[KeyedScan.readOnDriver]]), else None and `df` stays lazy.
+    * The optimizer plans `df` as it would for a Spark read, so the scan
+    * gets the same pushdown, bucket pruning and file skipping. The
+    * residual filter is then evaluated interpreted — the bound literals
+    * compile no class per key — and the rows come back as a local
+    * relation with `df`'s schema: no Spark job, no task, no broadcast.
+    * `maxBytes` is the size a served scan may read (the crossover probe
+    * in the test sources times both paths past it). */
+  private[store] def onDriver(spark: SparkSession, df: DataFrame,
+                              maxBytes: Long = KeyedScan.DriverReadMaxBytes)
+      : Option[DataFrame] = {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, InterpretedUnsafeProjection, Predicate}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter => Where, LocalRelation, Project}
+    import org.apache.spark.sql.catalyst.types.DataTypeUtils
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+    val (cols, below) = df.queryExecution.optimizedPlan match {
+      case Project(cols, child) => (cols, child)
+      case p => (p.output, p)
+    }
+    val (cond, rel) = below match {
+      case Where(c, r: DataSourceV2ScanRelation) => (Some(c), r)
+      case r: DataSourceV2ScanRelation => (None, r)
+      case _ => return None
+    }
+    rel.scan match {
+      case scan: KeyedScan if cols.forall(_.isInstanceOf[Attribute]) =>
+        val keep = cond.map { c =>
+          val p = Predicate.createInterpreted(BindReferences.bindReference(c, rel.output))
+          p.initialize(0)
+          p
+        }
+        val out = InterpretedUnsafeProjection.createProjection(
+          BindReferences.bindReferences(cols, rel.output))
+        val rows = Seq.newBuilder[InternalRow]
+        val served = scan.readOnDriver(maxBytes) { r =>
+          if (keep.forall(_.eval(r))) rows += out(r).copy()
+        }
+        if (!served) None
+        else Some(GraftBridge.ofRows(spark,
+          LocalRelation(DataTypeUtils.toAttributes(df.schema), rows.result())))
+      case _ => None
+    }
+  }
+
   /** Each row's physical identity, read on request as metadata columns:
     * its data file's name (a per-file constant, like `pb_bucket`) and
     * its ordinal in that file (parquet's row index) — what a
@@ -187,15 +233,20 @@ object KeyedTableSource {
     * the no-filter delegate (the ordinal counter must see every row);
     * clean files keep row-group pruning. One broadcast configuration
     * serves both delegates and lets executors open their buckets'
-    * sidecars — the driver never reads DV content. */
+    * sidecars. `onDriver`: the factory only ever reads in this JVM
+    * ([[KeyedScan.readOnDriver]]), so the configuration is handed over
+    * without a broadcast. */
   private[store] def readerFactory(spark: SparkSession, meta: TableMeta,
                                    readDataSchema: StructType,
                                    readPartitionSchema: StructType,
                                    dataFilters: Array[Filter],
-                                   masked: Boolean): PartitionReaderFactory = {
+                                   masked: Boolean,
+                                   onDriver: Boolean): PartitionReaderFactory = {
     import org.apache.spark.sql.execution.datasources.parquet.GraftParquetSupport
     val phys = physStruct(readDataSchema, meta)
-    val conf = GraftParquetSupport.readConf(spark, phys)
+    val conf =
+      if (onDriver) GraftParquetSupport.localReadConf(spark, phys)
+      else GraftParquetSupport.readConf(spark, phys)
     def mk(filters: Array[Filter]) =
       GraftParquetSupport.readerFactory(spark, conf, meta.physSchema, phys,
         readPartitionSchema, filters.flatMap(physFilter(_, meta.physName)))
@@ -631,14 +682,16 @@ private[store] class KeyedScan(meta: TableMeta, dataDir: String,
     else new UnknownPartitioning(numBuckets)
 
   /** Buckets that can possibly hold matching rows (None = all),
-    * hashed on the driver with the snapshot's bucket count. Three
+    * hashed on the driver with the snapshot's bucket count. Four
     * pushdown shapes name their buckets exactly:
     *  - explicit `pb_bucket` equality / IN;
     *  - a PK fully pinned — each column by equality or by equal
     *    inclusive bounds (readSql's point read): one bucket;
     *  - a NARROW integral range on a single-column PK: its keys, [lo,
     *    hi] clamped to the PK type's domain, number at most 1024, so
-    *    the bucket set is their hashes (readSql's range read).
+    *    the bucket set is their hashes (readSql's range read);
+    *  - an IN list of at most 1024 values on a single-column PK: their
+    *    hashes, when every value hashes (a keyed delete's probe).
     * Only integral bound values count towards an integral PK: a
     * fractional bound compares in floating point, where one bound can
     * equal several keys in different buckets. Pruned buckets of a keyed
@@ -703,7 +756,17 @@ private[store] class KeyedScan(meta: TableMeta, dataDir: String,
           }
         case _ => None
       }
-    val all = explicit ++ byKey
+    // a PK IN list (a keyed delete's or update's probe) names its keys'
+    // buckets, bounded as the range is
+    val byList: Seq[Set[Int]] = meta.pk match {
+      case Seq(c) => pushed.toSeq.collect {
+        case In(`c`, vs) if vs.nonEmpty && vs.length <= 1024 &&
+            vs.forall(pinnable(c, _)) =>
+          vs.toSeq.map(v => bucketOfPinned(Seq(v)))
+      }.filter(_.forall(_.isDefined)).map(_.flatten.toSet)
+      case _ => Nil
+    }
+    val all = explicit ++ byKey ++ byList
     if (all.isEmpty) None else Some(all.reduce(_ intersect _))
   }
 
@@ -907,9 +970,40 @@ private[store] class KeyedScan(meta: TableMeta, dataDir: String,
     * node for it, and each build broadcasts a configuration. */
   private lazy val readerFactory: PartitionReaderFactory =
     KeyedTableSource.readerFactory(SparkSession.active, meta, readDataSchema,
-      readPartitionSchema, dataFilters, masked = mf.dvs.nonEmpty)
+      readPartitionSchema, dataFilters, masked = mf.dvs.nonEmpty, onDriver = false)
 
   override def createReaderFactory(): PartitionReaderFactory = readerFactory
+
+  /** Reads the scan in this JVM when it is small — it plans at most one
+    * input partition (one task through Spark) and its files total at
+    * most `maxBytes` — passing each row of
+    * [[readSchema]] to `each` (the reader reuses it: copy what is
+    * kept). False, with nothing read, for any other scan. The reader is
+    * the scan's own factory, so delete-vector masks, physical column
+    * names, evolved-schema NULLs and row-group filters apply exactly as
+    * on an executor; only its configuration is handed over in-process
+    * instead of broadcast. */
+  private[store] def readOnDriver(maxBytes: Long)(each: InternalRow => Unit): Boolean = {
+    val parts = planInputPartitions()
+    val bytes = parts.iterator.collect { case p: FilePartition =>
+      p.files.iterator.map(_.length).sum }.sum
+    if (parts.length > 1 || bytes > maxBytes) return false
+    val factory = KeyedTableSource.readerFactory(SparkSession.active, meta,
+      readDataSchema, readPartitionSchema, dataFilters,
+      masked = mf.dvs.nonEmpty, onDriver = true)
+    parts.foreach { p =>
+      if (factory.supportColumnarReads(p)) {
+        val r = factory.createColumnarReader(p)
+        try while (r.next()) r.get().rowIterator().asScala.foreach(each)
+        finally r.close()
+      } else {
+        val r = factory.createReader(p)
+        try while (r.next()) each(r.get())
+        finally r.close()
+      }
+    }
+    true
+  }
 
   /** Size statistics from the snapshot's file lengths over the
     * (statically pruned) buckets — zero filesystem calls, no footer
@@ -953,6 +1047,18 @@ private[store] class KeyedScan(meta: TableMeta, dataDir: String,
           .getOrElse(java.util.OptionalLong.empty())
     }
   }
+}
+
+private[store] object KeyedScan {
+  /** The most file bytes readSql reads on the driver
+    * ([[KeyedScan.readOnDriver]]). Picked from the crossover probe
+    * (`DriverReadProbe`, test sources; 4-vCPU VM, `local[4]`, one-file
+    * tables of the oltp benchmark's row shape): a point read was faster
+    * on the driver at every size up to 13 MB (22-58 ms against 60-155 ms
+    * through Spark), a masked point read up to 3.4 MB, but a read that
+    * returns the whole file only up to about 16K rows: 71 against 80 ms
+    * at 226 KB, 287 against 122 ms at 871 KB. */
+  val DriverReadMaxBytes: Long = 256L << 10
 }
 
 /** Driver-side evaluation of fully-pushed global aggregates from

@@ -265,7 +265,7 @@ private[store] class KeyedMicroBatchStream(
   // windows carry no masks and pass through it untouched
   override def createReaderFactory(): PartitionReaderFactory =
     KeyedTableSource.readerFactory(spark, meta, readDataSchema,
-      readPartitionSchema, dataFilters, masked = true)
+      readPartitionSchema, dataFilters, masked = true, onDriver = false)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

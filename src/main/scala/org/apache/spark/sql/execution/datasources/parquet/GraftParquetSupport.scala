@@ -25,7 +25,26 @@ object GraftParquetSupport {
     * scan share it, and so do its executor-side delete-vector reads
     * (opening a bucket's sidecar needs nothing else). */
   def readConf(spark: SparkSession, readDataSchema: StructType)
-      : Broadcast[SerializableConfiguration] = {
+      : Broadcast[SerializableConfiguration] =
+    spark.sparkContext.broadcast(conf(spark, readDataSchema))
+
+  /** [[readConf]] for readers that run in this JVM only: the same
+    * configuration, handed over as it is — no broadcast, whose
+    * serialization of the session's full Hadoop configuration costs
+    * more than a small read itself. Never ship it to an executor. */
+  def localReadConf(spark: SparkSession, readDataSchema: StructType)
+      : Broadcast[SerializableConfiguration] =
+    new LocalConf(conf(spark, readDataSchema))
+
+  private class LocalConf(c: SerializableConfiguration)
+      extends Broadcast[SerializableConfiguration](-1L) {
+    override protected def getValue(): SerializableConfiguration = c
+    override protected def doUnpersist(blocking: Boolean): Unit = ()
+    override protected def doDestroy(blocking: Boolean): Unit = ()
+  }
+
+  private def conf(spark: SparkSession, readDataSchema: StructType)
+      : SerializableConfiguration = {
     val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val sqlConf = session.sessionState.conf
     val hadoopConf = session.sessionState.newHadoopConf()
@@ -49,7 +68,7 @@ object GraftParquetSupport {
     hadoopConf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
       sqlConf.parquetInferTimestampNTZEnabled)
 
-    session.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
+    new SerializableConfiguration(hadoopConf)
   }
 
   /** @param conf [[readConf]] of the same `readDataSchema`.

@@ -1,5 +1,8 @@
 package graft.store
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.JobCounter
 import org.apache.spark.JobCounter.jobsRunBy
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit}
@@ -68,5 +71,40 @@ class JobsPerVerbSpec extends SparkSpec {
     val counts = got.map { case (w, n, _) => w -> n }.toMap
     assert(counts == Expected, got.map { case (w, n, ds) =>
       s"$w: $n ${ds.mkString("[", "; ", "]")}" }.mkString("\n", "\n", ""))
+  }
+
+  test("a 5-key delete plans only the files of its keys' buckets") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    create("p", cdc = false)
+    val keys = Seq(7L, 70L, 700L, 1170L, 1700L)
+    val meta = TableMeta.read(spark, KeyedTable.tableDir(wh, "p"))
+    val buckets = keys.map(k => KeyedTable.bucketOfKey(spark, meta, 32, Seq(k))).toSet
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(KeyedTable.delete(spark, wh, "p", col("id").isin(keys: _*)) == 5L)
+      JobCounter.drainListeners(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    object Plans extends AdaptiveSparkPlanHelper
+    // every store scan of the verb — the probe first — plans files of
+    // the keys' buckets only, and the probe plans each of those buckets
+    val scanned: Seq[Set[Int]] = plans.asScala.toSeq.flatMap { qe =>
+      Plans.collect(qe.executedPlan) { case b: BatchScanExec => b }
+    }.collect { case b if b.scan.isInstanceOf[KeyedScan] =>
+      b.inputPartitions.flatMap {
+        case p: KeyedFilePartition => p.files.toSeq
+        case p => fail(s"not a store partition: $p")
+      }.map(_.toPath.getParent.getName.stripPrefix("pb_bucket=").toInt).toSet
+    }
+    assert(scanned.nonEmpty)
+    assert(scanned.head == buckets, s"probe planned ${scanned.head}, keys in $buckets")
+    assert(scanned.forall(_.subsetOf(buckets)), scanned)
   }
 }

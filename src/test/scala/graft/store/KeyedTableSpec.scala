@@ -428,9 +428,18 @@ class KeyedTableSpec extends SparkSpec {
     }
   }
 
-  /** The bucket of every file the frame's store scan planned (its one
-    * BatchScanExec's input partitions), from the files' directories. */
-  private def plannedBuckets(df: DataFrame): Seq[Int] = {
+  /** The bucket of every file the store scan of readSql's Spark path
+    * plans for table `t` and the PK bounds [lo, hi] (its one
+    * BatchScanExec's input partitions), from the files' directories.
+    * Planned on the `KeyedTableSource` frame filtered by the bounds: a
+    * read the driver serves has no BatchScanExec. */
+  private def plannedBuckets(w: String, t: String, lo: Seq[Any], hi: Seq[Any]): Seq[Int] = {
+    val meta = TableMeta.read(spark, KeyedTable.tableDir(w, t))
+    val bounds = meta.pk.indices.flatMap(i =>
+      Option(lo(i)).map(col(meta.pk(i)) >= lit(_)) ++
+        Option(hi(i)).map(col(meta.pk(i)) <= lit(_)))
+    val df = bounds.foldLeft(KeyedTableSource.read(spark, w, t))(_ filter _)
+      .select(meta.schema.fieldNames.toIndexedSeq.map(col): _*)
     val scans = df.queryExecution.executedPlan.collect {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
     }
@@ -449,12 +458,14 @@ class KeyedTableSpec extends SparkSpec {
     assert(point.collect().map(_.getLong(0)).toSeq == Seq(7L))
     // the pinned bounds reach the scan: it plans the files of exactly
     // one of the 32 bucket dirs
-    assert(plannedBuckets(point).nonEmpty && plannedBuckets(point).distinct.size == 1)
+    val pointBuckets = plannedBuckets(w, "t", Seq(7L), Seq(7L))
+    assert(pointBuckets.nonEmpty && pointBuckets.distinct.size == 1)
     // a NARROW integral range enumerates its keys: ≤5 of the 32 bucket
     // dirs are planned
     val range = KeyedTable.readSql(spark, w, "t", lowest = Seq(5L), highest = Seq(9L))
     assert(range.collect().map(_.getLong(0)).sorted.toSeq == Seq(5L, 6L, 7L, 8L, 9L))
-    assert(plannedBuckets(range).distinct.size <= 5, plannedBuckets(range))
+    val rangeBuckets = plannedBuckets(w, "t", Seq(5L), Seq(9L))
+    assert(rangeBuckets.distinct.size <= 5, rangeBuckets)
     // a WIDE range (not enumerable) keeps the full scan + stats pruning
     val wide = KeyedTable.readSql(spark, w, "t", lowest = Seq(1L), highest = Seq(5000L))
     assert(wide.count() == 500)
@@ -469,12 +480,13 @@ class KeyedTableSpec extends SparkSpec {
     KeyedTable.toSql(multi, w, "m", pk = Seq("k1", "k2"))
     val mp = KeyedTable.readSql(spark, w, "m", lowest = Seq(17L, 2), highest = Seq(17L, 2))
     assert(mp.collect().map(r => (r.getLong(0), r.getInt(1))).toSeq == Seq((17L, 2)))
-    assert(plannedBuckets(mp).nonEmpty && plannedBuckets(mp).distinct.size == 1)
+    val mpBuckets = plannedBuckets(w, "m", Seq(17L, 2), Seq(17L, 2))
+    assert(mpBuckets.nonEmpty && mpBuckets.distinct.size == 1)
 
     // Every pruned read returns exactly what an unbounded read filtered
     // by the same bounds returns, at head or at a past snapshot; a point
     // read also resolves without a Spark job, plans files of its own
-    // bucket only, and runs one job of one task.
+    // bucket only, and is served on the driver: its collect runs no job.
     import org.apache.spark.JobCounter.jobsOf
     def sameAsFiltered(t: String, lo: Seq[Any], hi: Seq[Any],
                        asOf: Option[Long] = None, tag: Option[String] = None): DataFrame = {
@@ -493,14 +505,15 @@ class KeyedTableSpec extends SparkSpec {
       val got = sameAsFiltered(t, key, key)
       val (rows, jobs) = jobsRunBy(spark.sparkContext)(got.collect())
       assert(rows.length == 1, s"$t $key")
-      assert(jobs.size == 1 && jobs.head.tasks == 1, s"$t $key: collect ran $jobs")
+      assert(jobs.isEmpty, s"$t $key: collect ran $jobs")
       // the row's bucket as the partition-discovered data dir records it
       val pk = got.columns.take(key.size)
       val b = spark.read.parquet(KeyedTable.dataDir(w, t))
         .filter(pk.zip(key).map { case (c, v) => col(c) === lit(v) }.reduce(_ && _))
         .select("pb_bucket").head().getInt(0)
-      assert(plannedBuckets(got).nonEmpty && plannedBuckets(got).forall(_ == b),
-        s"$t $key: planned buckets ${plannedBuckets(got)}, row in $b")
+      val planned = plannedBuckets(w, t, key, key)
+      assert(planned.nonEmpty && planned.forall(_ == b),
+        s"$t $key: planned buckets $planned, row in $b")
     }
     val keys = (1 to 200).map(_.toLong)
     val epoch = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
@@ -571,7 +584,7 @@ class KeyedTableSpec extends SparkSpec {
     assert(sameAsFiltered("empty", Seq(1L), Seq(100L)).isEmpty)
   }
 
-  test("point and 256-key range reads of a table with DV sidecars each run one job") {
+  test("point reads of a table with DV sidecars run no job, 256-key ranges one") {
     import org.apache.spark.JobCounter.jobsRunBy
     import spark.implicits._
     val w = wh()
@@ -579,11 +592,12 @@ class KeyedTableSpec extends SparkSpec {
       pk = Seq("k"))
     KeyedTable.delete(spark, w, "t", col("k") % 7 === 0L, mode = DeleteMode.MergeOnRead): Unit
     assert(Manifest.current(spark, KeyedTable.tableDir(w, "t")).dvs.nonEmpty)
-    for ((lo, hi, n) <- Seq((100L, 100L, 1), (14L, 14L, 0), (1001L, 1256L, 256 - 37))) {
+    for ((lo, hi, n, wantJobs) <- Seq((100L, 100L, 1, 0), (14L, 14L, 0, 0),
+                                      (1001L, 1256L, 256 - 37, 1))) {
       val (rows, jobs) = jobsRunBy(spark.sparkContext)(
         KeyedTable.readSql(spark, w, "t", lowest = Seq(lo), highest = Seq(hi)).collect())
       assert(rows.length == n, s"[$lo, $hi]")
-      assert(jobs.size == 1, s"[$lo, $hi]: collect ran $jobs")
+      assert(jobs.size == wantJobs, s"[$lo, $hi]: read ran $jobs")
     }
   }
 
