@@ -1054,7 +1054,7 @@ private[store] object KeyedScan {
     * ([[KeyedScan.readOnDriver]]). Picked from the crossover probe
     * (`DriverReadProbe`, test sources; 4-vCPU VM, `local[4]`, one-file
     * tables of the oltp benchmark's row shape): a point read was faster
-    * on the driver at every size up to 13 MB (22-58 ms against 60-155 ms
+    * on the driver at every size up to 13 MB (23-58 ms against 53-155 ms
     * through Spark), a masked point read up to 3.4 MB, but a read that
     * returns the whole file only up to about 16K rows: 71 against 80 ms
     * at 226 KB, 287 against 122 ms at 871 KB. */
